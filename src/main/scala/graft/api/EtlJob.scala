@@ -6,13 +6,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.flatten.Flattener
-import graft.sinks.Tsv
 import graft.sources.EsJson
 
 /** The reference's end-to-end job surface, Spark-native
   * ([`ElasticSearch ETL.py:201-317`]): read exported ES responses (or bare
-  * documents) → count → flatten completely → TSV out → one job-audit row,
-  * SUCCESS and FAILED paths both audited.
+  * documents) → flatten completely → TSV out → one job-audit row carrying
+  * the record count, SUCCESS and FAILED paths both audited.
   *
   * The reference's sequential `search_after` page loop becomes a single
   * distributed read: every response file is an input split, the flatten
@@ -86,7 +85,7 @@ object EtlJob {
     * REST pagination ([[graft.sources.EsHttp]] — the faithful twin of
     * `fetch_and_export_documents`, `ElasticSearch ETL.py:201-267`) pulls
     * pages into `pageDir`, then the standard distributed
-    * count→flatten→TSV→audit job runs over them. A fetch failure (bad
+    * flatten→TSV→audit job runs over them. A fetch failure (bad
     * endpoint, wedged cursor) is audited on the FAILED path exactly like
     * a flatten failure — the reference's except-branch contract.
     * Integration-tested against an embedded HTTP stub (`EtlJobSpec`).
@@ -99,7 +98,7 @@ object EtlJob {
       outputDir, auditPath, jobName, tableName, maxDepth)
 
   /** Source-agnostic core: any document DataFrame (offline export, live
-    * index, test fixture) → count → flatten → TSV → audit. `docs` is
+    * index, test fixture) → flatten → TSV → audit. `docs` is
     * by-name so source-construction failures are audited too.
     */
   def runDocs(spark: SparkSession, docs: => DataFrame, outputDir: String,
@@ -109,16 +108,13 @@ object EtlJob {
     val batchId = new java.text.SimpleDateFormat("yyyyMMddHHmmss")
       .format(start)
     try {
-      val ds = docs
-      val total = ds.count() // the reference's ES.count sizing step
-      // fast row-walk renderer straight to TSV lines: byte-identical cells
-      // to the expression path (FlattenerEquivalenceSpec), none of its
-      // per-schema Janino cost
-      val cols = Flattener.flattenToTsv(ds, outputDir, maxDepth)
+      // the record count (the reference's ES.count sizing step) comes
+      // from the flatten's own stats pass, not an extra read of the input
+      val out = Flattener.flattenToTsv(docs, outputDir, maxDepth)
       logAudit(spark, auditPath, AuditRecord(
         jobName, 8L, start, new Timestamp(System.currentTimeMillis()),
-        "SUCCESS", "spark_etl_export", null, batchId, tableName, total))
-      Result(total, cols.length, outputDir)
+        "SUCCESS", "spark_etl_export", null, batchId, tableName, out.rows))
+      Result(out.rows, out.columns.length, outputDir)
     } catch {
       case e: Throwable =>
         logAudit(spark, auditPath, AuditRecord(

@@ -1,10 +1,7 @@
 package graft.flatten
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
-import scala.collection.mutable
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Complete JSON flattening — the reference's core capability
   * ([`ElasticSearch ETL.py:37-195`], `README.md:24-70`), rebuilt Spark-first.
@@ -12,20 +9,23 @@ import scala.collection.mutable
   * The reference makes two interpreted passes over every document: pass 1
   * discovers the union of leaf column paths, pass 2 re-splits each path
   * string and walks the dict per (doc × column) — O(docs × cols × depth)
-  * Python dict probes. Here the "passes" are:
+  * Python dict probes. Here the passes are distributed row walks:
   *
   *   1. Spark JSON schema inference (already a union across all records) +
-  *      one [[ArrayStats]] aggregate for batch-max array lengths;
-  *   2. ONE generated `select` of ~N-thousand string expressions, executed
-  *      by whole-stage codegen — the per-row cost is compiled field access,
-  *      not string re-parsing, and it distributes over any number of
-  *      executors.
+  *      ONE [[StatsPass]] over the rows for the row count, batch-max array
+  *      widths and path presence;
+  *   2. ONE [[RenderPass]] walk per row filling every output cell — the
+  *      render plan and the column list come from a single traversal of
+  *      the schema, and no per-column expression is ever built.
   *
   * Semantics (SURVEY.md §2.3 quirk decisions):
   *   - Q1  digit map keys: FIXED — `ValueCodes_45` extracts its real value
   *     (schema-driven access has no index/key ambiguity). The reference
   *     always returned `''` there.
-  *   - Q2  underscore-bearing keys: FIXED — no path re-split exists.
+  *   - Q2  underscore-bearing keys: FIXED — no path re-split exists. When
+  *     such a key's Pascal path equals a nested one (`a_B` and `a.B` are
+  *     both `A_B`), the column has one owner, the first present path in
+  *     schema order (depth-first), and only that path renders into it.
   *   - Q3  case-collisions: replicated — sibling keys colliding on one
   *     Pascal name resolve by the reference's probe order (camel first).
   *   - Q4  ragged arrays: replicated — unindexed column emitted iff some
@@ -39,191 +39,64 @@ import scala.collection.mutable
   *     replicated.
   *   - booleans render `True`/`False` at top level but lowercase inside
   *     JSON cells; doubles use Python `str(float)` shape ([[PyFormat]]).
+  *   - date, timestamp, binary, map and interval leaves are rejected with
+  *     an error naming the path: JSON never yields them, and their
+  *     internal values (day and microsecond counts) are not their text.
   */
 object Flattener {
 
   val DefaultMaxDepth = 20
 
   /** Flatten every row of `df` (one row = one document) into all-string
-    * leaf columns, lexicographically ordered.
+    * leaf columns, lexicographically ordered. The parsed input is cached
+    * (unless the caller already did) because the stats pass and the
+    * render pass both read it.
     */
-  /** @param persistInput cache the parsed input across the internal jobs.
-    *   Flattening needs several passes (array stats per nesting level,
-    *   presence pruning, final projection); over a JSON source each pass
-    *   would otherwise re-parse every document — the difference between 1
-    *   and ~10+ full-corpus parses. Off only when the caller manages its
-    *   own staging (e.g. input already parquet or externally cached).
-    */
-  def flatten(df: DataFrame, maxDepth: Int = DefaultMaxDepth,
-      persistInput: Boolean = true): DataFrame = {
-    // Sibling keys differing only in case (quirk Q3) are legal JSON; the
-    // generated select addresses fields by their exact schema names, which
-    // requires case-sensitive resolution. Dataset analysis is eager, so the
-    // conf only needs to hold across the select()/agg() calls.
-    val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.caseSensitive")
-    spark.conf.set("spark.sql.caseSensitive", "true")
-    try {
-      val input =
-        if (persistInput && df.storageLevel ==
-            org.apache.spark.storage.StorageLevel.NONE)
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else df
-      // ONE distributed pass for array widths + presence (StatsPass); the
-      // only other pass over the input is the final projection itself.
-      val batch = StatsPass.collect(input)
-      val cand = candidates(input.schema, batch.arrays, maxDepth)
-      if (cand.isEmpty) return spark.emptyDataFrame
-      input.select(cand.collect {
-        case (name, rawPath, rendered) if batch.present(rawPath) =>
-          rendered.as(name)
-      }: _*)
-    } finally spark.conf.set("spark.sql.caseSensitive", prev)
-  }
-
-  /** Fast path: same contract and byte-identical output as [[flatten]],
-    * but the projection is a single direct row-walk ([[RenderPass]])
-    * instead of a generated ~N-thousand-expression select — no Janino
-    * compilation of a giant projection class, no interpreted higher-order
-    * functions in JSON cells. Preferred for production flatten jobs with
-    * wide dynamic schemas; [[flatten]] remains the reference expression
-    * path (and the two are pinned equal by FlattenerEquivalenceSpec).
-    */
-  def flattenFast(df: DataFrame, maxDepth: Int = DefaultMaxDepth,
-      persistInput: Boolean = true): DataFrame = {
+  def flatten(df: DataFrame, maxDepth: Int = DefaultMaxDepth): DataFrame = {
     val input =
-      if (persistInput && df.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (df.storageLevel == StorageLevel.NONE)
+        df.persist(StorageLevel.MEMORY_AND_DISK)
       else df
-    val batch = StatsPass.collect(input)
-    val cand = candidates(input.schema, batch.arrays, maxDepth)
-    val cols = cand.collect {
-      case (name, rawPath, _) if batch.present(rawPath) => name
-    }
-    if (cols.isEmpty) return df.sparkSession.emptyDataFrame
-    RenderPass.render(input, batch.arrays, cols, maxDepth)
+    val plan = RenderPass.compile(input.schema, StatsPass.collect(input),
+      maxDepth)
+    if (plan.columns.isEmpty) df.sparkSession.emptyDataFrame
+    else RenderPass.render(input, plan)
   }
 
-  /** End-to-end fast TSV export: stats pass + direct row-walk rendering of
+  /** What [[flattenToTsv]] wrote: the header's columns and the number of
+    * documents (= data rows).
+    */
+  final case class Written(columns: Seq[String], rows: Long)
+
+  /** End-to-end TSV export: stats pass + direct row-walk rendering of
     * quoted TSV lines, written as text with a header per part-file (the
-    * same layout Spark's CSV writer produces). Returns the column list.
-    * `singleFile` coalesces to one part for reference-style one-file
-    * batches.
+    * same layout Spark's CSV writer produces). `singleFile` coalesces to
+    * one part for reference-style one-file batches.
     */
   def flattenToTsv(df: DataFrame, dir: String,
       maxDepth: Int = DefaultMaxDepth,
-      singleFile: Boolean = false): Seq[String] = {
+      singleFile: Boolean = false): Written = {
     val spark = df.sparkSession
-    // unlike [[flatten]]/[[flattenFast]] this call is TERMINAL (the TSV
-    // write is the last job over the input), so a cache this call took
-    // out is RELEASED before returning: a long-running export loop (the
-    // streaming batch path, the bench's repeated samples) would
-    // otherwise accumulate one pinned parsed-input RDD per call —
-    // hundreds of MB each for wide documents — until memory pressure
-    // throttles every later call (measured: 6x spread across 5
-    // same-input samples with 10 pinned RDDs at the end).
-    val weOwn =
-      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val input =
-      if (weOwn)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
+    // unlike [[flatten]] this call is TERMINAL (the TSV write is the last
+    // job over the input), so a cache this call took out is RELEASED
+    // before returning: a long-running export loop (the streaming batch
+    // path, the bench's repeated samples) would otherwise accumulate one
+    // pinned parsed-input RDD per call — hundreds of MB each for wide
+    // documents — until memory pressure throttles every later call
+    // (measured: 6x spread across 5 same-input samples with 10 pinned
+    // RDDs at the end).
+    val weOwn = df.storageLevel == StorageLevel.NONE
+    val input = if (weOwn) df.persist(StorageLevel.MEMORY_AND_DISK) else df
     try {
       val batch = StatsPass.collect(input)
-      val cand = candidates(input.schema, batch.arrays, maxDepth)
-      val cols = cand.collect {
-        case (name, rawPath, _) if batch.present(rawPath) => name
-      }
-      val header = RenderPass.tsvLine(cols.toArray)
-      val lines0 =
-        RenderPass.renderTsvLines(input, batch.arrays, cols, maxDepth)
+      val plan = RenderPass.compile(input.schema, batch, maxDepth)
+      val header = RenderPass.tsvLine(plan.columns)
+      val lines0 = RenderPass.renderTsvLines(input, plan)
       val lines = if (singleFile) lines0.coalesce(1) else lines0
       val withHeader = lines.mapPartitions(it => Iterator(header) ++ it)
       import spark.implicits._
       spark.createDataset(withHeader).write.mode("overwrite").text(dir)
-      cols
+      Written(plan.columns.toSeq, batch.rows)
     } finally if (weOwn) input.unpersist(blocking = false): Unit
-  }
-
-  /** The generated select-list: one aliased string Column per flattened
-    * leaf path, sorted by the reference's plain string sort (presence
-    * pruning NOT applied — [[flatten]] applies it).
-    */
-  def selectList(schema: StructType, stats: Map[String, ArrayStats.Stats],
-      maxDepth: Int = DefaultMaxDepth): Seq[Column] =
-    candidates(schema, stats, maxDepth).map {
-      case (name, _, rendered) => rendered.as(name)
-    }
-
-  /** All candidate leaf columns as (pascalPath, rawDotPath, renderedString),
-    * sorted lexicographically. The raw dotted path (numeric segments for
-    * bound array indices) is the presence-lookup key into
-    * [[StatsPass.Batch.present]].
-    */
-  def candidates(schema: StructType, stats: Map[String, ArrayStats.Stats],
-      maxDepth: Int = DefaultMaxDepth): Seq[(String, String, Column)] = {
-    val buf = mutable.ArrayBuffer.empty[(String, String, Column)]
-
-    // A whole terminal cell (dict/list/truncated subtree): '' for a
-    // missing/null value [`ETL.py:132-133`], json.dumps otherwise.
-    def jsonCell(c: Column, dt: DataType): Column =
-      when(c.isNull, "").otherwise(PyFormat.pyJson(c, dt))
-
-    def emit(c: Column, dt: DataType, pPath: String, rPath: String,
-        depth: Int): Unit = dt match {
-      case st: StructType =>
-        if (depth + 1 > maxDepth) buf += ((pPath, rPath, jsonCell(c, st)))
-        else walkStruct(st.fields, n => c.getField(n), pPath, rPath, depth + 1)
-      case ArrayType(et: StructType, _) =>
-        val s = stats.getOrElse(rPath, ArrayStats.Stats(0, hasEmpty = false))
-        // quirk Q4: a document with `path: []` adds the unindexed column to
-        // the batch schema; every document then renders its full array there.
-        if (s.hasEmpty || s.maxLen == 0) buf += ((pPath, rPath, jsonCell(c, dt)))
-        var i = 0
-        while (i < s.maxLen) {
-          // functions.get, not getItem: out-of-range positional access must
-          // yield null ('' downstream) under ANSI mode, matching the
-          // reference's default-on-miss [`ETL.py:99-102`].
-          val elem = get(c, lit(i))
-          val ip = PathNaming.indexed(pPath, i)
-          if (depth + 1 > maxDepth) buf += ((ip, s"$rPath.$i", jsonCell(elem, et)))
-          else walkStruct(et.fields, n => elem.getField(n), ip, s"$rPath.$i",
-            depth + 1)
-          i += 1
-        }
-      case at: ArrayType => // primitives / nested arrays: one JSON cell
-        buf += ((pPath, rPath, jsonCell(c, at)))
-      case other =>
-        buf += ((pPath, rPath, PyFormat.pyStr(c, other)))
-    }
-
-    def walkStruct(fields: Array[StructField], get: String => Column,
-        pascalParent: String, rawParent: String, depth: Int): Unit = {
-      // quirk Q3: sibling keys colliding on one Pascal name — reference
-      // extraction probes [camel, lower, exact, capitalize]; first wins.
-      fields.groupBy(f => PathNaming.toPascal(f.name)).foreach {
-        case (pascal, group) =>
-          val winner =
-            if (group.length == 1) group(0)
-            else {
-              val w = PathNaming.collisionWinner(pascal,
-                group.map(_.name).toSeq)
-              group.find(_.name == w).getOrElse(group(0))
-            }
-          val pPath = PathNaming.join(pascalParent, pascal)
-          val rPath =
-            if (rawParent.isEmpty) winner.name
-            else s"$rawParent.${winner.name}"
-          emit(get(winner.name), winner.dataType, pPath, rPath, depth)
-      }
-    }
-
-    walkStruct(schema.fields, n => col(s"`$n`"), "", "", depth = 0)
-
-    // final order: reference's plain lexicographic sort of the full path
-    // [`ETL.py:180`]; dedupe pathological cross-branch collisions.
-    val seen = mutable.HashSet.empty[String]
-    buf.sortBy(_._1).filter { case (name, _, _) => seen.add(name) }.toSeq
   }
 }

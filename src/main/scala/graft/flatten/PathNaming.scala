@@ -27,13 +27,7 @@ object PathNaming {
   def join(parent: String, key: String): String =
     if (parent.isEmpty) key else s"$parent$Sep$key"
 
-  def child(parent: String, rawKey: String): String =
-    join(parent, toPascal(rawKey))
-
   def indexed(parent: String, i: Int): String = join(parent, i.toString)
-
-  /** Reference column order: plain string sort [`ElasticSearch ETL.py:180`]. */
-  def sortColumns(cols: Seq[String]): Seq[String] = cols.sorted
 
   /** Sibling keys colliding on the same Pascal column (quirk Q3): the
     * reference's extraction probes `[camelCase, lower, exact, capitalize]`

@@ -1,11 +1,5 @@
 package graft.flatten
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import graft.CatalystBridge
-
 /** Python-exact value rendering (SURVEY.md §7.4).
   *
   * The reference stringifies every cell with Python semantics
@@ -15,15 +9,13 @@ import graft.CatalystBridge
   *
   * `str(float)` differs from Java's `Double.toString` in its scientific-
   * notation thresholds (Python: plain decimal for 1e-4 <= |x| < 1e16; Java
-  * switches at 1e-3/1e7), so doubles go through [[pyRepr]], exposed to
-  * Catalyst as a codegen-friendly `StaticInvoke` (a static JVM call inside
-  * whole-stage codegen — no UDF serialization, no interpretation).
+  * switches at 1e-3/1e7), so doubles go through [[pyRepr]]; the rest of the
+  * rendering lives in [[RenderPass]].
   */
 object PyFormat {
 
   /** Python `repr(double)` (shortest round-trip digits, Python's exp
-    * thresholds and `e+XX`/`e-XX` exponent shape). Public static — invoked
-    * from generated code via StaticInvoke.
+    * thresholds and `e+XX`/`e-XX` exponent shape).
     */
   def pyRepr(d: Double): String = {
     if (d.isNaN) return "nan"
@@ -67,74 +59,5 @@ object PyFormat {
         case s                    => s + ".0"
       }
     }
-  }
-
-  /** [[pyRepr]] boxed as Spark's internal string type — StaticInvoke with a
-    * StringType result contract must produce UTF8String.
-    */
-  def pyReprUtf8(d: Double): org.apache.spark.unsafe.types.UTF8String =
-    org.apache.spark.unsafe.types.UTF8String.fromString(pyRepr(d))
-
-  /** `pyRepr` as a Column (codegen'd static call). */
-  def pyDoubleStr(c: Column): Column = CatalystBridge.column(
-    StaticInvoke(
-      PyFormat.getClass, StringType, "pyReprUtf8",
-      Seq(CatalystBridge.expression(c)), Seq(DoubleType),
-      returnNullable = false))
-
-  /** Python `str(v)` for a scalar column: '' for null, True/False for
-    * booleans, pyRepr for doubles, plain cast otherwise.
-    */
-  def pyStr(c: Column, dt: DataType): Column = dt match {
-    case BooleanType =>
-      when(c.isNull, "").when(c, "True").otherwise("False")
-    case DoubleType | FloatType =>
-      coalesce(when(c.isNotNull, pyDoubleStr(c.cast(DoubleType))), lit(""))
-    case StringType => coalesce(c, lit(""))
-    case _          => coalesce(c.cast(StringType), lit(""))
-  }
-
-  /** JSON string escaping per Python `json.dumps` defaults (ensure_ascii
-    * escapes are omitted — inputs here are the reference's ASCII corpora;
-    * quotes/backslashes/control chars are the observable cases).
-    */
-  private def jsonEscape(c: Column): Column = {
-    val esc = regexp_replace(
-      regexp_replace(c, "\\\\", "\\\\\\\\"),
-      "\"", "\\\\\"")
-    val ctl = regexp_replace(
-      regexp_replace(regexp_replace(esc, "\n", "\\\\n"), "\r", "\\\\r"),
-      "\t", "\\\\t")
-    ctl
-  }
-
-  /** Python `json.dumps(scalar)` rendering INSIDE a JSON document:
-    * lowercase true/false/null, quoted+escaped strings, pyRepr doubles.
-    */
-  def pyJsonScalar(c: Column, dt: DataType): Column = dt match {
-    case BooleanType =>
-      when(c.isNull, "null").when(c, "true").otherwise("false")
-    case DoubleType | FloatType =>
-      coalesce(when(c.isNotNull, pyDoubleStr(c.cast(DoubleType))), lit("null"))
-    case StringType =>
-      when(c.isNull, "null")
-        .otherwise(concat(lit("\""), jsonEscape(c), lit("\"")))
-    case _ => coalesce(c.cast(StringType), lit("null"))
-  }
-
-  /** Python `json.dumps(value)` for arbitrarily nested arrays/scalars —
-    * `[1000.0]`, `["S9290", "M4833"]`, `[]` — with json.dumps' default
-    * `", "` item separator [`ElasticSearch ETL.py:134-135` renders arrays of
-    * primitives this way]. Structs fall back to Spark `to_json` (null fields
-    * dropped, compact separators) — only reachable via max_depth truncation.
-    */
-  def pyJson(c: Column, dt: DataType): Column = dt match {
-    case ArrayType(et, _) =>
-      when(c.isNull, "null").otherwise(
-        concat(lit("["),
-          array_join(transform(c, x => pyJson(x, et)), ", ", "null"),
-          lit("]")))
-    case _: StructType => when(c.isNull, "null").otherwise(to_json(c))
-    case _             => pyJsonScalar(c, dt)
   }
 }

@@ -2,34 +2,30 @@ package graft.flatten
 
 import java.io.StringWriter
 
+import scala.collection.mutable
+
 import com.fasterxml.jackson.core.JsonFactory
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
-/** Direct row-walk renderer for the flatten projection — the fast path of
-  * [[Flattener.flattenFast]]/[[Flattener.flattenToTsv]].
+/** The flatten renderer behind [[Flattener.flatten]] and
+  * [[Flattener.flattenToTsv]]: one walk over the batch schema compiles a
+  * render plan AND the output column list, then each document's Tungsten
+  * row is walked ONCE (`queryExecution.toRdd`; external-Row conversion
+  * alone costs seconds per pass at 5k columns), depth-first, filling the
+  * output slots directly — O(nodes) per row with no code generation, so a
+  * wide dynamic schema pays no Janino compilation of a giant projection.
   *
-  * The expression path (one generated select of ~N-thousand string
-  * expressions) is idiomatic and codegen'd, but for a 5k-column dynamic
-  * schema it pays (a) tens of seconds of Janino compilation per distinct
-  * schema and (b) interpreted higher-order-function evaluation inside the
-  * JSON-array cells. This renderer walks each document's Tungsten row ONCE
-  * (`queryExecution.toRdd`; external-Row conversion alone costs seconds
-  * per pass at this width), depth-first, filling the output slots directly
-  * — O(nodes) per row with zero codegen — and must produce byte-identical
-  * output to the expression path (pinned by FlattenerEquivalenceSpec on
-  * the golden doc and generated batches).
-  *
-  * Cell semantics replicated exactly: '' for missing/null, [[PyFormat]]
-  * scalar/array rendering (json.dumps `", "` separators, lowercase JSON
-  * literals, pyRepr doubles), Spark-`to_json`-compatible struct cells
-  * (compact separators, schema field order, null fields dropped — via the
-  * same Jackson generator Spark uses).
+  * Cell semantics: '' for missing/null, Python `str()` scalars
+  * (`True`/`False`, [[PyFormat.pyRepr]] doubles), json.dumps arrays
+  * (`", "` separators, lowercase JSON literals, pyRepr doubles), and
+  * Spark-`to_json`-compatible struct cells (compact separators, schema
+  * field order, null fields dropped — via the same Jackson generator Spark
+  * uses).
   */
 object RenderPass {
 
@@ -39,28 +35,92 @@ object RenderPass {
   /** Walk a struct value with `numFields` fields: (field ordinal, child). */
   private final case class StructWalk(numFields: Int,
       fields: Array[(Int, Node)]) extends Node
-  /** Positionally-expanded array of structs. */
-  private final case class ArrayWalk(unindexedSlot: Int,
-      elems: Array[Node], elemType: StructType) extends Node
-  /** Terminal scalar leaf. */
-  private final case class Leaf(slot: Int, dt: DataType) extends Node
-  /** Terminal JSON cell (primitive/nested array, empty-only array,
-    * depth-truncated subtree).
+  /** Positionally-expanded array of structs; `whole` is the unindexed
+    * JSON cell of the full array (quirk Q4) or [[Skip]].
     */
-  private final case class JsonCell(slot: Int, dt: DataType) extends Node
+  private final case class ArrayWalk(whole: Node, elems: Array[Node])
+    extends Node
+  /** Terminal output cell: Python `str()` of a scalar (`json = false`), or
+    * one json.dumps cell (primitive/nested array, unindexed array of
+    * structs, depth-truncated subtree). `slot` is the column's position,
+    * set once the column list is sorted.
+    */
+  private final class Cell(val dt: DataType, val json: Boolean) extends Node {
+    var slot: Int = -1
+  }
   private case object Skip extends Node
 
-  /** Compile a render plan mirroring [[Flattener.candidates]]' traversal;
-    * `slots` maps pascal path → output column position.
+  /** A compiled render plan and its output columns (reference order). */
+  final class Plan private[RenderPass] (
+      private[RenderPass] val root: StructWalk,
+      val columns: Array[String]) extends Serializable
+
+  /** The first type inside `dt` whose internal value does not print the
+    * way `cast(string)` does. JSON sources never infer these.
     */
-  private def compile(schema: StructType, stats: Map[String, ArrayStats.Stats],
-      slots: Map[String, Int], maxDepth: Int): StructWalk = {
+  private def nonJson(dt: DataType): Option[DataType] = dt match {
+    case ArrayType(et, _) => nonJson(et)
+    case st: StructType =>
+      st.fields.iterator.flatMap(f => nonJson(f.dataType)).nextOption()
+    case DateType | TimestampType | TimestampNTZType | BinaryType |
+        CalendarIntervalType | _: MapType | _: DayTimeIntervalType |
+        _: YearMonthIntervalType => Some(dt)
+    case _ => None
+  }
+
+  /** Compile the render plan for `schema` in one traversal. Candidate
+    * columns follow the reference's rules (SURVEY.md §2.3): Pascal paths
+    * joined by `_`, arrays of structs expanded to their batch-max width per
+    * indexed path, an unindexed whole-array JSON cell iff some document has
+    * the array empty (Q4), sibling keys colliding on one Pascal name
+    * resolved camelCase-first (Q3), subtrees past `maxDepth` as one JSON
+    * cell. A candidate becomes a column only when its raw path is present
+    * in the batch, and each column has exactly one owner: the first present
+    * candidate of that name in schema order (depth-first). Columns come
+    * out in plain lexicographic order (Q9).
+    *
+    * @throws IllegalArgumentException for a leaf of a non-JSON type
+    *   (date, timestamp, binary, map, interval), naming its path and type.
+    */
+  def compile(schema: StructType, batch: StatsPass.Batch,
+      maxDepth: Int): Plan = {
+    val owners = mutable.HashMap.empty[String, Cell]
+
+    def cell(pPath: String, rPath: String, dt: DataType,
+        json: Boolean): Node = {
+      nonJson(dt).foreach { bad =>
+        throw new IllegalArgumentException(
+          s"flatten: `$rPath` has type ${dt.simpleString}; " +
+            s"${bad.simpleString} values have no JSON text rendering " +
+            "(read JSON with inferTimestamp/inferDate off, or cast the " +
+            "column to string)")
+      }
+      if (!batch.present(rPath) || owners.contains(pPath)) Skip
+      else {
+        val c = new Cell(dt, json)
+        owners(pPath) = c
+        c
+      }
+    }
+
+    /** A struct value `depth` levels down: walked, or past `maxDepth` one
+      * JSON cell.
+      */
+    def nested(st: StructType, pPath: String, rPath: String,
+        depth: Int): Node =
+      if (depth > maxDepth) cell(pPath, rPath, st, json = true)
+      else {
+        val sw = struct(st, pPath, rPath, depth)
+        if (sw.fields.isEmpty) Skip else sw
+      }
 
     def struct(st: StructType, pascalParent: String, rawParent: String,
         depth: Int): StructWalk = {
+      // groups in schema order, so a column's owner never depends on
+      // hash order
       val children = st.fields.zipWithIndex.groupBy {
         case (f, _) => PathNaming.toPascal(f.name)
-      }.toSeq.flatMap { case (pascal, group) =>
+      }.toSeq.sortBy(_._2.head._2).flatMap { case (pascal, group) =>
         val (winner, ord) =
           if (group.length == 1) group(0)
           else {
@@ -82,41 +142,26 @@ object RenderPass {
 
     def emit(dt: DataType, pPath: String, rPath: String,
         depth: Int): Node = dt match {
-      case st: StructType =>
-        if (depth + 1 > maxDepth) slotOf(pPath, st)
-        else {
-          val sw = struct(st, pPath, rPath, depth + 1)
-          if (sw.fields.isEmpty) Skip else sw
-        }
+      case st: StructType => nested(st, pPath, rPath, depth + 1)
       case ArrayType(et: StructType, _) =>
-        val s = stats.getOrElse(rPath, ArrayStats.Stats(0, hasEmpty = false))
-        val unindexed =
-          if (s.hasEmpty || s.maxLen == 0) slots.getOrElse(pPath, -1) else -1
-        val elems = (0 until s.maxLen).map { i =>
-          val ip = PathNaming.indexed(pPath, i)
-          if (depth + 1 > maxDepth) slotOf(ip, et)
-          else {
-            val sw = struct(et, ip, s"$rPath.$i", depth + 1)
-            if (sw.fields.isEmpty) Skip else sw
-          }
-        }.toArray
-        if (unindexed < 0 && elems.forall(_ == Skip)) Skip
-        else ArrayWalk(unindexed, elems, et)
-      case at: ArrayType => slotOf(pPath, at)
-      case other =>
-        slots.get(pPath) match {
-          case Some(sl) => Leaf(sl, other)
-          case None => Skip
+        val s = batch.arrays.getOrElse(rPath,
+          StatsPass.Stats(0, hasEmpty = false))
+        val whole =
+          if (s.hasEmpty || s.maxLen == 0) cell(pPath, rPath, dt, json = true)
+          else Skip
+        val elems = Array.tabulate[Node](s.maxLen) { i =>
+          nested(et, PathNaming.indexed(pPath, i), s"$rPath.$i", depth + 1)
         }
+        if (whole == Skip && elems.forall(_ == Skip)) Skip
+        else ArrayWalk(whole, elems)
+      case _: ArrayType => cell(pPath, rPath, dt, json = true)
+      case other => cell(pPath, rPath, other, json = false)
     }
 
-    def slotOf(pPath: String, dt: DataType): Node =
-      slots.get(pPath) match {
-        case Some(sl) => JsonCell(sl, dt)
-        case None => Skip
-      }
-
-    struct(schema, "", "", 0)
+    val root = struct(schema, "", "", 0)
+    val columns = owners.keys.toArray.sorted
+    columns.iterator.zipWithIndex.foreach { case (c, i) => owners(c).slot = i }
+    new Plan(root, columns)
   }
 
   // ---- row evaluation ---------------------------------------------------------
@@ -135,23 +180,23 @@ object RenderPass {
           evalField(fields(i)._2, r, fields(i)._1, out)
           i += 1
         }
-      case ArrayWalk(unindexedSlot, elems, et) =>
+      case ArrayWalk(whole, elems) =>
+        evalField(whole, c, ord, out)
         val xs = c.getArray(ord)
-        if (unindexedSlot >= 0)
-          out(unindexedSlot) = pyJsonArrayOfStruct(xs, et)
         var i = 0
         val n = math.min(xs.numElements(), elems.length)
         while (i < n) {
           evalField(elems(i), xs, i, out)
           i += 1
         }
-      case Leaf(slot, dt) => out(slot) = pyScalar(c, ord, dt)
-      case JsonCell(slot, dt) => out(slot) = pyJson(c, ord, dt)
+      case cell: Cell =>
+        out(cell.slot) =
+          if (cell.json) pyJson(c, ord, cell.dt) else pyScalar(c, ord, cell.dt)
       case Skip => ()
     }
   }
 
-  /** Python str(v) — must mirror [[PyFormat.pyStr]]. */
+  /** Python `str(v)` of a scalar. */
   private def pyScalar(c: SpecializedGetters, ord: Int, dt: DataType): String =
     dt match {
       case BooleanType => if (c.getBoolean(ord)) "True" else "False"
@@ -163,10 +208,9 @@ object RenderPass {
       case other => String.valueOf(c.get(ord, other))
     }
 
-  /** json.dumps-style cell — must mirror [[PyFormat.pyJson]]:
-    * arrays with ", " separators and lowercase literals; structs via a
-    * Jackson generator exactly like Spark's to_json (compact, schema
-    * order, nulls dropped).
+  /** json.dumps-style cell: arrays with ", " separators and lowercase
+    * literals; structs via a Jackson generator exactly like Spark's to_json
+    * (compact, schema order, nulls dropped).
     */
   private def pyJson(c: SpecializedGetters, ord: Int, dt: DataType): String =
     dt match {
@@ -188,25 +232,13 @@ object RenderPass {
       case LongType => java.lang.Long.toString(c.getLong(ord))
       case IntegerType => java.lang.Integer.toString(c.getInt(ord))
       case StringType =>
-        // mirror PyFormat.jsonEscape (backslash, quote, \n \r \t)
+        // json.dumps escapes (backslash, quote, \n \r \t)
         val s = c.getUTF8String(ord).toString
           .replace("\\", "\\\\").replace("\"", "\\\"")
           .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
         "\"" + s + "\""
       case other => String.valueOf(c.get(ord, other))
     }
-
-  private def pyJsonArrayOfStruct(xs: ArrayData, et: StructType): String = {
-    val sb = new java.lang.StringBuilder("[")
-    var i = 0
-    while (i < xs.numElements()) {
-      if (i > 0) sb.append(", ")
-      if (xs.isNullAt(i)) sb.append("null")
-      else sb.append(jacksonStruct(xs.getStruct(i, et.length), et))
-      i += 1
-    }
-    sb.append("]").toString
-  }
 
   private val jsonFactory = new JsonFactory()
 
@@ -255,20 +287,16 @@ object RenderPass {
 
   // ---- public entry -------------------------------------------------------------
 
-  private def renderedRows(df: DataFrame,
-      stats: Map[String, ArrayStats.Stats], columns: Seq[String],
-      maxDepth: Int): RDD[Array[String]] = {
-    val schema = df.schema
-    val slots = columns.zipWithIndex.toMap
-    val plan = compile(schema, stats, slots, maxDepth)
-    val n = columns.length
+  private def renderedRows(df: DataFrame, plan: Plan): RDD[Array[String]] = {
+    val root = plan.root
+    val n = plan.columns.length
     df.queryExecution.toRdd.mapPartitions { it =>
       it.map { row =>
         val out = new Array[String](n)
         java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], "")
         var i = 0
-        while (i < plan.fields.length) {
-          evalField(plan.fields(i)._2, row, plan.fields(i)._1, out)
+        while (i < root.fields.length) {
+          evalField(root.fields(i)._2, row, root.fields(i)._1, out)
           i += 1
         }
         out
@@ -282,9 +310,8 @@ object RenderPass {
     * 5k-string schema costs another multi-second RowEncoder compilation
     * that a sink-bound job never needs.
     */
-  def renderTsvLines(df: DataFrame, stats: Map[String, ArrayStats.Stats],
-      columns: Seq[String], maxDepth: Int): RDD[String] =
-    renderedRows(df, stats, columns, maxDepth).map(tsvLine)
+  def renderTsvLines(df: DataFrame, plan: Plan): RDD[String] =
+    renderedRows(df, plan).map(tsvLine)
 
   /** One TSV line with pandas/Spark-CSV minimal quoting: quote only when a
     * cell contains tab/quote/newline; inner quotes double.
@@ -304,15 +331,10 @@ object RenderPass {
     sb.toString
   }
 
-  /** Render the flattened all-string frame for `df` given the batch stats
-    * and the final (sorted, presence-filtered) column list.
-    */
-  def render(df: DataFrame, stats: Map[String, ArrayStats.Stats],
-      columns: Seq[String], maxDepth: Int): DataFrame = {
-    val spark: SparkSession = df.sparkSession
-    val rdd = renderedRows(df, stats, columns, maxDepth)
-      .map(a => Row.fromSeq(a.toIndexedSeq))
-    spark.createDataFrame(rdd,
-      StructType(columns.map(c => StructField(c, StringType, nullable = false))))
+  /** Render `df` as the flattened all-string frame of `plan`. */
+  def render(df: DataFrame, plan: Plan): DataFrame = {
+    val rdd = renderedRows(df, plan).map(a => Row.fromSeq(a.toIndexedSeq))
+    df.sparkSession.createDataFrame(rdd, StructType(plan.columns.map(c =>
+      StructField(c, StringType, nullable = false))))
   }
 }

@@ -4,33 +4,43 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
 
-/** Single-pass batch statistics for the flattener: per-indexed-path array
-  * widths + empties AND per-path presence, computed in ONE distributed
-  * pass over the input.
+/** Single-pass batch statistics for the flattener: the row count,
+  * per-indexed-path array widths + empties AND per-path presence, computed
+  * in ONE distributed pass over the input.
   *
-  * The expression-based alternative ([[ArrayStats]] + a wide boolean-max
-  * aggregate) is semantically identical but pays Janino compilation for
-  * thousands of generated expressions per job — tens of seconds of fixed
-  * cost per flatten call, dominating small-to-medium batches. This pass is
-  * plain JVM code walking Tungsten rows once (`queryExecution.toRdd` —
-  * external-Row conversion via `df.rdd` costs seconds per pass on
-  * 5k-leaf documents): no codegen, no shuffle (per-partition partial stats
-  * reduce to the driver as one small map), and it subsumes what the
-  * reference computes in its discovery pass
-  * [`ElasticSearch ETL.py:171-181`] — but distributed.
+  * Spark schemas carry `ArrayType(elementType)` with no length, but the
+  * flattening contract expands array-of-object columns positionally, with
+  * the column set unioned across all documents (the reference's pass-1
+  * column-set union [`ElasticSearch ETL.py:171-181`]). The expansion width
+  * is per *indexed* path, not per schema path: `lines.0.messages` and
+  * `lines.5.messages` get independent widths, exactly as the reference
+  * discovers columns per concrete element [`ETL.py:61-65`].
+  *
+  * This pass is plain JVM code walking Tungsten rows once
+  * (`queryExecution.toRdd` — external-Row conversion via `df.rdd` costs
+  * seconds per pass on 5k-leaf documents): no codegen, no shuffle
+  * (per-partition partial stats reduce to the driver as one small map).
   */
 object StatsPass {
 
+  /** Batch-max length of one indexed array-of-struct path, and whether
+    * some document holds it as `[]` (quirk Q4).
+    */
+  final case class Stats(maxLen: Int, hasEmpty: Boolean)
+
   final case class Batch(
-      arrays: Map[String, ArrayStats.Stats],
+      rows: Long,
+      arrays: Map[String, Stats],
       present: Set[String])
 
   private final class Acc extends Serializable {
+    var rows = 0L
     val maxLen = collection.mutable.HashMap.empty[String, Int]
     val hasEmpty = collection.mutable.HashSet.empty[String]
     val present = collection.mutable.HashSet.empty[String]
 
     def merge(o: Acc): Acc = {
+      rows += o.rows
       o.maxLen.foreach { case (k, v) =>
         maxLen.update(k, math.max(maxLen.getOrElse(k, 0), v))
       }
@@ -43,7 +53,7 @@ object StatsPass {
   /** Walk one field/element of `c` (an InternalRow or ArrayData — both are
     * SpecializedGetters with the same positional API); `path` is the raw
     * dotted path with numeric segments for bound array indices (the same
-    * keys [[Flattener.candidates]] uses).
+    * keys [[RenderPass]]'s plan compilation looks up).
     */
   private def walkField(c: SpecializedGetters, ord: Int, dt: DataType,
       path: String, acc: Acc): Unit = {
@@ -78,6 +88,7 @@ object StatsPass {
       val acc = new Acc
       val fields = schema.fields
       it.foreach { row =>
+        acc.rows += 1
         var i = 0
         while (i < fields.length) {
           walkField(row, i, fields(i).dataType, fields(i).name, acc)
@@ -88,12 +99,13 @@ object StatsPass {
     }.collect()
     val merged = partials.foldLeft(new Acc)(_ merge _)
     Batch(
+      merged.rows,
       merged.maxLen.map { case (p, m) =>
-        p -> ArrayStats.Stats(m, merged.hasEmpty.contains(p))
+        p -> Stats(m, merged.hasEmpty.contains(p))
       }.toMap ++
         // paths that were only ever empty arrays never enter maxLen
         merged.hasEmpty.filterNot(merged.maxLen.contains)
-          .map(p => p -> ArrayStats.Stats(0, hasEmpty = true)).toMap,
+          .map(p => p -> Stats(0, hasEmpty = true)).toMap,
       merged.present.toSet)
   }
 }

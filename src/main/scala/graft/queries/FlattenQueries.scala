@@ -7,10 +7,10 @@ import graft.flatten.Flattener
 
 /** The flatten operator exposed on the driver's test tables: parse the
   * semi-structured `events.props` JSON into a nested column, then run the
-  * full flattening pipeline (ArrayStats + presence pruning + Python-format
-  * stringification). The DuckDB oracle reproduces the exact same cells with
-  * string functions — Event_id/Event_type pass through PascalCase renaming,
-  * `k` becomes `Props_K` with the stringified integer.
+  * full flattening pipeline (StatsPass array widths + presence, RenderPass
+  * Python-format rendering). The DuckDB oracle reproduces the exact same
+  * cells with string functions — Event_id/Event_type pass through
+  * PascalCase renaming, `k` becomes `Props_K` with the stringified integer.
   */
 object FlattenQueries {
 
@@ -74,11 +74,7 @@ object FlattenQueries {
 
   private def q67(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // fast path (RenderPass row-walk): byte-identical to the expression
-    // path by FlattenerEquivalenceSpec, without Janino-compiling a
-    // 5,028-expression projection for one document — the expression path
-    // stays pinned by FlattenSpec's golden test
-    val flat = Flattener.flattenFast(graft.sources.EsJson.read(s, GoldenDoc))
+    val flat = Flattener.flatten(graft.sources.EsJson.read(s, GoldenDoc))
     // exactly one golden document: a single bounded row crosses the
     // driver, never the corpus (the distributed path is flattenToTsv)
     val r = flat.first()

@@ -101,7 +101,7 @@ object ExportStream {
             .getOrElse(batchId.toString)
           val file = s"$outputDir/${filePrefix}_${tag}_$ts.tsv"
           val tmp = file + ".dir"
-          val cols = Flattener.flattenToTsv(docs, tmp, maxDepth,
+          val out = Flattener.flattenToTsv(docs, tmp, maxDepth,
             singleFile = true)
           val part = outFs.listStatus(new org.apache.hadoop.fs.Path(tmp))
             .map(_.getPath).find(_.getName.startsWith("part-")).get
@@ -112,7 +112,8 @@ object ExportStream {
               "TSV is intact in the scratch dir — re-run the batch")
           outFs.delete(new org.apache.hadoop.fs.Path(tmp), true): Unit
           results.synchronized {
-            results += BatchResult(batchId, docs.count(), cols.length, file)
+            results += BatchResult(batchId, out.rows, out.columns.length,
+              file)
           }
         }
         ()

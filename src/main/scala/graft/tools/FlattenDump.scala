@@ -23,7 +23,7 @@ object FlattenDump {
       inferred.schema, Seq(in), wholeFile = false)
     val df = if (schema eq inferred.schema) inferred
              else rd.schema(schema).json(in)
-    // fast path end-to-end, so the differential test covers the renderer
+    // the production TSV path end to end
     val tmp = out + ".dir"
     graft.flatten.Flattener.flattenToTsv(df, tmp, singleFile = true)
     val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp)).toArray

@@ -5,17 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.EsJson
 
-/** Codegen-fallback conformance for the 5,028-expression flatten path
+/** Codegen-regime conformance of the golden 5,028-column flatten
   * (SURVEY.md §7.5 risk #1; reference analogue: the column-explosion
   * guardrail `README.md:243-247`).
   *
-  * `Flattener.flatten` builds one projection with ~5k generated
-  * expressions — exactly the shape where Janino's 64 KB method limit
-  * forces whole-stage codegen to split or bail out. The production
-  * mitigation is `flattenFast` (RenderPass row walk, no giant
-  * projection), but the expression path stays part of the public
-  * surface, so its OUTPUT must be byte-identical under every codegen
-  * regime Spark can land in at scale:
+  * `Flattener.flatten` renders with a row walk that generates no code,
+  * but the plan under it — the JSON scan and the envelope-unwrap
+  * projection over a ~5k-leaf schema — is exactly the shape where
+  * Janino's 64 KB method limit forces whole-stage codegen to split or
+  * bail out. The OUTPUT must be byte-identical under every codegen regime
+  * Spark can land in at scale:
   *
   *  - `spark.sql.codegen.wholeStage=false` — per-expression codegen
   *    only (the regime Spark falls back to when a generated method

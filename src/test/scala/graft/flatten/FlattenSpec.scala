@@ -151,15 +151,51 @@ class FlattenSpec extends AnyFunSuite {
     assert(got == Map("A_B_C" -> """{"d":1}"""))
   }
 
-  test("TSV sink: header row + tab separation + empty cells") {
+  /** The lines of `flattenToTsv(singleFile = true)`'s one part-file. */
+  private def tsvLines(docs: Seq[String]): List[String] = {
     import spark.implicits._
-    val df = spark.read.json(Seq(
-      """{"b": "x", "a": 1}""", """{"b": null, "a": 2}""").toDS)
-    val out = java.nio.file.Files.createTempDirectory("tsv").toString + "/out.tsv"
-    graft.sinks.Tsv.writeSingleFile(Flattener.flatten(df), out)
-    val lines = scala.io.Source.fromFile(out).getLines().toList
+    val df = spark.read.json(docs.toDS)
+    val out = java.nio.file.Files.createTempDirectory("tsv").toString + "/out"
+    Flattener.flattenToTsv(df, out, singleFile = true)
+    val parts = java.nio.file.Files.list(java.nio.file.Paths.get(out)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-"))
+    assert(parts.length == 1)
+    scala.io.Source.fromFile(parts(0).toFile).getLines().toList
+  }
+
+  test("TSV sink: header row + tab separation + empty cells") {
+    val lines = tsvLines(Seq("""{"b": "x", "a": 1}""", """{"b": null, "a": 2}"""))
     assert(lines.head == "A\tB")
     assert(lines.tail.toSet == Set("1\tx", "2\t"))
+  }
+
+  test("colliding paths: only the owning path renders into the column") {
+    // `a.B` and the underscore key `a_B` both name A_B; `a` precedes `a_B`
+    // in the inferred (name-sorted) schema, so the nested path owns it
+    val docs = Seq("""{"id": 1, "a_B": 1, "a": {"B": 2}}""",
+      """{"id": 2, "a": {"B": 3}}""", """{"id": 3, "a_B": 4}""")
+    val byId = flattenAll(docs).map(r => r("Id") -> r("A_B")).toMap
+    assert(byId == Map("1" -> "2", "2" -> "3", "3" -> ""))
+    val lines = tsvLines(docs)
+    assert(lines.head == "A_B\tId")
+    assert(lines.tail.toSet == Set("2\t1", "3\t2", "\t3"))
+    // an owner never present leaves the column to the next present path
+    val late = flattenAll(Seq("""{"id": 1, "a": {"B": null}}""",
+      """{"id": 2, "a_B": 4}"""))
+    assert(late.map(r => r("Id") -> r("A_B")).toMap == Map("1" -> "", "2" -> "4"))
+  }
+
+  test("non-JSON leaf types fail fast, naming the path and the type") {
+    val df = spark.sql("""SELECT 1 AS id, DATE'2024-03-01' AS d,
+      named_struct('at', TIMESTAMP'2024-03-01 10:00:00') AS s,
+      array(DATE'2024-03-01') AS ds""")
+    Seq("d" -> "`d` has type date", "s" -> "`s.at` has type timestamp",
+        "ds" -> "`ds` has type array<date>").foreach { case (c, msg) =>
+      val e = intercept[IllegalArgumentException](
+        Flattener.flatten(df.select("id", c)))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
   }
 
   test("EsJson reads a directory of envelope files as one document set") {
