@@ -18,10 +18,14 @@ import org.apache.spark.sql.types._
   * them in the schema (an all-null struct instance then renders `{}`
   * correctly on both paths).
   *
-  * Mechanics: one distributed pass over the RAW text merges a
-  * structural tree of object keys (size bounded by distinct key paths —
-  * the same bound inference itself carries); [[graft]] then adds the
-  * missing nodes as empty-struct / array-of-struct fields. Spark's
+  * Mechanics: a pass over the RAW text merges a structural tree of
+  * object keys (size bounded by distinct key paths — the same bound
+  * inference itself carries); [[graft]] then adds the missing nodes as
+  * empty-struct / array-of-struct fields. The pass takes one of three
+  * routes: a [[Fold]] on the driver fed by the caller (a fresh
+  * `EsHttp` export, whose fetch loop already holds every page and its
+  * parsed tree), a driver-local read of a small input ([[discover]]),
+  * or one distributed job ([[discoverLines]]). Spark's
   * JSON parser handles the grafted schema exactly right: a present
   * `{}` parses to a NON-NULL empty row (both renderers emit `{}`), an
   * absent key parses to NULL (omitted) — probed and spec-pinned.
@@ -93,17 +97,13 @@ object EmptyShapes {
         // bytes, so the extra pass is pure job-scheduling overhead for
         // a golden-doc-sized input (~0.3 s of it, q67's r13 residual).
         val mapper = new ObjectMapper()
-        var acc: Option[Raw] = None
+        val fold = new Fold
         docs.foreach { line =>
-          if (line != null && line.trim.nonEmpty &&
-              EmptyObjRx.matcher(line).find()) {
-            try {
-              val r = ofJson(mapper.readTree(line))
-              acc = Some(acc.fold(r)(merge(_, r)))
-            } catch { case _: Exception => () }
-          }
+          if (line != null && line.trim.nonEmpty)
+            try fold.add(line, mapper.readTree(line))
+            catch { case _: Exception => () }
         }
-        acc
+        fold.result
       case None =>
         val reader = spark.read
         val text =
@@ -125,6 +125,27 @@ object EmptyShapes {
     */
   private[flatten] val EmptyObjPattern = "[:\\[,]\\s*\\{\\s*\\}"
   private val EmptyObjRx = java.util.regex.Pattern.compile(EmptyObjPattern)
+
+  /** Driver-side shape accumulator, one whole document at a time: the
+    * driver-local route of [[discover]], and the fetch loop of a fresh
+    * export, which hands over each page with the tree it already parsed.
+    */
+  final class Fold {
+    private var acc: Option[Raw] = None
+
+    /** Merges the shape of `doc` when its serialized `text` passes the
+      * empty-object prefilter; `doc` is evaluated only then. The pattern
+      * is ASCII and no byte of a multi-byte UTF-8 sequence is ASCII, so
+      * `text` may be the raw UTF-8 bytes read as ISO-8859-1.
+      */
+    def add(text: CharSequence, doc: => JsonNode): Unit =
+      if (EmptyObjRx.matcher(text).find()) {
+        val r = ofJson(doc)
+        acc = Some(acc.fold(r)(merge(_, r)))
+      }
+
+    def result: Option[Raw] = acc
+  }
 
   /** How much raw input the driver-local discovery path will take on;
     * bigger inputs go through the distributed scan.
@@ -221,6 +242,9 @@ object EmptyShapes {
     * inference. Known-vintage reads skip this pass entirely via the
     * `_schema.json` sidecar
     * ([[graft.sources.EsJson.writeSchemaSidecar]]).
+    *
+    * One Spark job: each partition yields at most one partial shape, and
+    * the partials are merged on the driver.
     */
   def discoverLines(
       lines: org.apache.spark.sql.Dataset[String]): Option[Raw] = {
@@ -240,14 +264,21 @@ object EmptyShapes {
         }
         acc.iterator
       }
-    if (shapes.isEmpty()) None else Some(shapes.treeReduce(merge))
+    shapes.collect().reduceOption(merge)
   }
 
   /** [[augment]] for the line-Dataset shape. */
   def augmentLines(inferred: StructType,
       lines: org.apache.spark.sql.Dataset[String]): StructType =
-    discoverLines(lines) match {
-      case Some(raw) => graft(inferred, raw) match {
+    graftOnto(inferred, discoverLines(lines))
+
+  /** [[graft]] of a discovered shape onto an inferred root; returns the
+    * inferred schema itself when nothing was dropped (the overwhelmingly
+    * common case — callers can skip a re-read on eq).
+    */
+  def graftOnto(inferred: StructType, raw: Option[Raw]): StructType =
+    raw match {
+      case Some(r) => graft(inferred, r) match {
         case st: StructType if st != inferred => st
         case _ => inferred
       }
@@ -289,17 +320,8 @@ object EmptyShapes {
     case RScalar       => None
   }
 
-  /** [[graft]] over a fresh [[discover]] pass; returns the inferred
-    * schema untouched when nothing was dropped (the overwhelmingly
-    * common case — callers can skip the re-read on eq).
-    */
+  /** [[graftOnto]] over a fresh [[discover]] pass. */
   def augment(spark: SparkSession, inferred: StructType,
       paths: Seq[String], wholeFile: Boolean): StructType =
-    discover(spark, paths, wholeFile) match {
-      case Some(raw) => graft(inferred, raw) match {
-        case st: StructType if st != inferred => st
-        case _ => inferred
-      }
-      case None => inferred
-    }
+    graftOnto(inferred, discover(spark, paths, wholeFile))
 }

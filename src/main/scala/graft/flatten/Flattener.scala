@@ -48,19 +48,15 @@ object Flattener {
   val DefaultMaxDepth = 20
 
   /** Flatten every row of `df` (one row = one document) into all-string
-    * leaf columns, lexicographically ordered. The parsed input is cached
-    * (unless the caller already did) because the stats pass and the
-    * render pass both read it.
+    * leaf columns, lexicographically ordered. The stats pass and every
+    * action on the lazy result each read `df`; nothing is cached here,
+    * because a cache taken by this call could never be released. A
+    * caller that wants the input parsed once caches `df` itself.
     */
   def flatten(df: DataFrame, maxDepth: Int = DefaultMaxDepth): DataFrame = {
-    val input =
-      if (df.storageLevel == StorageLevel.NONE)
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-      else df
-    val plan = RenderPass.compile(input.schema, StatsPass.collect(input),
-      maxDepth)
+    val plan = RenderPass.compile(df.schema, StatsPass.collect(df), maxDepth)
     if (plan.columns.isEmpty) df.sparkSession.emptyDataFrame
-    else RenderPass.render(input, plan)
+    else RenderPass.render(df, plan)
   }
 
   /** What [[flattenToTsv]] wrote: the header's columns and the number of
@@ -77,14 +73,14 @@ object Flattener {
       maxDepth: Int = DefaultMaxDepth,
       singleFile: Boolean = false): Written = {
     val spark = df.sparkSession
-    // unlike [[flatten]] this call is TERMINAL (the TSV write is the last
-    // job over the input), so a cache this call took out is RELEASED
-    // before returning: a long-running export loop (the streaming batch
-    // path, the bench's repeated samples) would otherwise accumulate one
-    // pinned parsed-input RDD per call — hundreds of MB each for wide
-    // documents — until memory pressure throttles every later call
-    // (measured: 6x spread across 5 same-input samples with 10 pinned
-    // RDDs at the end).
+    // this call is TERMINAL (the TSV write is the last job over the
+    // input), so it can cache the input for its two passes and RELEASE
+    // the cache before returning: a long-running export loop (the
+    // streaming batch path, the bench's repeated samples) would otherwise
+    // accumulate one pinned parsed-input RDD per call — hundreds of MB
+    // each for wide documents — until memory pressure throttles every
+    // later call (measured: 6x spread across 5 same-input samples with 10
+    // pinned RDDs at the end).
     val weOwn = df.storageLevel == StorageLevel.NONE
     val input = if (weOwn) df.persist(StorageLevel.MEMORY_AND_DISK) else df
     try {

@@ -60,15 +60,20 @@ object EsHttp {
   final case class ExportResult(pages: Int, documents: Long,
       totalCount: Long)
 
-  private def post(client: HttpClient, url: String, body: String): String = {
+  /** The response body's raw bytes: the loop writes and parses the same
+    * bytes, never a decoded copy.
+    */
+  private def post(client: HttpClient, url: String,
+      body: String): Array[Byte] = {
     val req = HttpRequest.newBuilder(URI.create(url))
       .header("Content-Type", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8))
       .build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+    val resp = client.send(req, HttpResponse.BodyHandlers.ofByteArray())
     if (resp.statusCode() / 100 != 2)
       throw new RuntimeException(
-        s"ES request to $url failed: HTTP ${resp.statusCode()} ${resp.body().take(200)}")
+        s"ES request to $url failed: HTTP ${resp.statusCode()} " +
+          new String(resp.body(), StandardCharsets.UTF_8).take(200))
     resp.body()
   }
 
@@ -94,7 +99,14 @@ object EsHttp {
     * counts. The page files are byte-for-byte what the endpoint served —
     * parsing fidelity stays downstream where it is already tested.
     */
-  def export(cfg: Config, pageDir: String): ExportResult = {
+  def export(cfg: Config, pageDir: String): ExportResult =
+    fetch(cfg, pageDir, (_, _) => ())
+
+  /** [[export]], handing each written page's bytes and parsed tree to
+    * `onPage` as it arrives.
+    */
+  private def fetch(cfg: Config, pageDir: String,
+      onPage: (Array[Byte], JsonNode) => Unit): ExportResult = {
     Files.createDirectories(Paths.get(pageDir))
     // a narrower re-run writes fewer pages than its predecessor; stale
     // page files would silently rejoin the read — clear OUR page
@@ -125,13 +137,14 @@ object EsHttp {
     while (!done && fetched < total) {
       val body = post(client, s"${cfg.baseUrl}/${cfg.index}/_search",
         searchBody(cfg, cursor))
-      val hits = mapper.readTree(body).path("hits").path("hits")
+      val tree = mapper.readTree(body)
+      val hits = tree.path("hits").path("hits")
       if (!hits.isArray || hits.size() == 0) {
         // reference `if not hits: break` — under-count beats a spin
         done = true
       } else {
-        Files.write(Paths.get(pageDir, f"page-$page%05d.json"),
-          body.getBytes(StandardCharsets.UTF_8))
+        Files.write(Paths.get(pageDir, f"page-$page%05d.json"), body)
+        onPage(body, tree)
         page += 1
         fetched += hits.size()
         val lastSource = hits.get(hits.size() - 1).path("_source")
@@ -151,17 +164,21 @@ object EsHttp {
   /** Live fetch → DataFrame of `_source` documents: export to a page
     * directory, then read through the standard offline envelope path
     * ([[EsJson.read]] — same unwrap contract as every other input).
+    *
+    * A fresh export is a new VINTAGE. Its grafted parse schema is folded
+    * together on the driver as the loop receives each page
+    * ([[EsJson.ParseSchemaFold]]) and persisted as the sidecar, so this
+    * read and every later read of the vintage take the sidecar path: no
+    * Spark job runs before the parse. The export deleted any stale
+    * sidecar, and the schema describes exactly the pages it wrote; an
+    * export of zero documents gets the empty schema and reads as an
+    * empty frame.
     */
   def read(spark: org.apache.spark.sql.SparkSession, cfg: Config,
       pageDir: String): org.apache.spark.sql.DataFrame = {
-    export(cfg, pageDir): Unit
-    // a fresh export is a new VINTAGE: discover its grafted parse
-    // schema once and persist it as the sidecar, so this read and every
-    // later read of the vintage skip inference + EmptyShapes discovery
-    // ([[EsJson.read]] takes the sidecar fast path). export() deleted
-    // any stale sidecar, so the discovery always describes THESE pages.
-    EsJson.writeSchemaSidecar(spark, pageDir,
-      EsJson.inferParseSchema(spark, Seq(pageDir)))
+    val schema = new EsJson.ParseSchemaFold(spark)
+    fetch(cfg, pageDir, schema.add): Unit
+    EsJson.writeSchemaSidecar(spark, pageDir, schema.result)
     EsJson.read(spark, pageDir)
   }
 }

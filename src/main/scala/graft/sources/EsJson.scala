@@ -1,8 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets
+
+import com.fasterxml.jackson.databind.JsonNode
+
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.catalyst.json.{InferSchemaAccess, JSONOptionsInRead,
+  JsonInferSchema}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+
+import graft.flatten.EmptyShapes
 
 /** Elasticsearch search-response JSON source (SURVEY.md §2.1 #1/#3).
   *
@@ -17,6 +26,23 @@ import org.apache.spark.sql.types._
   * explode is narrow (no shuffle).
   */
 object EsJson {
+
+  /** The JSON reader options of every export read, and of the schema
+    * fold of a fresh export ([[ParseSchemaFold]]). `multiLine` because
+    * exported responses are pretty-printed single documents, not JSONL.
+    * ISO-8601-looking strings must stay strings — the reference never
+    * parses dates (SURVEY.md §1.2); the inference flags are explicit even
+    * though they default to false.
+    */
+  private def readerOptions(multiLine: Boolean): Map[String, String] = Map(
+    "multiLine" -> multiLine.toString,
+    "inferTimestamp" -> "false",
+    "inferDate" -> "false",
+    "prefersDecimal" -> "false")
+
+  private def reader(spark: SparkSession, multiLine: Boolean)
+      : DataFrameReader =
+    spark.read.options(readerOptions(multiLine))
 
   /** True if the inferred schema carries the ES response envelope. */
   def isEnvelope(schema: StructType): Boolean =
@@ -44,10 +70,11 @@ object EsJson {
 
   /** Persist `parseSchema` as the vintage sidecar of `dir` (side name +
     * atomic rename, the manifest-commit discipline). An exported vintage
-    * is immutable once written, so its grafted schema can be discovered
-    * ONCE at export time; every later read of the vintage then skips
-    * both the inference scan and the EmptyShapes discovery pass — zero
-    * Spark jobs before the parse itself.
+    * is immutable once written, so its grafted schema is discovered ONCE
+    * at export time — by [[EsHttp.read]], as its fetch loop receives the
+    * pages ([[ParseSchemaFold]]); every later read of the vintage then
+    * skips both the inference scan and the EmptyShapes discovery pass —
+    * zero Spark jobs before the parse itself.
     */
   def writeSchemaSidecar(spark: SparkSession, dir: String,
       parseSchema: StructType): Unit = {
@@ -95,55 +122,85 @@ object EsJson {
   def read(spark: SparkSession, path: String,
       multiLine: Boolean = true): DataFrame =
     readSchemaSidecar(spark, path) match {
-      case Some(ps) =>
-        unwrap(spark.read.option("multiLine", multiLine)
-          .schema(ps).json(path))
+      case Some(ps) => unwrap(reader(spark, multiLine).schema(ps).json(path))
       case None => readFiles(spark, Seq(path), multiLine)
     }
 
   /** Multi-path variant of [[read]] — the bounded schema-inference
     * prefix of the es-export connector reads an explicit file list.
-    *
-    * Inference is AUGMENTED with [[graft.flatten.EmptyShapes]]: keys
-    * whose value is an empty object in every document are dropped by
-    * Spark's schema inference, which would silently erase them from
-    * JSON-rendered subtree cells where the reference's json.dumps
-    * keeps them. The shape pass reuses the same bounded file list as
-    * inference; when nothing was dropped (the common case) the
-    * re-read is skipped entirely.
+    * Parses with [[inferParseSchema]]'s schema over the same paths.
     */
   def readFiles(spark: SparkSession, paths: Seq[String],
-      multiLine: Boolean = true): DataFrame = {
-    def rd = spark.read
-      .option("multiLine", multiLine)
-      // ISO-8601-looking strings must stay strings — the reference never
-      // parses dates (SURVEY.md §1.2); be explicit even though these
-      // default to false.
-      .option("inferTimestamp", false)
-      .option("inferDate", false)
-      .option("prefersDecimal", false)
-    val inferred = rd.json(paths: _*)
-    val schema = graft.flatten.EmptyShapes.augment(spark,
-      inferred.schema, paths, wholeFile = multiLine)
-    unwrap(if (schema eq inferred.schema) inferred
-           else rd.schema(schema).json(paths: _*))
-  }
+      multiLine: Boolean = true): DataFrame =
+    unwrap(reader(spark, multiLine)
+      .schema(inferParseSchema(spark, paths, multiLine)).json(paths: _*))
 
-  /** The PARSE schema a vintage sidecar persists: inference +
-    * [[graft.flatten.EmptyShapes]] graft over the same paths — exactly
-    * what [[readFiles]] derives on every read, computed once so
-    * [[writeSchemaSidecar]] can pin it to the vintage.
+  /** The PARSE schema of the documents under `paths`: Spark's JSON
+    * inference AUGMENTED with [[graft.flatten.EmptyShapes]]. Keys whose
+    * value is an empty object in every document are dropped by Spark's
+    * schema inference, which would silently erase them from
+    * JSON-rendered subtree cells where the reference's json.dumps keeps
+    * them; the shape pass reuses the same paths as inference. Spark
+    * passes over the data: one for inference, and one for the shape
+    * discovery unless the input is small enough to read on the driver.
+    *
+    * A fresh [[EsHttp]] export does not come here: its fetch loop folds
+    * the same schema page by page ([[ParseSchemaFold]]). This is the
+    * path of a directory without a [[SchemaSidecar]], and the oracle the
+    * fold is tested against.
     */
   def inferParseSchema(spark: SparkSession, paths: Seq[String],
-      multiLine: Boolean = true): StructType = {
-    val inferred = spark.read
-      .option("multiLine", multiLine)
-      .option("inferTimestamp", false)
-      .option("inferDate", false)
-      .option("prefersDecimal", false)
-      .json(paths: _*).schema
-    graft.flatten.EmptyShapes.augment(spark, inferred, paths,
-      wholeFile = multiLine)
+      multiLine: Boolean = true): StructType =
+    EmptyShapes.augment(spark, reader(spark, multiLine).json(paths: _*).schema,
+      paths, wholeFile = multiLine)
+
+  /** [[inferParseSchema]] for whole-file documents the driver already
+    * holds, folded in one document at a time with no Spark job: Spark's
+    * own per-document inference (`JsonInferSchema.inferField` over a
+    * parser from `JSONOptions.buildJsonFactory()`) merged with
+    * `compatibleRootType`, then finished with Spark's `canonicalizeType`
+    * and the EmptyShapes graft. The options are the ones
+    * `spark.read.json` builds from [[readerOptions]] (multiLine), the
+    * session time zone and the corrupt-record column name.
+    */
+  final class ParseSchemaFold(spark: SparkSession) {
+    private val conf = spark.sessionState.conf
+    private val options = SQLConf.withExistingConf(conf) {
+      new JSONOptionsInRead(readerOptions(multiLine = true),
+        conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    }
+    private val inference =
+      SQLConf.withExistingConf(conf)(new JsonInferSchema(options))
+    private val factory = options.buildJsonFactory()
+    private val mergeRoot = JsonInferSchema.compatibleRootType(
+      options.columnNameOfCorruptRecord, options.parseMode)
+    private val shapes = new EmptyShapes.Fold
+    private var root: DataType = StructType(Nil)
+
+    /** Folds in one document: its serialized `bytes` (UTF-8) and the
+      * tree the caller parsed from them.
+      */
+    def add(bytes: Array[Byte], tree: JsonNode): Unit =
+      SQLConf.withExistingConf(conf) {
+        val parser = factory.createParser(bytes)
+        val tpe =
+          try { parser.nextToken(); inference.inferField(parser) }
+          finally parser.close()
+        root = mergeRoot(root, tpe)
+        shapes.add(new String(bytes, StandardCharsets.ISO_8859_1), tree)
+      }
+
+    /** The parse schema of every document folded in so far; the empty
+      * schema when there was none.
+      */
+    def result: StructType = SQLConf.withExistingConf(conf) {
+      val inferred =
+        InferSchemaAccess.canonicalizeType(inference, root, options) match {
+          case Some(st: StructType) => st
+          case _ => StructType(Nil)
+        }
+      EmptyShapes.graftOnto(inferred, shapes.result)
+    }
   }
 
   /** Schema-reuse read: parse with a KNOWN schema, skipping the inference
@@ -155,8 +212,5 @@ object EsJson {
     */
   def read(spark: SparkSession, path: String, schema: StructType,
       multiLine: Boolean): DataFrame =
-    unwrap(spark.read
-      .option("multiLine", multiLine)
-      .schema(schema)
-      .json(path))
+    unwrap(reader(spark, multiLine).schema(schema).json(path))
 }

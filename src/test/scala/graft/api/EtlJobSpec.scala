@@ -110,6 +110,36 @@ class EtlJobSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("runHttp: an empty index is a SUCCESS with 0 records") {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    def respond(x: HttpExchange, body: String): Unit = {
+      val b = body.getBytes("UTF-8")
+      x.sendResponseHeaders(200, b.length)
+      x.getResponseBody.write(b); x.close()
+    }
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/claims/_count",
+      (x: HttpExchange) => respond(x, """{"count":0}"""))
+    server.createContext("/claims/_search", (x: HttpExchange) =>
+      respond(x, """{"hits":{"total":{"value":0},"hits":[]}}"""))
+    server.start()
+    try {
+      val out = tmp()
+      val cfg = graft.sources.EsHttp.Config(
+        s"http://localhost:${server.getAddress.getPort}", "claims")
+      // the reference's loop does not run at all: nothing to fetch
+      val res = EtlJob.runHttp(spark, cfg, s"$out/pages", s"$out/tsv",
+        s"$out/audit", jobName = "live_http_empty")
+      assert(res.records === 0L)
+      assert(new java.io.File(s"$out/pages").listFiles()
+        .count(_.getName.startsWith("page-")) === 0)
+      val audit = spark.read.parquet(s"$out/audit").collect()
+      assert(audit.length === 1)
+      assert(audit.head.getAs[String]("job_status") === "SUCCESS")
+      assert(audit.head.getAs[Long]("record_count_loaded") === 0L)
+    } finally server.stop(0)
+  }
+
   test("runLive without a connector fails fast AND audits the failure") {
     val out = tmp()
     intercept[Throwable] {

@@ -164,6 +164,20 @@ class FlattenSpec extends AnyFunSuite {
     scala.io.Source.fromFile(parts(0).toFile).getLines().toList
   }
 
+  test("flatten caches nothing: persisted RDDs unchanged after three calls") {
+    import spark.implicits._
+    // relative snapshot: other suites sharing this JVM's session may
+    // hold their own persists
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (i <- 1 to 3) {
+      val df = spark.read.json(Seq(s"""{"a": $i, "b": {"c": [1, 2]}}""").toDS)
+      val flat = Flattener.flatten(df)
+      assert(flat.collect().map(_.getString(0)).toSeq === Seq(i.toString))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "flatten left a persisted input behind")
+  }
+
   test("TSV sink: header row + tab separation + empty cells") {
     val lines = tsvLines(Seq("""{"b": "x", "a": 1}""", """{"b": null, "a": 2}"""))
     assert(lines.head == "A\tB")

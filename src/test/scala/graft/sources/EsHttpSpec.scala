@@ -173,4 +173,17 @@ class EsHttpSpec extends AnyFunSuite {
       assert(e.getMessage.contains("noSuchField"))
     } finally es.stop()
   }
+
+  test("read: the loop's schema equals inference + graft over its pages") {
+    val es = new StubEs(docs)
+    try {
+      val dir = Files.createTempDirectory("eshttp_read").toString
+      val cfg = EsHttp.Config(es.baseUrl, "claims", pageSize = 10)
+      val df = EsHttp.read(spark, cfg, dir)
+      assert(EsJson.readSchemaSidecar(spark, dir) ===
+        Some(EsJson.inferParseSchema(spark, Seq(dir))))
+      assert(df.count() === 25)
+      assert(es.searchBodies.size === 3)
+    } finally es.stop()
+  }
 }

@@ -99,6 +99,10 @@ class SchemaSidecarSpec extends AnyFunSuite {
       // the persisted schema is the PARSE schema (envelope) and carries
       // the EmptyShapes graft for the always-empty key 'e'
       assert(side.get.fieldNames.contains("hits"))
+      // the schema folded inside the fetch loop is the one inference +
+      // graft derives from the same pages
+      assert(side.get === EsJson.inferParseSchema(spark, Seq(pageDir)))
+      assert(docs.columns.contains("e"))
       // a later read of the vintage goes through the sidecar and equals
       val again = EsJson.read(spark, pageDir)
       assert(again.columns.toSeq === docs.columns.toSeq)
@@ -154,5 +158,25 @@ class SchemaSidecarSpec extends AnyFunSuite {
     val viaPath = EmptyShapes.augment(spark, inferred,
       Seq(dir.toString), wholeFile = false)
     assert(viaPath.fieldNames.contains("e"))
+  }
+
+  test("distributed EmptyShapes discovery runs one Spark job") {
+    import graft.flatten.EmptyShapes
+    val lines = Seq(
+      """{"k": 1, "e": {}, "arr": [{"z": {}}]}""",
+      """{"k": 2, "e": {}}""",
+      """{"k": 3}""")
+    // three partitions, one of them without a prefilter match
+    val ds = spark.createDataset(spark.sparkContext.parallelize(lines, 3))(
+      org.apache.spark.sql.Encoders.STRING)
+    val (shape, jobs) = graft.JobsStarted(spark)(EmptyShapes.discoverLines(ds))
+    assert(jobs === 1)
+    assert(shape.isDefined)
+    // no document passes the prefilter: still one job, no shape
+    val plain = spark.createDataset(Seq("""{"k": 1}""", """{"k": 2}"""))(
+      org.apache.spark.sql.Encoders.STRING)
+    val (none, jobs2) = graft.JobsStarted(spark)(EmptyShapes.discoverLines(plain))
+    assert(jobs2 === 1)
+    assert(none.isEmpty)
   }
 }
