@@ -446,7 +446,7 @@ object Bench {
       d
     }
     try {
-      val golden = "/root/reference/ElasticSearch_Document.json"
+      val golden = graft.queries.FlattenQueries.GoldenDoc
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val root = mapper.readTree(new java.io.File(golden))
       val src = root.get("hits").get("hits").get(0).get("_source")

@@ -18,14 +18,16 @@ import org.apache.spark.sql.types._
   * them in the schema (an all-null struct instance then renders `{}`
   * correctly on both paths).
   *
-  * Mechanics: a pass over the RAW text merges a structural tree of
-  * object keys (size bounded by distinct key paths — the same bound
-  * inference itself carries); [[graft]] then adds the missing nodes as
-  * empty-struct / array-of-struct fields. The pass takes one of three
-  * routes: a [[Fold]] on the driver fed by the caller (a fresh
-  * `EsHttp` export, whose fetch loop already holds every page and its
-  * parsed tree), a driver-local read of a small input ([[discover]]),
-  * or one distributed job ([[discoverLines]]). Spark's
+  * Mechanics: a pass over the RAW text absorbs every document in place
+  * into one mutable tree of object keys ([[Shape]]; size bounded by
+  * distinct key paths — the same bound inference itself carries),
+  * converted to a [[Raw]] once at the end; [[graft]] then adds the
+  * missing nodes as empty-struct / array-of-struct fields. The pass
+  * takes one of three routes: a [[Fold]] fed by the caller (a fresh
+  * `EsHttp` export, whose fold worker receives every page with the tree
+  * the fetch loop parsed), a driver-local read of a small input
+  * ([[discover]]), or one distributed job ([[discoverLines]]: one
+  * partial shape per partition, absorbed on the driver). Spark's
   * JSON parser handles the grafted schema exactly right: a present
   * `{}` parses to a NON-NULL empty row (both renderers emit `{}`), an
   * absent key parses to NULL (omitted) — probed and spec-pinned.
@@ -45,42 +47,79 @@ object EmptyShapes {
   final case class RArr(elem: Option[Raw]) extends Raw
   case object RScalar extends Raw
 
-  private[flatten] def merge(a: Raw, b: Raw): Raw = (a, b) match {
-    case (RObj(x), RObj(y)) =>
-      RObj((x.keySet ++ y.keySet).iterator.map { k =>
-        k -> ((x.get(k), y.get(k)) match {
-          case (Some(p), Some(q)) => merge(p, q)
-          case (Some(p), None)    => p
-          case (None, Some(q))    => q
-          case _                  => RScalar // unreachable
-        })
-      }.toMap)
-    case (RArr(x), RArr(y)) => (x, y) match {
-      case (Some(p), Some(q)) => RArr(Some(merge(p, q)))
-      case (Some(p), None)    => RArr(Some(p))
-      case (None, Some(q))    => RArr(Some(q))
-      case _                  => RArr(None)
+  /** In-place accumulator of the merged [[Raw]] shape of many documents:
+    * one mutable node tree that absorbs each document as it comes, where
+    * building a `Raw` per document and merging it in would rebuild every
+    * map level on the way down. A node is an object with a child map, an
+    * array with one element node, or a scalar. A node first takes the
+    * kind of what it absorbs; a later value of another kind collapses it
+    * to scalar, which absorbs everything after — mixed shapes keep a real
+    * inferred type, so the graft never fires there. Elements of an array
+    * merge into its one element node, and an empty array leaves none.
+    * Converted to `Raw` once, in [[result]]; `None` when nothing was
+    * absorbed.
+    */
+  final class Shape {
+    private var kind = Shape.Unset
+    private var children: java.util.HashMap[String, Shape] = _
+    private var elem: Shape = _
+
+    /** Takes on `k`; true when the node is (still) an object or array
+      * whose contents the caller must absorb next.
+      */
+    private def become(k: Int): Boolean =
+      if (kind == Shape.Unset) {
+        kind = k
+        if (k == Shape.Obj) children = new java.util.HashMap[String, Shape]
+        k != Shape.Scalar
+      } else if (kind == k) k != Shape.Scalar
+      else { kind = Shape.Scalar; children = null; elem = null; false }
+
+    private def child(key: String): Shape =
+      children.computeIfAbsent(key, _ => new Shape)
+
+    private def element: Shape = { if (elem == null) elem = new Shape; elem }
+
+    def add(n: JsonNode): Unit =
+      if (n.isObject) {
+        if (become(Shape.Obj)) {
+          val it = n.fields()
+          while (it.hasNext) { val e = it.next(); child(e.getKey).add(e.getValue) }
+        }
+      } else if (n.isArray) {
+        if (become(Shape.Arr)) {
+          val it = n.elements()
+          while (it.hasNext) element.add(it.next())
+        }
+      } else become(Shape.Scalar): Unit
+
+    /** Absorbs an already-merged shape: a partial from another partition. */
+    def add(r: Raw): Unit = r match {
+      case RObj(ch) =>
+        if (become(Shape.Obj)) ch.foreach { case (k, v) => child(k).add(v) }
+      case RArr(e) => if (become(Shape.Arr)) e.foreach(x => element.add(x))
+      case RScalar => become(Shape.Scalar): Unit
     }
-    // mixed shapes: inference keeps a real type for the key, so the
-    // graft never fires there — collapse to the never-grafted scalar
-    case _ => RScalar
+
+    def result: Option[Raw] =
+      if (kind == Shape.Unset) None else Some(toRaw)
+
+    private def toRaw: Raw = kind match {
+      case Shape.Obj =>
+        val m = Map.newBuilder[String, Raw]
+        children.forEach((k, v) => m += k -> v.toRaw)
+        RObj(m.result())
+      case Shape.Arr => RArr(Option(elem).map(_.toRaw))
+      case _ => RScalar
+    }
   }
 
-  private[flatten] def ofJson(n: JsonNode): Raw =
-    if (n.isObject) {
-      val it = n.fields()
-      val m = Map.newBuilder[String, Raw]
-      while (it.hasNext) { val e = it.next(); m += e.getKey -> ofJson(e.getValue) }
-      RObj(m.result())
-    } else if (n.isArray) {
-      var acc: Option[Raw] = None
-      val it = n.elements()
-      while (it.hasNext) {
-        val r = ofJson(it.next())
-        acc = Some(acc.fold(r)(merge(_, r)))
-      }
-      RArr(acc)
-    } else RScalar
+  private object Shape {
+    final val Unset = 0
+    final val Obj = 1
+    final val Arr = 2
+    final val Scalar = 3
+  }
 
   /** Distributed raw-shape discovery: JSONL when `wholeFile` is false,
     * one-pretty-printed-document-per-file when true (the exported-ES
@@ -127,24 +166,23 @@ object EmptyShapes {
   private val EmptyObjRx = java.util.regex.Pattern.compile(EmptyObjPattern)
 
   /** Driver-side shape accumulator, one whole document at a time: the
-    * driver-local route of [[discover]], and the fetch loop of a fresh
-    * export, which hands over each page with the tree it already parsed.
+    * driver-local route of [[discover]], and the fold worker of a fresh
+    * export, which hands over each page with the tree the fetch loop
+    * already parsed. Documents that pass the prefilter are absorbed into
+    * one [[Shape]].
     */
   final class Fold {
-    private var acc: Option[Raw] = None
+    private val shape = new Shape
 
-    /** Merges the shape of `doc` when its serialized `text` passes the
+    /** Absorbs the shape of `doc` when its serialized `text` passes the
       * empty-object prefilter; `doc` is evaluated only then. The pattern
       * is ASCII and no byte of a multi-byte UTF-8 sequence is ASCII, so
       * `text` may be the raw UTF-8 bytes read as ISO-8859-1.
       */
     def add(text: CharSequence, doc: => JsonNode): Unit =
-      if (EmptyObjRx.matcher(text).find()) {
-        val r = ofJson(doc)
-        acc = Some(acc.fold(r)(merge(_, r)))
-      }
+      if (EmptyObjRx.matcher(text).find()) shape.add(doc)
 
-    def result: Option[Raw] = acc
+    def result: Option[Raw] = shape.result
   }
 
   /** How much raw input the driver-local discovery path will take on;
@@ -248,23 +286,23 @@ object EmptyShapes {
     */
   def discoverLines(
       lines: org.apache.spark.sql.Dataset[String]): Option[Raw] = {
-    val shapes = lines
+    val partials = lines
       .filter(org.apache.spark.sql.functions.col("value")
         .rlike(EmptyObjPattern))
       .rdd.mapPartitions { it =>
         val mapper = new ObjectMapper()
-        var acc: Option[Raw] = None
+        val shape = new Shape
         it.foreach { line =>
           if (line != null && line.trim.nonEmpty) {
-            try {
-              val r = ofJson(mapper.readTree(line))
-              acc = Some(acc.fold(r)(merge(_, r)))
-            } catch { case _: Exception => () }
+            try shape.add(mapper.readTree(line))
+            catch { case _: Exception => () }
           }
         }
-        acc.iterator
+        shape.result.iterator
       }
-    shapes.collect().reduceOption(merge)
+    val shape = new Shape
+    partials.collect().foreach(shape.add)
+    shape.result
   }
 
   /** [[augment]] for the line-Dataset shape. */

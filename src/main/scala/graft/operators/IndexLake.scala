@@ -180,24 +180,32 @@ object IndexLake {
   private val nBucketsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
-  private def metaIdentity(spark: SparkSession, dir: String): String = {
+  // Residual: the identity resolves mtimes only to the file system's
+  // granularity (a second on some stores), so a rebuild that wrote part
+  // files of the same names and lengths within one tick would alias the
+  // stale count. Spark names part files after the writing job's UUID,
+  // so only a writer that reuses part names could reach it.
+  private def metaIdentity(spark: SparkSession, dir: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$MetaName")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).iterator
+    try Some(fs.listStatus(p).iterator
       .filter(_.getPath.getName.startsWith("part-"))
       .map(s => s"${s.getPath}@${s.getModificationTime}:${s.getLen}")
-      .toSeq.sorted.mkString("|")
+      .toSeq.sorted.mkString("|"))
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   private def nBucketsOf(spark: SparkSession, dir: String): Int = {
+    // no meta dir, no identity: the uncached read below then fails with
+    // Spark's descriptive missing-path error
     val key = metaIdentity(spark, dir)
-    val cached = nBucketsCache.get(key)
+    val cached = key.map(nBucketsCache.get).orNull
     if (cached != null) return cached.toInt
     val r = spark.read.parquet(s"$dir/$MetaName").collect()
     require(r.length == 1, s"$dir/$MetaName must hold exactly one row")
     val n = r(0).getLong(0).toInt
     if (nBucketsCache.size > 512) nBucketsCache.clear()
-    nBucketsCache.put(key, n): Unit
+    key.foreach(nBucketsCache.put(_, n))
     n
   }
 

@@ -395,7 +395,7 @@ object Similarity {
       dataDir: String, data: DataFrame, centroids: Array[Float], dim: Int,
       sampleN: Int = 2048): Unit =
     writeDriftBaselineFromSample(spark, dataDir,
-      collectDriftSampleAsync(data, sampleN).get(), centroids, dim)
+      collectDriftSampleAsync(data, sampleN).await(), centroids, dim)
 
   /** Kick off the baseline sample collect on a driver side-thread so it
     * OVERLAPS the lake write job that follows (guide §2.6 — the sample
@@ -403,19 +403,18 @@ object Similarity {
     * jobs are independent; Spark schedules concurrent driver-thread
     * actions FIFO and the sample's tasks back-fill the write's tail).
     * Sequential cost was one full extra pass latency per lake write.
+    * Callers run the write through [[graft.SideTask.alongside]], so a
+    * failed write cancels the sample's jobs and surfaces as itself.
     */
   private def collectDriftSampleAsync(data: DataFrame,
-      sampleN: Int = 2048)
-      : java.util.concurrent.Future[Array[Array[Float]]] = {
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    try pool.submit(
-      new java.util.concurrent.Callable[Array[Array[Float]]] {
-        def call(): Array[Array[Float]] = data
-          .orderBy(hash(col("id")), col("id")).limit(sampleN)
-          .collect().map(_.getSeq[Float](1).toArray) // sampleN×dim
-      })
-    finally pool.shutdown() // lets the submitted task finish
-  }
+      sampleN: Int = 2048): graft.SideTask[Array[Array[Float]]] =
+    graft.SideTask.spark(data.sparkSession.sparkContext, DriftSampleTask) {
+      data.orderBy(hash(col("id")), col("id")).limit(sampleN)
+        .collect().map(_.getSeq[Float](1).toArray) // sampleN×dim
+    }
+
+  /** Name of the drift-sample side thread and of its Spark job group. */
+  private[operators] val DriftSampleTask = "ivf-drift-sample"
 
   private def writeDriftBaselineFromSample(
       spark: org.apache.spark.sql.SparkSession,
@@ -489,19 +488,21 @@ object Similarity {
     // contract) collects CONCURRENTLY with the write below: the two
     // jobs read the same immutable source, and sequentially the sample
     // was one full extra pass of latency per lake write
-    val sampleFut = collectDriftSampleAsync(data)
-    data
-      .withColumn("cell",
-        graft.functions.ArrayOps.nearestCentroidF(col("vec"), centLit, dim))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(lakeDir)
-    // sidecar AFTER the main write (whose overwrite clears the dir)
+    val sample = collectDriftSampleAsync(data)
     import spark.implicits._
-    centroids.grouped(dim).zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
-      .toDF("cell_id", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(lakeDir + "/_ivf_centroids")
-    writeDriftBaselineFromSample(spark, lakeDir, sampleFut.get(),
+    sample.alongside {
+      data
+        .withColumn("cell",
+          graft.functions.ArrayOps.nearestCentroidF(col("vec"), centLit, dim))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(lakeDir)
+      // sidecar AFTER the main write (whose overwrite clears the dir)
+      centroids.grouped(dim).zipWithIndex
+        .map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
+        .toDF("cell_id", "centroid").coalesce(1)
+        .write.mode("overwrite").parquet(lakeDir + "/_ivf_centroids")
+    }
+    writeDriftBaselineFromSample(spark, lakeDir, sample.await(),
       centroids, dim)
     cells
   }
@@ -843,19 +844,21 @@ object Similarity {
     // to the generation just written), not a read-back of it — sampled
     // CONCURRENTLY with the generation write (both read the OLD
     // generation's immutable files; guide §2.6)
-    val sampleFut = collectDriftSampleAsync(
+    val sample = collectDriftSampleAsync(
       lake.select(col("id"), col("vec")))
-    lake.drop("cell")
-      .withColumn("cell",
-        graft.functions.ArrayOps.nearestCentroidF(col("vec"), centLit, dim))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(newGen)
     import spark.implicits._
-    centroids.grouped(dim).zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
-      .toDF("cell_id", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(newGen + "/_ivf_centroids")
-    writeDriftBaselineFromSample(spark, newGen, sampleFut.get(),
+    sample.alongside {
+      lake.drop("cell")
+        .withColumn("cell",
+          graft.functions.ArrayOps.nearestCentroidF(col("vec"), centLit, dim))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(newGen)
+      centroids.grouped(dim).zipWithIndex
+        .map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
+        .toDF("cell_id", "centroid").coalesce(1)
+        .write.mode("overwrite").parquet(newGen + "/_ivf_centroids")
+    }
+    writeDriftBaselineFromSample(spark, newGen, sample.await(),
       centroids, dim)
     val cb = sidecarFiles(spark, dataDir + "/_pq_codebooks")
     if (cb.nonEmpty)
@@ -1051,26 +1054,28 @@ object Similarity {
     val cbLit = ArrayOps.packedFloatLit(codebooks)
     // baseline from the source frame, not a full read-back (see
     // writeIvfLake) — collected concurrently with the write below
-    val sampleFut = collectDriftSampleAsync(
+    val sample = collectDriftSampleAsync(
       corpus.select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<float>").as("vec")))
-    corpus.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<float>").as("vec"))
-      .withColumn("code",
-        ArrayOps.pqEncodeF(col("vec"), cbLit, m, ksub, subDim))
-      .withColumn("cell",
-        graft.functions.ArrayOps.nearestCentroidF(col("vec"), centLit, dim))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(lakeDir)
     import spark.implicits._
-    centroids.grouped(dim).zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
-      .toDF("cell_id", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(lakeDir + "/_ivf_centroids")
-    Seq((m, ksub, codebooks.toSeq)).toDF("m", "ksub", "codebooks")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(lakeDir + "/_pq_codebooks")
-    writeDriftBaselineFromSample(spark, lakeDir, sampleFut.get(),
+    sample.alongside {
+      corpus.select(col(idCol).cast("long").as("id"),
+          col(vecCol).cast("array<float>").as("vec"))
+        .withColumn("code",
+          ArrayOps.pqEncodeF(col("vec"), cbLit, m, ksub, subDim))
+        .withColumn("cell",
+          graft.functions.ArrayOps.nearestCentroidF(col("vec"), centLit, dim))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(lakeDir)
+      centroids.grouped(dim).zipWithIndex
+        .map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
+        .toDF("cell_id", "centroid").coalesce(1)
+        .write.mode("overwrite").parquet(lakeDir + "/_ivf_centroids")
+      Seq((m, ksub, codebooks.toSeq)).toDF("m", "ksub", "codebooks")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(lakeDir + "/_pq_codebooks")
+    }
+    writeDriftBaselineFromSample(spark, lakeDir, sample.await(),
       centroids, dim)
     cells
   }

@@ -43,7 +43,11 @@ object FlattenQueries {
   // against the reference's actual bytes, not against a SQL
   // re-derivation. Reference behavior: ElasticSearch ETL.py:131-151
   // (stringification), :157-163 (envelope).
-  private val GoldenDoc = sys.env.getOrElse("SPARK_GRAFT_GOLDEN_DOC",
+  /** Path of the reference's sample document, read by q67, Bench and the
+    * golden-document specs: `SPARK_GRAFT_GOLDEN_DOC`, else the default
+    * install location.
+    */
+  private[graft] val GoldenDoc = sys.env.getOrElse("SPARK_GRAFT_GOLDEN_DOC",
     "/root/reference/ElasticSearch_Document.json")
 
   /** The executed reference's own 5,028 (path, value) cells, patched with

@@ -161,23 +161,44 @@ object EsHttp {
     ExportResult(page, fetched, total)
   }
 
+  /** Name of the thread that folds a fresh export's parse schema. */
+  private[sources] val FoldWorker = "EsHttp-schema-fold"
+
+  /** Pages the fetch loop may hand to the fold worker ahead of it: enough
+    * to ride out a slow page, few enough that driver memory does not grow
+    * with the export.
+    */
+  private val FoldPagesInFlight = 4
+
   /** Live fetch → DataFrame of `_source` documents: export to a page
     * directory, then read through the standard offline envelope path
     * ([[EsJson.read]] — same unwrap contract as every other input).
     *
     * A fresh export is a new VINTAGE. Its grafted parse schema is folded
-    * together on the driver as the loop receives each page
+    * together on the driver from each page the loop receives
     * ([[EsJson.ParseSchemaFold]]) and persisted as the sidecar, so this
     * read and every later read of the vintage take the sidecar path: no
-    * Spark job runs before the parse. The export deleted any stale
-    * sidecar, and the schema describes exactly the pages it wrote; an
-    * export of zero documents gets the empty schema and reads as an
-    * empty frame.
+    * Spark job runs before the parse. The fold runs on one worker thread
+    * beside the loop ([[FoldWorker]]), so the loop thread does only what
+    * the cursor needs (fetch, parse, page write) between one response
+    * and the next request. Pages reach the worker in page order through
+    * a hand-off of [[FoldPagesInFlight]] pages, so the schema is the one
+    * a sequential fold gives; the sidecar is written once the worker has
+    * finished. A failure on either side stops the other and surfaces as
+    * the original exception, and the worker never outlives this call.
+    * The export deleted any stale sidecar, and the schema describes
+    * exactly the pages it wrote; an export of zero documents gets the
+    * empty schema and reads as an empty frame.
     */
   def read(spark: org.apache.spark.sql.SparkSession, cfg: Config,
       pageDir: String): org.apache.spark.sql.DataFrame = {
     val schema = new EsJson.ParseSchemaFold(spark)
-    fetch(cfg, pageDir, schema.add): Unit
+    val folder = new graft.SideTask.Worker[(Array[Byte], JsonNode)](
+      FoldWorker, FoldPagesInFlight)({ case (bytes, tree) => schema.add(bytes, tree) })
+    folder.alongside {
+      fetch(cfg, pageDir, (bytes, tree) => folder.put((bytes, tree))): Unit
+      folder.finish()
+    }
     EsJson.writeSchemaSidecar(spark, pageDir, schema.result)
     EsJson.read(spark, pageDir)
   }

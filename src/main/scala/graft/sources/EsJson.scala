@@ -159,9 +159,14 @@ object EsJson {
     * own per-document inference (`JsonInferSchema.inferField` over a
     * parser from `JSONOptions.buildJsonFactory()`) merged with
     * `compatibleRootType`, then finished with Spark's `canonicalizeType`
-    * and the EmptyShapes graft. The options are the ones
-    * `spark.read.json` builds from [[readerOptions]] (multiLine), the
-    * session time zone and the corrupt-record column name.
+    * and the EmptyShapes graft, whose shapes an [[EmptyShapes.Fold]]
+    * absorbs in place. The options are the ones `spark.read.json` builds
+    * from [[readerOptions]] (multiLine), the session time zone and the
+    * corrupt-record column name.
+    *
+    * Not thread-safe: one thread adds at a time. [[EsHttp.read]] feeds
+    * it from one fold worker beside its fetch loop, in page order, and
+    * reads [[result]] after that worker has ended.
     */
   final class ParseSchemaFold(spark: SparkSession) {
     private val conf = spark.sessionState.conf
@@ -202,15 +207,4 @@ object EsJson {
       EmptyShapes.graftOnto(inferred, shapes.result)
     }
   }
-
-  /** Schema-reuse read: parse with a KNOWN schema, skipping the inference
-    * scan entirely. JSON inference is a full extra pass over the input —
-    * the dominant cost of a cold flatten (BENCH r01: ~17.5 s/1k docs cold
-    * vs sub-second warm). Batches of exported pages share one layout, so
-    * infer once (`read(...).schema`), then feed that schema to every
-    * subsequent batch.
-    */
-  def read(spark: SparkSession, path: String, schema: StructType,
-      multiLine: Boolean): DataFrame =
-    unwrap(reader(spark, multiLine).schema(schema).json(path))
 }

@@ -16,7 +16,7 @@ class EtlJobSpec extends AnyFunSuite {
 
   test("end-to-end job: golden doc -> TSV + SUCCESS audit row") {
     val out = tmp()
-    val res = EtlJob.run(spark, "/root/reference/ElasticSearch_Document.json",
+    val res = EtlJob.run(spark, graft.queries.FlattenQueries.GoldenDoc,
       s"$out/tsv", s"$out/audit")
     assert(res.records == 1L)
     assert(res.columns == 5028)
@@ -179,8 +179,7 @@ class EtlJobSpec extends AnyFunSuite {
 
   test("interactive column search and transpose preview") {
     val flat = graft.flatten.Flattener.flatten(
-      graft.sources.EsJson.read(spark,
-        "/root/reference/ElasticSearch_Document.json"))
+      graft.sources.EsJson.read(spark, graft.queries.FlattenQueries.GoldenDoc))
     val price = EtlJob.searchColumns(flat, "Price")
     assert(price.columns.nonEmpty)
     assert(price.columns.forall(_.contains("Price")))

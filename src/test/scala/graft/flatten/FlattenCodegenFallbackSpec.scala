@@ -64,7 +64,7 @@ class FlattenCodegenFallbackSpec extends AnyFunSuite {
   }
 
   private def assertGoldenCells(label: String): Unit = {
-    val df = EsJson.read(spark, "/root/reference/ElasticSearch_Document.json")
+    val df = EsJson.read(spark, graft.queries.FlattenQueries.GoldenDoc)
     val flat = Flattener.flatten(df)
     val rows = flat.collect()
     assert(rows.length == 1, s"[$label] golden doc must flatten to one row")

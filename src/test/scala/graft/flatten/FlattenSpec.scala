@@ -9,7 +9,7 @@ import graft.sources.EsJson
   *
   * The expected values in golden_flatten_expected.json were produced by
   * executing the reference implementation itself on its own sample document
-  * (`/root/reference/ElasticSearch_Document.json`) — a behavioral oracle,
+  * (`FlattenQueries.GoldenDoc`) — a behavioral oracle,
   * not copied code.
   */
 class FlattenSpec extends AnyFunSuite {
@@ -52,7 +52,7 @@ class FlattenSpec extends AnyFunSuite {
   }
 
   test("golden ES document flattens to the reference's exact 5028-column row") {
-    val df = EsJson.read(spark, "/root/reference/ElasticSearch_Document.json")
+    val df = EsJson.read(spark, graft.queries.FlattenQueries.GoldenDoc)
     val flat = Flattener.flatten(df)
     val rows = flat.collect()
     assert(rows.length == 1)

@@ -45,7 +45,7 @@ class FlattenerEquivalenceSpec extends AnyFunSuite {
   }
 
   test("golden document: row walk == expression oracle on all 5028 cells") {
-    assertSame(EsJson.read(spark, "/root/reference/ElasticSearch_Document.json"))
+    assertSame(EsJson.read(spark, graft.queries.FlattenQueries.GoldenDoc))
   }
 
   test("generated batches: ragged arrays, specials, truncation") {

@@ -178,4 +178,22 @@ class IndexLakeSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("missing meta dir: search and append fail with Spark's missing-path error") {
+    val dir = Files.createTempDirectory("indexlake_nometa_").toString + "/index"
+    IndexLake.writeIndexLake(corpus(0, 10), "doc_id", "text", dir,
+      nBuckets = 4): Unit
+    val meta = new java.io.File(dir, "_index_meta")
+    org.apache.commons.io.FileUtils.deleteDirectory(meta)
+    assert(!meta.exists())
+    val onSearch = intercept[org.apache.spark.sql.AnalysisException] {
+      IndexLake.bm25TopKOverIndex(spark, dir, qset, 5)
+    }
+    assert(onSearch.getCondition === "PATH_NOT_FOUND")
+    assert(onSearch.getMessage.contains("_index_meta"))
+    val onAppend = intercept[org.apache.spark.sql.AnalysisException] {
+      IndexLake.appendToIndexLake(corpus(10, 12), "doc_id", "text", dir)
+    }
+    assert(onAppend.getCondition === "PATH_NOT_FOUND")
+  }
 }

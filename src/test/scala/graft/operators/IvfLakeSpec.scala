@@ -471,4 +471,63 @@ class IvfLakeSpec extends AnyFunSuite {
     assert(spark.read.parquet(Similarity.ivfDataDir(spark, dir))
       .count() === 80L, "the live generation is untouched")
   }
+
+  test("a failed lake write cancels the drift sample and rethrows its own exception") {
+    import scala.jdk.CollectionConverters._
+    // the vectors come slowly, but only to the drift-sample job: its two
+    // tasks (two partitions) would take 5 s, while the write's tasks take
+    // the two other slots and fail long before
+    val slowInSample = udf { (v: Seq[Float]) =>
+      val group = org.apache.spark.TaskContext.get()
+        .getLocalProperty("spark.jobGroup.id")
+      if (group != null && group.startsWith(Similarity.DriftSampleTask)) {
+        Thread.sleep(50)
+        IvfLakeSpec.sampleRowsDone.incrementAndGet(): Unit
+      }
+      v
+    }
+    // repartitioned so the UDF runs in tasks, not folded into a local relation
+    val emb = corpus(200).repartition(2)
+      .withColumn("embedding", slowInSample(col("embedding")))
+    val sampleJobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .filter(g => g != null && g.startsWith(Similarity.DriftSampleTask))
+          .foreach(_ => sampleJobs.put(e.jobId, "running"))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        sampleJobs.computeIfPresent(e.jobId, (_, _) => e.jobResult.toString): Unit
+    }
+    // a regular file where the lake's parent directory should be
+    val blocked = java.nio.file.Files.createTempFile("ivflake_blocked", "")
+    val expected = intercept[Exception] {
+      spark.range(4).withColumn("cell", col("id") % 2).repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$blocked/probe")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      IvfLakeSpec.sampleRowsDone.set(0)
+      val e = intercept[Exception] {
+        Similarity.writeIvfLake(emb, s"$blocked/lake", "vec_id", "embedding",
+          dim, nCells = 4)
+      }
+      assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+      assert(e.getClass === expected.getClass, e.getMessage)
+      assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+        t.getName == Similarity.DriftSampleTask && t.isAlive))
+      // every sample job that started has ended (listener events lag the
+      // scheduler), and the slow one was stopped before its last row
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (sampleJobs.containsValue("running") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(!sampleJobs.containsValue("running"), s"sample jobs: $sampleJobs")
+      assert(IvfLakeSpec.sampleRowsDone.get() < 200)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
+
+object IvfLakeSpec {
+  /** Rows the drift-sample job of the cancellation test has finished. */
+  val sampleRowsDone = new java.util.concurrent.atomic.AtomicInteger
+}
+

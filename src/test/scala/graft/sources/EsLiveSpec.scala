@@ -40,8 +40,7 @@ class EsLiveSpec extends AnyFunSuite {
     // connector rows arrive already at _source level: unwrap must be the
     // identity on them, and must reduce an exported envelope to the SAME
     // shape — one row per document, same columns
-    val envelope = EsJson.read(spark,
-      "/root/reference/ElasticSearch_Document.json")
+    val envelope = EsJson.read(spark, graft.queries.FlattenQueries.GoldenDoc)
     assert(!EsJson.isEnvelope(envelope.schema)) // already unwrapped
     val passthrough = EsJson.unwrap(envelope)
     assert(passthrough.schema == envelope.schema)
