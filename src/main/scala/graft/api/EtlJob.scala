@@ -2,8 +2,9 @@ package graft.api
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.flatten.Flattener
 import graft.sources.EsJson
@@ -33,15 +34,22 @@ object EtlJob {
 
   final case class Result(records: Long, columns: Int, outputDir: String)
 
+  /** The audit table's schema, derived once from [[AuditRecord]]. */
+  private val AuditSchema: StructType = Encoders.product[AuditRecord].schema
+
+  /** `rec` as a one-row frame, built from [[AuditSchema]]: no encoder is
+    * derived by reflection on each call, as `Seq(rec).toDF()` does.
+    */
+  private def auditFrame(spark: SparkSession, rec: AuditRecord): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row.fromTuple(rec)), AuditSchema)
+
   /** Append one audit row. The reference targets a SQL DB; offline we
     * append to a parquet audit table (`df.write.jdbc` is the one-line swap
     * for a live database).
     */
   def logAudit(spark: SparkSession, auditPath: String,
-      rec: AuditRecord): Unit = {
-    import spark.implicits._
-    Seq(rec).toDF().write.mode(SaveMode.Append).parquet(auditPath)
-  }
+      rec: AuditRecord): Unit =
+    auditFrame(spark, rec).write.mode(SaveMode.Append).parquet(auditPath)
 
   /** JDBC form of the audit append — the reference's actual sink
     * (`utils.log_to_sql_db`, [`ElasticSearch ETL.py:271-299`]). Identical
@@ -51,21 +59,36 @@ object EtlJob {
     */
   def logAuditJdbc(spark: SparkSession, url: String, table: String,
       rec: AuditRecord,
-      props: java.util.Properties = new java.util.Properties()): Unit = {
-    import spark.implicits._
-    Seq(rec).toDF().coalesce(1)
+      props: java.util.Properties = new java.util.Properties()): Unit =
+    auditFrame(spark, rec).coalesce(1)
       .write.mode(SaveMode.Append).jdbc(url, table, props)
-  }
 
   /** Full job: flatten every document under `inputPath` to TSV part-files
     * in `outputDir`, audit to `auditPath`. Mirrors the reference's
-    * try/success/except/failure audit contract.
+    * try/success/except/failure audit contract. A vintage whose sidecar
+    * carries its folded stats ([[EsJson.vintage]]) flattens with them: the
+    * render and the audit row are the job's only Spark jobs.
     */
   def run(spark: SparkSession, inputPath: String, outputDir: String,
       auditPath: String, jobName: String = "Initial_load_from_export",
       tableName: String = "documents", maxDepth: Int = 20): Result =
-    runDocs(spark, EsJson.read(spark, inputPath), outputDir, auditPath,
-      jobName, tableName, maxDepth)
+    audited(spark, outputDir, auditPath, jobName, tableName)(
+      flattenExport(spark, inputPath, EsJson.readSidecar(spark, inputPath),
+        outputDir, maxDepth))
+
+  /** Flattens the export under `dir`, described by `side`: as a vintage
+    * when the sidecar carries stats, else through [[EsJson.read]]'s
+    * document frame and the stats pass.
+    */
+  private def flattenExport(spark: SparkSession, dir: String,
+      side: Option[EsJson.Sidecar], outputDir: String,
+      maxDepth: Int): Flattener.Written =
+    side.flatMap(EsJson.vintage(spark, dir, _)) match {
+      case Some(v) => Flattener.flattenToTsv(v, outputDir, maxDepth)
+      case None =>
+        Flattener.flattenToTsv(EsJson.read(spark, dir, side, multiLine = true),
+          outputDir, maxDepth)
+    }
 
   /** The same full job against a LIVE Elasticsearch index through
     * [[graft.sources.EsLive]] — the end-to-end shape of the reference's
@@ -85,17 +108,21 @@ object EtlJob {
     * REST pagination ([[graft.sources.EsHttp]] — the faithful twin of
     * `fetch_and_export_documents`, `ElasticSearch ETL.py:201-267`) pulls
     * pages into `pageDir`, then the standard distributed
-    * flatten→TSV→audit job runs over them. A fetch failure (bad
-    * endpoint, wedged cursor) is audited on the FAILED path exactly like
-    * a flatten failure — the reference's except-branch contract.
-    * Integration-tested against an embedded HTTP stub (`EtlJobSpec`).
+    * flatten→TSV→audit job runs over them, as a vintage with the schema
+    * and stats the export folded: two Spark jobs, the render and the
+    * audit row. A fetch failure (bad endpoint, wedged cursor) is audited
+    * on the FAILED path exactly like a flatten failure — the reference's
+    * except-branch contract. Integration-tested against an embedded HTTP
+    * stub (`EtlJobSpec`).
     */
   def runHttp(spark: SparkSession, cfg: graft.sources.EsHttp.Config,
       pageDir: String, outputDir: String, auditPath: String,
       jobName: String = "Initial_load_from_live",
       tableName: String = "documents", maxDepth: Int = 20): Result =
-    runDocs(spark, graft.sources.EsHttp.read(spark, cfg, pageDir),
-      outputDir, auditPath, jobName, tableName, maxDepth)
+    audited(spark, outputDir, auditPath, jobName, tableName)(
+      flattenExport(spark, pageDir,
+        Some(graft.sources.EsHttp.exportVintage(spark, cfg, pageDir)),
+        outputDir, maxDepth))
 
   /** Source-agnostic core: any document DataFrame (offline export, live
     * index, test fixture) → flatten → TSV → audit. `docs` is
@@ -103,14 +130,23 @@ object EtlJob {
     */
   def runDocs(spark: SparkSession, docs: => DataFrame, outputDir: String,
       auditPath: String, jobName: String = "Initial_load_from_export",
-      tableName: String = "documents", maxDepth: Int = 20): Result = {
+      tableName: String = "documents", maxDepth: Int = 20): Result =
+    audited(spark, outputDir, auditPath, jobName, tableName)(
+      Flattener.flattenToTsv(docs, outputDir, maxDepth))
+
+  /** Runs `flatten` under the audit contract: one SUCCESS row carrying
+    * the record count, or one FAILED row and the failure rethrown.
+    */
+  private def audited(spark: SparkSession, outputDir: String,
+      auditPath: String, jobName: String, tableName: String)(
+      flatten: => Flattener.Written): Result = {
     val start = new Timestamp(System.currentTimeMillis())
     val batchId = new java.text.SimpleDateFormat("yyyyMMddHHmmss")
       .format(start)
     try {
       // the record count (the reference's ES.count sizing step) comes
-      // from the flatten's own stats pass, not an extra read of the input
-      val out = Flattener.flattenToTsv(docs, outputDir, maxDepth)
+      // from the flatten itself, not an extra read of the input
+      val out = flatten
       logAudit(spark, auditPath, AuditRecord(
         jobName, 8L, start, new Timestamp(System.currentTimeMillis()),
         "SUCCESS", "spark_etl_export", null, batchId, tableName, out.rows))

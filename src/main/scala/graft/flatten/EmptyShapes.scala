@@ -279,7 +279,7 @@ object EmptyShapes {
     * never touches keys inference kept, it just pays parse time at
     * inference. Known-vintage reads skip this pass entirely via the
     * `_schema.json` sidecar
-    * ([[graft.sources.EsJson.writeSchemaSidecar]]).
+    * ([[graft.sources.EsJson.writeSidecar]]).
     *
     * One Spark job: each partition yields at most one partial shape, and
     * the partials are merged on the driver.

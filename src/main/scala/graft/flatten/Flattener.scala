@@ -1,6 +1,9 @@
 package graft.flatten
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Complete JSON flattening — the reference's core capability
@@ -17,6 +20,12 @@ import org.apache.spark.storage.StorageLevel
   *   2. ONE [[RenderPass]] walk per row filling every output cell — the
   *      render plan and the column list come from a single traversal of
   *      the schema, and no per-column expression is ever built.
+  *
+  * A [[Vintage]] (a fresh `EsHttp` export, or a directory whose sidecar
+  * carries the folded stats) skips pass 1 entirely: its schema and stats
+  * were folded on the driver as the pages were fetched, so its flatten is
+  * ONE Spark job, the render, walking the documents inside their response
+  * rows, with nothing cached.
   *
   * Semantics (SURVEY.md §2.3 quirk decisions):
   *   - Q1  digit map keys: FIXED — `ValueCodes_45` extracts its real value
@@ -64,6 +73,33 @@ object Flattener {
     */
   final case class Written(columns: Seq[String], rows: Long)
 
+  /** An exported vintage ready to flatten without a stats pass: its
+    * response pages read as `envelope` in the [[Vintage.envelopeSchema]]
+    * layout of the documents' schema `source`, and the batch `stats` of
+    * those documents, folded when the pages were fetched.
+    *
+    * The pages are treated as immutable: the stats are trusted as they
+    * were folded. Only a changed document count is detected (the
+    * flatten fails); pages changed with the count unchanged render with
+    * the folded columns, so an array grown past its folded length is cut
+    * to it.
+    */
+  final case class Vintage(envelope: DataFrame, source: StructType,
+      stats: StatsPass.Batch) {
+    require(envelope.schema == Vintage.envelopeSchema(source),
+      "Vintage: the envelope must be read with Vintage.envelopeSchema(source)")
+  }
+
+  object Vintage {
+    /** The part of an ES search response the flatten reads: each hit's
+      * `_source`, typed `source`. Reading the pages with this schema
+      * parses nothing else of the response.
+      */
+    def envelopeSchema(source: StructType): StructType =
+      StructType(Seq(StructField("hits", StructType(Seq(StructField("hits",
+        ArrayType(StructType(Seq(StructField("_source", source))))))))))
+  }
+
   /** End-to-end TSV export: stats pass + direct row-walk rendering of
     * quoted TSV lines, written as text with a header per part-file (the
     * same layout Spark's CSV writer produces). `singleFile` coalesces to
@@ -72,7 +108,6 @@ object Flattener {
   def flattenToTsv(df: DataFrame, dir: String,
       maxDepth: Int = DefaultMaxDepth,
       singleFile: Boolean = false): Written = {
-    val spark = df.sparkSession
     // this call is TERMINAL (the TSV write is the last job over the
     // input), so it can cache the input for its two passes and RELEASE
     // the cache before returning: a long-running export loop (the
@@ -86,13 +121,50 @@ object Flattener {
     try {
       val batch = StatsPass.collect(input)
       val plan = RenderPass.compile(input.schema, batch, maxDepth)
-      val header = RenderPass.tsvLine(plan.columns)
-      val lines0 = RenderPass.renderTsvLines(input, plan)
-      val lines = if (singleFile) lines0.coalesce(1) else lines0
-      val withHeader = lines.mapPartitions(it => Iterator(header) ++ it)
-      import spark.implicits._
-      spark.createDataset(withHeader).write.mode("overwrite").text(dir)
+      writeTsv(input.sparkSession, plan, RenderPass.renderTsvLines(input, plan),
+        dir, singleFile)
       Written(plan.columns.toSeq, batch.rows)
     } finally if (weOwn) input.unpersist(blocking = false): Unit
+  }
+
+  /** [[flattenToTsv]] of a vintage: the plan comes from its folded stats,
+    * so the render is the only Spark job and nothing is cached. The TSV
+    * is rendered into a hidden sibling of `dir` and the rows are counted
+    * as they render; it replaces `dir` only when that count is the folded
+    * one. Any other count means the pages changed after their stats were
+    * folded: the call fails and `dir` keeps what it held, rather than
+    * publish columns that no longer describe their rows.
+    */
+  def flattenToTsv(v: Vintage, dir: String, maxDepth: Int): Written = {
+    val plan = RenderPass.compile(v.source, v.stats, maxDepth)
+    val spark = v.envelope.sparkSession
+    val rows = spark.sparkContext.longAccumulator
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.makeQualified(new Path(dir))
+    val staged = new Path(out.getParent,
+      s".${out.getName}.rendering-${java.util.UUID.randomUUID()}")
+    try {
+      writeTsv(spark, plan,
+        RenderPass.renderHitTsvLines(v.envelope, plan, rows),
+        staged.toString, singleFile = false)
+      if (rows.value != v.stats.rows)
+        throw new IllegalStateException(
+          s"vintage changed under its sidecar: its stats count ${v.stats.rows} " +
+            s"documents, its pages now hold ${rows.value}")
+      fs.delete(out, true)
+      require(fs.rename(staged, out),
+        s"flattenToTsv: publish $staged -> $out failed")
+    } finally fs.delete(staged, true): Unit
+    Written(plan.columns.toSeq, rows.value)
+  }
+
+  /** The TSV write: `lines` under a header per part-file. */
+  private def writeTsv(spark: SparkSession, plan: RenderPass.Plan,
+      lines0: RDD[String], dir: String, singleFile: Boolean): Unit = {
+    val header = RenderPass.tsvLine(plan.columns)
+    val lines = if (singleFile) lines0.coalesce(1) else lines0
+    val withHeader = lines.mapPartitions(it => Iterator(header) ++ it)
+    import spark.implicits._
+    spark.createDataset(withHeader).write.mode("overwrite").text(dir)
   }
 }

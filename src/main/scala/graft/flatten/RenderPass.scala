@@ -11,6 +11,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
 
 /** The flatten renderer behind [[Flattener.flatten]] and
   * [[Flattener.flattenToTsv]]: one walk over the batch schema compiles a
@@ -19,6 +20,8 @@ import org.apache.spark.sql.types._
   * alone costs seconds per pass at 5k columns), depth-first, filling the
   * output slots directly — O(nodes) per row with no code generation, so a
   * wide dynamic schema pays no Janino compilation of a giant projection.
+  * A vintage's documents are walked where they lie inside the ES response
+  * rows ([[renderHitTsvLines]]), so no projection unwraps them first.
   *
   * Cell semantics: '' for missing/null, Python `str()` scalars
   * (`True`/`False`, [[PyFormat.pyRepr]] doubles), json.dumps arrays
@@ -287,18 +290,29 @@ object RenderPass {
 
   // ---- public entry -------------------------------------------------------------
 
+  /** A blank output row: every cell `''`. */
+  private def blank(n: Int): Array[String] = {
+    val out = new Array[String](n)
+    java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], "")
+    out
+  }
+
+  /** Fills `out` from one document row. */
+  private def fill(root: StructWalk, doc: InternalRow, out: Array[String]): Unit = {
+    var i = 0
+    while (i < root.fields.length) {
+      evalField(root.fields(i)._2, doc, root.fields(i)._1, out)
+      i += 1
+    }
+  }
+
   private def renderedRows(df: DataFrame, plan: Plan): RDD[Array[String]] = {
     val root = plan.root
     val n = plan.columns.length
     df.queryExecution.toRdd.mapPartitions { it =>
       it.map { row =>
-        val out = new Array[String](n)
-        java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], "")
-        var i = 0
-        while (i < root.fields.length) {
-          evalField(root.fields(i)._2, row, root.fields(i)._1, out)
-          i += 1
-        }
+        val out = blank(n)
+        fill(root, row, out)
         out
       }
     }
@@ -312,6 +326,38 @@ object RenderPass {
     */
   def renderTsvLines(df: DataFrame, plan: Plan): RDD[String] =
     renderedRows(df, plan).map(tsvLine)
+
+  /** [[renderTsvLines]] of the documents inside ES response rows in the
+    * layout `hits: {hits: [{_source: doc}]}` and nothing else (what
+    * [[Flattener.Vintage.envelopeSchema]] reads): each hit's `_source` is
+    * walked where it lies, with no `explode` and no projection of the
+    * documents out of the envelope. One line per hit, in page and hit
+    * order, exactly the rows `explode(hits.hits)` + `hit._source.*`
+    * gives: a null hit or a missing `_source` renders an all-`''` line, a
+    * page without hits none. `rows` counts the lines rendered.
+    */
+  def renderHitTsvLines(envelope: DataFrame, plan: Plan,
+      rows: LongAccumulator): RDD[String] = {
+    val root = plan.root
+    val n = plan.columns.length
+    envelope.queryExecution.toRdd.mapPartitions { it =>
+      it.flatMap { page =>
+        val hits = if (page.isNullAt(0)) null else {
+          val outer = page.getStruct(0, 1)
+          if (outer.isNullAt(0)) null else outer.getArray(0)
+        }
+        Iterator.tabulate(if (hits == null) 0 else hits.numElements()) { i =>
+          val out = blank(n)
+          if (!hits.isNullAt(i)) {
+            val hit = hits.getStruct(i, 1)
+            if (!hit.isNullAt(0)) fill(root, hit.getStruct(0, root.numFields), out)
+          }
+          rows.add(1L)
+          tsvLine(out)
+        }
+      }
+    }
+  }
 
   /** One TSV line with pandas/Spark-CSV minimal quoting: quote only when a
     * cell contains tab/quote/newline; inner quotes double.

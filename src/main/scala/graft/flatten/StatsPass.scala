@@ -1,5 +1,7 @@
 package graft.flatten
 
+import com.fasterxml.jackson.databind.JsonNode
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
@@ -20,6 +22,12 @@ import org.apache.spark.sql.types._
   * (`queryExecution.toRdd` — external-Row conversion via `df.rdd` costs
   * seconds per pass on 5k-leaf documents): no codegen, no shuffle
   * (per-partition partial stats reduce to the driver as one small map).
+  *
+  * A fresh `EsHttp` export needs no such pass: its fold absorbs the same
+  * stats from the trees its fetch loop parsed ([[Tree]]), and the vintage
+  * carries them in its sidecar. [[collect]] remains the flatten's pass for
+  * every other input (document frames, streaming batches, directories
+  * without folded stats) and the oracle the fold is tested against.
   */
 object StatsPass {
 
@@ -82,6 +90,7 @@ object StatsPass {
     }
   }
 
+  /** The batch stats of the parsed rows of `df`, in one Spark job. */
   def collect(df: DataFrame): Batch = {
     val schema = df.schema
     val partials = df.queryExecution.toRdd.mapPartitions { it =>
@@ -107,5 +116,87 @@ object StatsPass {
         merged.hasEmpty.filterNot(merged.maxLen.contains)
           .map(p => p -> Stats(0, hasEmpty = true)).toMap,
       merged.present.toSet)
+  }
+
+  /** In-place accumulator of the batch stats of JSON documents, absorbed
+    * one parsed tree at a time on the driver, in the style of
+    * [[EmptyShapes.Shape]]: one mutable node per object key and array
+    * index, each recording whether some document holds a non-null value
+    * there, the largest array length and whether an array was ever empty.
+    * The tree also keeps paths [[collect]] never visits (indices inside
+    * scalar arrays, keys under a value the schema widened to string);
+    * [[batch]] walks it together with the documents' final schema and
+    * emits only the paths [[collect]] reaches over rows parsed with that
+    * schema, so the two agree exactly. Not thread-safe.
+    */
+  final class Tree {
+    private var rows = 0L
+    private val root = new Tree.Node
+
+    /** Absorbs one document; a null or missing one still counts as a row
+      * (an all-null row, as a null hit explodes to).
+      */
+    def add(doc: JsonNode): Unit = { rows += 1; root.add(doc) }
+
+    /** The stats [[collect]] gives over the documents parsed with
+      * `schema`.
+      */
+    def batch(schema: StructType): Batch = {
+      val present = Set.newBuilder[String]
+      val arrays = Map.newBuilder[String, Stats]
+      def walk(n: Tree.Node, dt: DataType, path: String): Unit =
+        if (n != null && n.present) {
+          present += path
+          dt match {
+            case st: StructType => fields(n, st, path + ".")
+            case ArrayType(et: StructType, _) =>
+              arrays += path -> Stats(n.maxLen, n.hasEmpty)
+              var i = 0
+              while (i < n.maxLen) { walk(n.elem(i), et, s"$path.$i"); i += 1 }
+            case _ => ()
+          }
+        }
+      def fields(n: Tree.Node, st: StructType, prefix: String): Unit =
+        st.fields.foreach(f => walk(n.child(f.name), f.dataType, prefix + f.name))
+      fields(root, schema, "")
+      Batch(rows, arrays.result(), present.result())
+    }
+  }
+
+  private object Tree {
+    final class Node {
+      var present = false
+      var maxLen = 0
+      var hasEmpty = false
+      private var children: java.util.HashMap[String, Node] = _
+      private var elems: java.util.ArrayList[Node] = _
+
+      def child(key: String): Node =
+        if (children == null) null else children.get(key)
+
+      def elem(i: Int): Node =
+        if (elems == null || i >= elems.size) null else elems.get(i)
+
+      def add(n: JsonNode): Unit =
+        if (!n.isNull && !n.isMissingNode) {
+          present = true
+          if (n.isObject) {
+            if (children == null) children = new java.util.HashMap[String, Node]
+            val it = n.fields()
+            while (it.hasNext) {
+              val e = it.next()
+              children.computeIfAbsent(e.getKey, _ => new Node).add(e.getValue)
+            }
+          } else if (n.isArray) {
+            val len = n.size()
+            if (len == 0) hasEmpty = true
+            if (len > maxLen) maxLen = len
+            if (elems == null) elems = new java.util.ArrayList[Node]
+            while (elems.size < len) elems.add(new Node)
+            var i = 0
+            while (i < len) { elems.get(i).add(n.get(i)); i += 1 }
+          }
+        }
+    }
   }
 }

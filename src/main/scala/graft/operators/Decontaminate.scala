@@ -486,12 +486,15 @@ object Decontaminate {
     * `sign` (+1 append / −1 takedown). Returns (mergedBuckets frame —
     * every surviving (g, n_docs, from_delta) row of the AFFECTED
     * buckets plus the n_docs==0 rows so callers can split crossers,
-    * affected bucket values). The caller persists/acts; nothing is
-    * committed here.
+    * affected bucket values, the materialized delta behind the frame).
+    * The caller persists/acts and, once done with the frame, releases
+    * the delta ([[releaseCheckpoint]]); nothing is committed here. When
+    * no bucket is affected the delta is released here and the frame and
+    * delta are null.
     */
   private def mergedDelta(spark: SparkSession, dir: String, m: SketchMeta,
       docs: DataFrame, textCol: String, sign: Int)
-      : (DataFrame, Seq[Int]) = {
+      : (DataFrame, Seq[Int], DataFrame) = {
     // materialized ONCE (eager localCheckpoint; bounded by this batch's
     // distinct gram count — churn-sized): the frame feeds BOTH the
     // affected-bucket collect and the merge union below, and lazily it
@@ -504,7 +507,7 @@ object Decontaminate {
       .localCheckpoint(true)
     val affected = delta.select("bucket").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted // bounded by nBuckets
-    if (affected.isEmpty) return (null, Nil)
+    if (affected.isEmpty) { releaseCheckpoint(delta); return (null, Nil, null) }
     val live = readGrams(spark, dir, m)
       .filter(col("bucket").isin(affected: _*))
     val merged = live
@@ -521,8 +524,19 @@ object Decontaminate {
           col("g").cast("string"), lit(")"))).cast("bigint"))
           .otherwise(col("n_docs")).as("n_docs"),
         col("from_delta"))
-    (merged, affected)
+    (merged, affected, delta)
   }
+
+  /** Drops the blocks of `ds`'s eager localCheckpoint, which would
+    * otherwise stay on the executors until the ContextCleaner collects
+    * the RDD.
+    */
+  private def releaseCheckpoint(ds: DataFrame): Unit =
+    ds.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false): Unit
+      case _ => ()
+    }
 
   /** Commit the surviving rows of the affected buckets (manifest
     * protocol), publishing `marker` with the same rename.
@@ -566,7 +580,7 @@ object Decontaminate {
     recoverBloom(fs, dir)
     val done = new Path(gramsBase, marker)
     if (fs.exists(done)) return readMarker(fs, done).trim.toLong
-    val (merged, affected) =
+    val (merged, affected, grams) =
       mergedDelta(spark, dir, m, docs, textCol, sign = 1)
     if (affected.isEmpty) return 0L
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -590,7 +604,7 @@ object Decontaminate {
       commitGramBuckets(spark, dir, merged, affected, marker,
         nNew.toString)
       nNew
-    } finally { merged.unpersist(); () }
+    } finally { merged.unpersist(); releaseCheckpoint(grams) }
   }
 
   /** The parked removed-gram set of a takedown in flight, read via
@@ -635,7 +649,7 @@ object Decontaminate {
     val gramsDone = new Path(gramsBase, marker)
     val bloomDone = new Path(s"$dir/$BloomName/$marker")
     if (!fs.exists(gramsDone)) {
-      val (merged, affected) =
+      val (merged, affected, grams) =
         mergedDelta(spark, dir, m, docs, textCol, sign = -1)
       if (affected.isEmpty) return 0L
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -653,7 +667,7 @@ object Decontaminate {
         val nRemoved = removed.count()
         commitGramBuckets(spark, dir, merged, affected, marker,
           nRemoved.toString)
-      } finally { merged.unpersist(); () }
+      } finally { merged.unpersist(); releaseCheckpoint(grams) }
     }
     val nRemoved = readMarker(fs, gramsDone).trim.toLong
     if (!fs.exists(bloomDone)) {

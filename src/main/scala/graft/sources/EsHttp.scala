@@ -171,35 +171,47 @@ object EsHttp {
   private val FoldPagesInFlight = 4
 
   /** Live fetch → DataFrame of `_source` documents: export to a page
-    * directory, then read through the standard offline envelope path
-    * ([[EsJson.read]] — same unwrap contract as every other input).
-    *
-    * A fresh export is a new VINTAGE. Its grafted parse schema is folded
-    * together on the driver from each page the loop receives
-    * ([[EsJson.ParseSchemaFold]]) and persisted as the sidecar, so this
-    * read and every later read of the vintage take the sidecar path: no
-    * Spark job runs before the parse. The fold runs on one worker thread
-    * beside the loop ([[FoldWorker]]), so the loop thread does only what
-    * the cursor needs (fetch, parse, page write) between one response
-    * and the next request. Pages reach the worker in page order through
-    * a hand-off of [[FoldPagesInFlight]] pages, so the schema is the one
-    * a sequential fold gives; the sidecar is written once the worker has
-    * finished. A failure on either side stops the other and surfaces as
-    * the original exception, and the worker never outlives this call.
-    * The export deleted any stale sidecar, and the schema describes
-    * exactly the pages it wrote; an export of zero documents gets the
-    * empty schema and reads as an empty frame.
+    * directory ([[exportVintage]]), then read the pages through the
+    * standard offline envelope path (the unwrap of [[EsJson.read]] — same
+    * contract as every other input), with the schema the export holds in
+    * memory rather than the sidecar it just wrote.
     */
   def read(spark: org.apache.spark.sql.SparkSession, cfg: Config,
-      pageDir: String): org.apache.spark.sql.DataFrame = {
-    val schema = new EsJson.ParseSchemaFold(spark)
+      pageDir: String): org.apache.spark.sql.DataFrame =
+    EsJson.read(spark, pageDir, Some(exportVintage(spark, cfg, pageDir)),
+      multiLine = true)
+
+  /** Runs the export into `pageDir` and returns the sidecar it wrote.
+    *
+    * A fresh export is a new VINTAGE. Its grafted parse schema and the
+    * batch stats of its documents are folded together on the driver from
+    * each page the loop receives ([[EsJson.ParseSchemaFold]]) and
+    * persisted as the sidecar, so every read of the vintage takes the
+    * sidecar path (no Spark job runs before the parse) and its flatten
+    * needs no stats pass ([[EsJson.vintage]]). The fold runs on one
+    * worker thread beside the loop ([[FoldWorker]]), so the loop thread
+    * does only what the cursor needs (fetch, parse, page write) between
+    * one response and the next request. Pages reach the worker in page
+    * order through a hand-off of [[FoldPagesInFlight]] pages, so the
+    * sidecar is the one a sequential fold gives; it is written once the
+    * worker has finished. A failure on either side stops the other and
+    * surfaces as the original exception, and the worker never outlives
+    * this call. The export deleted any stale sidecar, and the sidecar
+    * describes exactly the pages it wrote; an export of zero documents
+    * gets the empty schema, reads as an empty frame and flattens to no
+    * rows.
+    */
+  def exportVintage(spark: org.apache.spark.sql.SparkSession, cfg: Config,
+      pageDir: String): EsJson.Sidecar = {
+    val fold = new EsJson.ParseSchemaFold(spark)
     val folder = new graft.SideTask.Worker[(Array[Byte], JsonNode)](
-      FoldWorker, FoldPagesInFlight)({ case (bytes, tree) => schema.add(bytes, tree) })
+      FoldWorker, FoldPagesInFlight)({ case (bytes, tree) => fold.add(bytes, tree) })
     folder.alongside {
       fetch(cfg, pageDir, (bytes, tree) => folder.put((bytes, tree))): Unit
       folder.finish()
     }
-    EsJson.writeSchemaSidecar(spark, pageDir, schema.result)
-    EsJson.read(spark, pageDir)
+    val side = fold.result
+    EsJson.writeSidecar(spark, pageDir, side)
+    side
   }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.catalyst.json.{InferSchemaAccess, JSONOptionsInRead,
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-import graft.flatten.EmptyShapes
+import graft.flatten.{EmptyShapes, Flattener, StatsPass}
 
 /** Elasticsearch search-response JSON source (SURVEY.md §2.1 #1/#3).
   *
@@ -61,42 +61,93 @@ object EsJson {
       df.select(explode(col("hits.hits")).as("hit")).select("hit._source.*")
     else df
 
-  /** Name of the per-vintage schema sidecar an export directory may
-    * carry: the PARSE schema (pre-unwrap, post-[[graft.flatten.EmptyShapes]]
-    * graft) as Spark schema JSON. Underscore-prefixed, so the JSON
-    * datasource never reads it as data.
+  /** Name of the per-vintage sidecar an export directory may carry: the
+    * PARSE schema (pre-unwrap, post-[[graft.flatten.EmptyShapes]] graft)
+    * as Spark schema JSON and, for a vintage [[EsHttp.read]] exported,
+    * the documents' batch stats folded with it ([[Sidecar]]).
+    * Underscore-prefixed, so the JSON datasource never reads it as data.
     */
   val SchemaSidecar = "_schema.json"
 
-  /** Persist `parseSchema` as the vintage sidecar of `dir` (side name +
-    * atomic rename, the manifest-commit discipline). An exported vintage
-    * is immutable once written, so its grafted schema is discovered ONCE
-    * at export time — by [[EsHttp.read]], as its fetch loop receives the
-    * pages ([[ParseSchemaFold]]); every later read of the vintage then
-    * skips both the inference scan and the EmptyShapes discovery pass —
-    * zero Spark jobs before the parse itself.
+  /** What a vintage's sidecar holds: its parse schema and, when the
+    * export folded them, the batch stats of its documents (the rows
+    * [[read]] gives), which let the vintage flatten without a stats pass
+    * ([[vintage]]).
     */
-  def writeSchemaSidecar(spark: SparkSession, dir: String,
-      parseSchema: StructType): Unit = {
+  final case class Sidecar(schema: StructType,
+      stats: Option[StatsPass.Batch])
+
+  private val sidecarMapper = new ObjectMapper
+
+  /** The sidecar file's text: the schema JSON alone when there are no
+    * stats (the layout every earlier sidecar has), else
+    * `{"schema": …, "stats": {"rows": n, "present": [path…],
+    * "arrays": [[path, maxLen, hasEmpty]…]}}`, paths sorted so equal
+    * sidecars are equal bytes.
+    */
+  private def sidecarJson(side: Sidecar): String = side.stats match {
+    case None => side.schema.json
+    case Some(b) =>
+      val root = sidecarMapper.createObjectNode()
+      root.set[JsonNode]("schema", sidecarMapper.readTree(side.schema.json))
+      val stats = root.putObject("stats")
+      stats.put("rows", b.rows)
+      val present = stats.putArray("present")
+      b.present.toSeq.sorted.foreach(present.add)
+      val arrays = stats.putArray("arrays")
+      b.arrays.toSeq.sortBy(_._1).foreach { case (p, a) =>
+        arrays.addArray().add(p).add(a.maxLen).add(a.hasEmpty)
+      }
+      sidecarMapper.writeValueAsString(root)
+  }
+
+  private def parseSidecar(text: String): Sidecar = {
+    val root = sidecarMapper.readTree(text)
+    if (!root.has("stats"))
+      Sidecar(DataType.fromJson(text).asInstanceOf[StructType], None)
+    else {
+      import scala.jdk.CollectionConverters._
+      val stats = root.get("stats")
+      Sidecar(DataType.fromJson(root.get("schema").toString)
+          .asInstanceOf[StructType],
+        Some(StatsPass.Batch(
+          stats.get("rows").asLong(),
+          stats.get("arrays").elements().asScala.map { a =>
+            a.get(0).asText() ->
+              StatsPass.Stats(a.get(1).asInt(), a.get(2).asBoolean())
+          }.toMap,
+          stats.get("present").elements().asScala.map(_.asText()).toSet)))
+    }
+  }
+
+  /** Persist `side` as the vintage sidecar of `dir` (side name + atomic
+    * rename, the manifest-commit discipline): schema and stats publish
+    * together. An exported vintage is immutable once written, so its
+    * grafted schema and its stats are discovered ONCE, at export time —
+    * by [[EsHttp.read]], as its fetch loop receives the pages
+    * ([[ParseSchemaFold]]); every later read of the vintage then skips
+    * both the inference scan and the EmptyShapes discovery pass, and its
+    * flatten skips the stats pass: zero Spark jobs before the render.
+    */
+  def writeSidecar(spark: SparkSession, dir: String, side: Sidecar): Unit = {
     import org.apache.hadoop.fs.Path
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val side = new Path(base, SchemaSidecar + ".writing")
-    val out = fs.create(side, true)
-    try out.write(parseSchema.json.getBytes("UTF-8")) finally out.close()
+    val tmp = new Path(base, SchemaSidecar + ".writing")
+    val out = fs.create(tmp, true)
+    try out.write(sidecarJson(side).getBytes("UTF-8")) finally out.close()
     val dst = new Path(base, SchemaSidecar)
     fs.delete(dst, false)
-    require(fs.rename(side, dst),
-      s"writeSchemaSidecar: commit $side -> $dst failed")
+    require(fs.rename(tmp, dst),
+      s"writeSidecar: commit $tmp -> $dst failed")
   }
 
-  /** The vintage's persisted parse schema, when `path` is a directory
-    * carrying one. A CORRUPT sidecar fails loudly — silently falling
-    * back to inference could give a different schema than every other
-    * reader of the vintage saw.
+  /** The vintage's sidecar, when `path` is a directory carrying one. A
+    * CORRUPT sidecar fails loudly — silently falling back to inference
+    * could give a different schema than every other reader of the
+    * vintage saw.
     */
-  def readSchemaSidecar(spark: SparkSession,
-      path: String): Option[StructType] = {
+  def readSidecar(spark: SparkSession, path: String): Option[Sidecar] = {
     import org.apache.hadoop.fs.Path
     val p = new Path(path, SchemaSidecar)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -107,7 +158,7 @@ object EsJson {
         try new String(
           org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
         finally in.close()
-      Some(DataType.fromJson(text).asInstanceOf[StructType])
+      Some(parseSidecar(text))
     }
   }
 
@@ -121,10 +172,49 @@ object EsJson {
     */
   def read(spark: SparkSession, path: String,
       multiLine: Boolean = true): DataFrame =
-    readSchemaSidecar(spark, path) match {
-      case Some(ps) => unwrap(reader(spark, multiLine).schema(ps).json(path))
+    read(spark, path, readSidecar(spark, path), multiLine)
+
+  /** [[read]] of `path` with the sidecar the caller already holds. */
+  private[graft] def read(spark: SparkSession, path: String,
+      side: Option[Sidecar], multiLine: Boolean): DataFrame =
+    side match {
+      case Some(s) =>
+        unwrap(reader(spark, multiLine).schema(s.schema).json(path))
       case None => readFiles(spark, Seq(path), multiLine)
     }
+
+  /** The document schema inside a parse schema: `_source`'s struct when
+    * the schema is an envelope; None for bare documents, whose rows are
+    * not hits.
+    */
+  private def sourceSchema(parse: StructType): Option[StructType] =
+    if (!isEnvelope(parse)) None
+    else parse("hits").dataType.asInstanceOf[StructType]("hits").dataType
+      .asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]("_source")
+      .dataType match {
+        case st: StructType => Some(st)
+        case _ => None
+      }
+
+  /** The vintage under `dir` as [[Flattener.flattenToTsv]] takes it, when
+    * `side` carries stats: its pages read with only the hits' `_source`
+    * in the schema (the empty schema for a vintage of zero documents).
+    * None when there are no stats, or when the pages hold no envelope to
+    * walk. The pages are taken to be the ones the stats were folded from;
+    * a changed document count fails the flatten, other changes that keep
+    * the count are not detected ([[Flattener.Vintage]]).
+    */
+  def vintage(spark: SparkSession, dir: String,
+      side: Sidecar): Option[Flattener.Vintage] =
+    for {
+      stats <- side.stats
+      source <-
+        if (side.schema.isEmpty && stats.rows == 0) Some(side.schema)
+        else sourceSchema(side.schema)
+    } yield Flattener.Vintage(
+      reader(spark, multiLine = true)
+        .schema(Flattener.Vintage.envelopeSchema(source)).json(dir),
+      source, stats)
 
   /** Multi-path variant of [[read]] — the bounded schema-inference
     * prefix of the es-export connector reads an explicit file list.
@@ -164,6 +254,12 @@ object EsJson {
     * from [[readerOptions]] (multiLine), the session time zone and the
     * corrupt-record column name.
     *
+    * The same walk feeds the documents' batch stats: each hit's `_source`
+    * tree is absorbed into one [[StatsPass.Tree]], read against the final
+    * `_source` schema in [[result]], so the stats equal what
+    * [[StatsPass.collect]] gives over the rows [[read]] parses, without
+    * that Spark job.
+    *
     * Not thread-safe: one thread adds at a time. [[EsHttp.read]] feeds
     * it from one fold worker beside its fetch loop, in page order, and
     * reads [[result]] after that worker has ended.
@@ -180,9 +276,11 @@ object EsJson {
     private val mergeRoot = JsonInferSchema.compatibleRootType(
       options.columnNameOfCorruptRecord, options.parseMode)
     private val shapes = new EmptyShapes.Fold
+    private val docs = new StatsPass.Tree
+    private var pages = 0L
     private var root: DataType = StructType(Nil)
 
-    /** Folds in one document: its serialized `bytes` (UTF-8) and the
+    /** Folds in one response page: its serialized `bytes` (UTF-8) and the
       * tree the caller parsed from them.
       */
     def add(bytes: Array[Byte], tree: JsonNode): Unit =
@@ -193,18 +291,27 @@ object EsJson {
           finally parser.close()
         root = mergeRoot(root, tpe)
         shapes.add(new String(bytes, StandardCharsets.ISO_8859_1), tree)
+        pages += 1
+        // one row per hit, as explode(hits.hits) gives
+        val hits = tree.path("hits").path("hits")
+        if (hits.isArray) hits.elements().forEachRemaining(h =>
+          docs.add(h.path("_source")))
       }
 
-    /** The parse schema of every document folded in so far; the empty
-      * schema when there was none.
+    /** The parse schema of every page folded in so far (the empty schema
+      * when there was none) and, when the pages are ES responses (or
+      * there were none), the batch stats of their documents.
       */
-    def result: StructType = SQLConf.withExistingConf(conf) {
+    def result: Sidecar = SQLConf.withExistingConf(conf) {
       val inferred =
         InferSchemaAccess.canonicalizeType(inference, root, options) match {
           case Some(st: StructType) => st
           case _ => StructType(Nil)
         }
-      EmptyShapes.graftOnto(inferred, shapes.result)
+      val schema = EmptyShapes.graftOnto(inferred, shapes.result)
+      val source =
+        if (pages == 0) Some(schema) else sourceSchema(schema)
+      Sidecar(schema, source.map(docs.batch))
     }
   }
 }

@@ -140,6 +140,92 @@ class EtlJobSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  /** An ES stub serving `docs` as `_source`s, `pageSize` a page, cursor =
+    * the `claimRequestId` (1-based position) of the last hit.
+    */
+  private def withClaims[T](docs: Seq[String], pageSize: Int)(
+      f: graft.sources.EsHttp.Config => T): T = {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    def respond(x: HttpExchange, body: String): Unit = {
+      val b = body.getBytes("UTF-8")
+      x.sendResponseHeaders(200, b.length)
+      x.getResponseBody.write(b); x.close()
+    }
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/claims/_count",
+      (x: HttpExchange) => respond(x, s"""{"count":${docs.size}}"""))
+    server.createContext("/claims/_search", (x: HttpExchange) => {
+      val req = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(x.getRequestBody)
+      val after = req.path("search_after")
+      val from = if (after.isMissingNode) 0 else after.get(0).asInt()
+      val page = docs.slice(from, from + pageSize)
+      respond(x, s"""{"hits":{"total":{"value":${docs.size}},"hits":[${
+        page.map(d => s"""{"_id":"x","_source":$d}""").mkString(",")}]}}""")
+    })
+    server.start()
+    try f(graft.sources.EsHttp.Config(
+      s"http://localhost:${server.getAddress.getPort}", "claims",
+      pageSize = pageSize, sortFields = Seq("claimRequestId")))
+    finally server.stop(0)
+  }
+
+  private val claims = (1 to 7).map(i =>
+    s"""{"claimRequestId":$i,"lines":[${Seq.fill(i % 3)(s"""{"v":$i}""").mkString(",")}],"e":{}}""")
+
+  private def tsvParts(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith("part-")).sorted.toSeq
+      .map(n => new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, n)), "UTF-8"))
+
+  test("runHttp, and run over its vintage: two Spark jobs each, nothing cached") {
+    withClaims(claims, pageSize = 3) { cfg =>
+      val out = tmp()
+      val sc = spark.sparkContext
+      val cached = sc.getPersistentRDDs.keySet
+      val (live, liveJobs) = graft.JobsStarted(spark)(
+        EtlJob.runHttp(spark, cfg, s"$out/pages", s"$out/tsv", s"$out/audit"))
+      assert(liveJobs === 2) // the render and the audit row
+      assert(sc.getPersistentRDDs.keySet === cached)
+      val (again, againJobs) = graft.JobsStarted(spark)(
+        EtlJob.run(spark, s"$out/pages", s"$out/tsv2", s"$out/audit"))
+      assert(againJobs === 2)
+      assert(sc.getPersistentRDDs.keySet === cached)
+      assert(live.records === 7L && again === live.copy(outputDir = s"$out/tsv2"))
+      assert(tsvParts(s"$out/tsv2") === tsvParts(s"$out/tsv"))
+      // the same pages through the document frame and the stats pass
+      EtlJob.runDocs(spark, graft.sources.EsJson.read(spark, s"$out/pages"),
+        s"$out/tsv3", s"$out/audit")
+      assert(tsvParts(s"$out/tsv3") === tsvParts(s"$out/tsv"))
+      val audit = spark.read.parquet(s"$out/audit").collect()
+      assert(audit.map(_.getAs[Long]("record_count_loaded")).toSeq === Seq(7L, 7L, 7L))
+    }
+  }
+
+  test("a vintage changed under its sidecar fails onto the FAILED audit path") {
+    withClaims(claims, pageSize = 3) { cfg =>
+      val out = tmp()
+      EtlJob.runHttp(spark, cfg, s"$out/pages", s"$out/tsv", s"$out/audit"): Unit
+      val before = tsvParts(s"$out/tsv")
+      java.nio.file.Files.delete(
+        java.nio.file.Paths.get(s"$out/pages", "page-00001.json"))
+      val e = intercept[IllegalStateException](
+        EtlJob.run(spark, s"$out/pages", s"$out/tsv", s"$out/audit"))
+      assert(e.getMessage.startsWith("vintage changed under its sidecar"))
+      // the output still holds the last good flatten, and nothing staged
+      // is left beside it
+      assert(tsvParts(s"$out/tsv") === before)
+      assert(new java.io.File(out).list().toSet === Set("pages", "tsv", "audit"))
+      val audit = spark.read.parquet(s"$out/audit").orderBy("job_status")
+        .collect()
+      assert(audit.map(_.getAs[String]("job_status")).toSeq ===
+        Seq("FAILED", "SUCCESS"))
+      assert(audit(0).getAs[String]("error_desc") === e.getMessage)
+      assert(audit(0).getAs[Long]("record_count_loaded") === 0L)
+    }
+  }
+
   test("runLive without a connector fails fast AND audits the failure") {
     val out = tmp()
     intercept[Throwable] {

@@ -287,4 +287,23 @@ class RefSketchSpec extends AnyFunSuite {
       !before.contains(k) || before(k) != after(k))
     assert(touched.size === 1, s"expected 1 rewritten bucket, got $touched")
   }
+
+  test("append and takedown leave no persisted or checkpointed RDD behind") {
+    val dir = tmpDir("release")
+    Decontaminate.writeReferenceSketch(spark, dir,
+      corpus.filter(col("doc_id") <= 3), "text", n = 3, nBuckets = 4)
+    val sc = spark.sparkContext
+    // relative: other suites sharing this JVM may hold their own persists
+    val before = sc.getPersistentRDDs.keySet
+    Decontaminate.appendToReferenceSketch(spark, dir,
+      corpus.filter(col("doc_id") > 3), "text", "r1")
+    assert(sc.getPersistentRDDs.keySet === before)
+    Decontaminate.deleteFromReferenceSketch(spark, dir,
+      corpus.filter(col("doc_id") === 5L), "text", "r2")
+    assert(sc.getPersistentRDDs.keySet === before)
+    // two words, no 3-gram: no bucket is affected (the early return)
+    assert(Decontaminate.appendToReferenceSketch(spark, dir,
+      Seq((8L, "too short")).toDF("doc_id", "text"), "text", "r3") === 0L)
+    assert(sc.getPersistentRDDs.keySet === before)
+  }
 }

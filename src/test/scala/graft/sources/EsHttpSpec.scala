@@ -180,7 +180,7 @@ class EsHttpSpec extends AnyFunSuite {
       val dir = Files.createTempDirectory("eshttp_read").toString
       val cfg = EsHttp.Config(es.baseUrl, "claims", pageSize = 10)
       val df = EsHttp.read(spark, cfg, dir)
-      assert(EsJson.readSchemaSidecar(spark, dir) ===
+      assert(EsJson.readSidecar(spark, dir).map(_.schema) ===
         Some(EsJson.inferParseSchema(spark, Seq(dir))))
       assert(df.count() === 25)
       assert(es.searchBodies.size === 3)

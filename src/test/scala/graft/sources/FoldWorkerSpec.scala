@@ -91,7 +91,7 @@ class FoldWorkerSpec extends AnyFunSuite {
           sequential.add(bytes, mapper.readTree(bytes))
         }
       val seqDir = Files.createTempDirectory("fold_sequential_").toString
-      EsJson.writeSchemaSidecar(spark, seqDir, sequential.result)
+      EsJson.writeSidecar(spark, seqDir, sequential.result)
       assert(Files.readAllBytes(Paths.get(dir, EsJson.SchemaSidecar)).toSeq ===
         Files.readAllBytes(Paths.get(seqDir, EsJson.SchemaSidecar)).toSeq)
     }

@@ -57,7 +57,7 @@ class ParseSchemaFoldSpec extends AnyFunSuite {
     withStub(pages) { cfg =>
       val dir = Files.createTempDirectory("fold_pages_").toString
       EsHttp.read(spark, cfg, dir): Unit
-      (EsJson.readSchemaSidecar(spark, dir).get,
+      (EsJson.readSidecar(spark, dir).get.schema,
         EsJson.inferParseSchema(spark, Seq(dir)))
     }
 

@@ -39,8 +39,8 @@ class SchemaSidecarSpec extends AnyFunSuite {
     assert(parseSchema("b").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType]
       .fieldNames.contains("inner"))
-    EsJson.writeSchemaSidecar(spark, dir, parseSchema)
-    assert(EsJson.readSchemaSidecar(spark, dir) === Some(parseSchema))
+    EsJson.writeSidecar(spark, dir, EsJson.Sidecar(parseSchema, None))
+    assert(EsJson.readSidecar(spark, dir).map(_.schema) === Some(parseSchema))
     val sidecarRead = EsJson.read(spark, dir)
     assert(sidecarRead.schema === inferredRead.schema)
     assert(sidecarRead.exceptAll(inferredRead).count() === 0L &&
@@ -54,7 +54,7 @@ class SchemaSidecarSpec extends AnyFunSuite {
     val narrow = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("a",
         org.apache.spark.sql.types.LongType)))
-    EsJson.writeSchemaSidecar(spark, dir, narrow)
+    EsJson.writeSidecar(spark, dir, EsJson.Sidecar(narrow, None))
     val got = EsJson.read(spark, dir)
     assert(got.schema.fieldNames.toSeq === Seq("a"),
       "a present sidecar must fully replace inference")
@@ -94,7 +94,7 @@ class SchemaSidecarSpec extends AnyFunSuite {
         pageSize = 10, sortFields = Seq("doc_id"))
       val docs = EsHttp.read(spark, cfg, pageDir)
       assert(docs.count() === 1L)
-      val side = EsJson.readSchemaSidecar(spark, pageDir)
+      val side = EsJson.readSidecar(spark, pageDir).map(_.schema)
       assert(side.isDefined, "a fresh export must persist its vintage schema")
       // the persisted schema is the PARSE schema (envelope) and carries
       // the EmptyShapes graft for the always-empty key 'e'
@@ -108,8 +108,8 @@ class SchemaSidecarSpec extends AnyFunSuite {
       assert(again.columns.toSeq === docs.columns.toSeq)
       assert(again.exceptAll(docs).count() === 0L)
       // re-export = new vintage: stale sidecar dies with stale pages
-      EsJson.writeSchemaSidecar(spark, pageDir,
-        org.apache.spark.sql.types.StructType(Nil))
+      EsJson.writeSidecar(spark, pageDir,
+        EsJson.Sidecar(org.apache.spark.sql.types.StructType(Nil), None))
       EsHttp.export(cfg, pageDir): Unit
       assert(!Files.exists(Paths.get(pageDir, EsJson.SchemaSidecar)),
         "export must clear the previous vintage's sidecar")
