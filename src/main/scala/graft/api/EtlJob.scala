@@ -65,25 +65,28 @@ object EtlJob {
 
   /** Full job: flatten every document under `inputPath` to TSV part-files
     * in `outputDir`, audit to `auditPath`. Mirrors the reference's
-    * try/success/except/failure audit contract. A vintage whose sidecar
-    * carries its folded stats ([[EsJson.vintage]]) flattens with them: the
-    * render and the audit row are the job's only Spark jobs.
+    * try/success/except/failure audit contract. The export's schema and
+    * stats come from its sidecar, or, when it carries none, from one
+    * Spark job folding its files ([[EsJson.sidecar]]; nothing is written
+    * into the input). A directory of ES responses then flattens as a
+    * vintage ([[EsJson.vintage]]): the render and the audit row are the
+    * job's only other Spark jobs, and nothing is cached.
     */
   def run(spark: SparkSession, inputPath: String, outputDir: String,
       auditPath: String, jobName: String = "Initial_load_from_export",
       tableName: String = "documents", maxDepth: Int = 20): Result =
     audited(spark, outputDir, auditPath, jobName, tableName)(
-      flattenExport(spark, inputPath, EsJson.readSidecar(spark, inputPath),
+      flattenExport(spark, inputPath, EsJson.sidecar(spark, inputPath),
         outputDir, maxDepth))
 
   /** Flattens the export under `dir`, described by `side`: as a vintage
-    * when the sidecar carries stats, else through [[EsJson.read]]'s
-    * document frame and the stats pass.
+    * when `side` carries the stats of ES responses, else through
+    * [[EsJson.read]]'s document frame and the stats pass.
     */
   private def flattenExport(spark: SparkSession, dir: String,
-      side: Option[EsJson.Sidecar], outputDir: String,
+      side: EsJson.Sidecar, outputDir: String,
       maxDepth: Int): Flattener.Written =
-    side.flatMap(EsJson.vintage(spark, dir, _)) match {
+    EsJson.vintage(spark, dir, side) match {
       case Some(v) => Flattener.flattenToTsv(v, outputDir, maxDepth)
       case None =>
         Flattener.flattenToTsv(EsJson.read(spark, dir, side, multiLine = true),
@@ -121,7 +124,7 @@ object EtlJob {
       tableName: String = "documents", maxDepth: Int = 20): Result =
     audited(spark, outputDir, auditPath, jobName, tableName)(
       flattenExport(spark, pageDir,
-        Some(graft.sources.EsHttp.exportVintage(spark, cfg, pageDir)),
+        graft.sources.EsHttp.exportVintage(spark, cfg, pageDir),
         outputDir, maxDepth))
 
   /** Source-agnostic core: any document DataFrame (offline export, live

@@ -1,8 +1,7 @@
 package graft.flatten
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 /** Recovers object keys that Spark's JSON schema inference DROPS: a key
@@ -22,12 +21,12 @@ import org.apache.spark.sql.types._
   * into one mutable tree of object keys ([[Shape]]; size bounded by
   * distinct key paths — the same bound inference itself carries),
   * converted to a [[Raw]] once at the end; [[graft]] then adds the
-  * missing nodes as empty-struct / array-of-struct fields. The pass
-  * takes one of three routes: a [[Fold]] fed by the caller (a fresh
-  * `EsHttp` export, whose fold worker receives every page with the tree
-  * the fetch loop parsed), a driver-local read of a small input
-  * ([[discover]]), or one distributed job ([[discoverLines]]: one
-  * partial shape per partition, absorbed on the driver). Spark's
+  * missing nodes as empty-struct / array-of-struct fields. The pass is
+  * part of the one schema fold every export read runs
+  * (`graft.sources.EsJson.ParseSchemaFold`): a [[Fold]] absorbs each
+  * record beside Spark's per-record inference, on the driver for a fresh
+  * `EsHttp` export, or per partition in one Spark job for everything
+  * else, whose partial shapes the driver absorbs into its own. Spark's
   * JSON parser handles the grafted schema exactly right: a present
   * `{}` parses to a NON-NULL empty row (both renderers emit `{}`), an
   * absent key parses to NULL (omitted) — probed and spec-pinned.
@@ -121,55 +120,27 @@ object EmptyShapes {
     final val Scalar = 3
   }
 
-  /** Distributed raw-shape discovery: JSONL when `wholeFile` is false,
-    * one-pretty-printed-document-per-file when true (the exported-ES
-    * layout). Unparseable/blank records are skipped — inference
-    * already surfaces them its own way. Returns None on empty input.
-    */
-  def discover(spark: SparkSession, paths: Seq[String],
-      wholeFile: Boolean): Option[Raw] = {
-    if (paths.isEmpty) return None
-    localDocs(spark, paths, wholeFile) match {
-      case Some(docs) =>
-        // bounded input: the whole discovery runs on the driver — no
-        // Spark job at all. Inference itself already read these same
-        // bytes, so the extra pass is pure job-scheduling overhead for
-        // a golden-doc-sized input (~0.3 s of it, q67's r13 residual).
-        val mapper = new ObjectMapper()
-        val fold = new Fold
-        docs.foreach { line =>
-          if (line != null && line.trim.nonEmpty)
-            try fold.add(line, mapper.readTree(line))
-            catch { case _: Exception => () }
-        }
-        fold.result
-      case None =>
-        val reader = spark.read
-        val text =
-          (if (wholeFile) reader.option("wholetext", "true") else reader)
-            .text(paths: _*)
-        discoverLines(text.select("value")
-          .as[String](org.apache.spark.sql.Encoders.STRING))
-    }
-  }
-
   /** The empty-object prefilter: an object literal can only appear in
     * serialized JSON after `:` (member value), `[` (first element), or
     * `,` (later element) — a root-level bare `{}` document carries no
     * keys and is irrelevant to the graft — so requiring that prefix
     * keeps every droppable shape while skipping the bare `{}` that
     * code-bearing STRING VALUES are full of (`function f() {}`), the
-    * r13-noted false-positive class. Compiled here for the driver-local
-    * path; [[discoverLines]] runs the same pattern as an `rlike`.
+    * r13-noted false-positive class.
+    *
+    * Residual cost caveat (soundness unaffected): the key-context prefix
+    * can still match inside a STRING VALUE that itself contains
+    * JSON-looking text (`"snippet": "a: {}"`), so a JSON-quoting corpus
+    * builds the shape of more documents than carry droppable keys — the
+    * graft never touches keys inference kept, it just pays the walk.
     */
   private[flatten] val EmptyObjPattern = "[:\\[,]\\s*\\{\\s*\\}"
   private val EmptyObjRx = java.util.regex.Pattern.compile(EmptyObjPattern)
 
-  /** Driver-side shape accumulator, one whole document at a time: the
-    * driver-local route of [[discover]], and the fold worker of a fresh
-    * export, which hands over each page with the tree the fetch loop
-    * already parsed. Documents that pass the prefilter are absorbed into
-    * one [[Shape]].
+  /** Shape accumulator of the schema fold, one whole document at a time,
+    * with the tree the fold already parsed from it: documents that pass
+    * the prefilter are absorbed into one [[Shape]], and so are the
+    * partial shapes of other partitions.
     */
   final class Fold {
     private val shape = new Shape
@@ -182,133 +153,11 @@ object EmptyShapes {
     def add(text: CharSequence, doc: => JsonNode): Unit =
       if (EmptyObjRx.matcher(text).find()) shape.add(doc)
 
+    /** Absorbs the shape another fold gave ([[result]]). */
+    def add(partial: Raw): Unit = shape.add(partial)
+
     def result: Option[Raw] = shape.result
   }
-
-  /** How much raw input the driver-local discovery path will take on;
-    * bigger inputs go through the distributed scan.
-    */
-  private[flatten] val LocalBytesMax = 8L * 1024 * 1024
-
-  private val CompressedSuffixes =
-    Seq(".gz", ".bz2", ".zst", ".snappy", ".deflate", ".lz4", ".br")
-
-  /** The documents under `paths` as driver-local strings — Some only
-    * when the input is provably small (≤ [[LocalBytesMax]] of plain,
-    * uncompressed visible files; listing aborts early the moment the
-    * running total exceeds the bound, so a 100 TB directory costs a few
-    * file stats, not a census). Hidden files (`_`/`.` prefixes) are
-    * skipped to match `spark.read`'s path filter.
-    */
-  private def localDocs(spark: SparkSession, paths: Seq[String],
-      wholeFile: Boolean): Option[Seq[String]] =
-    try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val files = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.hadoop.fs.FileStatus]
-      var bytes = 0L
-      var tooBig = false
-      val pIt = paths.iterator
-      while (pIt.hasNext && !tooBig) {
-        val raw = new org.apache.hadoop.fs.Path(pIt.next())
-        val fs = raw.getFileSystem(conf)
-        // listed files come back fully qualified (file:/…); qualify the
-        // root the same way or the hidden-walk's termination test never
-        // fires and components ABOVE the root get inspected too
-        val path = fs.makeQualified(raw)
-        val it = fs.listFiles(path, true)
-        while (it.hasNext && !tooBig) {
-          val f = it.next()
-          val name = f.getPath.getName
-          val hidden = {
-            // any hidden component STRICTLY BELOW the listed root
-            // disqualifies the file (spark.read's path filter; an
-            // explicitly listed root is exempt, also like Spark)
-            var cur = f.getPath
-            var h = false
-            while (cur != null && cur != path) {
-              val n = cur.getName
-              if (n.startsWith("_") || n.startsWith(".")) h = true
-              cur = cur.getParent
-            }
-            h
-          }
-          if (!hidden) {
-            bytes += f.getLen
-            if (bytes > LocalBytesMax ||
-                CompressedSuffixes.exists(name.endsWith(_)))
-              tooBig = true
-            else files += f
-          }
-        }
-      }
-      if (tooBig) None
-      else {
-        val docs = files.toSeq.flatMap { f =>
-          val fs = f.getPath.getFileSystem(conf)
-          val in = fs.open(f.getPath)
-          val text =
-            try new String(
-              org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-            finally in.close()
-          if (wholeFile) Seq(text) else text.split("\n").toSeq
-        }
-        Some(docs)
-      }
-    } catch { case _: Exception => None } // stat/read hiccup → distributed
-
-  /** [[discover]] over an in-memory line Dataset — the per-batch
-    * inference shape ([[graft.streaming.ExportStream]] parses each
-    * micro-batch from its text lines, not from a path).
-    *
-    * Cost control: a key can only have been DROPPED if its every
-    * occurrence is an empty-object shape, so every document carrying
-    * it contains a literal `{ }` (whatever the whitespace) — documents
-    * without one are irrelevant to the graft and are filtered out with
-    * a cheap regex BEFORE the Jackson parse. On the common corpus with
-    * no empty objects anywhere the "discovery pass" is a substring
-    * scan that parses nothing (measured ~0.1 s where the full parse of
-    * the 5,028-column golden sample costs ~1 s); partial trees from
-    * only-matching docs are sound because graft() never modifies a key
-    * the inferred schema already carries.
-    *
-    * Residual cost caveat (soundness unaffected): the key-context
-    * prefix can still match inside a STRING VALUE that itself contains
-    * JSON-looking text (`"snippet": "a: {}"`), so a JSON-quoting corpus
-    * parses more documents than carry droppable keys — the graft still
-    * never touches keys inference kept, it just pays parse time at
-    * inference. Known-vintage reads skip this pass entirely via the
-    * `_schema.json` sidecar
-    * ([[graft.sources.EsJson.writeSidecar]]).
-    *
-    * One Spark job: each partition yields at most one partial shape, and
-    * the partials are merged on the driver.
-    */
-  def discoverLines(
-      lines: org.apache.spark.sql.Dataset[String]): Option[Raw] = {
-    val partials = lines
-      .filter(org.apache.spark.sql.functions.col("value")
-        .rlike(EmptyObjPattern))
-      .rdd.mapPartitions { it =>
-        val mapper = new ObjectMapper()
-        val shape = new Shape
-        it.foreach { line =>
-          if (line != null && line.trim.nonEmpty) {
-            try shape.add(mapper.readTree(line))
-            catch { case _: Exception => () }
-          }
-        }
-        shape.result.iterator
-      }
-    val shape = new Shape
-    partials.collect().foreach(shape.add)
-    shape.result
-  }
-
-  /** [[augment]] for the line-Dataset shape. */
-  def augmentLines(inferred: StructType,
-      lines: org.apache.spark.sql.Dataset[String]): StructType =
-    graftOnto(inferred, discoverLines(lines))
 
   /** [[graft]] of a discovered shape onto an inferred root; returns the
     * inferred schema itself when nothing was dropped (the overwhelmingly
@@ -357,9 +206,4 @@ object EmptyShapes {
     case RArr(None)    => Some(ArrayType(StringType))
     case RScalar       => None
   }
-
-  /** [[graftOnto]] over a fresh [[discover]] pass. */
-  def augment(spark: SparkSession, inferred: StructType,
-      paths: Seq[String], wholeFile: Boolean): StructType =
-    graftOnto(inferred, discover(spark, paths, wholeFile))
 }

@@ -14,18 +14,19 @@ import org.apache.spark.storage.StorageLevel
   * string and walks the dict per (doc × column) — O(docs × cols × depth)
   * Python dict probes. Here the passes are distributed row walks:
   *
-  *   1. Spark JSON schema inference (already a union across all records) +
-  *      ONE [[StatsPass]] over the rows for the row count, batch-max array
-  *      widths and path presence;
+  *   1. the schema fold (`graft.sources.EsJson.ParseSchemaFold`: Spark's
+  *      per-record JSON inference, already a union across all records),
+  *      then, for a document frame, ONE [[StatsPass]] over the rows for
+  *      the row count, batch-max array widths and path presence;
   *   2. ONE [[RenderPass]] walk per row filling every output cell — the
   *      render plan and the column list come from a single traversal of
   *      the schema, and no per-column expression is ever built.
   *
-  * A [[Vintage]] (a fresh `EsHttp` export, or a directory whose sidecar
-  * carries the folded stats) skips pass 1 entirely: its schema and stats
-  * were folded on the driver as the pages were fetched, so its flatten is
-  * ONE Spark job, the render, walking the documents inside their response
-  * rows, with nothing cached.
+  * A [[Vintage]] (an export of ES responses) needs no stats pass: the
+  * schema fold absorbed the stats too — on the driver as a fresh `EsHttp`
+  * export fetched the pages, or in one Spark job over a directory without
+  * a sidecar — so its flatten is ONE Spark job, the render, walking the
+  * documents inside their response rows, with nothing cached.
   *
   * Semantics (SURVEY.md §2.3 quirk decisions):
   *   - Q1  digit map keys: FIXED — `ValueCodes_45` extracts its real value
@@ -102,8 +103,9 @@ object Flattener {
 
   /** End-to-end TSV export: stats pass + direct row-walk rendering of
     * quoted TSV lines, written as text with a header per part-file (the
-    * same layout Spark's CSV writer produces). `singleFile` coalesces to
-    * one part for reference-style one-file batches.
+    * same layout Spark's CSV writer produces), published into `dir` as
+    * [[writeTsv]] publishes. `singleFile` coalesces to one part for
+    * reference-style one-file batches.
     */
   def flattenToTsv(df: DataFrame, dir: String,
       maxDepth: Int = DefaultMaxDepth,
@@ -122,49 +124,55 @@ object Flattener {
       val batch = StatsPass.collect(input)
       val plan = RenderPass.compile(input.schema, batch, maxDepth)
       writeTsv(input.sparkSession, plan, RenderPass.renderTsvLines(input, plan),
-        dir, singleFile)
+        dir, singleFile)(())
       Written(plan.columns.toSeq, batch.rows)
     } finally if (weOwn) input.unpersist(blocking = false): Unit
   }
 
   /** [[flattenToTsv]] of a vintage: the plan comes from its folded stats,
-    * so the render is the only Spark job and nothing is cached. The TSV
-    * is rendered into a hidden sibling of `dir` and the rows are counted
-    * as they render; it replaces `dir` only when that count is the folded
-    * one. Any other count means the pages changed after their stats were
-    * folded: the call fails and `dir` keeps what it held, rather than
-    * publish columns that no longer describe their rows.
+    * so the render is the only Spark job and nothing is cached. The rows
+    * are counted as they render, and the TSV is published into `dir` only
+    * when that count is the folded one. Any other count means the pages
+    * changed after their stats were folded: the call fails and `dir`
+    * keeps what it held, rather than publish columns that no longer
+    * describe their rows.
     */
   def flattenToTsv(v: Vintage, dir: String, maxDepth: Int): Written = {
     val plan = RenderPass.compile(v.source, v.stats, maxDepth)
     val spark = v.envelope.sparkSession
     val rows = spark.sparkContext.longAccumulator
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.makeQualified(new Path(dir))
-    val staged = new Path(out.getParent,
-      s".${out.getName}.rendering-${java.util.UUID.randomUUID()}")
-    try {
-      writeTsv(spark, plan,
-        RenderPass.renderHitTsvLines(v.envelope, plan, rows),
-        staged.toString, singleFile = false)
+    writeTsv(spark, plan, RenderPass.renderHitTsvLines(v.envelope, plan, rows),
+      dir, singleFile = false) {
       if (rows.value != v.stats.rows)
         throw new IllegalStateException(
           s"vintage changed under its sidecar: its stats count ${v.stats.rows} " +
             s"documents, its pages now hold ${rows.value}")
+    }
+    Written(plan.columns.toSeq, rows.value)
+  }
+
+  /** The TSV write: `lines` under a header per part-file, rendered into a
+    * hidden sibling of `dir` and renamed into place once the write job and
+    * then `check` have passed. If either fails, `dir` keeps what it held
+    * and the staged copy is removed.
+    */
+  private def writeTsv(spark: SparkSession, plan: RenderPass.Plan,
+      lines0: RDD[String], dir: String, singleFile: Boolean)(
+      check: => Unit): Unit = {
+    val header = RenderPass.tsvLine(plan.columns)
+    val lines = if (singleFile) lines0.coalesce(1) else lines0
+    val withHeader = lines.mapPartitions(it => Iterator(header) ++ it)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.makeQualified(new Path(dir))
+    val staged = new Path(out.getParent,
+      s".${out.getName}.rendering-${java.util.UUID.randomUUID()}")
+    import spark.implicits._
+    try {
+      spark.createDataset(withHeader).write.text(staged.toString)
+      check
       fs.delete(out, true)
       require(fs.rename(staged, out),
         s"flattenToTsv: publish $staged -> $out failed")
     } finally fs.delete(staged, true): Unit
-    Written(plan.columns.toSeq, rows.value)
-  }
-
-  /** The TSV write: `lines` under a header per part-file. */
-  private def writeTsv(spark: SparkSession, plan: RenderPass.Plan,
-      lines0: RDD[String], dir: String, singleFile: Boolean): Unit = {
-    val header = RenderPass.tsvLine(plan.columns)
-    val lines = if (singleFile) lines0.coalesce(1) else lines0
-    val withHeader = lines.mapPartitions(it => Iterator(header) ++ it)
-    import spark.implicits._
-    spark.createDataset(withHeader).write.mode("overwrite").text(dir)
   }
 }

@@ -23,11 +23,13 @@ import org.apache.spark.sql.types._
   * seconds per pass on 5k-leaf documents): no codegen, no shuffle
   * (per-partition partial stats reduce to the driver as one small map).
   *
-  * A fresh `EsHttp` export needs no such pass: its fold absorbs the same
-  * stats from the trees its fetch loop parsed ([[Tree]]), and the vintage
-  * carries them in its sidecar. [[collect]] remains the flatten's pass for
-  * every other input (document frames, streaming batches, directories
-  * without folded stats) and the oracle the fold is tested against.
+  * An export of ES responses needs no such pass: the schema fold
+  * (`graft.sources.EsJson.ParseSchemaFold`) absorbs the same stats into a
+  * [[Tree]] — on the driver from the pages a fresh `EsHttp` export
+  * fetches, or per partition for a directory without a sidecar — and a
+  * vintage carries them in its sidecar. [[collect]] remains the flatten's
+  * pass for document frames (`runDocs`, streaming batches, bare-document
+  * directories) and the oracle the fold is tested against.
   */
 object StatsPass {
 
@@ -127,9 +129,10 @@ object StatsPass {
     * scalar arrays, keys under a value the schema widened to string);
     * [[batch]] walks it together with the documents' final schema and
     * emits only the paths [[collect]] reaches over rows parsed with that
-    * schema, so the two agree exactly. Not thread-safe.
+    * schema, so the two agree exactly. Not thread-safe; the trees of
+    * several partitions combine with [[merge]].
     */
-  final class Tree {
+  final class Tree extends Serializable {
     private var rows = 0L
     private val root = new Tree.Node
 
@@ -137,6 +140,9 @@ object StatsPass {
       * (an all-null row, as a null hit explodes to).
       */
     def add(doc: JsonNode): Unit = { rows += 1; root.add(doc) }
+
+    /** Absorbs the documents `other` absorbed. */
+    def merge(other: Tree): Unit = { rows += other.rows; root.merge(other.root) }
 
     /** The stats [[collect]] gives over the documents parsed with
       * `schema`.
@@ -164,7 +170,7 @@ object StatsPass {
   }
 
   private object Tree {
-    final class Node {
+    final class Node extends Serializable {
       var present = false
       var maxLen = 0
       var hasEmpty = false
@@ -197,6 +203,23 @@ object StatsPass {
             while (i < len) { elems.get(i).add(n.get(i)); i += 1 }
           }
         }
+
+      def merge(o: Node): Unit = {
+        present |= o.present
+        if (o.maxLen > maxLen) maxLen = o.maxLen
+        hasEmpty |= o.hasEmpty
+        if (o.children != null) {
+          if (children == null) children = new java.util.HashMap[String, Node]
+          o.children.forEach((k, v) =>
+            children.computeIfAbsent(k, _ => new Node).merge(v))
+        }
+        if (o.elems != null) {
+          if (elems == null) elems = new java.util.ArrayList[Node]
+          while (elems.size < o.elems.size) elems.add(new Node)
+          var i = 0
+          while (i < o.elems.size) { elems.get(i).merge(o.elems.get(i)); i += 1 }
+        }
+      }
     }
   }
 }

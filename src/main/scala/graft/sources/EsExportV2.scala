@@ -61,9 +61,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * A file may hold one pretty-printed response (the reference's export
   * shape), concatenated / line-delimited responses, bare document
   * objects, or a top-level JSON array of documents — one token loop
-  * handles all of these. Schema inference delegates to Spark's multiLine
-  * JSON reader + [[EsJson.unwrap]] (one response per file);
-  * concatenated-response files need an explicit schema.
+  * handles all of these. Schema inference delegates to [[EsJson.read]]:
+  * the directory's sidecar when it carries one, else the one-job schema
+  * fold over its files ([[EsJson.ParseSchemaFold]], one response per
+  * file), unwrapped ([[EsJson.unwrap]]); concatenated-response files need
+  * an explicit schema.
   */
 class EsExportSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {

@@ -178,7 +178,7 @@ object EsHttp {
     */
   def read(spark: org.apache.spark.sql.SparkSession, cfg: Config,
       pageDir: String): org.apache.spark.sql.DataFrame =
-    EsJson.read(spark, pageDir, Some(exportVintage(spark, cfg, pageDir)),
+    EsJson.read(spark, pageDir, exportVintage(spark, cfg, pageDir),
       multiLine = true)
 
   /** Runs the export into `pageDir` and returns the sidecar it wrote.

@@ -1,12 +1,18 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
+import java.io.{ByteArrayInputStream, CharConversionException, InputStreamReader}
+import java.nio.charset.{MalformedInputException, StandardCharsets}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.{JsonParser, JsonProcessingException}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
-import org.apache.spark.sql.catalyst.json.{InferSchemaAccess, JSONOptionsInRead,
-  JsonInferSchema}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.json.{InferSchemaAccess, JSONOptions,
+  JSONOptionsInRead, JsonInferSchema}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -19,17 +25,17 @@ import graft.flatten.{EmptyShapes, Flattener, StatsPass}
   * keeps only `_source` payloads, discarding all ES metadata
   * [`ElasticSearch ETL.py:157-163`]; bare documents pass through as-is.
   *
-  * Live-cluster pagination (`search_after` loop, [`ETL.py:220-267`]) is a
-  * connector concern out of scope offline (SURVEY.md §7.5); exported
-  * response files are the modeled input. One exploded row per hit — at
-  * scale, responses across many files parallelize by file split, and the
-  * explode is narrow (no shuffle).
+  * The input is a directory of exported response files: [[EsHttp]] writes
+  * one per page of the reference's `search_after` loop
+  * [`ETL.py:220-267`], and any other export in that layout reads the same
+  * way. One exploded row per hit — at scale, responses across many files
+  * parallelize by file split, and the explode is narrow (no shuffle).
   */
 object EsJson {
 
   /** The JSON reader options of every export read, and of the schema
-    * fold of a fresh export ([[ParseSchemaFold]]). `multiLine` because
-    * exported responses are pretty-printed single documents, not JSONL.
+    * fold ([[ParseSchemaFold]]). `multiLine` because exported responses
+    * are pretty-printed single documents, not JSONL.
     * ISO-8601-looking strings must stay strings — the reference never
     * parses dates (SURVEY.md §1.2); the inference flags are explicit even
     * though they default to false.
@@ -69,10 +75,10 @@ object EsJson {
     */
   val SchemaSidecar = "_schema.json"
 
-  /** What a vintage's sidecar holds: its parse schema and, when the
-    * export folded them, the batch stats of its documents (the rows
-    * [[read]] gives), which let the vintage flatten without a stats pass
-    * ([[vintage]]).
+  /** What a vintage's sidecar holds, and what [[ParseSchemaFold]] gives:
+    * its parse schema and, when they are known, the batch stats of its
+    * documents (the rows [[read]] gives), which let the vintage flatten
+    * without a stats pass ([[vintage]]).
     */
   final case class Sidecar(schema: StructType,
       stats: Option[StatsPass.Batch])
@@ -106,7 +112,6 @@ object EsJson {
     if (!root.has("stats"))
       Sidecar(DataType.fromJson(text).asInstanceOf[StructType], None)
     else {
-      import scala.jdk.CollectionConverters._
       val stats = root.get("stats")
       Sidecar(DataType.fromJson(root.get("schema").toString)
           .asInstanceOf[StructType],
@@ -126,8 +131,8 @@ object EsJson {
     * grafted schema and its stats are discovered ONCE, at export time —
     * by [[EsHttp.read]], as its fetch loop receives the pages
     * ([[ParseSchemaFold]]); every later read of the vintage then skips
-    * both the inference scan and the EmptyShapes discovery pass, and its
-    * flatten skips the stats pass: zero Spark jobs before the render.
+    * the fold, and its flatten skips the stats pass: zero Spark jobs
+    * before the render.
     */
   def writeSidecar(spark: SparkSession, dir: String, side: Sidecar): Unit = {
     import org.apache.hadoop.fs.Path
@@ -143,7 +148,7 @@ object EsJson {
   }
 
   /** The vintage's sidecar, when `path` is a directory carrying one. A
-    * CORRUPT sidecar fails loudly — silently falling back to inference
+    * CORRUPT sidecar fails loudly — silently falling back to the fold
     * could give a different schema than every other reader of the
     * vintage saw.
     */
@@ -162,26 +167,40 @@ object EsJson {
     }
   }
 
+  /** The sidecar of the export under `path`: the one it carries, else
+    * the one [[ParseSchemaFold.files]] folds from its files (one Spark
+    * job; nothing is written into the input).
+    */
+  def sidecar(spark: SparkSession, path: String,
+      multiLine: Boolean = true): Sidecar =
+    readSidecar(spark, path).getOrElse(
+      ParseSchemaFold.files(spark, Seq(path), multiLine))
+
   /** Read one-or-many exported ES response files (or bare document files)
-    * as one row per document. `multiLine` because exported responses are
-    * pretty-printed single documents, not JSONL.
-    *
-    * If the path is a vintage directory carrying a [[SchemaSidecar]],
-    * the persisted parse schema is used directly — no inference scan, no
-    * EmptyShapes discovery, no Spark job until the parse itself.
+    * as one row per document, parsed with the export's [[sidecar]]: the
+    * persisted parse schema when the path is a vintage directory carrying
+    * one (no Spark job until the parse itself), else the folded one (one
+    * Spark job).
     */
   def read(spark: SparkSession, path: String,
       multiLine: Boolean = true): DataFrame =
-    read(spark, path, readSidecar(spark, path), multiLine)
+    read(spark, path, sidecar(spark, path, multiLine), multiLine)
 
   /** [[read]] of `path` with the sidecar the caller already holds. */
   private[graft] def read(spark: SparkSession, path: String,
-      side: Option[Sidecar], multiLine: Boolean): DataFrame =
-    side match {
-      case Some(s) =>
-        unwrap(reader(spark, multiLine).schema(s.schema).json(path))
-      case None => readFiles(spark, Seq(path), multiLine)
-    }
+      side: Sidecar, multiLine: Boolean): DataFrame =
+    unwrap(reader(spark, multiLine).schema(side.schema).json(path))
+
+  /** Multi-path variant of [[read]] — the bounded schema-inference
+    * prefix of the es-export connector reads an explicit file list. The
+    * paths are folded together ([[ParseSchemaFold.files]]); no sidecar
+    * is consulted.
+    */
+  def readFiles(spark: SparkSession, paths: Seq[String],
+      multiLine: Boolean = true): DataFrame =
+    unwrap(reader(spark, multiLine)
+      .schema(ParseSchemaFold.files(spark, paths, multiLine).schema)
+      .json(paths: _*))
 
   /** The document schema inside a parse schema: `_source`'s struct when
     * the schema is an envelope; None for bare documents, whose rows are
@@ -216,58 +235,80 @@ object EsJson {
         .schema(Flattener.Vintage.envelopeSchema(source)).json(dir),
       source, stats)
 
-  /** Multi-path variant of [[read]] — the bounded schema-inference
-    * prefix of the es-export connector reads an explicit file list.
-    * Parses with [[inferParseSchema]]'s schema over the same paths.
+  /** The rows [[read]] gives of the records folded so far, absorbed for
+    * their batch stats. A record is one row when it is an object, one per
+    * element when it is an array of objects, and otherwise (a malformed
+    * record, a bare scalar) one row holding only the corrupt-record
+    * column, as Spark's PERMISSIVE parse gives it. A row carrying an
+    * `hits.hits` array is an ES response: its hits' `_source` trees go
+    * into `hits`; every other row goes into `docs`. Which tree the stats
+    * come from is settled only by the final schema ([[batch]]).
     */
-  def readFiles(spark: SparkSession, paths: Seq[String],
-      multiLine: Boolean = true): DataFrame =
-    unwrap(reader(spark, multiLine)
-      .schema(inferParseSchema(spark, paths, multiLine)).json(paths: _*))
+  private final class Rows(corruptColumn: String) extends Serializable {
+    private val hits = new StatsPass.Tree
+    private val docs = new StatsPass.Tree
+    private var responses = false
 
-  /** The PARSE schema of the documents under `paths`: Spark's JSON
-    * inference AUGMENTED with [[graft.flatten.EmptyShapes]]. Keys whose
-    * value is an empty object in every document are dropped by Spark's
-    * schema inference, which would silently erase them from
-    * JSON-rendered subtree cells where the reference's json.dumps keeps
-    * them; the shape pass reuses the same paths as inference. Spark
-    * passes over the data: one for inference, and one for the shape
-    * discovery unless the input is small enough to read on the driver.
-    *
-    * A fresh [[EsHttp]] export does not come here: its fetch loop folds
-    * the same schema page by page ([[ParseSchemaFold]]). This is the
-    * path of a directory without a [[SchemaSidecar]], and the oracle the
-    * fold is tested against.
-    */
-  def inferParseSchema(spark: SparkSession, paths: Seq[String],
-      multiLine: Boolean = true): StructType =
-    EmptyShapes.augment(spark, reader(spark, multiLine).json(paths: _*).schema,
-      paths, wholeFile = multiLine)
+    def add(record: JsonNode): Unit =
+      if (record.isObject) row(record)
+      else if (record.isArray && record.asScala.forall(_.isObject))
+        record.asScala.foreach(row)
+      else corrupt()
 
-  /** [[inferParseSchema]] for whole-file documents the driver already
-    * holds, folded in one document at a time with no Spark job: Spark's
-    * own per-document inference (`JsonInferSchema.inferField` over a
-    * parser from `JSONOptions.buildJsonFactory()`) merged with
-    * `compatibleRootType`, then finished with Spark's `canonicalizeType`
-    * and the EmptyShapes graft, whose shapes an [[EmptyShapes.Fold]]
-    * absorbs in place. The options are the ones `spark.read.json` builds
-    * from [[readerOptions]] (multiLine), the session time zone and the
-    * corrupt-record column name.
+    private def row(r: JsonNode): Unit = {
+      // one row per hit, as explode(hits.hits) gives
+      val hs = r.path("hits").path("hits")
+      if (hs.isArray) {
+        responses = true
+        hs.asScala.foreach(h => hits.add(h.path("_source")))
+      } else docs.add(r)
+    }
+
+    def corrupt(): Unit =
+      docs.add(JsonNodeFactory.instance.objectNode().put(corruptColumn, ""))
+
+    def merge(o: Rows): Unit = {
+      hits.merge(o.hits); docs.merge(o.docs); responses |= o.responses
+    }
+
+    /** The stats of the rows [[read]] parses with `schema`: the hits' when
+      * it is an envelope, the rows' own when it is not and no row was a
+      * response; unknown otherwise.
+      */
+    def batch(schema: StructType): Option[StatsPass.Batch] =
+      if (isEnvelope(schema)) sourceSchema(schema).map(hits.batch)
+      else if (responses) None
+      else Some(docs.batch(schema))
+  }
+
+  /** The parse schema of JSON records and the batch stats of the rows
+    * they parse to, folded one record at a time: Spark's own per-record
+    * inference (`JsonInferSchema.inferField` over a parser from
+    * `JSONOptions.buildJsonFactory()`) merged with `compatibleRootType`,
+    * finished with Spark's `canonicalizeType` and the EmptyShapes graft
+    * (an [[EmptyShapes.Fold]] absorbs each record's shape in place), and
+    * each record's rows absorbed into [[StatsPass.Tree]]s read against
+    * the final schema in [[result]], so the stats equal what
+    * [[StatsPass.collect]] gives over the rows [[read]] parses. The
+    * options are the ones `spark.read.json` builds from [[readerOptions]],
+    * the session time zone and the corrupt-record column name.
     *
-    * The same walk feeds the documents' batch stats: each hit's `_source`
-    * tree is absorbed into one [[StatsPass.Tree]], read against the final
-    * `_source` schema in [[result]], so the stats equal what
-    * [[StatsPass.collect]] gives over the rows [[read]] parses, without
-    * that Spark job.
-    *
-    * Not thread-safe: one thread adds at a time. [[EsHttp.read]] feeds
-    * it from one fold worker beside its fetch loop, in page order, and
-    * reads [[result]] after that worker has ended.
+    * This is the only way an export's parse schema is found. It has two
+    * forms. On the driver, [[add]] takes one response page at a time with
+    * the tree the caller parsed: [[EsHttp.read]] feeds it from one fold
+    * worker beside its fetch loop, in page order, and reads [[result]]
+    * after that worker has ended (not thread-safe: one thread adds at a
+    * time). Everything else folds in one Spark job ([[ParseSchemaFold.files]],
+    * [[ParseSchemaFold.lines]]): each partition folds its records, and the
+    * driver absorbs the partial root types, shapes and rows.
     */
-  final class ParseSchemaFold(spark: SparkSession) {
+  final class ParseSchemaFold private (spark: SparkSession,
+      multiLine: Boolean) {
+    def this(spark: SparkSession) = this(spark, multiLine = true)
+
     private val conf = spark.sessionState.conf
     private val options = SQLConf.withExistingConf(conf) {
-      new JSONOptionsInRead(readerOptions(multiLine = true),
+      new JSONOptionsInRead(readerOptions(multiLine),
         conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
     }
     private val inference =
@@ -276,8 +317,7 @@ object EsJson {
     private val mergeRoot = JsonInferSchema.compatibleRootType(
       options.columnNameOfCorruptRecord, options.parseMode)
     private val shapes = new EmptyShapes.Fold
-    private val docs = new StatsPass.Tree
-    private var pages = 0L
+    private val rows = new Rows(options.columnNameOfCorruptRecord)
     private var root: DataType = StructType(Nil)
 
     /** Folds in one response page: its serialized `bytes` (UTF-8) and the
@@ -291,16 +331,30 @@ object EsJson {
           finally parser.close()
         root = mergeRoot(root, tpe)
         shapes.add(new String(bytes, StandardCharsets.ISO_8859_1), tree)
-        pages += 1
-        // one row per hit, as explode(hits.hits) gives
-        val hits = tree.path("hits").path("hits")
-        if (hits.isArray) hits.elements().forEachRemaining(h =>
-          docs.add(h.path("_source")))
+        rows.add(tree)
       }
 
-    /** The parse schema of every page folded in so far (the empty schema
-      * when there was none) and, when the pages are ES responses (or
-      * there were none), the batch stats of their documents.
+    /** Folds every record of `records` (a one-string-column frame: whole
+      * files when `multiLine`, else lines) in one Spark job.
+      */
+    private def foldAll(records: Dataset[_]): Sidecar = {
+      // locals, so the task closure does not capture the fold itself
+      val (inference, options, wholeFile) = (this.inference, this.options,
+        multiLine)
+      val partials = records.queryExecution.toRdd.mapPartitions(it =>
+        Iterator.single(ParseSchemaFold.partial(it, inference, options,
+          wholeFile))).collect()
+      SQLConf.withExistingConf(conf)(partials.foreach { case (t, shape, rs) =>
+        root = mergeRoot(root, t)
+        shape.foreach(shapes.add)
+        rows.merge(rs)
+      })
+      result
+    }
+
+    /** The parse schema of every record folded in so far (the empty schema
+      * when there was none) and, when [[Rows.batch]] knows them, the batch
+      * stats of their rows.
       */
     def result: Sidecar = SQLConf.withExistingConf(conf) {
       val inferred =
@@ -309,9 +363,78 @@ object EsJson {
           case _ => StructType(Nil)
         }
       val schema = EmptyShapes.graftOnto(inferred, shapes.result)
-      val source =
-        if (pages == 0) Some(schema) else sourceSchema(schema)
-      Sidecar(schema, source.map(docs.batch))
+      Sidecar(schema, rows.batch(schema))
+    }
+  }
+
+  object ParseSchemaFold {
+
+    /** The fold of the files under `paths`, listed and decompressed as
+      * `spark.read.json` lists and decompresses them (the text source, one
+      * record per whole file when `multiLine`, else per line): one Spark
+      * job. Zero files fold to the empty schema.
+      */
+    def files(spark: SparkSession, paths: Seq[String],
+        multiLine: Boolean): Sidecar = {
+      val text =
+        if (multiLine) spark.read.option("wholetext", "true") else spark.read
+      new ParseSchemaFold(spark, multiLine).foldAll(text.text(paths: _*))
+    }
+
+    /** The fold of JSONL `lines`: one Spark job. */
+    def lines(spark: SparkSession, lines: Dataset[String]): Sidecar =
+      new ParseSchemaFold(spark, multiLine = false).foldAll(lines)
+
+    /** One partition's records folded as `JsonInferSchema.infer` folds
+      * them: its root type, EmptyShapes shape and rows. A record inference
+      * fails on (malformed JSON, a character the parser cannot decode,
+      * and, for lines, any runtime failure) counts as Spark counts it
+      * under PERMISSIVE, the reader's mode: a string corrupt-record column
+      * in the schema and, in the rows, a row holding only that column. A
+      * blank record counts for nothing.
+      */
+    private def partial(it: Iterator[InternalRow], inference: JsonInferSchema,
+        options: JSONOptions, wholeFile: Boolean)
+        : (DataType, Option[EmptyShapes.Raw], Rows) = {
+      val factory = options.buildJsonFactory()
+      val mapper = new ObjectMapper
+      val corrupt = options.columnNameOfCorruptRecord
+      val mergeRoot = JsonInferSchema.compatibleRootType(corrupt,
+        options.parseMode)
+      val shapes = new EmptyShapes.Fold
+      val rows = new Rows(corrupt)
+      var root: DataType = StructType(Nil)
+      it.foreach { record =>
+        val bytes = record.getUTF8String(0).getBytes
+        // the parsers Spark's JSON reader makes: from the file's bytes, or
+        // through a UTF-8 reader from a line
+        def parser(): JsonParser =
+          if (wholeFile) factory.createParser(bytes)
+          else factory.createParser(new InputStreamReader(
+            new ByteArrayInputStream(bytes), StandardCharsets.UTF_8))
+        val tpe =
+          try {
+            val p = parser()
+            try { p.nextToken(); Some(inference.inferField(p)) }
+            finally p.close()
+          } catch {
+            case _: RuntimeException if !wholeFile => None
+            case _: JsonProcessingException | _: MalformedInputException |
+                _: CharConversionException => None
+          }
+        root = mergeRoot(root,
+          tpe.getOrElse(StructType(Seq(StructField(corrupt, StringType)))))
+        if (tpe.isEmpty) rows.corrupt()
+        else {
+          val p = parser()
+          val tree = try mapper.readTree[JsonNode](p) finally p.close()
+          if (tree != null) { // null: a blank record
+            shapes.add(new String(bytes, StandardCharsets.ISO_8859_1), tree)
+            rows.add(tree)
+          }
+        }
+      }
+      (root, shapes.result, rows)
     }
   }
 }

@@ -35,9 +35,8 @@ object ExportStream {
     *   a restarted job skips every export file already committed — the
     *   durable version of the reference's client-held `search_after`
     *   cursor. Default: a fresh temp dir (process everything).
-    */
-  /** @param docSchema optional known document schema. When set, per-batch
-    *   JSON inference (a full extra pass per page) is skipped and every
+    * @param docSchema optional known document schema. When set, the
+    *   per-batch schema fold (one Spark job per page) is skipped and every
     *   batch parses with this schema — the high-throughput mode for runs
     *   whose pages share one layout. Default null keeps the reference's
     *   faithful per-batch schema-union semantics (quirk Q6).
@@ -58,8 +57,8 @@ object ExportStream {
     val results = collection.mutable.ArrayBuffer.empty[BatchResult]
 
     // schema-of-strings source: each line is one exported response/doc;
-    // parsing + inference happen per batch so each batch gets ITS OWN
-    // schema union, exactly like the reference's per-page pass 1.
+    // the schema fold and the parse happen per batch so each batch gets
+    // ITS OWN schema union, exactly like the reference's per-page pass 1.
     val raw = spark.readStream
       .option("maxFilesPerTrigger", 1)
       .text(inputDir)
@@ -72,19 +71,9 @@ object ExportStream {
         val lines = batch.select("value").as(
           org.apache.spark.sql.Encoders.STRING)
         if (!lines.isEmpty) {
-          val reader = spark.read
-            .option("inferTimestamp", false).option("inferDate", false)
-          val docs = EsJson.unwrap(
-            if (docSchema != null) reader.schema(docSchema).json(lines)
-            else {
-              // per-batch inference inherits the empty-object-key
-              // repair (flatten/EmptyShapes) the path-based reads get
-              val inferred = reader.json(lines)
-              val schema = graft.flatten.EmptyShapes.augmentLines(
-                inferred.schema, lines)
-              if (schema eq inferred.schema) inferred
-              else reader.schema(schema).json(lines)
-            })
+          val schema = Option(docSchema)
+            .getOrElse(EsJson.ParseSchemaFold.lines(spark, lines).schema)
+          val docs = EsJson.unwrap(spark.read.schema(schema).json(lines))
           val ts = java.time.format.DateTimeFormatter
             .ofPattern("yyyyMMdd_HHmmss")
             .withZone(java.time.ZoneOffset.UTC)

@@ -14,16 +14,9 @@ object FlattenDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    def rd = spark.read
-      .option("inferTimestamp", false).option("inferDate", false)
-    val inferred = rd.json(in)
-    // recover inference-dropped empty-object keys (the seed-51 class) —
-    // the same augmentation the production EsJson read path applies
-    val schema = graft.flatten.EmptyShapes.augment(spark,
-      inferred.schema, Seq(in), wholeFile = false)
-    val df = if (schema eq inferred.schema) inferred
-             else rd.schema(schema).json(in)
-    // the production TSV path end to end
+    // the production read (schema fold, EmptyShapes graft included) and
+    // TSV path end to end
+    val df = graft.sources.EsJson.read(spark, in, multiLine = false)
     val tmp = out + ".dir"
     graft.flatten.Flattener.flattenToTsv(df, tmp, singleFile = true)
     val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp)).toArray

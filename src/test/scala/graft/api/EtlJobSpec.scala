@@ -203,6 +203,27 @@ class EtlJobSpec extends AnyFunSuite {
     }
   }
 
+  test("run over ES responses without a sidecar: three Spark jobs, nothing cached") {
+    withClaims(claims, pageSize = 3) { cfg =>
+      val out = tmp()
+      EtlJob.runHttp(spark, cfg, s"$out/pages", s"$out/tsv", s"$out/audit"): Unit
+      val sidecar = java.nio.file.Paths.get(s"$out/pages",
+        graft.sources.EsJson.SchemaSidecar)
+      java.nio.file.Files.delete(sidecar)
+      val sc = spark.sparkContext
+      val cached = sc.getPersistentRDDs.keySet
+      val (res, jobs) = graft.JobsStarted(spark)(
+        EtlJob.run(spark, s"$out/pages", s"$out/tsv2", s"$out/audit"))
+      assert(jobs === 3) // the fold, the render and the audit row
+      assert(sc.getPersistentRDDs.keySet === cached)
+      assert(res.records === 7L)
+      assert(tsvParts(s"$out/tsv2") === tsvParts(s"$out/tsv"))
+      assert(!java.nio.file.Files.exists(sidecar), "the run wrote into its input")
+      val audit = spark.read.parquet(s"$out/audit").collect()
+      assert(audit.map(_.getAs[Long]("record_count_loaded")).toSeq === Seq(7L, 7L))
+    }
+  }
+
   test("a vintage changed under its sidecar fails onto the FAILED audit path") {
     withClaims(claims, pageSize = 3) { cfg =>
       val out = tmp()

@@ -2,20 +2,23 @@ package graft.flatten
 
 import java.nio.file.Files
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.EsJson
 
 /** [[EmptyShapes]] — the inference-repair pass behind the seed-51
   * differential fix: Spark's JSON schema inference drops keys whose
   * value is an empty object in every document, which silently erased
   * them from JSON-rendered subtree cells (the reference's json.dumps
-  * keeps them). Pinned: the graft recovers exactly the dropped keys
-  * (including nested inside a KEPT array-of-struct — the observed
+  * keeps them). Pinned, through the schema fold every export read runs
+  * (`EsJson.ParseSchemaFold`): the graft recovers exactly the dropped
+  * keys (including nested inside a KEPT array-of-struct — the observed
   * case), leaves everything else untouched (schema `eq` when nothing
-  * was dropped, so the re-read is skipped), and the repaired read
-  * renders `{}` for present instances while still omitting the key
-  * for absent ones.
+  * was dropped), and the repaired read renders `{}` for present
+  * instances while still omitting the key for absent ones.
   */
 class EmptyShapesSpec extends AnyFunSuite {
 
@@ -24,6 +27,12 @@ class EmptyShapesSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  private val mapper = new ObjectMapper
+
+  /** The parse schema the fold gives for the JSONL file `path`. */
+  private def folded(path: String): StructType =
+    EsJson.ParseSchemaFold.files(spark, Seq(path), multiLine = false).schema
 
   private def jsonl(lines: String*): String = {
     val d = Files.createTempDirectory("emptyshapes_")
@@ -44,8 +53,7 @@ class EmptyShapesSpec extends AnyFunSuite {
       .elementType.asInstanceOf[StructType]
     assert(!itemsEt0.fieldNames.contains("inner"))
 
-    val schema = EmptyShapes.augment(spark, inferred, Seq(path),
-      wholeFile = false).asInstanceOf[StructType]
+    val schema = folded(path)
     val itemsEt = schema("items").dataType.asInstanceOf[ArrayType]
       .elementType.asInstanceOf[StructType]
     assert(itemsEt("inner").dataType === StructType(Nil))
@@ -68,8 +76,7 @@ class EmptyShapesSpec extends AnyFunSuite {
     val inferred = spark.read.json(path).schema
     assert(!inferred.fieldNames.contains("arrFirst"))
     assert(!inferred.fieldNames.contains("spaced"))
-    val schema = EmptyShapes.augment(spark, inferred, Seq(path),
-      wholeFile = false).asInstanceOf[StructType]
+    val schema = folded(path)
     assert(schema("arrFirst").dataType ===
       ArrayType(StructType(Nil), containsNull = true))
     assert(schema("spaced").dataType === StructType(Nil))
@@ -78,22 +85,28 @@ class EmptyShapesSpec extends AnyFunSuite {
     assert(laterEt.isInstanceOf[StructType],
       "comma-borne empty element merges into the kept element struct")
     // a code-only corpus (bare {} in string values, no real empty
-    // shapes) must graft nothing: same schema INSTANCE back
-    val codePath = jsonl(
+    // shapes) must graft nothing: the prefilter passes no document, and
+    // the fold's schema is inference's
+    val code = Seq(
       """{"id":1,"snippet":"function f() {}"}""",
       """{"id":2,"snippet":"while (true) {}"}""")
-    val codeInferred = spark.read.json(codePath).schema
-    val codeOut = EmptyShapes.augment(spark, codeInferred, Seq(codePath),
-      wholeFile = false)
-    assert(codeOut eq codeInferred)
+    val codePath = jsonl(code: _*)
+    val shapes = new EmptyShapes.Fold
+    code.foreach(d => shapes.add(d, mapper.readTree(d)))
+    assert(shapes.result.isEmpty)
+    assert(folded(codePath) === spark.read.json(codePath).schema)
   }
 
   test("nothing dropped -> the exact same schema instance (re-read skipped)") {
-    val path = jsonl("""{"a":{"x":1},"b":[{"y":2}]}""")
+    val doc = """{"a":{"x":1},"b":[{"y":2}]}"""
+    val path = jsonl(doc)
     val inferred = spark.read.json(path).schema
-    val schema = EmptyShapes.augment(spark, inferred, Seq(path),
-      wholeFile = false)
-    assert(schema eq inferred)
+    assert(folded(path) === inferred)
+    // a shape whose every key inference kept grafts nothing: the same
+    // instance comes back
+    val shape = ShapeOracle.fold(Seq(mapper.readTree(doc)))
+    assert(shape.isDefined)
+    assert(EmptyShapes.graftOnto(inferred, shape) eq inferred)
   }
 
   test("end-to-end: a JSON cell keeps inner:{} when present and omits it when absent") {

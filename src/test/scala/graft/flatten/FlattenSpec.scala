@@ -236,4 +236,30 @@ class FlattenSpec extends AnyFunSuite {
     assert(byId("1")("X") == "only-in-1" && byId("1")("Y") == "")
     assert(byId("2")("X") == "" && byId("2")("Y") == "42")
   }
+
+  test("a failed document-frame write keeps the published TSV, nothing staged") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failcreate.impl", classOf[FailingCreateFs].getName)
+    val parent = java.nio.file.Files.createTempDirectory("tsv_publish_")
+    val dir = s"failcreate://$parent/tsv"
+    def published: Map[String, String] =
+      java.nio.file.Files.list(parent.resolve("tsv")).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("part-"))
+        .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
+        .toMap
+    val docs = Seq("""{"id":1,"x":"a"}""", """{"id":2,"x":"b"}""").toDS
+    Flattener.flattenToTsv(spark.read.json(docs), dir, singleFile = true): Unit
+    val before = published
+    assert(before.values.exists(_.startsWith("Id\tX")))
+    FailingCreateFs.armed = true
+    try intercept[Exception](
+      Flattener.flattenToTsv(spark.read.json(Seq("""{"id":3}""").toDS), dir,
+        singleFile = true))
+    finally FailingCreateFs.armed = false
+    assert(published === before)
+    assert(java.nio.file.Files.list(parent).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString) === Seq("tsv"))
+  }
 }

@@ -6,12 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import EmptyShapes.{RArr, RObj, RScalar}
 
-/** [[EmptyShapes.Shape]], the in-place accumulator behind every
-  * EmptyShapes route, gives the same merged shape as the reference fold
-  * [[ShapeOracle]] (one `Raw` per document, merged pairwise): absorbing
-  * documents one by one, absorbing per-partition partials on the driver,
-  * behind the [[EmptyShapes.Fold]] prefilter, and through
-  * [[EmptyShapes.discoverLines]].
+/** [[EmptyShapes.Shape]], the in-place accumulator behind the schema
+  * fold's EmptyShapes graft, gives the same merged shape as the reference
+  * fold [[ShapeOracle]] (one `Raw` per document, merged pairwise):
+  * absorbing documents one by one, absorbing per-partition partials on
+  * the driver, behind the [[EmptyShapes.Fold]] prefilter, and through the
+  * distributed fold (`EsJson.ParseSchemaFold.lines`).
   */
 class ShapeSpec extends AnyFunSuite {
 
@@ -125,7 +125,9 @@ class ShapeSpec extends AnyFunSuite {
       """{"k":{},"arr":[{"w":{}}]}""")
     val ds = spark.createDataset(spark.sparkContext.parallelize(lines, 3))(
       Encoders.STRING)
-    assert(EmptyShapes.discoverLines(ds) ===
-      ShapeOracle.fold(trees(lines.filter(passes))))
+    // the fold's schema is the oracle shape grafted onto inference
+    assert(graft.sources.EsJson.ParseSchemaFold.lines(spark, ds).schema ===
+      EmptyShapes.graftOnto(spark.read.json(ds).schema,
+        ShapeOracle.fold(trees(lines.filter(passes)))))
   }
 }

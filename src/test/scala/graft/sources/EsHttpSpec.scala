@@ -181,7 +181,7 @@ class EsHttpSpec extends AnyFunSuite {
       val cfg = EsHttp.Config(es.baseUrl, "claims", pageSize = 10)
       val df = EsHttp.read(spark, cfg, dir)
       assert(EsJson.readSidecar(spark, dir).map(_.schema) ===
-        Some(EsJson.inferParseSchema(spark, Seq(dir))))
+        Some(ParseSchemaOracle(spark, Seq(dir))))
       assert(df.count() === 25)
       assert(es.searchBodies.size === 3)
     } finally es.stop()

@@ -7,12 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Per-vintage schema sidecar ([[EsJson.SchemaSidecar]]): an exported
   * vintage persists its grafted parse schema once, and every later read
-  * skips inference AND the EmptyShapes discovery pass. Pinned: the
-  * sidecar is authoritative (a read with one present never consults the
-  * data for schema), byte-identical output vs the inference path,
-  * producer wiring in [[EsHttp.read]] (fresh export writes it, re-export
-  * replaces it), and the driver-local EmptyShapes discovery equals the
-  * distributed pass on the same documents.
+  * skips the schema fold. Pinned: the sidecar is authoritative (a read
+  * with one present never consults the data for schema), byte-identical
+  * output vs the folding path, producer wiring in [[EsHttp.read]] (fresh
+  * export writes it, re-export replaces it), the distributed fold of a
+  * directory without a sidecar lists files as `spark.read` does and
+  * equals the fold of the fetched pages, in one Spark job.
   */
 class SchemaSidecarSpec extends AnyFunSuite {
 
@@ -34,7 +34,7 @@ class SchemaSidecarSpec extends AnyFunSuite {
   test("sidecar round-trip: persisted schema read back; output byte-identical") {
     val dir = vintage()
     val inferredRead = EsJson.readFiles(spark, Seq(dir))
-    val parseSchema = EsJson.inferParseSchema(spark, Seq(dir))
+    val parseSchema = ParseSchemaOracle(spark, Seq(dir))
     // the graft kept the inference-dropped empty object
     assert(parseSchema("b").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType]
@@ -101,7 +101,7 @@ class SchemaSidecarSpec extends AnyFunSuite {
       assert(side.get.fieldNames.contains("hits"))
       // the schema folded inside the fetch loop is the one inference +
       // graft derives from the same pages
-      assert(side.get === EsJson.inferParseSchema(spark, Seq(pageDir)))
+      assert(side.get === ParseSchemaOracle(spark, Seq(pageDir)))
       assert(docs.columns.contains("e"))
       // a later read of the vintage goes through the sidecar and equals
       val again = EsJson.read(spark, pageDir)
@@ -116,52 +116,55 @@ class SchemaSidecarSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
-  test("local discovery: a hidden-named ANCESTOR of the listed root does not hide the files") {
-    import graft.flatten.EmptyShapes
+  test("fold listing: a hidden-named root ANCESTOR does not hide files") {
     // the listed root lives under a dot-prefixed parent — components
     // ABOVE the root must not trip the hidden filter (spark.read reads
-    // this layout fine; a mis-qualified walk would silently discover
+    // this layout fine; a mis-qualified walk would silently fold
     // nothing and the graft would never fire)
     val parent = Files.createTempDirectory(".sidecar_hidden_")
     val dir = parent.resolve("docs")
     Files.createDirectories(dir)
     Files.writeString(dir.resolve("d.jsonl"), """{"k": 1, "e": {}}""")
-    val got = EmptyShapes.discover(spark, Seq(dir.toString),
-      wholeFile = false)
-    assert(got.isDefined, "files under a hidden-named ancestor were skipped")
+    val got = EsJson.ParseSchemaFold.files(spark, Seq(dir.toString),
+      multiLine = false)
+    assert(got.schema.fieldNames.toSet === Set("k", "e"),
+      "files under a hidden-named ancestor were skipped")
+    assert(got.stats.map(_.rows) === Some(1L))
     // while a hidden component BELOW the root still filters, like Spark
     val dir2 = Files.createTempDirectory("sidecar_below_")
     Files.createDirectories(dir2.resolve("_meta"))
     Files.writeString(dir2.resolve("_meta").resolve("d.jsonl"),
       """{"e": {}}""")
-    assert(EmptyShapes.discover(spark, Seq(dir2.toString),
-      wholeFile = false).isEmpty)
+    Files.writeString(dir2.resolve("v.jsonl"), """{"k": 1}""")
+    val below = EsJson.ParseSchemaFold.files(spark, Seq(dir2.toString),
+      multiLine = false)
+    assert(below.schema.fieldNames.toSeq === Seq("k"))
+    assert(below.schema === ParseSchemaOracle(spark, Seq(dir2.toString),
+      multiLine = false))
+    assert(below.stats.map(_.rows) === Some(1L))
   }
 
-  test("driver-local EmptyShapes discovery equals the distributed pass") {
-    import graft.flatten.EmptyShapes
-    val dir = Files.createTempDirectory("sidecar_local_")
-    val lines = Seq(
-      """{"k": 1, "e": {}, "arr": [{"z": {}}]}""",
-      """{"k": 2, "e": {}}""")
-    Files.writeString(dir.resolve("docs.jsonl"), lines.mkString("\n"))
-    // the path form picks the driver-local route (2 tiny lines); the
-    // Dataset form is the distributed scan — same merged shape
-    val local = EmptyShapes.discover(spark, Seq(dir.toString),
-      wholeFile = false)
-    val distributed = EmptyShapes.discoverLines(
-      spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING))
-    assert(local === distributed)
-    assert(local.isDefined)
-    // and the graft sees the nested always-empty keys either way
-    val inferred = spark.read.json(dir.resolve("docs.jsonl").toString).schema
-    val viaPath = EmptyShapes.augment(spark, inferred,
-      Seq(dir.toString), wholeFile = false)
-    assert(viaPath.fieldNames.contains("e"))
+  test("fold over files equals fold over the fetched pages") {
+    val pages = Seq(
+      Seq("""{"id": 1, "e": {}, "arr": [{"z": {}}]}""", """{"id": 2, "v": 1.5}"""),
+      Seq("""{"id": 3, "e": {}, "arr": []}"""),
+      Seq("""{"id": 4, "arr": [{"w": 1}], "t": "x"}"""))
+    EsPages.withStub(pages) { cfg =>
+      val dir = Files.createTempDirectory("sidecar_fetched_").toString
+      EsHttp.read(spark, cfg, dir): Unit
+      val fetched = EsJson.readSidecar(spark, dir).get
+      Files.delete(Paths.get(dir, EsJson.SchemaSidecar))
+      // one page per partition: the partials meet on the driver
+      EsPages.filePerPartition(spark) {
+        assert(spark.read.option("wholetext", "true").text(dir)
+          .rdd.getNumPartitions === 3)
+        assert(EsJson.ParseSchemaFold.files(spark, Seq(dir),
+          multiLine = true) === fetched)
+      }
+    }
   }
 
   test("distributed EmptyShapes discovery runs one Spark job") {
-    import graft.flatten.EmptyShapes
     val lines = Seq(
       """{"k": 1, "e": {}, "arr": [{"z": {}}]}""",
       """{"k": 2, "e": {}}""",
@@ -169,14 +172,16 @@ class SchemaSidecarSpec extends AnyFunSuite {
     // three partitions, one of them without a prefilter match
     val ds = spark.createDataset(spark.sparkContext.parallelize(lines, 3))(
       org.apache.spark.sql.Encoders.STRING)
-    val (shape, jobs) = graft.JobsStarted(spark)(EmptyShapes.discoverLines(ds))
+    val (side, jobs) =
+      graft.JobsStarted(spark)(EsJson.ParseSchemaFold.lines(spark, ds))
     assert(jobs === 1)
-    assert(shape.isDefined)
-    // no document passes the prefilter: still one job, no shape
+    assert(side.schema.fieldNames.contains("e"))
+    // no document passes the prefilter: still one job, nothing grafted
     val plain = spark.createDataset(Seq("""{"k": 1}""", """{"k": 2}"""))(
       org.apache.spark.sql.Encoders.STRING)
-    val (none, jobs2) = graft.JobsStarted(spark)(EmptyShapes.discoverLines(plain))
+    val (none, jobs2) =
+      graft.JobsStarted(spark)(EsJson.ParseSchemaFold.lines(spark, plain))
     assert(jobs2 === 1)
-    assert(none.isEmpty)
+    assert(none.schema === spark.read.json(plain).schema)
   }
 }
