@@ -897,13 +897,21 @@ object VersionedLake {
   private def readWithLakeSchema(spark: SparkSession, fs: FileSystem,
       base: Path, v: Long, rels: Seq[String]): DataFrame =
     schemaOf(fs, base, v) match {
-      case Some(sc) => spark.read
-        .schema(nullableized(sc)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .parquet(rels.map(qualified(fs, base, _)): _*)
+      case Some(sc) => readUnder(spark, fs, base, sc, rels)
       case None => spark.read.option("mergeSchema", "true")
         .parquet(rels.map(qualified(fs, base, _)): _*)
     }
+
+  /** `rels` read under schema `sc` (every field nullable): no footer
+    * opens, no schema-inference job; a column a file lacks reads NULL.
+    */
+  private def readUnder(spark: SparkSession, fs: FileSystem, base: Path,
+      sc: org.apache.spark.sql.types.StructType,
+      rels: Seq[String]): DataFrame =
+    spark.read
+      .schema(nullableized(sc)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .parquet(rels.map(qualified(fs, base, _)): _*)
 
   /** The newest version CARRYING streaming-batch provenance, with its
     * batch id — the exactly-once replay cursor. Checkpoint-first: on a
@@ -1182,38 +1190,9 @@ object VersionedLake {
       : Option[Seq[String]] = try {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val conf = spark.sessionState.newHadoopConf()
-    // bounded driver-side metadata reads — parallel when a commit wrote
-    // many files (each open reads only the footer bytes)
-    def footerOf(rel: String)
-        : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(qualified(fs, base, rel)), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter finally r.close()
-    }
-    val footers: Seq[(String,
-        org.apache.parquet.hadoop.metadata.ParquetMetadata)] =
-      if (rels.size <= 2) rels.map(r => r -> footerOf(r))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(rels.size, 8))
-        try {
-          val futs = rels.map(r => r -> pool.submit(
-            new java.util.concurrent.Callable[
-              org.apache.parquet.hadoop.metadata.ParquetMetadata] {
-              def call() = footerOf(r)
-            }))
-          futs.map { case (r, f) => r -> f.get() }
-        } finally pool.shutdown()
-      }
-    val entries = footers.map { case (rel, md) =>
+    val entries = footersOf(spark, fs, base, rels).map { case (rel, md) =>
       val blocks = md.getBlocks
-      val nRows = {
-        var s = 0L
-        blocks.forEach(b => s += b.getRowCount)
-        s
-      }
+      val nRows = rowsOf(md)
       if (nRows == 0L) rel // an empty part file carries no stats triple
       else {
         val schema = md.getFileMetaData.getSchema
@@ -1372,6 +1351,50 @@ object VersionedLake {
     Some(entries)
   } catch { case _: Exception => None }
 
+  /** The parquet footers of `rels` — bounded driver-side metadata reads,
+    * parallel when there are many files (each open reads only the
+    * footer bytes).
+    */
+  private def footersOf(spark: SparkSession, fs: FileSystem, base: Path,
+      rels: Seq[String])
+      : Seq[(String, org.apache.parquet.hadoop.metadata.ParquetMetadata)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    def footerOf(rel: String)
+        : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new Path(qualified(fs, base, rel)), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getFooter finally r.close()
+    }
+    if (rels.size <= 2) rels.map(r => r -> footerOf(r))
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(rels.size, 8))
+      try {
+        val futs = rels.map(r => r -> pool.submit(
+          new java.util.concurrent.Callable[
+            org.apache.parquet.hadoop.metadata.ParquetMetadata] {
+            def call() = footerOf(r)
+          }))
+        futs.map { case (r, f) => r -> f.get() }
+      } finally pool.shutdown()
+    }
+  }
+
+  private def rowsOf(md: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : Long = {
+    var s = 0L
+    md.getBlocks.forEach(b => s += b.getRowCount)
+    s
+  }
+
+  /** The total row count of `rels`, from their footers alone (no Spark
+    * job, no column data read).
+    */
+  private def footerRows(spark: SparkSession, fs: FileSystem, base: Path,
+      rels: Seq[String]): Long =
+    footersOf(spark, fs, base, rels).map(f => rowsOf(f._2)).sum
+
   /** The scan-job form of [[statEntries]] — the fallback when footers
     * lack usable exact stats, and the loud-failure path for a missing
     * stats column.
@@ -1424,6 +1447,14 @@ object VersionedLake {
         s.getPath.getName.endsWith(".parquet"))
       .map(s => s"$rel/${s.getPath.getName}").toSeq.sorted
   }
+
+  /** A fresh `data/<kind><token>` dir, unique to one writer: the
+    * version number is decided at publish, and a crashed writer leaves
+    * only an unreferenced dir for [[vacuum]].
+    */
+  private def tokenDir(kind: Char): String =
+    s"$DataName/$kind" +
+      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
 
   private def commitFiles(fs: FileSystem, base: Path,
       v: Long): Seq[String] =
@@ -1582,9 +1613,7 @@ object VersionedLake {
       statsCol: Option[String] = None,
       beforePublish: () => Unit = () => ()): Long = {
     val (fs, base) = fsOf(spark, dir)
-    val token = java.util.UUID.randomUUID().toString
-      .replace("-", "").take(12)
-    val rel = s"$DataName/a$token"
+    val rel = tokenDir('a')
     df.write.mode("overwrite").parquet(s"$dir/$rel")
     val rels = partFilesUnder(fs, base, rel)
     // stats entries depend only on this append's (immutable) files and
@@ -1751,13 +1780,114 @@ object VersionedLake {
     q.awaitTermination()
   }
 
+  /** An id under the equality Spark's `IN` and grouping apply: numbers
+    * compare by value across widths (Scala's `==`: `Int` delete ids
+    * match a `Long` column, -0.0 equals 0.0), NaN equals NaN, binary by
+    * content.
+    */
+  private def idKey(v: Any): Any = v match {
+    case d: Double if d.isNaN => NaNId
+    case f: Float if f.isNaN => NaNId
+    case b: Array[Byte] => b.toSeq
+    case other => other
+  }
+  private case object NaNId
+
+  /** A mutation's id column, collected to the driver ONCE and held there
+    * like the manifest (for the upsert, the collect also fills the
+    * persisted updates). Returns (one value per distinct non-NULL id,
+    * an id the column carries twice under [[idKey]] — a doubled NULL
+    * counts).
+    */
+  private def collectIds(df: DataFrame, idCol: String)
+      : (Seq[Any], Option[Any]) = {
+    val byKey = df.select(col(idCol)).collect().map(_.get(0)).groupBy(idKey)
+    (byKey.iterator.collect { case (k, vs) if k != null => vs.head }.toSeq,
+      byKey.collectFirst { case (_, vs) if vs.length > 1 => vs.head })
+  }
+
+  /** `body` given a predicate "the column's value is one of `ids`"
+    * (never true on NULL). The set reaches the executors once, as a
+    * broadcast released when `body` returns: no Spark job, and no
+    * literal per id in the plan, so a query and its tasks stay the same
+    * size however large the set.
+    */
+  private def withIdSet[T](spark: SparkSession, ids: Seq[Any])(
+      body: (org.apache.spark.sql.Column =>
+        org.apache.spark.sql.Column) => T): T = {
+    val keys = spark.sparkContext.broadcast(ids.map(idKey).toSet)
+    val member = udf(new org.apache.spark.sql.api.java.UDF1[Any, Boolean] {
+      def call(v: Any): Boolean = v != null && keys.value.contains(idKey(v))
+    }, org.apache.spark.sql.types.BooleanType)
+    try body(c => member(c)) finally keys.destroy()
+  }
+
+  /** The files of version `cur` holding any of `ids`, with the matched
+    * row count — the candidate skip and the ONE hit scan shared by
+    * [[commitDelete]] and [[upsertCore]]. With manifest stats on
+    * `idCol`, files whose (min, max) provably miss the ids' [lo, hi]
+    * never enter the scan (`rangeDisjoint` prunes only on a provable
+    * miss; an un-encodable id type never prunes). The candidates are
+    * read through `read` (the lake schema) and their matched rows
+    * counted per `_metadata.file_path` inside each partition, so the
+    * driver receives one row per (partition, affected file) — not one
+    * per matched row, which a postings lake multiplies by the terms per
+    * document. Returns (affected files, manifest-relative and sorted;
+    * matched rows).
+    */
+  private def hitFiles(fs: FileSystem, base: Path, opName: String,
+      cur: Long, entries: Seq[String], statIdx: Int, idCol: String,
+      ids: Seq[Any], member: org.apache.spark.sql.Column =>
+        org.apache.spark.sql.Column,
+      read: Seq[String] => DataFrame): (Seq[String], Long) = {
+    import org.apache.spark.sql.Encoders
+    val files = entries.map(entryPath)
+    val candidates =
+      if (ids.isEmpty) Seq.empty[String]
+      else if (statIdx < 0) files
+      else scala.util.Try {
+        val svs = ids.map(svOf)
+        val lo = svs.reduce((a, b) => if (a.cmp(b).get <= 0) a else b)
+        val hi = svs.reduce((a, b) => if (a.cmp(b).get >= 0) a else b)
+        entries.filterNot(rangeDisjoint(_, statIdx, lo, hi)).map(entryPath)
+      }.getOrElse(files)
+    if (candidates.isEmpty) return (Seq.empty, 0L)
+    val hits = read(candidates).where(member(col(idCol)))
+      .select(col("_metadata.file_path")).as(Encoders.STRING)
+      .mapPartitions(_.foldLeft(Map.empty[String, Long])((m, f) =>
+        m.updated(f, m.getOrElse(f, 0L) + 1)).iterator)(
+        Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+    // map back to manifest-relative names: qualified-URI equality first,
+    // then a scheme-independent suffix match — `_metadata.file_path` and
+    // makeQualified can normalize the same file differently on some
+    // filesystems (authority/port form), and a relative data-dir suffix
+    // identifies a lake file unambiguously either way
+    val relByQualified = files.map(f => qualified(fs, base, f) -> f).toMap
+    val affected = hits.keys.toSeq.flatMap { abs =>
+      relByQualified.get(abs).orElse(files.find(f => abs.endsWith("/" + f)))
+    }.distinct.sorted
+    require(affected.size == hits.size,
+      s"$opName: ${hits.size} affected file paths but ${affected.size} " +
+        s"resolved against the v$cur manifest — path qualification " +
+        "mismatch; aborting before any commit")
+    (affected, hits.values.sum)
+  }
+
   /** Delete-if-present by id as a new version. Only files that HOLD a
-    * deleted id are rewritten (id-column + file-path scan — data columns
-    * of unaffected files are never read); the rest carry over by name,
-    * so prior versions stay readable byte-for-byte. Returns
+    * deleted id are rewritten; the rest carry over by name, so prior
+    * versions stay readable byte-for-byte. Returns
     * (version, nFilesRewritten, nRowsRemoved); an empty intersection
     * commits NOTHING and returns version 0 — deleting what isn't there
     * is not history.
+    *
+    * At most three Spark queries, none with a shuffle: the id column is
+    * collected to the driver ([[collectIds]]; no job for a local frame)
+    * and reaches the executors as a broadcast ([[withIdSet]]), the
+    * candidate files are scanned once for the ids ([[hitFiles]]), and
+    * the affected files are rewritten under the lake schema without the
+    * deleted ids. NULL delete ids match nothing; lake rows with a NULL
+    * id survive.
     *
     * OPTIMISTIC ([[publishMutation]]): disjoint racing mutations both
     * land; a racing commit that rewrote one of THIS delete's files
@@ -1772,94 +1902,34 @@ object VersionedLake {
     val cur = currentVersion(spark, dir)
     require(cur > 0, s"commitDelete on an empty lake at $dir")
     val entries = fileEntries(fs, base, cur)
-    val files = entries.map(entryPath)
-    if (files.isEmpty) return (0L, 0L, 0L)
-    // the id set feeds the matched-file scan AND the rewrite anti-join —
-    // persist once (delete-request-sized) instead of re-executing the
-    // caller's plan per consumer
-    val dels = ids.select(col(ids.columns.head).as(idCol)).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // MANIFEST-STATS CANDIDATE SKIP — same discipline as
-      // [[upsertCore]]: with stats on the id column, files provably
-      // disjoint from the delete set's id range never enter the
-      // matched-file scan (the range probe is one tiny aggregation
-      // over the persisted id set, and only runs when the lake
-      // carries id stats at all)
-      val statCols = resolveStatsCols(spark, dir, cur, None)
-      val idStatIdx = statCols.indexOf(idCol)
-      val candidates =
-        if (idStatIdx < 0) files
-        else {
-          val mm = dels.agg(min(col(idCol)).as("lo"),
-            max(col(idCol)).as("hi")).head()
-          if (mm.isNullAt(0)) Seq.empty[String] // no non-NULL delete ids
-          else scala.util.Try {
-            val (lo, hi) = (svOf(mm.get(0)), svOf(mm.get(1)))
-            entries.filterNot(rangeDisjoint(_, idStatIdx, lo, hi))
-              .map(entryPath)
-          }.getOrElse(files) // an un-encodable id type never prunes
-        }
-      if (candidates.isEmpty) return (0L, 0L, 0L)
-      val abs = candidates.map(qualified(fs, base, _))
-      // bounded: one row per AFFECTED file (id + metadata column only)
-      val hits = spark.read.parquet(abs: _*)
-        .select(col(idCol), col("_metadata.file_path").as("__file"))
-        .join(dels, Seq(idCol))
-        .groupBy("__file").agg(count(lit(1)).as("n"))
-        .collect()
-      if (hits.isEmpty) return (0L, 0L, 0L)
-      val nRemoved = hits.map(_.getLong(1)).sum
-      val affectedAbs = hits.map(_.getString(0)).toSet
-      // map back to manifest-relative names: qualified-URI equality first,
-      // then a scheme-independent suffix match — `_metadata.file_path` and
-      // makeQualified can normalize the same file differently on some
-      // filesystems (authority/port form), and a relative data-dir suffix
-      // identifies a lake file unambiguously either way
-      val relByQualified = files.map(f => qualified(fs, base, f) -> f).toMap
-      val affectedRel = affectedAbs.toSeq.flatMap { abs =>
-        relByQualified.get(abs)
-          .orElse(files.find(f => abs.endsWith("/" + f)))
-      }.distinct.sorted
-      require(affectedRel.size == affectedAbs.size,
-        s"commitDelete: ${affectedAbs.size} affected file paths but " +
-          s"${affectedRel.size} resolved against the v$cur manifest — " +
-          "path qualification mismatch; aborting before any commit")
-      val cols = statCols // resolved once above, for the candidate skip
-      // the rewrite reads its source files under the LAKE schema — a bare
-      // parquet read takes ONE file's footer as the schema, so rewriting
-      // an evolved lake could silently (and nondeterministically) drop
-      // evolution-added columns from the surviving rows. Header-bearing
-      // lakes pay zero footer opens; legacy lakes a churn-bounded
-      // mergeSchema union over the affected files only.
-      val rewriteSrc = schemaOf(fs, base, cur) match {
-        case Some(sc) => spark.read
-          .schema(nullableized(sc)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(affectedRel.map(qualified(fs, base, _)): _*)
-        case None => spark.read.option("mergeSchema", "true")
-          .parquet(affectedRel.map(qualified(fs, base, _)): _*)
-      }
-      // unique token dir, like appends: the version number is decided at
-      // PUBLISH (a rebase may shift it), and a crashed/aborted delete
-      // leaves only an unreferenced orphan dir for vacuum
-      val token = java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      val rel = s"$DataName/m$token"
-      rewriteSrc.join(dels, Seq(idCol), "left_anti")
+    if (entries.isEmpty) return (0L, 0L, 0L)
+    val (dels, _) = collectIds(ids, ids.columns.head)
+    val cols = resolveStatsCols(spark, dir, cur, None)
+    // the lake schema (header, or the legacy mergeSchema union of exactly
+    // these files): a bare parquet read takes ONE file's footer as the
+    // schema, so a rewrite could silently drop evolution-added columns
+    val read = (rels: Seq[String]) =>
+      readWithLakeSchema(spark, fs, base, cur, rels)
+    val rel = tokenDir('m')
+    val (affected, nRemoved) = withIdSet(spark, dels) { member =>
+      val hit = hitFiles(fs, base, "commitDelete", cur, entries,
+        cols.indexOf(idCol), idCol, dels, member, read)
+      if (hit._1.nonEmpty) read(hit._1).where(!member(col(idCol)))
         .write.mode("overwrite").parquet(s"$dir/$rel")
-      // survivor files keep their manifest ENTRIES verbatim (stats
-      // included — their bytes did not change); the rewrite's files get
-      // fresh stats under the lake's carried columns
-      val freshEntries = statEntries(spark, fs, base,
-        partFilesUnder(fs, base, rel), cols)
-      val v = publishMutation(spark, fs, base, dir, "commitDelete",
-        snapV = cur, removed = affectedRel.toSet, freshEntries,
-        mkHeaders = effCur => schemaOf(fs, base, effCur).map(schemaHeader)
-          .getOrElse(Seq.empty) ++ statsHeaders(cols),
-        beforePublish = beforePublish)
-      (v, affectedRel.size.toLong, nRemoved)
-    } finally dels.unpersist(blocking = false): Unit
+      hit
+    }
+    if (affected.isEmpty) return (0L, 0L, 0L)
+    // survivor files keep their manifest ENTRIES verbatim (stats
+    // included — their bytes did not change); the rewrite's files get
+    // fresh stats under the lake's carried columns
+    val freshEntries = statEntries(spark, fs, base,
+      partFilesUnder(fs, base, rel), cols)
+    val v = publishMutation(spark, fs, base, dir, "commitDelete",
+      snapV = cur, removed = affected.toSet, freshEntries,
+      mkHeaders = effCur => schemaOf(fs, base, effCur).map(schemaHeader)
+        .getOrElse(Seq.empty) ++ statsHeaders(cols),
+      beforePublish = beforePublish)
+    (v, affected.size.toLong, nRemoved)
   }
 
   /** MERGE / upsert by id as a new version — the Delta `MERGE WHEN
@@ -1868,14 +1938,21 @@ object VersionedLake {
     * other update row is inserted. One commit, one rename.
     *
     * File scoping is the same discipline as [[commitDelete]]: matched
-    * ids are found by a column-pruned id + `_metadata.file_path` scan,
-    * and only files HOLDING a matched id are rewritten — their
-    * survivors and the full updates frame land together as this
-    * commit's new files, every untouched file carries into the new
-    * manifest by name (entry verbatim, stats included). At 100 TB an
-    * upsert therefore costs the churn — the touched files plus the
-    * updates frame — never a lake rewrite, and prior versions stay
-    * readable because old files are never deleted by a commit.
+    * ids are found by one `id IN (ids)` + `_metadata.file_path` scan of
+    * the files the manifest stats cannot rule out, and only files
+    * HOLDING a matched id are rewritten — their survivors and the full
+    * updates frame land together as this commit's new files, every
+    * untouched file carries into the new manifest by name (entry
+    * verbatim, stats included). At 100 TB an upsert therefore costs the
+    * churn — the touched files plus the updates frame — never a lake
+    * rewrite, and prior versions stay readable because old files are
+    * never deleted by a commit.
+    *
+    * At most three Spark queries, none with a shuffle: the updates' id
+    * column is collected to the driver once (it also fills the
+    * persisted updates frame), where the duplicate-id refusal and the
+    * candidate skip run; the ids reach the executors as a broadcast
+    * ([[withIdSet]]) for the hit scan and then the write.
     *
     * Contract: the lake is id-keyed (one row per id — the same
     * contract [[commitDelete]] and the CDC operators assume), and
@@ -1915,7 +1992,6 @@ object VersionedLake {
     val entries =
       if (cur == 0) Seq.empty[String]
       else fileEntries(fs, base, cur)
-    val files = entries.map(entryPath)
     // the lake's schema: the `#schema=` manifest header when the lake
     // carries one (one manifest line — the hot-path O(files) footer
     // sweep this header exists to remove), else the LEGACY fallback —
@@ -1952,104 +2028,41 @@ object VersionedLake {
     // the lake's (stable output order); old files read them as NULL
     val newCols = updates.columns.toSeq.filterNot(lakeCols.contains)
     val outCols = lakeCols ++ newCols
-    // the updates frame feeds the dup check, the matched-file scan
-    // (via updIds), the rewrite union AND the rebase probes — persist
-    // it once (churn-sized: the MERGE's own input, spill-safe) instead
-    // of re-executing the caller's plan per consumer
+    // the updates frame feeds the id collect and the rewrite union —
+    // persist it once (the MERGE's own input, spill-safe; the id collect
+    // fills it) instead of re-executing the caller's plan per consumer
     val upd = updates.select(outCols.map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // duplicate ids in ONE updates frame have no deterministic winner —
     try {
       val cols = resolveStatsCols(spark, dir, cur, None)
-      val idStatIdx = cols.indexOf(idCol)
-      // MANIFEST-STATS CANDIDATE SKIP (the Iceberg MERGE discipline):
-      // when the lake carries stats on the id column, ONE probe
-      // aggregation refuses duplicate ids AND yields the updates' id
-      // range: max_by(id, n) names an offending id when one exists,
-      // min/max feed the skip — files whose (min, max) provably cannot
-      // hold ANY update id never enter the matched-file scan, so at
-      // 100 TB discovery reads the id column of the candidate files
-      // only, not of every file in the version. Conservative by
-      // construction: rangeDisjoint prunes only on a provable miss
-      // (no stats / foreign kind ⇒ candidate), so the affected set is
-      // identical; NULL lo/hi (empty or all-NULL-id updates) means no
-      // id can match anywhere — zero candidates, scan skipped outright.
-      // min/max/max_by ignore NULL ids (correct: a NULL id joins
-      // nothing) while the dup refusal still fires on a doubled NULL
-      // via maxn. On a lake WITHOUT id stats the range is useless, so
-      // the probe stays the cheaper plain dup check (no extra global
-      // aggregation stage — the many-commit fixtures are at the
-      // per-commit floor and measured the difference).
-      val candidates =
-        if (idStatIdx >= 0 && files.nonEmpty) {
-          val probe = upd.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-            .agg(max(col("n")).as("maxn"),
-              max_by(col(idCol), col("n")).as("dupid"),
-              min(col(idCol)).as("lo"), max(col(idCol)).as("hi"))
-            .head()
-          val maxn = if (probe.isNullAt(0)) 0L else probe.getLong(0)
-          require(maxn <= 1L,
-            s"commitUpsert: updates carry id ${probe.get(1)} more than " +
-              "once — a single MERGE source must be id-unique")
-          if (probe.isNullAt(2)) Seq.empty[String]
-          else scala.util.Try {
-            val (lo, hi) = (svOf(probe.get(2)), svOf(probe.get(3)))
-            entries.filterNot(rangeDisjoint(_, idStatIdx, lo, hi))
-              .map(entryPath)
-          }.getOrElse(files) // an un-encodable id type never prunes
-        } else {
-          val dup = upd.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-            .filter(col("n") > 1).limit(1).collect()
-          require(dup.isEmpty,
-            s"commitUpsert: updates carry id ${dup.headOption.map(_.get(0))
-              .getOrElse("?")} more than once — a single MERGE source " +
-              "must be id-unique")
-          files
-        }
-      val updIds = upd.select(col(idCol)).distinct()
-      // bounded: one row per AFFECTED file (id + metadata column only)
-      val hits =
-        if (candidates.isEmpty) Array.empty[org.apache.spark.sql.Row]
-        else spark.read.parquet(candidates.map(qualified(fs, base, _)): _*)
-          .select(col(idCol), col("_metadata.file_path").as("__file"))
-          .join(updIds, Seq(idCol))
-          .groupBy("__file").agg(count(lit(1)).as("n"))
-          .collect()
-      val nUpdated = hits.map(_.getLong(1)).sum
-      val affectedAbs = hits.map(_.getString(0)).toSet
-      val relByQualified = files.map(f => qualified(fs, base, f) -> f).toMap
-      val affectedRel = affectedAbs.toSeq.flatMap { abs =>
-        relByQualified.get(abs)
-          .orElse(files.find(f => abs.endsWith("/" + f)))
-      }.distinct.sorted
-      require(affectedRel.size == affectedAbs.size,
-        s"commitUpsert: ${affectedAbs.size} affected file paths but " +
-          s"${affectedRel.size} resolved against the v$cur manifest — " +
-          "path qualification mismatch; aborting before any commit")
-      val fresh =
-        if (affectedRel.isEmpty) upd
-        else {
-          // the affected files read under the LAKE schema (an old file
-          // predating evolution columns fills them as NULL) — with a
-          // header this is zero footer opens; the legacy sweep above
-          // already derived the union either way
-          val surv = spark.read
-            .schema(nullableized(lakeSchema)
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-            .parquet(affectedRel.map(qualified(fs, base, _)): _*)
-            .join(updIds, Seq(idCol), "left_anti")
-          // evolution columns only the updates carry — project them in as
-          // typed NULLs so the union stays coercion-free
-          surv.select(outCols.map(c =>
-              if (surv.columns.contains(c)) col(c)
-              else lit(null).cast(updates.schema(c).dataType).as(c)): _*)
-            .unionByName(upd)
-        }
-      // unique token dir: the version number is decided at publish
-      val token = java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      val rel = s"$DataName/m$token"
-      fresh.write.mode("overwrite").parquet(s"$dir/$rel")
+      // duplicate ids in ONE updates frame have no deterministic winner
+      val (ids, dup) = collectIds(upd, idCol)
+      require(dup.isEmpty, s"commitUpsert: updates carry id ${dup.get} " +
+        "more than once — a single MERGE source must be id-unique")
+      // the affected files read under the LAKE schema (an old file
+      // predating evolution columns fills them as NULL) — with a header
+      // this is zero footer opens; the legacy sweep above already
+      // derived the union either way
+      val read = (rels: Seq[String]) =>
+        readUnder(spark, fs, base, lakeSchema, rels)
+      val rel = tokenDir('m')
+      val (affectedRel, nUpdated) = withIdSet(spark, ids) { member =>
+        val hit = hitFiles(fs, base, "commitUpsert", cur, entries,
+          cols.indexOf(idCol), idCol, ids, member, read)
+        val fresh =
+          if (hit._1.isEmpty) upd
+          else {
+            val surv = read(hit._1).where(!member(col(idCol)))
+            // evolution columns only the updates carry — project them in
+            // as typed NULLs so the union stays coercion-free
+            surv.select(outCols.map(c =>
+                if (surv.columns.contains(c)) col(c)
+                else lit(null).cast(updates.schema(c).dataType).as(c)): _*)
+              .unionByName(upd)
+          }
+        fresh.write.mode("overwrite").parquet(s"$dir/$rel")
+        hit
+      }
       val freshEntries = statEntries(spark, fs, base,
         partFilesUnder(fs, base, rel), cols)
       // this commit's schema: the lake's columns (at the lake's types)
@@ -2101,13 +2114,13 @@ object VersionedLake {
           // so some winner files may LACK idCol — those rows read NULL
           // (never equal to any id, non-colliding by definition); when NO
           // winner file carries the column there is nothing to probe.
-          if (addedPaths.nonEmpty) {
+          if (addedPaths.nonEmpty && ids.nonEmpty) {
             val winners = spark.read.option("mergeSchema", "true")
               .parquet(addedPaths.map(qualified(fs, base, _)): _*)
             if (winners.columns.contains(idCol)) {
-              val clash = winners
-                .select(col(idCol)).join(updIds, Seq(idCol))
-                .limit(1).collect() // bounded: limit 1
+              val clash = withIdSet(spark, ids)(member =>
+                winners.select(col(idCol)).where(member(col(idCol)))
+                  .limit(1).collect()) // bounded: limit 1
               if (clash.nonEmpty) throw new ConcurrentMutationException(
                 s"commitUpsert at $dir: a concurrent commit added id " +
                   s"${clash.head.get(0)} that this MERGE also carries — a " +
@@ -2282,10 +2295,13 @@ object VersionedLake {
     * cannot prove null-freedom, so they classify as straddling and
     * REWRITE — never a silent whole-file drop, never a silent keep.
     *
-    * Returns (version, filesDropped, filesRewritten, rowsRemoved) —
-    * dropped files' row counts come from parquet footers only (no data
-    * read); an empty intersection commits nothing and returns
-    * version 0.
+    * Returns (version, filesDropped, filesRewritten, rowsRemoved). Both
+    * row counts come from parquet footers on the driver (no data read,
+    * no count job): the dropped files' rows, and the straddlers' rows
+    * minus their rewrite's, so the straddler rewrite is the call's only
+    * Spark query and a manifest-only drop runs none. An empty
+    * intersection — or a rewrite that removed no row, whose token dir
+    * is then deleted — commits nothing and returns version 0.
     */
   def commitDeleteRange(spark: SparkSession, dir: String, colName: String,
       lower: Long, upper: Long): (Long, Long, Long, Long) =
@@ -2344,48 +2360,36 @@ object VersionedLake {
     val byCls = entries.groupBy(classify)
     val inside = byCls.getOrElse(Drop, Seq.empty)
     val straddling = byCls.getOrElse(Rewrite, Seq.empty)
-    val outside = byCls.getOrElse(Carry, Seq.empty)
     if (inside.isEmpty && straddling.isEmpty) return (0L, 0L, 0L, 0L)
-    // dropped rows counted from footers only (a count() over parquet
-    // with no filter is metadata-driven — no column data is read)
-    val droppedRows =
-      if (inside.isEmpty) 0L
-      else spark.read
-        .parquet(inside.map(e => qualified(fs, base, entryPath(e))): _*)
-        .count()
-    // survivors of the straddlers — the matched count is taken BEFORE
-    // anything is written (a delete that turns out to match nothing,
-    // possible when only stats-less files were classifiable-as-
-    // straddling, commits nothing instead of a pointless rewrite), and
-    // the straddler source is read from disk ONCE: cached across the
-    // count and the survivor write (straddlers are the range-BOUNDARY
-    // files — bounded churn; the pre-r16 shape paid the scan twice)
-    val srcOpt =
-      if (straddling.isEmpty) None
-      else Some(readWithLakeSchema(spark, fs, base, cur,
-        straddling.map(entryPath)) // never first-footer-wins: an
-        // evolved straddler's rewrite must keep evolution columns
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val removedFromStraddling = srcOpt.map(
-      _.agg(count(when(matchPred(col(colName)),
-        lit(1)))).collect()(0).getLong(0)).getOrElse(0L)
-    if (droppedRows == 0L && removedFromStraddling == 0L) {
-      srcOpt.foreach(_.unpersist(blocking = false))
-      return (0L, 0L, 0L, 0L) // nothing actually matched
-    }
-    val rewritten = srcOpt match {
-      case Some(src) =>
-        val token = java.util.UUID.randomUUID().toString
-          .replace("-", "").take(12)
-        val rel = s"$DataName/m$token"
+    // both row counts come from parquet footers on the driver (no Spark
+    // job): the dropped files' rows, and the straddlers' rows minus the
+    // rows their rewrite kept. The straddlers are read ONCE, under the
+    // lake schema (never first-footer-wins: an evolved straddler's
+    // rewrite must keep evolution columns)
+    val droppedRows = footerRows(spark, fs, base, inside.map(entryPath))
+    val (rewritten, removedFromStraddling) =
+      if (straddling.isEmpty) (Seq.empty[String], 0L)
+      else {
+        val rel = tokenDir('m')
         // nulls never match a range — they must SURVIVE (a bare
         // negated predicate would drop them: three-valued logic)
-        src.filter(coalesce(!matchPred(col(colName)), lit(true)))
+        readWithLakeSchema(spark, fs, base, cur, straddling.map(entryPath))
+          .filter(coalesce(!matchPred(col(colName)), lit(true)))
           .write.mode("overwrite").parquet(s"$dir/$rel")
-        src.unpersist(blocking = false): Unit
-        statEntries(spark, fs, base, partFilesUnder(fs, base, rel), cols)
-      case None => Seq.empty[String]
-    }
+        val kept = partFilesUnder(fs, base, rel)
+        val removed = footerRows(spark, fs, base, straddling.map(entryPath)) -
+          footerRows(spark, fs, base, kept)
+        // a rewrite that removed nothing (possible when only stats-less
+        // files classified as straddling) commits nothing and leaves no
+        // orphan behind
+        if (droppedRows == 0L && removed == 0L) {
+          fs.delete(new Path(base, rel), true): Unit
+          return (0L, 0L, 0L, 0L)
+        }
+        (statEntries(spark, fs, base, kept, cols), removed)
+      }
+    if (droppedRows + removedFromStraddling == 0L)
+      return (0L, 0L, 0L, 0L) // nothing actually matched
     // optimistic publish: removed = dropped + rewritten source files; a
     // racing append's arrivals survive the rebase untouched (the range
     // delete applies to its snapshot — delete-before-append order)
@@ -2418,10 +2422,7 @@ object VersionedLake {
       val headerSchema =
         if (mergeSchema) schemaOf(fs, base, v) else None
       headerSchema match {
-        case Some(sc) => spark.read
-          .schema(nullableized(sc)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(files.map(qualified(fs, base, _)): _*)
+        case Some(sc) => readUnder(spark, fs, base, sc, files)
         case None =>
           spark.read.option("mergeSchema", mergeSchema.toString)
             .parquet(files.map(qualified(fs, base, _)): _*)
@@ -2539,6 +2540,30 @@ object VersionedLake {
     (adm, entries.size.toLong)
   }
 
+  /** A range read's admitted files `kept` of version `v` as one frame,
+    * under `schemaHint` when given, else under the version's `#schema=`
+    * header — no schema-inference job either way; evolution columns
+    * NULL-fill in files that predate them. A legacy version without the
+    * header reads its files' own schema. No admitted file: an empty
+    * frame of `schemaHint`, and an error without one.
+    */
+  private def rangeFrame(spark: SparkSession, dir: String, v: Long,
+      kept: Seq[String],
+      schemaHint: Option[org.apache.spark.sql.types.StructType],
+      bounds: String): DataFrame = {
+    val (fs, base) = fsOf(spark, dir)
+    if (kept.isEmpty) schemaHint match {
+      case Some(sc) => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
+      case None => throw new IllegalArgumentException(
+        s"range $bounds admits no file of version $v and no " +
+          "schemaHint was given")
+    } else schemaHint.orElse(schemaOf(fs, base, v)) match {
+      case Some(sc) => readUnder(spark, fs, base, sc, kept)
+      case None => spark.read.parquet(kept.map(qualified(fs, base, _)): _*)
+    }
+  }
+
   /** [[readAsOfRange]] on the FIRST stats column. */
   def readAsOfRange(spark: SparkSession, dir: String, v: Long,
       lower: Long, upper: Long,
@@ -2558,6 +2583,12 @@ object VersionedLake {
     * carry stats on the column. At 100 TB this is the difference
     * between opening every file of a version and opening the few whose
     * range can match.
+    *
+    * Without `schemaHint` the admitted files read under version `v`'s
+    * `#schema=` header ([[rangeFrame]]): the header's columns, with an
+    * evolution column NULL in files that predate it, and no
+    * schema-inference job. A range that admits no file reads as an
+    * empty frame of the hint, and throws without one.
     */
   def readAsOfRange(spark: SparkSession, dir: String, v: Long,
       colName: String, lower: Long, upper: Long,
@@ -2566,27 +2597,8 @@ object VersionedLake {
     require(statsColsOf(spark, dir, v).contains(colName),
       s"version $v of $dir carries no manifest statistics on " +
         s"'$colName' — commitAppend(statsCol=...) enables them")
-    val (fs, base) = fsOf(spark, dir)
     val (kept, _) = rangeFiles(spark, dir, v, colName, lower, upper)
-    val frame =
-      if (kept.nonEmpty) schemaHint match {
-        // a caller-supplied schema skips the per-call footer schema
-        // read — on a hot search path (one pruned read per probed
-        // bucket) that metadata open per call is the dominant cost
-        case Some(sc) => spark.read
-          .schema(nullableized(sc)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(kept.map(qualified(fs, base, _)): _*)
-        case None =>
-          spark.read.parquet(kept.map(qualified(fs, base, _)): _*)
-      }
-      else schemaHint match {
-        case Some(sc) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-        case None => throw new IllegalArgumentException(
-          s"range [$lower,$upper] admits no file of version $v and no " +
-            "schemaHint was given")
-      }
+    val frame = rangeFrame(spark, dir, v, kept, schemaHint, s"[$lower,$upper]")
     frame.filter(col(colName).cast("long").between(lower, upper))
   }
 
@@ -2604,26 +2616,8 @@ object VersionedLake {
     require(statsColsOf(spark, dir, v).contains(colName),
       s"version $v of $dir carries no manifest statistics on " +
         s"'$colName' — commitAppend(statsCol=...) enables them")
-    val (fs, base) = fsOf(spark, dir)
     val (kept, _) = rangeFilesOn(spark, dir, v, colName, lower, upper)
-    val frame =
-      if (kept.nonEmpty) schemaHint match {
-        // caller-supplied schema: no per-call footer schema read (see
-        // readAsOfRange)
-        case Some(sc) => spark.read
-          .schema(nullableized(sc)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(kept.map(qualified(fs, base, _)): _*)
-        case None =>
-          spark.read.parquet(kept.map(qualified(fs, base, _)): _*)
-      }
-      else schemaHint match {
-        case Some(sc) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-        case None => throw new IllegalArgumentException(
-          s"range [$lower,$upper] admits no file of version $v and no " +
-            "schemaHint was given")
-      }
+    val frame = rangeFrame(spark, dir, v, kept, schemaHint, s"[$lower,$upper]")
     frame.filter(col(colName) >= lit(lower) && col(colName) <= lit(upper))
   }
 
@@ -2668,9 +2662,7 @@ object VersionedLake {
         .sortWithinPartitions(col(c))
       case None => current.repartition(nFiles)
     }
-    val token = java.util.UUID.randomUUID().toString
-      .replace("-", "").take(12)
-    val rel = s"$DataName/m$token"
+    val rel = tokenDir('m')
     laid.write.mode("overwrite").parquet(s"$dir/$rel")
     // optimistic: removed = the whole snapshot (a compaction rewrites
     // everything it read) — racing APPENDS rebase cleanly (their files
@@ -2773,9 +2765,7 @@ object VersionedLake {
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-    val token = java.util.UUID.randomUUID().toString
-      .replace("-", "").take(12)
-    val rel = s"$DataName/m$token"
+    val rel = tokenDir('m')
     laid.write.mode("overwrite").parquet(s"$dir/$rel")
     publishMutation(spark, fs, base, dir, "compactZOrder",
       snapV = cur, removed = snapFiles.toSet,

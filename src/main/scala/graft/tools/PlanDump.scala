@@ -186,13 +186,18 @@ object PlanDump {
       "so over- OR under-pruning fails the hash."),
     "q179_vlake_upsert" -> ("the snapshot shows the post-MERGE " +
       "manifest-driven read with the audit literals; the operator is " +
-      "commitUpsert — matched ids found by a COLUMN-PRUNED id + " +
-      "_metadata.file_path scan, only files HOLDING a matched id " +
-      "rewritten (their survivors + the updates land as the commit's " +
-      "new files), untouched files carried by name with their stats " +
-      "entries verbatim. files_scoped rides the oracle: a MERGE that " +
-      "rewrote the lake fails the hash. Duplicate-id updates are " +
-      "refused before anything is written (VersionedLakeSpec)."),
+      "commitUpsert — three shuffle-free queries: the updates' ids " +
+      "collected to the driver once (duplicate refusal and the " +
+      "manifest-stats candidate skip run there) and broadcast, ONE " +
+      "scan of the candidate files counting matched ids per " +
+      "_metadata.file_path, and the write; " +
+      "only files HOLDING a matched id are rewritten (their survivors " +
+      "+ the updates land as the commit's new files), untouched files " +
+      "carried by name with their stats entries verbatim. files_scoped " +
+      "rides the oracle: a MERGE that rewrote the lake fails the hash. " +
+      "Duplicate-id updates are refused before anything is written " +
+      "(VersionedLakeSpec); the job count is pinned by " +
+      "LakeMutationPlanSpec."),
     "q180_vlake_changes" -> ("the change feed derives from the " +
       "MANIFEST DIFF alone: only files present in exactly one of the " +
       "two versions are scanned (shared files never open — pinned by a " +

@@ -71,6 +71,25 @@ class IndexLakeSpec extends AnyFunSuite {
     assert(doclens.count() === survivors.count())
   }
 
+  test("a many-postings takedown reports the rows and files it removed") {
+    val dir = Files.createTempDirectory("indexlake_takedown_").toString +
+      "/index"
+    IndexLake.writeIndexLake(corpus(0, 300), "doc_id", "text", dir,
+      nBuckets = 8): Unit
+    IndexLake.appendToIndexLake(corpus(300, 400), "doc_id", "text",
+      dir): Unit
+    val erased = graft.sinks.VersionedLake.read(spark, dir)
+      .where(col("doc_id") % 5 === 2)
+      .select(col("_metadata.file_path").as("file"))
+    val (rows, files) = (erased.count(), erased.distinct().count())
+    assert(rows > 80L, s"only $rows rows for 80 documents")
+    val (_, nf, nr) = IndexLake.deleteFromIndexLake(spark, dir,
+      (0L until 400L by 5L).map(_ + 2L).toDF("doc_id"))
+    assert((nf, nr) === ((files, rows)))
+    assert(graft.sinks.VersionedLake.read(spark, dir)
+      .where(col("doc_id") % 5 === 2).isEmpty)
+  }
+
   test("search reads only the query terms' buckets + the doc-length region") {
     val dir = Files.createTempDirectory("indexlake_prune_").toString +
       "/index"
