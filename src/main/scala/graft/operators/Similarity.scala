@@ -328,24 +328,30 @@ object Similarity {
     * primitive columns) — the Spark write path cost ~0.2 s of
     * plan+job+commit per lake write for a single-row file
     * (tools/IvfWriteProfile, r18). Field order matches the previous
-    * Spark write (readers fetch by position); `part-*.parquet` naming
-    * keeps [[sidecarFiles]]' listing contract.
+    * Spark write (readers fetch by position). The file is written under
+    * a hidden temp name and published as `part-00000.parquet` by one
+    * rename after close: [[sidecarFiles]] lists only `part-*`, so a
+    * reader sees the previous sidecar or the new one, and a crashed
+    * writer's temp file is never read.
     */
-  private def writeIvfStats(spark: org.apache.spark.sql.SparkSession,
+  private[operators] def writeIvfStats(
+      spark: org.apache.spark.sql.SparkSession,
       lakeDir: String, trainResidual: Double, nSample: Int): Unit = {
-    val dirPath = new org.apache.hadoop.fs.Path(lakeDir + "/_ivf_stats")
+    import org.apache.hadoop.fs.Path
+    val dirPath = new Path(lakeDir + "/_ivf_stats")
     val conf = spark.sessionState.newHadoopConf()
     val fs = dirPath.getFileSystem(conf)
-    fs.delete(dirPath, true): Unit // overwrite semantics, like before
     val schema = org.apache.parquet.schema.MessageTypeParser
       .parseMessageType("message ivf_stats { " +
         "required double train_residual; required int64 n_sample; }")
     org.apache.parquet.hadoop.example.GroupWriteSupport
       .setSchema(schema, conf)
-    val f = new org.apache.hadoop.fs.Path(dirPath, "part-00000.parquet")
+    val dst = new Path(dirPath, "part-00000.parquet")
+    val tmp = new Path(dirPath,
+      s".part-00000.parquet.${java.util.UUID.randomUUID()}.tmp")
     val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(f, conf))
+        .fromPath(tmp, conf))
       .withConf(conf).build()
     try {
       val g = new org.apache.parquet.example.data.simple.SimpleGroup(
@@ -354,6 +360,18 @@ object Similarity {
       g.add("n_sample", nSample.toLong)
       w.write(g)
     } finally w.close()
+    // a crashed writer's temp files are never read; reclaim them here
+    fs.listStatus(dirPath).foreach { st =>
+      val n = st.getPath.getName
+      if (n.startsWith(".part-") && n.endsWith(".tmp") && n != tmp.getName)
+        fs.delete(st.getPath, false): Unit
+    }
+    // POSIX rename replaces; stores whose rename refuses an existing
+    // destination (HDFS) take the delete first
+    if (!fs.rename(tmp, dst)) {
+      fs.delete(dst, false): Unit
+      require(fs.rename(tmp, dst), s"publishing $dst failed")
+    }
   }
 
   /** Compute and persist the drift baseline the SAME way

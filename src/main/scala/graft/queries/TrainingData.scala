@@ -4350,8 +4350,8 @@ object TrainingData {
         "q193_changes+read" -> (() => {
           val v = VersionedLake.currentVersion(s, eDir)
           VersionedLake.changesBetween(s, eDir, 1L, v, "doc_id")
-            .unionByName(VersionedLake.readAsOf(s, eDir, v,
-              mergeSchema = true).withColumn("change_type", lit("now")))
+            .unionByName(VersionedLake.readAsOf(s, eDir, v)
+              .withColumn("change_type", lit("now")))
         }))
     } ++ {
       // q194 (multi-column stats): fixture = the quartile x region
@@ -4513,7 +4513,7 @@ object TrainingData {
                 col("source")))
           val (v3, _, _) =
             VersionedLake.commitUpsert(s, hDir, "doc_id", updates)
-          VersionedLake.readAsOf(s, hDir, v3, mergeSchema = true)
+          VersionedLake.readAsOf(s, hDir, v3)
         }))
     } ++ {
       // q200 (delta manifests): fixture = the 16 residue appends;
@@ -6840,7 +6840,7 @@ object TrainingData {
   // ADDS a `lang` column, vintage 3 is a MERGE in the evolved schema
   // that touches vintage-1 rows (whose files predate the column) and
   // inserts fresh ids. Old files read the new column as NULL — in the
-  // AS-OF read (mergeSchema) AND in the change feed's preimages
+  // AS-OF read AND in the change feed's preimages
   // (`preimage_lang_null` pins the latter). The oracle replays the
   // layered membership with NULL padding; a type coercion, a dropped
   // evolved column, or a preimage read through the wrong schema all
@@ -6867,7 +6867,7 @@ object TrainingData {
       .filter(col("change_type") === "update_preimage" &&
         col("lang").isNotNull)
       .count() == 0L
-    VersionedLake.readAsOf(s, dir, v3, mergeSchema = true)
+    VersionedLake.readAsOf(s, dir, v3)
       .select(col("doc_id"), col("text"), col("lang"),
         lit(preimageLangNull).as("preimage_lang_null"))
   }
@@ -7130,15 +7130,16 @@ object TrainingData {
 
   // --- q199: lake schema in the manifest — zero-footer-sweep MERGE ----------------
   // The `#schema=` header (r16): an evolved MERGE against a
-  // header-bearing lake derives the lake schema from ONE manifest line
-  // — `sweep_free` pins the measured parquet-footer-sweep count at
-  // ZERO across the upsert AND the evolved read (the counter the
-  // metadata specs instrument), while the membership replays q193's
-  // evolution semantics on different residue classes: old files
-  // NULL-fill the evolved column, updated rows carry it, survivors of
-  // partially-rewritten files keep theirs. At 100k files this header
-  // is the difference between a MERGE that opens one manifest and one
-  // that opens every live footer.
+  // header-bearing lake derives the lake schema from ONE manifest line,
+  // and every read runs under it — `sweep_free` pins, as measured
+  // facts, that v3's header names the evolved `source` column and that
+  // the AS-OF read's columns are exactly the header's (a footer-derived
+  // schema would be whichever file Spark opened first), while the
+  // membership replays q193's evolution semantics on different residue
+  // classes: old files NULL-fill the evolved column, updated rows carry
+  // it, survivors of partially-rewritten files keep theirs. At 100k
+  // files this header is the difference between a MERGE that opens one
+  // manifest and one that opens every live footer.
   private def q199(s: SparkSession, d: String): DataFrame = {
     import graft.sinks.VersionedLake
     val docs = Tables.documents(s, d)
@@ -7155,10 +7156,10 @@ object TrainingData {
       .unionByName(docs.filter(col("doc_id") % 10 === 3)
         .select((col("doc_id") + 200000L).as("doc_id"), col("text"),
           col("source")))
-    val s0 = VersionedLake.footerSchemaSweeps.get()
     val (v3, _, _) = VersionedLake.commitUpsert(s, dir, "doc_id", updates)
-    val out = VersionedLake.readAsOf(s, dir, v3, mergeSchema = true)
-    val sweepFree = VersionedLake.footerSchemaSweeps.get() == s0
+    val out = VersionedLake.readAsOf(s, dir, v3)
+    val header = VersionedLake.schemaOf(s, dir, v3).fieldNames.toSeq
+    val sweepFree = header.contains("source") && out.columns.toSeq == header
     out.select(col("doc_id"), col("text"), col("source"),
       lit(sweepFree).as("sweep_free"))
   }

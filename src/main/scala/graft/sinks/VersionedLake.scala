@@ -115,47 +115,36 @@ import org.apache.spark.sql.functions._
   *     store class, pinned with its conditional-create close by
   *     ObjectStoreContractSpec).
   *
-  * Manifest headers (lines starting with `#`, self-describing and
-  * backward compatible — old manifests without them parse unchanged):
+  * Manifest headers (lines starting with `#`). Every committed version
+  * carries `#ts=` and `#schema=` — the writer stamps both on every
+  * commit kind, and a manifest without them is refused by name rather
+  * than read some other way:
   *   - `#ts=<epochMillis>`  commit wall-clock, stamped at publish by
-  *     [[writeManifest]]. [[commitTimes]] PREFERS it over the manifest
-  *     file's mtime, so a lake copied with cp/rsync/object-store
-  *     migration keeps its time-travel answers; mtime is only the
-  *     fallback for manifests from before this header existed.
+  *     [[writeManifest]]; [[commitTimes]] reads it, so a lake copied
+  *     with cp/rsync/object-store migration keeps its time-travel
+  *     answers.
+  *   - `#schema=<StructType json>`  the LAKE SCHEMA as of this commit:
+  *     every read and rewrite runs under it (one manifest line, no
+  *     parquet footer opened, no schema-inference job), and a column a
+  *     file predates reads NULL. Appends merge their frame's new columns
+  *     in and refuse a shared column at a different type; upserts stamp
+  *     the evolved schema; maintenance commits carry it forward.
   *   - `#batch=<id>`  streaming-batch provenance ([[commitAppendForBatch]]);
   *     `-1` is an explicit cursor reset stamped by [[restore]].
-  *   - `#schema=<StructType json>`  the LAKE SCHEMA as of this commit —
-  *     what kills the O(files) parquet-footer sweep on the MERGE /
-  *     evolved-read hot paths: one manifest line instead of opening
-  *     every live file's footer per upsert. Appends merge their frame's
-  *     new columns in; upserts stamp the evolved schema; maintenance
-  *     commits carry it forward. Manifests from before the header (or
-  *     after a type-divergent legacy append) simply omit it and every
-  *     consumer falls back to the counted footer sweep
-  *     ([[footerSchemaSweeps]]).
   *   - `#stats=<col1>[,<col2>...]`  the lake's statistics column LIST.
-  *   - `#stats_v=2`  stats-entry semantics marker: entries written under
-  *     it carry per-column (min, max, nullCount) triples. Entries are
-  *     also self-describing by field count (see below), so mixed
-  *     manifests — v2 commits carrying over legacy entries — classify
-  *     each entry by its own shape.
   *
   * Manifest file entries:
   *   - `path`                              no statistics
-  *   - `path<TAB>min<TAB>max`              LEGACY single-column stats
-  *     (pre-r15): null count unknown, so range DELETES never drop such a
-  *     file whole (NULL rows must survive a range delete; see
-  *     [[commitDeleteRange]]) — range READS may still prune with them
-  *     (NULL never matches a BETWEEN, so pruning cannot lose rows).
-  *   - `path` + per stats column `<TAB>min<TAB>max<TAB>nulls`  v2: an
+  *   - `path` + per stats column `<TAB>min<TAB>max<TAB>nulls`: an
   *     all-null column records `-<TAB>-<TAB>n`. Null counts are what
   *     make metadata-only range drops sound: a file drops whole ONLY
   *     when fully inside the range AND provably null-free. Min/max
-  *     VALUES are plain longs for integral columns and TAGGED v3
+  *     VALUES are plain longs for integral columns and TAGGED
   *     encodings for string (`s` + percent-encoded UTF-8 bytes,
   *     truncation-safe), double (`f`), decimal (`c`) and timestamp
-  *     (`t`, micros) columns — see [[statVal]]; readers treat unknown
-  *     tags as no-stats, so pruning stays sound across writer versions.
+  *     (`t`, micros) columns — see [[statVal]]. An entry of any other
+  *     shape, or a value with an unknown tag, reads as no stats, so
+  *     pruning never guesses.
   */
 /** The third manifest-publish primitive, for stores with neither a
   * local `link(2)` nor an atomic no-replace rename: ATOMIC CONDITIONAL
@@ -225,7 +214,7 @@ object VersionedLake {
     * no surviving manifest references (refs are SHARED across anchors,
     * so the sweep is reference-based, never per-version).
     */
-  private val RegionBuckets = 16 // floor; also pre-header anchors' count
+  private val RegionBuckets = 16 // floor
   private val MaxRegionBuckets = 4096
   private val RegionTargetEntries = 64
 
@@ -242,14 +231,10 @@ object VersionedLake {
     */
   val DefaultRetentionMillis: Long = 7L * 24 * 3600 * 1000
 
-  /** Diagnostic counters for the metadata-cost specs: how many times a
-    * lake schema had to be derived by a parquet FOOTER SWEEP (the
-    * O(files) fallback the `#schema=` header exists to remove), and how
-    * many manifest files were opened (the O(versions) cost the
-    * checkpoint bounds). Monotone, process-wide, test-only reads.
+  /** Diagnostic counter for the metadata-cost specs: how many manifest
+    * files were opened (the O(versions) cost the checkpoint bounds).
+    * Monotone, process-wide, test-only reads.
     */
-  private[graft] val footerSchemaSweeps =
-    new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] val manifestOpens =
     new java.util.concurrent.atomic.AtomicLong(0L)
   /** How many times `_versions/` was LISTED whole — the O(retained
@@ -365,7 +350,7 @@ object VersionedLake {
   }
 
   /** The base version a DELTA manifest builds on, None for a FULL
-    * (anchor or legacy) manifest.
+    * manifest (anchor, restore or vacuum shadow).
     */
   private def baseOf(lines: Seq[String]): Option[Long] =
     lines.find(_.startsWith("#base="))
@@ -385,8 +370,8 @@ object VersionedLake {
     baseOf(lines) match {
       case None =>
         // region-partitioned anchor: expand each @ref to its bucket's
-        // entries (legacy flat anchors, restores and vacuum shadows
-        // carry their entries inline and pass through unchanged). The
+        // entries (restores and vacuum shadows carry their entries
+        // inline and pass through unchanged). The
         // region GETs are CONCURRENT — on an object store a full
         // resolution is otherwise bucket-count sequential round-trips
         // — and Future.traverse preserves ref order, so the resolved
@@ -485,11 +470,8 @@ object VersionedLake {
           fs.exists(fullManifestPath(base, a)))
         .flatMap { a =>
           val pl = manifestLines(fs, base, a)
-          val prevNb = pl.find(_.startsWith("#regions="))
-            .flatMap(_.stripPrefix("#regions=").toIntOption)
-            .getOrElse(RegionBuckets)
           // refs are only reusable under the SAME bucketing
-          if (prevNb == nb)
+          if (pl.contains(s"#regions=$nb"))
             Some(regionRefsOf(pl)
               .map { case (b, rel, h) => b -> (rel, h) }.toMap)
           else None
@@ -534,7 +516,7 @@ object VersionedLake {
   // double, decimal and timestamp columns can prune file reads from
   // the manifest exactly like integral ones (real lakes prune on date
   // strings and decimals constantly):
-  //   <digits>        long (integral columns; every pre-v3 manifest)
+  //   <digits>        long (integral columns)
   //   t<micros>       timestamp as epoch micros — its OWN kind, so a
   //                   bare-long bound can never half-match it
   //   f<repr>         double via Double.toString (round-trips exactly;
@@ -635,31 +617,25 @@ object VersionedLake {
     }
 
   /** One column's manifest statistics: (min, max) are None for an
-    * all-null column; nullCount is None for LEGACY entries (unknown —
-    * the conservative reading every whole-file decision must take).
+    * all-null column.
     */
   private final case class ColStat(lo: Option[SV], hi: Option[SV],
-      nulls: Option[Long])
+      nulls: Long)
 
-  /** Per-entry, per-column stats — self-describing by field count:
-    * 3 fields = legacy (path, min, max) for the FIRST stats column;
-    * 1 + 3k fields = v2/v3 triples for k columns. Anything else — or a
-    * value carrying an unknown tag — reads as no stats.
+  /** Per-entry, per-column stats: an entry of 1 + 3k fields carries a
+    * (min, max, nulls) triple for each of k columns. Anything else — or
+    * a value carrying an unknown tag — reads as no stats.
     */
   private def colStat(entry: String, colIdx: Int): Option[ColStat] = {
     val p = entry.split('\t')
-    if (p.length == 3) {
-      if (colIdx != 0) None
-      else for (lo <- p(1).toLongOption; hi <- p(2).toLongOption)
-        yield ColStat(Some(LongV(lo)), Some(LongV(hi)), nulls = None)
-    } else if (p.length >= 4 && (p.length - 1) % 3 == 0 &&
+    if (p.length >= 4 && (p.length - 1) % 3 == 0 &&
         colIdx < (p.length - 1) / 3) {
       val o = 1 + colIdx * 3
       for {
         nn <- p(o + 2).toLongOption
         lo <- statVal(p(o))
         hi <- statVal(p(o + 1))
-      } yield ColStat(lo, hi, Some(nn))
+      } yield ColStat(lo, hi, nn)
     } else None
   }
 
@@ -683,7 +659,7 @@ object VersionedLake {
 
   private def statsHeaders(cols: Seq[String]): Seq[String] =
     if (cols.isEmpty) Seq.empty
-    else Seq("#stats=" + cols.mkString(","), "#stats_v=2")
+    else Seq("#stats=" + cols.mkString(","))
 
   // --- lake schema in the manifest (`#schema=` header) ---------------------
 
@@ -710,70 +686,65 @@ object VersionedLake {
       : Seq[String] =
     Seq("#schema=" + nullableized(sc).json) // StructType.json is one line
 
-  /** The lake schema version `v` COMMITTED, when its manifest carries
-    * the `#schema=` header (every commit since the header existed
-    * stamps it). Readers and mutations prefer this over the O(files)
-    * parquet-footer sweep; manifests from before the header parse as
-    * None and fall back.
+  /** The headers a maintenance commit publishes over version `effCur`:
+    * its schema carried forward, plus the lake's stats column list.
+    */
+  private def carriedHeaders(fs: FileSystem, base: Path,
+      cols: Seq[String])(effCur: Long): Seq[String] =
+    schemaHeader(schemaOf(fs, base, effCur)) ++ statsHeaders(cols)
+
+  /** The lake schema version `v` COMMITTED — its `#schema=` header.
+    * Every commit stamps one, so a manifest without it (or with one
+    * that does not parse) was not written by this writer and fails
+    * loudly, naming the version.
     */
   def schemaOf(spark: SparkSession, dir: String, v: Long)
-      : Option[org.apache.spark.sql.types.StructType] = {
+      : org.apache.spark.sql.types.StructType = {
     val (fs, base) = fsOf(spark, dir)
     schemaOf(fs, base, v)
   }
 
   private def schemaOf(fs: FileSystem, base: Path, v: Long)
-      : Option[org.apache.spark.sql.types.StructType] =
-    manifestLines(fs, base, v).find(_.startsWith("#schema="))
-      .flatMap { h =>
-        try Some(org.apache.spark.sql.types.DataType
-          .fromJson(h.stripPrefix("#schema="))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        catch { case _: Exception => None } // corrupt header: fall back
-      }
+      : org.apache.spark.sql.types.StructType = {
+    val h = headerOf(manifestLines(fs, base, v), "schema", base, v)
+    try org.apache.spark.sql.types.DataType.fromJson(h)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    catch { case e: Exception => throw new IllegalStateException(
+      s"version $v of $base carries an unreadable #schema= header", e) }
+  }
 
-  /** Version `v`'s lake schema: the manifest header when present (one
-    * manifest line, zero file opens), else the LEGACY fallback — a
-    * `mergeSchema` union over every live file's parquet footer, counted
-    * by [[footerSchemaSweeps]] (the O(files) metadata cost the header
-    * removes from the MERGE/read hot paths). None for an empty version
-    * with no header.
+  /** The value of header `#<key>=` in a manifest's `lines`; a manifest
+    * lacking it fails loudly, naming the version.
     */
-  private def lakeSchemaAt(spark: SparkSession, fs: FileSystem, base: Path,
-      v: Long): Option[org.apache.spark.sql.types.StructType] =
-    schemaOf(fs, base, v).orElse {
-      val files = fileEntries(fs, base, v).map(entryPath)
-      if (files.isEmpty) None
-      else {
-        footerSchemaSweeps.incrementAndGet(): Unit
-        Some(spark.read.option("mergeSchema", "true")
-          .parquet(files.map(qualified(fs, base, _)): _*).schema)
-      }
-    }
+  private def headerOf(lines: Seq[String], key: String, base: Path,
+      v: Long): String =
+    lines.find(_.startsWith(s"#$key=")).map(_.drop(key.length + 2))
+      .getOrElse(throw new IllegalStateException(
+        s"version $v of $base has no #$key= header — every commit " +
+          "stamps one; this manifest was not written by VersionedLake"))
 
   /** The schema an APPEND of `df` commits: the carried lake schema with
-    * df-only columns appended (write-path schema evolution), provided
-    * every shared column is structurally compatible. None when the
-    * previous commit carries no header (legacy lake — appends must not
-    * pay a footer sweep to reconstruct one) or when a shared column's
-    * type diverges (the lake drops to legacy schema mode rather than
-    * stamping a header its files contradict).
+    * df-only columns appended (write-path schema evolution). A shared
+    * column at a different type is refused — the append would stamp a
+    * header its own files contradict — and the caller casts explicitly.
     */
-  private def appendSchema(fs: FileSystem, base: Path, prevV: Long,
-      df: org.apache.spark.sql.types.StructType)
-      : Option[org.apache.spark.sql.types.StructType] = {
+  private def appendSchema(fs: FileSystem, base: Path, dir: String,
+      prevV: Long, df: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    if (prevV < 1) return Some(df)
-    schemaOf(fs, base, prevV).flatMap { prev =>
-      val compatible = prev.fields.forall { f =>
-        !df.fieldNames.contains(f.name) ||
-          DataType.equalsStructurally(df(f.name).dataType, f.dataType,
-            ignoreNullability = true)
+    if (prevV < 1) return df
+    val prev = schemaOf(fs, base, prevV)
+    prev.fields.foreach { f =>
+      df.find(_.name == f.name).foreach { d =>
+        require(DataType.equalsStructurally(d.dataType, f.dataType,
+          ignoreNullability = true),
+          s"append column '${f.name}' is ${d.dataType.simpleString} but " +
+            s"the lake at $dir carries ${f.dataType.simpleString} — cast " +
+            "explicitly; a lake column keeps one type")
       }
-      if (!compatible) None
-      else Some(StructType(prev.fields ++
-        df.fields.filterNot(f => prev.fieldNames.contains(f.name))))
     }
+    StructType(prev.fields ++
+      df.fields.filterNot(f => prev.fieldNames.contains(f.name)))
   }
 
   // --- metadata checkpoint (`_versions/_checkpoint`) ------------------------
@@ -855,12 +826,15 @@ object VersionedLake {
       ckpt: Option[(Long, Map[Long, CkptEntry])]): (Long, Option[Long]) =
     ckpt.flatMap(_._2.get(v)).map(e => (e.ts, e.batch)).getOrElse {
       val lines = manifestLines(fs, base, v)
-      (lines.find(_.startsWith("#ts=")).flatMap(
-        _.stripPrefix("#ts=").toLongOption).getOrElse(
-        fs.getFileStatus(manifestPath(base, v)).getModificationTime),
-        lines.find(_.startsWith("#batch=")).flatMap(
-          _.stripPrefix("#batch=").toLongOption))
+      (tsOf(lines, base, v), batchOf(lines))
     }
+
+  private def tsOf(lines: Seq[String], base: Path, v: Long): Long =
+    headerOf(lines, "ts", base, v).toLong
+
+  private def batchOf(lines: Seq[String]): Option[Long] =
+    lines.find(_.startsWith("#batch=")).flatMap(
+      _.stripPrefix("#batch=").toLongOption)
 
   /** (ts, batch, nFiles) of version `v` — checkpoint-first; above the
     * checkpoint the FILE COUNT of a delta manifest resolves its chain
@@ -878,28 +852,7 @@ object VersionedLake {
         if (baseOf(lines).isDefined || lines.exists(_.startsWith("@")))
           fileEntries(fs, base, v).size.toLong
         else lines.count(!_.startsWith("#")).toLong
-      CkptEntry(
-        lines.find(_.startsWith("#ts=")).flatMap(
-          _.stripPrefix("#ts=").toLongOption).getOrElse(
-          fs.getFileStatus(manifestPath(base, v)).getModificationTime),
-        lines.find(_.startsWith("#batch=")).flatMap(
-          _.stripPrefix("#batch=").toLongOption),
-        nf)
-    }
-
-  /** `rels` (files of version `v`) read under version `v`'s LAKE
-    * schema: header-driven when present (zero footer opens; evolution
-    * columns NULL-fill in files that predate them), else a mergeSchema
-    * footer union over exactly `rels` — either way a rewrite sourced
-    * from this read can never drop an evolution-added column, which a
-    * bare first-footer-wins parquet read silently could.
-    */
-  private def readWithLakeSchema(spark: SparkSession, fs: FileSystem,
-      base: Path, v: Long, rels: Seq[String]): DataFrame =
-    schemaOf(fs, base, v) match {
-      case Some(sc) => readUnder(spark, fs, base, sc, rels)
-      case None => spark.read.option("mergeSchema", "true")
-        .parquet(rels.map(qualified(fs, base, _)): _*)
+      CkptEntry(tsOf(lines, base, v), batchOf(lines), nf)
     }
 
   /** `rels` read under schema `sc` (every field nullable): no footer
@@ -1003,8 +956,7 @@ object VersionedLake {
     // of ours (an empty append sharing our #ts millisecond and headers
     // otherwise could be) — a prefix read-back therefore always means
     // OUR OWN torn copy, never a committed version, and deleting it is
-    // safe. Parsers ignore unrecognized # headers, so old readers and
-    // old manifests are unaffected.
+    // safe. Readers ignore the header.
     val hs = Seq(s"#ts=${System.currentTimeMillis()}",
       s"#writer=$writerToken") ++ headers
     val bytes = ((hs ++ files).mkString("\n") + "\n").getBytes("UTF-8")
@@ -1160,10 +1112,11 @@ object VersionedLake {
     * ([[encodeStat]]) so non-integral lakes prune too.
     */
   private def statEntries(spark: SparkSession, fs: FileSystem, base: Path,
-      rels: Seq[String], statsCols: Seq[String]): Seq[String] = {
+      rels: Seq[String], statsCols: Seq[String],
+      sc: org.apache.spark.sql.types.StructType): Seq[String] = {
     if (rels.isEmpty || statsCols.isEmpty) return rels
     footerStatEntries(spark, fs, base, rels, statsCols)
-      .getOrElse(scanStatEntries(spark, fs, base, rels, statsCols))
+      .getOrElse(scanStatEntries(spark, fs, base, rels, statsCols, sc))
   }
 
   /** [[statEntries]] from the parquet FOOTERS of this commit's files —
@@ -1395,17 +1348,18 @@ object VersionedLake {
       rels: Seq[String]): Long =
     footersOf(spark, fs, base, rels).map(f => rowsOf(f._2)).sum
 
-  /** The scan-job form of [[statEntries]] — the fallback when footers
-    * lack usable exact stats, and the loud-failure path for a missing
-    * stats column.
+  /** The scan-job form of [[statEntries]] over `rels` read under the
+    * commit's schema `sc` — the fallback when footers lack usable exact
+    * stats (a column a file lacks reads NULL there), and the
+    * loud-failure path for a stats column the schema does not carry.
     */
   private def scanStatEntries(spark: SparkSession, fs: FileSystem,
-      base: Path, rels: Seq[String], statsCols: Seq[String])
-      : Seq[String] = {
-    val df = spark.read.parquet(rels.map(qualified(fs, base, _)): _*)
+      base: Path, rels: Seq[String], statsCols: Seq[String],
+      sc: org.apache.spark.sql.types.StructType): Seq[String] = {
+    val df = readUnder(spark, fs, base, sc, rels)
     val types = statsCols.map { c =>
       require(df.columns.contains(c),
-        s"stats column '$c' is missing from this commit's files")
+        s"stats column '$c' is missing from this commit's schema")
       c -> df.schema(c).dataType
     }.toMap
     val aggs = statsCols.zipWithIndex.flatMap { case (c, i) =>
@@ -1613,6 +1567,8 @@ object VersionedLake {
       statsCol: Option[String] = None,
       beforePublish: () => Unit = () => ()): Long = {
     val (fs, base) = fsOf(spark, dir)
+    // a type-divergent append is refused before any byte is written
+    appendSchema(fs, base, dir, currentVersion(spark, dir), df.schema): Unit
     val rel = tokenDir('a')
     df.write.mode("overwrite").parquet(s"$dir/$rel")
     val rels = partFilesUnder(fs, base, rel)
@@ -1629,14 +1585,13 @@ object VersionedLake {
       val fresh =
         if (cols.isEmpty) rels
         else statsCache.getOrElse(key, {
-          val e = statEntries(spark, fs, base, rels, cols)
+          val e = statEntries(spark, fs, base, rels, cols, df.schema)
           statsCache += key -> e
           e
         })
       // schema header: carried schema + df-only columns (recomputed per
       // rebase attempt — a racing upsert may have evolved the schema)
-      val sh = appendSchema(fs, base, cur, df.schema)
-        .map(schemaHeader).getOrElse(Seq.empty)
+      val sh = schemaHeader(appendSchema(fs, base, dir, cur, df.schema))
       beforePublish()
       try {
         // anchor versions publish the full resolved list as REGION
@@ -1706,13 +1661,6 @@ object VersionedLake {
     }
   }
 
-  /** This commit's new file entries, with stats when the lake carries
-    * them.
-    */
-  private def newEntries(spark: SparkSession, fs: FileSystem, base: Path,
-      v: Long, statsCols: Seq[String]): Seq[String] =
-    statEntries(spark, fs, base, commitFiles(fs, base, v), statsCols)
-
   /** Exactly-once streaming append: commit micro-batch `batchId` as a
     * new version, carrying the batch id as a `#batch=` header inside
     * the manifest — so "version committed" and "batch applied" are one
@@ -1745,10 +1693,10 @@ object VersionedLake {
     }
     val v = cur + 1
     val cols = resolveStatsCols(spark, dir, v - 1, None)
+    val sh = schemaHeader(appendSchema(fs, base, dir, cur, df.schema))
     df.write.mode("overwrite").parquet(s"$dir/$DataName/c$v")
-    val sh = appendSchema(fs, base, cur, df.schema)
-      .map(schemaHeader).getOrElse(Seq.empty)
-    val fresh = newEntries(spark, fs, base, v, cols)
+    val fresh = statEntries(spark, fs, base, commitFiles(fs, base, v), cols,
+      df.schema)
     if (mustAnchor(v)) {
       val prev = if (v == 1) Seq.empty else fileEntries(fs, base, v - 1)
       val (rh, ab) = anchorBody(fs, base, v, prev ++ fresh)
@@ -1905,11 +1853,12 @@ object VersionedLake {
     if (entries.isEmpty) return (0L, 0L, 0L)
     val (dels, _) = collectIds(ids, ids.columns.head)
     val cols = resolveStatsCols(spark, dir, cur, None)
-    // the lake schema (header, or the legacy mergeSchema union of exactly
-    // these files): a bare parquet read takes ONE file's footer as the
-    // schema, so a rewrite could silently drop evolution-added columns
+    // under the lake schema: a bare parquet read takes ONE file's footer
+    // as the schema, so a rewrite could silently drop evolution-added
+    // columns
+    val lakeSchema = schemaOf(fs, base, cur)
     val read = (rels: Seq[String]) =>
-      readWithLakeSchema(spark, fs, base, cur, rels)
+      readUnder(spark, fs, base, lakeSchema, rels)
     val rel = tokenDir('m')
     val (affected, nRemoved) = withIdSet(spark, dels) { member =>
       val hit = hitFiles(fs, base, "commitDelete", cur, entries,
@@ -1923,11 +1872,10 @@ object VersionedLake {
     // included — their bytes did not change); the rewrite's files get
     // fresh stats under the lake's carried columns
     val freshEntries = statEntries(spark, fs, base,
-      partFilesUnder(fs, base, rel), cols)
+      partFilesUnder(fs, base, rel), cols, lakeSchema)
     val v = publishMutation(spark, fs, base, dir, "commitDelete",
       snapV = cur, removed = affected.toSet, freshEntries,
-      mkHeaders = effCur => schemaOf(fs, base, effCur).map(schemaHeader)
-        .getOrElse(Seq.empty) ++ statsHeaders(cols),
+      mkHeaders = carriedHeaders(fs, base, cols),
       beforePublish = beforePublish)
     (v, affected.size.toLong, nRemoved)
   }
@@ -1964,8 +1912,8 @@ object VersionedLake {
     * files disagree with the carried files' types — the exact-integer
     * read contract forbids it), and MAY carry additional new columns:
     * SCHEMA EVOLUTION — the new columns land on this commit's files,
-    * and untouched old files read them as NULL under
-    * `readAsOf(mergeSchema = true)` / [[changesBetween]]. An all-insert
+    * and untouched old files read them as NULL under [[readAsOf]] /
+    * [[changesBetween]]. An all-insert
     * upsert (no matched id) commits like an append. Returns
     * (version, nFilesRewritten, nRowsUpdated).
     */
@@ -1992,17 +1940,12 @@ object VersionedLake {
     val entries =
       if (cur == 0) Seq.empty[String]
       else fileEntries(fs, base, cur)
-    // the lake's schema: the `#schema=` manifest header when the lake
-    // carries one (one manifest line — the hot-path O(files) footer
-    // sweep this header exists to remove), else the LEGACY fallback —
-    // the UNION of the files' parquet footers (columns a later commit
-    // added read as NULL in older files), counted by
-    // [[footerSchemaSweeps]]. An empty-manifest current version has no
-    // schema to align against: the whole upsert is a pure insert typed
-    // by the updates frame.
+    // the lake's schema: the `#schema=` manifest header (one manifest
+    // line, no footer opened). An empty lake has no schema to align
+    // against: the whole upsert is a pure insert typed by the updates
+    // frame.
     val lakeSchema: org.apache.spark.sql.types.StructType =
-      if (cur == 0) updates.schema
-      else lakeSchemaAt(spark, fs, base, cur).getOrElse(updates.schema)
+      if (cur == 0) updates.schema else schemaOf(fs, base, cur)
     val lakeCols = lakeSchema.fieldNames.toSeq
     val missing = lakeCols.filterNot(updates.columns.contains)
     require(missing.isEmpty,
@@ -2040,9 +1983,8 @@ object VersionedLake {
       require(dup.isEmpty, s"commitUpsert: updates carry id ${dup.get} " +
         "more than once — a single MERGE source must be id-unique")
       // the affected files read under the LAKE schema (an old file
-      // predating evolution columns fills them as NULL) — with a header
-      // this is zero footer opens; the legacy sweep above already
-      // derived the union either way
+      // predating evolution columns fills them as NULL) — zero footer
+      // opens
       val read = (rels: Seq[String]) =>
         readUnder(spark, fs, base, lakeSchema, rels)
       val rel = tokenDir('m')
@@ -2063,8 +2005,6 @@ object VersionedLake {
         fresh.write.mode("overwrite").parquet(s"$dir/$rel")
         hit
       }
-      val freshEntries = statEntries(spark, fs, base,
-        partFilesUnder(fs, base, rel), cols)
       // this commit's schema: the lake's columns (at the lake's types)
       // plus the evolution columns — stamped so the NEXT mutation reads
       // it from one manifest line
@@ -2072,8 +2012,9 @@ object VersionedLake {
         lakeSchema.fields ++ newCols.map(c =>
           org.apache.spark.sql.types.StructField(c,
             updates.schema(c).dataType, nullable = true)))
-      val snapSchemaHdr =
-        if (cur == 0) None else schemaOf(fs, base, cur)
+      val freshEntries = statEntries(spark, fs, base,
+        partFilesUnder(fs, base, rel), cols, committedSchema)
+      val snapSchema = if (cur == 0) None else Some(lakeSchema)
       val v = publishMutation(spark, fs, base, dir, "commitUpsert",
         snapV = cur, removed = affectedRel.toSet, freshEntries,
         mkHeaders = _ => extraHeaders ++ schemaHeader(committedSchema) ++
@@ -2081,51 +2022,26 @@ object VersionedLake {
         onIntervening = (effCur, addedPaths) => {
           // a racing commit that CHANGED the lake schema invalidates this
           // upsert's projection/alignment — abort rather than guess
-          if (schemaOf(fs, base, effCur) != snapSchemaHdr)
+          if (Some(schemaOf(fs, base, effCur)) != snapSchema)
             throw new ConcurrentMutationException(
               s"commitUpsert at $dir: the lake schema changed under this " +
                 "MERGE (a concurrent schema-evolving commit) — nothing " +
                 "was committed; re-run against the current version")
-          // LEGACY lake (no `#schema=` on the snapshot): the racer stamps
-          // no header either (legacy appends can't derive one without a
-          // footer sweep), so the None == None check above is blind to a
-          // racing SCHEMA-EVOLVING append. This MERGE is about to stamp a
-          // header derived from its snapshot's footer sweep — if a
-          // winner-added file carries a column that header omits, the
-          // stamp would hide the column from every header-driven read and
-          // the next rewrite would drop its data permanently. Inspect the
-          // winners' footers (churn-bounded mergeSchema union) and abort.
-          if (snapSchemaHdr.isEmpty && addedPaths.nonEmpty) {
-            val winnerCols = spark.read.option("mergeSchema", "true")
-              .parquet(addedPaths.map(qualified(fs, base, _)): _*)
-              .schema.fieldNames
-            val hidden = winnerCols.filterNot(committedSchema.fieldNames
-              .contains)
-            if (hidden.nonEmpty) throw new ConcurrentMutationException(
-              s"commitUpsert at $dir: a concurrent append added column(s) " +
-                s"${hidden.mkString(",")} this legacy-lake MERGE's schema " +
-                "header would hide — nothing was committed; re-run " +
-                "against the current version")
-          }
           // a racing APPEND that added one of this MERGE's insert ids
           // would leave the id twice after a rebase (the one-row-per-id
-          // contract broken silently) — churn-bounded id-column scan.
-          // mergeSchema: heterogeneous/evolving racing appends are legal,
-          // so some winner files may LACK idCol — those rows read NULL
-          // (never equal to any id, non-colliding by definition); when NO
-          // winner file carries the column there is nothing to probe.
-          if (addedPaths.nonEmpty && ids.nonEmpty) {
-            val winners = spark.read.option("mergeSchema", "true")
-              .parquet(addedPaths.map(qualified(fs, base, _)): _*)
-            if (winners.columns.contains(idCol)) {
-              val clash = withIdSet(spark, ids)(member =>
-                winners.select(col(idCol)).where(member(col(idCol)))
-                  .limit(1).collect()) // bounded: limit 1
-              if (clash.nonEmpty) throw new ConcurrentMutationException(
-                s"commitUpsert at $dir: a concurrent commit added id " +
-                  s"${clash.head.get(0)} that this MERGE also carries — a " +
-                  "rebase would duplicate the id; nothing was committed")
-            }
+          // contract broken silently) — churn-bounded id-column scan
+          // under the (unchanged) lake schema: a winner file LACKING
+          // idCol reads it NULL, never equal to any id
+          if (addedPaths.nonEmpty && ids.nonEmpty &&
+              lakeSchema.fieldNames.contains(idCol)) {
+            val clash = withIdSet(spark, ids)(member =>
+              readUnder(spark, fs, base, lakeSchema, addedPaths)
+                .select(col(idCol)).where(member(col(idCol)))
+                .limit(1).collect()) // bounded: limit 1
+            if (clash.nonEmpty) throw new ConcurrentMutationException(
+              s"commitUpsert at $dir: a concurrent commit added id " +
+                s"${clash.head.get(0)} that this MERGE also carries — a " +
+                "rebase would duplicate the id; nothing was committed")
           }
         },
         beforePublish = beforePublish)
@@ -2194,11 +2110,10 @@ object VersionedLake {
     * contract), so at 100 TB the cost is bounded by the CHURN between
     * the versions, not the lake.
     *
-    * SCHEMA EVOLUTION: the change schema is the UNION of the changed
-    * files' schemas (a footer read bounded by the churn) — a column
-    * added between the versions reads as NULL in the old side's
-    * preimages, exactly how `readAsOf(mergeSchema = true)` reads the
-    * old files themselves.
+    * SCHEMA EVOLUTION: the change schema is the UNION of the two
+    * versions' `#schema=` headers (no footer opened) — a column added
+    * between the versions reads as NULL in the old side's preimages,
+    * exactly how [[readAsOf]] reads the old files themselves.
     *
     * Returns the union columns plus `change_type`:
     * `insert` / `delete`, and for ids present on BOTH sides (an upsert
@@ -2226,22 +2141,18 @@ object VersionedLake {
     val added = to.filterNot(fromSet.contains)
     val changed = removed ++ added
     val schema: org.apache.spark.sql.types.StructType =
-      if (changed.nonEmpty)
-        // union schema over the churn only — evolution-added columns
-        // appear; an old-side read projects them as NULL below
-        spark.read.option("mergeSchema", "true")
-          .parquet(changed.map(qualified(fs, base, _)): _*).schema
-      else schemaHint.getOrElse(throw new IllegalArgumentException(
+      if (changed.nonEmpty) {
+        // evolution-added columns appear; a file that predates one
+        // reads it NULL
+        val (a, b) = (schemaOf(fs, base, vFrom), schemaOf(fs, base, vTo))
+        org.apache.spark.sql.types.StructType(
+          a.fields ++ b.fields.filterNot(f => a.fieldNames.contains(f.name)))
+      } else schemaHint.getOrElse(throw new IllegalArgumentException(
         s"versions $vFrom and $vTo of $dir share every file (no " +
           "changes) and no schemaHint was given for the empty result"))
     def side(rels: Seq[String]): DataFrame =
-      if (rels.nonEmpty) {
-        val df = spark.read.option("mergeSchema", "true")
-          .parquet(rels.map(qualified(fs, base, _)): _*)
-        df.select(schema.fields.toSeq.map(f =>
-          if (df.columns.contains(f.name)) col(f.name)
-          else lit(null).cast(f.dataType).as(f.name)): _*)
-      } else spark.createDataFrame(
+      if (rels.nonEmpty) readUnder(spark, fs, base, schema, rels)
+      else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val a = side(removed) // rows leaving between vFrom and vTo
     val b = side(added)   // rows arriving
@@ -2290,10 +2201,9 @@ object VersionedLake {
     *
     * NULLs in the stats column never match a range (SQL semantics) and
     * survive every range delete — which is exactly why the whole-file
-    * drop demands a RECORDED ZERO null count: v2 entries carry one;
-    * LEGACY entries (pre-null-count manifests) and stats-less files
-    * cannot prove null-freedom, so they classify as straddling and
-    * REWRITE — never a silent whole-file drop, never a silent keep.
+    * drop demands a RECORDED ZERO null count; stats-less files cannot
+    * prove null-freedom, so they classify as straddling and REWRITE —
+    * never a silent whole-file drop, never a silent keep.
     *
     * Returns (version, filesDropped, filesRewritten, rowsRemoved). Both
     * row counts come from parquet footers on the driver (no data read,
@@ -2351,9 +2261,9 @@ object VersionedLake {
         if (hi.cmp(loB).exists(_ < 0) || lo.cmp(hiB).exists(_ > 0))
           Carry // disjoint — nulls don't matter
         else if (lo.cmp(loB).exists(_ >= 0) && hi.cmp(hiB).exists(_ <= 0)
-            && nulls.contains(0L)) Drop
+            && nulls == 0L) Drop
         else Rewrite // straddling, or inside with (possible) null rows
-      case Some(ColStat(None, None, Some(n))) if n > 0 =>
+      case Some(ColStat(None, None, n)) if n > 0 =>
         Carry // all-null file: no row can match a range
       case _ => Rewrite // no stats: unclassifiable — never silently keep
     }
@@ -2373,7 +2283,8 @@ object VersionedLake {
         val rel = tokenDir('m')
         // nulls never match a range — they must SURVIVE (a bare
         // negated predicate would drop them: three-valued logic)
-        readWithLakeSchema(spark, fs, base, cur, straddling.map(entryPath))
+        val sc = schemaOf(fs, base, cur)
+        readUnder(spark, fs, base, sc, straddling.map(entryPath))
           .filter(coalesce(!matchPred(col(colName)), lit(true)))
           .write.mode("overwrite").parquet(s"$dir/$rel")
         val kept = partFilesUnder(fs, base, rel)
@@ -2386,7 +2297,7 @@ object VersionedLake {
           fs.delete(new Path(base, rel), true): Unit
           return (0L, 0L, 0L, 0L)
         }
-        (statEntries(spark, fs, base, kept, cols), removed)
+        (statEntries(spark, fs, base, kept, cols, sc), removed)
       }
     if (droppedRows + removedFromStraddling == 0L)
       return (0L, 0L, 0L, 0L) // nothing actually matched
@@ -2396,38 +2307,26 @@ object VersionedLake {
     val removedSet = (inside ++ straddling).map(entryPath).toSet
     val vPub = publishMutation(spark, fs, base, dir, "commitDeleteRange",
       snapV = cur, removed = removedSet, rewritten,
-      mkHeaders = effCur => schemaOf(fs, base, effCur).map(schemaHeader)
-        .getOrElse(Seq.empty) ++ statsHeaders(cols))
+      mkHeaders = carriedHeaders(fs, base, cols))
     (vPub, inside.size.toLong, straddling.size.toLong,
       droppedRows + removedFromStraddling)
   }
 
   /** The lake exactly as version `v` committed it — an explicit file
-    * list, no directory listing, no partition discovery. A version with
-    * an empty manifest reads as an empty frame of `schemaHint` (schema
-    * inference has no file to read). `mergeSchema` unions the file
-    * schemas (columns appended by later commits read as NULL in older
-    * files) at the cost of a footer read per file; off by default —
-    * same-schema commits take the first file's schema for free.
+    * list, no directory listing, no partition discovery — under the
+    * version's `#schema=` header: every column the version carries
+    * (one a file predates reads NULL there), and no schema-inference
+    * job. A version with an empty manifest reads as an empty frame of
+    * `schemaHint`, and throws without one.
     */
   def readAsOf(spark: SparkSession, dir: String, v: Long,
-      schemaHint: Option[org.apache.spark.sql.types.StructType] = None,
-      mergeSchema: Boolean = false): DataFrame = {
+      schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
+      : DataFrame = {
     val (fs, base) = fsOf(spark, dir)
     val files = fileEntries(fs, base, v).map(entryPath)
-    if (files.nonEmpty) {
-      // mergeSchema with a `#schema=` header: the union schema comes
-      // from ONE manifest line instead of a footer read per file —
-      // evolution columns still NULL-fill in files that predate them
-      val headerSchema =
-        if (mergeSchema) schemaOf(fs, base, v) else None
-      headerSchema match {
-        case Some(sc) => readUnder(spark, fs, base, sc, files)
-        case None =>
-          spark.read.option("mergeSchema", mergeSchema.toString)
-            .parquet(files.map(qualified(fs, base, _)): _*)
-      }
-    } else schemaHint match {
+    if (files.nonEmpty)
+      readUnder(spark, fs, base, schemaOf(fs, base, v), files)
+    else schemaHint match {
       case Some(sc) => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
       case None => throw new IllegalArgumentException(
@@ -2485,7 +2384,7 @@ object VersionedLake {
         // disjoint iff file-max < lo or file-min > hi — and only when
         // the kinds actually compare (mismatched bounds never prune)
         eHi.cmp(lo).exists(_ < 0) || eLo.cmp(hi).exists(_ > 0)
-      case Some(ColStat(None, None, Some(n))) if n > 0 =>
+      case Some(ColStat(None, None, n)) if n > 0 =>
         true // all-null: no row of it can match any range
       case _ => false // no stats (or a foreign tag) — never pruned
     }
@@ -2543,8 +2442,7 @@ object VersionedLake {
   /** A range read's admitted files `kept` of version `v` as one frame,
     * under `schemaHint` when given, else under the version's `#schema=`
     * header — no schema-inference job either way; evolution columns
-    * NULL-fill in files that predate them. A legacy version without the
-    * header reads its files' own schema. No admitted file: an empty
+    * NULL-fill in files that predate them. No admitted file: an empty
     * frame of `schemaHint`, and an error without one.
     */
   private def rangeFrame(spark: SparkSession, dir: String, v: Long,
@@ -2558,10 +2456,9 @@ object VersionedLake {
       case None => throw new IllegalArgumentException(
         s"range $bounds admits no file of version $v and no " +
           "schemaHint was given")
-    } else schemaHint.orElse(schemaOf(fs, base, v)) match {
-      case Some(sc) => readUnder(spark, fs, base, sc, kept)
-      case None => spark.read.parquet(kept.map(qualified(fs, base, _)): _*)
-    }
+    } else
+      readUnder(spark, fs, base, schemaHint.getOrElse(schemaOf(fs, base, v)),
+        kept)
   }
 
   /** [[readAsOfRange]] on the FIRST stats column. */
@@ -2656,7 +2553,8 @@ object VersionedLake {
     // would pick one arbitrary file's footer and could silently drop
     // them from the new current version
     val snapFiles = fileEntries(fs, base, cur).map(entryPath)
-    val current = readWithLakeSchema(spark, fs, base, cur, snapFiles)
+    val sc = schemaOf(fs, base, cur)
+    val current = readUnder(spark, fs, base, sc, snapFiles)
     val laid = sortCol match {
       case Some(c) => current.repartitionByRange(nFiles, col(c))
         .sortWithinPartitions(col(c))
@@ -2671,9 +2569,8 @@ object VersionedLake {
     // resurrect their removed rows)
     publishMutation(spark, fs, base, dir, "compact",
       snapV = cur, removed = snapFiles.toSet,
-      statEntries(spark, fs, base, partFilesUnder(fs, base, rel), cols),
-      mkHeaders = effCur => schemaOf(fs, base, effCur).map(schemaHeader)
-        .getOrElse(Seq.empty) ++ statsHeaders(cols),
+      statEntries(spark, fs, base, partFilesUnder(fs, base, rel), cols, sc),
+      mkHeaders = carriedHeaders(fs, base, cols),
       beforePublish = beforePublish)
   }
 
@@ -2737,7 +2634,8 @@ object VersionedLake {
     // lake-schema read, same reason as [[compact]]: evolution columns
     // must survive the rewrite
     val snapFiles = fileEntries(fs, base, cur).map(entryPath)
-    val current = readWithLakeSchema(spark, fs, base, cur, snapFiles)
+    val sc = schemaOf(fs, base, cur)
+    val current = readUnder(spark, fs, base, sc, snapFiles)
     val dims = zCols.map(c => col(c).cast("long"))
     // per-dimension bounds: one column-pruned agg over the content the
     // compaction is about to read whole anyway (bounded collect: 2k
@@ -2769,9 +2667,8 @@ object VersionedLake {
     laid.write.mode("overwrite").parquet(s"$dir/$rel")
     publishMutation(spark, fs, base, dir, "compactZOrder",
       snapV = cur, removed = snapFiles.toSet,
-      statEntries(spark, fs, base, partFilesUnder(fs, base, rel), cols),
-      mkHeaders = effCur => schemaOf(fs, base, effCur).map(schemaHeader)
-        .getOrElse(Seq.empty) ++ statsHeaders(cols))
+      statEntries(spark, fs, base, partFilesUnder(fs, base, rel), cols, sc),
+      mkHeaders = carriedHeaders(fs, base, cols))
   }
 
   /** Roll the lake BACK to version `v` as a NEW commit (the Delta
@@ -2820,17 +2717,17 @@ object VersionedLake {
       } else Seq.empty
     val nv = cur + 1
     writeManifest(fs, base, nv, entries,
-      headers = batchHeaders ++ schemaOf(fs, base, v).map(schemaHeader)
-        .getOrElse(Seq.empty) ++ statsHeaders(stats))
+      headers = batchHeaders ++ schemaHeader(schemaOf(fs, base, v)) ++
+        statsHeaders(stats))
     nv
   }
 
   /** The commit log as a frame:
     * (version, n_files, batch_id, committed_at) — batch_id NULL for
     * maintenance commits (deletes, batch appends, compactions);
-    * committed_at epoch-millis from the `#ts=` header (manifest mtime
-    * for pre-header manifests, like [[commitTimes]]). Driver-built
-    * from the manifests (bounded by version count).
+    * committed_at epoch-millis from the `#ts=` header, like
+    * [[commitTimes]]. Driver-built from the manifests (bounded by
+    * version count).
     */
   def history(spark: SparkSession, dir: String): DataFrame = {
     val (fs, base) = fsOf(spark, dir)
@@ -2848,8 +2745,7 @@ object VersionedLake {
 
   /** (version, commit epoch-millis) ascending — from each manifest's
     * own `#ts=` header (stamped at publish, which IS the commit
-    * instant), falling back to the manifest file's modification time
-    * for manifests from before the header existed. The header is what
+    * instant; a manifest without it fails loudly). The header is what
     * makes time travel survive a lake COPY: cp/rsync/object-store
     * migration refreshes every mtime, but the bytes — and so the
     * header — travel with the manifest. Single-writer mutations and

@@ -590,7 +590,7 @@ private[sources] class EsExportAggReader(
 private[sources] case class EsFileIndexOffset(index: Int, last: String)
     extends Offset {
   // `last` anchors the prefix: the full path of the (index-1)-th listed
-  // file ("" for index 0, and for legacy plain-int checkpoints). A
+  // file ("" for index 0). A
   // prefix COUNT alone cannot detect a page name that sorts into the
   // middle of the listing (page-10000 after page-9999 under 4-digit
   // padding, or a retried export rewriting an earlier page) — every
@@ -604,19 +604,21 @@ private[sources] object EsFileIndexOffset {
   private def esc(s: String): String =
     s.replace("\\", "\\\\").replace("\"", "\\\"")
 
+  /** The offset `json()` writes; anything else (a bare integer too) fails
+    * as malformed.
+    */
   def parse(json: String): EsFileIndexOffset = {
     val t = json.trim
-    if (t.startsWith("{")) {
-      val i = "\"i\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(t)
-        .map(_.group(1).toInt)
-        .getOrElse(throw new IllegalArgumentException(
-          s"malformed es-export offset: $t"))
-      val last = "\"last\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findFirstMatchIn(t).map(_.group(1)
-          .replace("\\\"", "\"").replace("\\\\", "\\"))
-        .getOrElse("")
-      EsFileIndexOffset(i, last)
-    } else EsFileIndexOffset(t.toInt, "") // legacy plain-int checkpoint
+    def malformed = new IllegalArgumentException(
+      s"malformed es-export offset: $t")
+    if (!t.startsWith("{")) throw malformed
+    val i = "\"i\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(t)
+      .map(_.group(1).toInt).getOrElse(throw malformed)
+    val last = "\"last\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
+      .findFirstMatchIn(t).map(_.group(1)
+        .replace("\\\"", "\"").replace("\\\\", "\\"))
+      .getOrElse("")
+    EsFileIndexOffset(i, last)
   }
 }
 

@@ -228,15 +228,13 @@ object MaintScaleProfile {
     VersionedLake.history(spark, dir).count(): Unit
     println(f"[metascale] history(1000) in " +
       f"${(System.nanoTime() - t2) / 1e9}%.2f s")
-    // MERGE on the 10^4-file lake: zero footer sweeps, churn-bounded
-    val s0 = VersionedLake.footerSchemaSweeps.get()
+    // MERGE on the 10^4-file lake: churn-bounded
     val t3 = System.nanoTime()
     val (_, nf, _) = VersionedLake.commitUpsert(spark, dir, "id",
       docs.filter(col("id") < 10)
         .select(col("id"), concat(lit("UPD:"), col("text")).as("text")))
     println(f"[metascale] MERGE over $nFiles files in " +
-      f"${(System.nanoTime() - t3) / 1e9}%.2f s: filesRewritten=$nf, " +
-      s"footer_sweeps=${VersionedLake.footerSchemaSweeps.get() - s0}")
+      f"${(System.nanoTime() - t3) / 1e9}%.2f s: filesRewritten=$nf")
     // time travel deep into history: checkpoint + bounded chain
     val o2 = VersionedLake.manifestOpens.get()
     val t4 = System.nanoTime()
@@ -415,15 +413,6 @@ object MaintScaleProfile {
       s"${regionBytes(r60 & r50)} B NOT rewritten; full lake entry " +
       s"bytes=${regionBytes(r60)})  delta v59=${mBytes(59)} " +
       s"delta v41=${mBytes(41)} (deltas list their 3 adds)")
-    // schema header: evolved MERGE with zero footer sweeps
-    val s0 = VersionedLake.footerSchemaSweeps.get()
-    val upd = docs.filter(col("id") < 10)
-      .select(col("id"), concat(lit("UPD:"), col("text")).as("text"),
-        lit("x").as("tag"))
-    VersionedLake.commitUpsert(spark, dir, "id", upd): Unit
-    val sweeps = VersionedLake.footerSchemaSweeps.get() - s0
-    println(s"[meta] evolved MERGE over $nFiles files: " +
-      s"footer_sweeps=$sweeps (pre-r16 shape swept every live footer)")
     graft.Tables.deleteRecursively(java.nio.file.Paths.get(root))
   }
 

@@ -299,11 +299,11 @@ object PlanDump {
       "stats values survive every range (three-valued logic handled " +
       "explicitly). files_dropped/files_rewritten/n_rows_removed ride " +
       "the oracle — an over-eager whole-file drop loses rows, a timid " +
-      "one shifts the literals. Note statEntries' v2 soundness rule: " +
+      "one shifts the literals. Note statEntries' soundness rule: " +
       "every entry carries an explicit per-column NULL COUNT, and a " +
       "whole-file drop requires fully-inside AND provably null-free " +
-      "(nulls = 0); legacy pre-r15 entries (no null count) and " +
-      "stats-less files always rewrite, so no decision can ever " +
+      "(nulls = 0); an entry of any other shape reads as no stats, " +
+      "and stats-less files always rewrite, so no decision can ever " +
       "delete a null row."),
     "q190_cursor_sync" -> ("q182's derived-state sync with the " +
       "exactly-once contract OWNED BY THE OPERATOR: the state carries " +
@@ -344,9 +344,10 @@ object PlanDump {
       "3's commitUpsert merges in the evolved schema against files " +
       "that predate the column — survivors of rewritten old files " +
       "project the new column as typed NULL, untouched old files read " +
-      "it as NULL via mergeSchema, and changesBetween's preimages do " +
-      "the same (preimage_lang_null). Type drift (e.g. doc_id as " +
-      "string) fails loudly before anything is written — unionByName " +
+      "it as NULL under the #schema= header, and changesBetween's " +
+      "preimages do the same (preimage_lang_null). Type drift (e.g. " +
+      "doc_id as string, in an upsert or an append) fails loudly " +
+      "before anything is written — unionByName " +
       "coercion would corrupt the lake's column types behind every " +
       "reader. VersionedLakeHardeningSpec pins all four behaviors."),
     "q194_multicol_stats" -> ("multi-column manifest statistics: " +
@@ -412,15 +413,14 @@ object PlanDump {
       "2-dim delegation to the magic-mask MortonCode."),
     "q199_schema_header" -> ("lake schema in the manifest (#schema= " +
       "header): an evolved MERGE against a header-bearing lake " +
-      "derives the lake schema from ONE manifest line — sweep_free " +
-      "pins the measured parquet-footer-sweep count at ZERO across " +
-      "the upsert AND the evolved mergeSchema read (the r15 verdict's " +
-      "one anti-pattern-at-scale: upsertCore's O(files) footer sweep " +
-      "per MERGE, now the counted legacy fallback only). Old files " +
-      "NULL-fill the evolved column; survivors of rewritten old " +
-      "files keep theirs; VersionedLakeMetaSpec pins the zero-sweep " +
-      "contract, the legacy fallback, and the self-healing header " +
-      "re-stamp."),
+      "derives the lake schema from ONE manifest line, and every read " +
+      "runs under it — sweep_free pins, measured, that v3's header " +
+      "names the evolved source column and that the AS-OF read's " +
+      "columns equal the header's (no code path learns a schema from " +
+      "parquet footers; a manifest without the header is refused by " +
+      "version). Old files NULL-fill the evolved column; survivors of " +
+      "rewritten old files keep theirs; VersionedLakeMetaSpec pins the " +
+      "header on every commit kind and the one-job read."),
     "q200_delta_manifests" -> ("delta manifests — the write-" +
       "amplification half of the flat-manifest ceiling: anchor " +
       "versions (v1, every 10th) publish the full resolved file " +

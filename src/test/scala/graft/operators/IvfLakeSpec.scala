@@ -472,6 +472,29 @@ class IvfLakeSpec extends AnyFunSuite {
       .count() === 80L, "the live generation is untouched")
   }
 
+  test("_ivf_stats publishes by rename: a crashed writer's temp file " +
+      "never changes the baseline, the next write leaves one part file") {
+    import org.apache.hadoop.fs.Path
+    val dir = java.nio.file.Files
+      .createTempDirectory("ivf_stats_tmp_").toString + "/lake"
+    Similarity.writeIvfLake(corpus(80), dir, "vec_id", "embedding", dim,
+      nCells = 4): Unit
+    val (b0, _, _, _) = Similarity.ivfDriftProbe(spark, dir, dim)
+    val stats = new Path(dir + "/_ivf_stats")
+    val fs = stats.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // what a writer that died mid-file leaves: a torn hidden temp file
+    val torn = fs.create(new Path(stats, ".part-00000.parquet.dead.tmp"))
+    try torn.write("PAR1 torn".getBytes("UTF-8")) finally torn.close()
+    val (b1, _, _, _) = Similarity.ivfDriftProbe(spark, dir, dim)
+    assert(b1 === b0, "the temp file is never read as the sidecar")
+    Similarity.writeIvfStats(spark, dir, 0.5, 10)
+    val names = fs.listStatus(stats).map(_.getPath.getName).toSeq
+    assert(names.count(_.startsWith("part-")) === 1, names)
+    assert(!names.exists(_.endsWith(".tmp")), names)
+    val (b2, _, _, _) = Similarity.ivfDriftProbe(spark, dir, dim)
+    assert(b2 === 0.5)
+  }
+
   test("a failed lake write cancels the drift sample and rethrows its own exception") {
     import scala.jdk.CollectionConverters._
     // the vectors come slowly, but only to the drift-sample job: its two

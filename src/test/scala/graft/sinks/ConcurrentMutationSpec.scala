@@ -199,71 +199,23 @@ class ConcurrentMutationSpec extends AnyFunSuite {
       ((0L until 20L).toSet - 5L), "the winner's delete holds")
   }
 
-  /** Strip `#schema=` headers from every manifest — the shape of a lake
-    * written before the header existed (same surgery as
-    * VersionedLakeMetaSpec's legacy fixture).
-    */
-  private def stripSchemaHeaders(dir: String): Unit = {
-    val vd = java.nio.file.Paths.get(dir, "_versions")
-    Files.list(vd).forEach { p =>
-      if (p.getFileName.toString.endsWith(".txt")) {
-        val kept = Files.readAllLines(p).stream()
-          .filter(l => !l.startsWith("#schema=")).toArray.toSeq
-          .map(_.toString)
-        Files.writeString(p, kept.mkString("\n") + "\n")
-        val crc = p.getParent.resolve("." + p.getFileName + ".crc")
-        Files.deleteIfExists(crc): Unit // bytes changed: stale checksum
-      }
-    }
-  }
-
-  test("LEGACY lake: a MERGE racing a SCHEMA-EVOLVING append aborts — " +
-      "the header it would stamp omits the racer's new column (None == " +
-      "None is not schema equality on a headerless lake)") {
-    val dir = twoFileLake("cmut_legacy_evolve_")
-    stripSchemaHeaders(dir)
-    assert(VersionedLake.schemaOf(spark, dir, 2L).isEmpty)
-    var raced = false
-    val e = intercept[VersionedLake.ConcurrentMutationException] {
-      VersionedLake.commitUpsert(spark, dir, "doc_id",
-        Seq((3L, "updated 3")).toDF("doc_id", "text"),
-        beforePublish = () => if (!raced) {
-          raced = true
-          // the racer evolves the schema — legacy appends stamp NO
-          // header, so the header-equality race check alone is blind
-          VersionedLake.commitAppend(spark, dir, docs(20, 25)
-            .withColumn("extra", lit("x"))): Unit
-        })
-    }
-    assert(e.getMessage.contains("extra"),
-      s"the abort must name the hidden column: ${e.getMessage}")
-    // nothing committed by the MERGE: the racer's version is current,
-    // doc 3 untouched, and the racer's column is intact and readable
-    assert(VersionedLake.currentVersion(spark, dir) === 3L)
-    val read = VersionedLake.readAsOf(spark, dir, 3L, mergeSchema = true)
-    assert(read.columns.contains("extra"))
-    assert(read.where(col("doc_id") === 3L).select("text")
-      .collect()(0).getString(0) === "text of doc 3")
-    assert(read.where(col("extra") === "x").count() === 5L)
-  }
-
-  test("LEGACY lake: a MERGE racing an append whose files LACK the id " +
-      "column rebases cleanly (non-colliding by definition) instead of " +
-      "dying on the collision probe") {
-    val dir = twoFileLake("cmut_legacy_noid_")
-    stripSchemaHeaders(dir)
+  test("a MERGE racing an append whose files LACK the id column " +
+      "rebases cleanly (non-colliding by definition) instead of dying " +
+      "on the collision probe") {
+    val dir = twoFileLake("cmut_noid_")
     var raced = false
     val (v, _, nUpd) = VersionedLake.commitUpsert(spark, dir, "doc_id",
       Seq((3L, "updated 3")).toDF("doc_id", "text"),
       beforePublish = () => if (!raced) {
         raced = true
-        // heterogeneous racing append: text-only rows, no doc_id —
-        // legal on a legacy lake, and by definition free of id clashes
+        // heterogeneous racing append: text-only rows, no doc_id — the
+        // lake schema is unchanged (doc_id reads NULL in its file), and
+        // the rows are by definition free of id clashes
         VersionedLake.commitAppend(spark, dir,
           Seq("stray a", "stray b").toDF("text").repartition(1)): Unit
       })
     assert(v === 4L && nUpd === 1L, "the MERGE rebased and landed")
-    val read = VersionedLake.readAsOf(spark, dir, v, mergeSchema = true)
+    val read = VersionedLake.readAsOf(spark, dir, v)
     assert(read.where(col("doc_id") === 3L).select("text")
       .collect()(0).getString(0) === "updated 3")
     assert(read.where(col("doc_id").isNull).count() === 2L,

@@ -12,8 +12,7 @@ import graft.JobsStarted
   *  - where matching an id set differs from an anti-join: a lake row with a
   *    NULL id survives a delete and an upsert that rewrite its file; a
   *    delete set holding NULL plus real ids removes exactly the real
-  *    ids; `Int` delete ids match a `Long` id column; a lake without
-  *    `#schema=` headers still deletes and upserts; the duplicate-id
+  *    ids; `Int` delete ids match a `Long` id column; the duplicate-id
   *    refusal groups ids as Spark does (0.0 with -0.0, NaN with NaN);
   *    a 30,000-id set is matched exactly;
   *  - the Spark jobs per call on a stats-carrying lake: upsert 3 (the
@@ -66,20 +65,6 @@ class LakeMutationPlanSpec extends AnyFunSuite {
   private def current(dir: String): Map[Option[Long], String] =
     VersionedLake.read(spark, dir).collect().map(r =>
       Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getString(1)).toMap
-
-  private def stripSchemaHeaders(dir: String): Unit = {
-    val vd = Paths.get(dir, "_versions")
-    Files.list(vd).forEach { p =>
-      if (p.getFileName.toString.endsWith(".txt")) {
-        val kept = Files.readAllLines(p).stream()
-          .filter(l => !l.startsWith("#schema=")).toArray.toSeq
-          .map(_.toString)
-        Files.writeString(p, kept.mkString("\n") + "\n")
-        Files.deleteIfExists(
-          p.getParent.resolve("." + p.getFileName + ".crc")): Unit
-      }
-    }
-  }
 
   private def persisted: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -165,22 +150,6 @@ class LakeMutationPlanSpec extends AnyFunSuite {
     assert(got.where(col("id") % 2 === 0).isEmpty)
     assert(got.where(col("v") === "u").select(col("id") % 4 === 1)
       .as[Boolean].collect().toSeq === Seq.fill(15000)(true))
-  }
-
-  test("a lake without #schema= headers still deletes and upserts") {
-    val dir = statsLake("vplan_legacy_")
-    stripSchemaHeaders(dir)
-    assert(VersionedLake.schemaOf(spark, dir, 4L).isEmpty)
-    val (_, nf, nr) = VersionedLake.commitDelete(spark, dir, "id",
-      Seq(5L, 60L).toDF("id"))
-    assert(nf === 2L && nr === 2L)
-    val (_, uf, un) = VersionedLake.commitUpsert(spark, dir, "id",
-      Seq((7L, "seven"), (200L, "new")).toDF("id", "v"))
-    assert(uf === 1L && un === 1L)
-    val got = VersionedLake.read(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got === (0L until 100L).filterNot(Set(5L, 60L))
-      .map(i => i -> s"v$i").toMap + (7L -> "seven") + (200L -> "new"))
   }
 
   test("jobs per call on a stats lake: upsert 3, delete 2, delete_range " +

@@ -13,9 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `beforePublish` seam and end-to-end with real racing threads;
   *  - commit timestamps ride the manifest (`#ts=` header), so time
   *    travel survives an mtime scramble (the cp/rsync lake-copy shape);
-  *  - LEGACY stats entries (no null count) can never whole-drop a file
-  *    in a range delete — the null rows the contract protects might be
-  *    in it;
   *  - multi-column manifest statistics prune independently per column,
   *    and the range delete works on a named non-first column;
   *  - schema evolution: an append may widen the schema, an upsert may
@@ -127,42 +124,6 @@ class VersionedLakeHardeningSpec extends AnyFunSuite {
     assert(VersionedLake.versionAsOf(spark, dir, times(0)._2) === 1L)
     assert(idSet(VersionedLake.readAsOfTimestamp(spark, dir,
       times(0)._2)) === (0L until 5L).toSet)
-  }
-
-  test("legacy stats entries (no null count) never whole-drop in a " +
-      "range delete — their null rows must survive the rewrite") {
-    val dir = fresh("vlake_legacy_")
-    // hand-build a PRE-r15 lake: data file + a legacy 2-field stats
-    // entry under a #stats= header WITHOUT the v2 marker. The file's
-    // (10, 19) stats hide a NULL row — exactly the manifest shape the
-    // old code could have written before nulls suppressed stats.
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (Seq[(java.lang.Long, String)]((null, "tnull")) ++
-      (10L until 20L).map(i => (java.lang.Long.valueOf(i), s"t$i")))
-      .toDF("doc_id", "text").repartition(1)
-      .write.mode("overwrite").parquet(s"$dir/data/c1")
-    val rel = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/data/c1"))
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .map(n => s"data/c1/$n").head
-    VersionedLake.writeManifest(fs, base, 1L, Seq(s"$rel\t10\t19"),
-      headers = Seq("#stats=doc_id"))
-    // the range covers the legacy stats whole — but null-freedom is
-    // UNPROVEN, so the file must REWRITE, never drop
-    val (v, nDropped, nRewritten, nRemoved) =
-      VersionedLake.commitDeleteRange(spark, dir, 10L, 19L)
-    assert(v === 2L && nDropped === 0L && nRewritten === 1L)
-    assert(nRemoved === 10L)
-    val now = VersionedLake.read(spark, dir)
-    assert(now.filter(col("doc_id").isNull).count() === 1L,
-      "the legacy file's null row must survive the range delete")
-    assert(now.filter(col("doc_id").isNotNull).count() === 0L)
-    // the same legacy stats still PRUNE reads (sound: NULL never
-    // matches a BETWEEN)
-    val (kept, total) = VersionedLake.rangeFiles(spark, dir, 1L, 50L, 60L)
-    assert(total === 1L && kept.isEmpty,
-      "legacy (lo, hi) must still skip disjoint ranges for reads")
   }
 
   test("multi-column stats: both dimensions prune independently; range " +
@@ -292,7 +253,7 @@ class VersionedLakeHardeningSpec extends AnyFunSuite {
     val (v3, nFiles, nUpd) = VersionedLake.commitUpsert(
       spark, dir, "doc_id", updates)
     assert(v3 === 3L && nFiles === 1L && nUpd === 1L)
-    val full = VersionedLake.readAsOf(spark, dir, v3, mergeSchema = true)
+    val full = VersionedLake.readAsOf(spark, dir, v3)
     assert(full.columns.toSet === Set("doc_id", "text", "lang"))
     assert(full.filter(col("lang").isNull).count() === 9L,
       "un-upserted vintage-1 rows read the new column as NULL")

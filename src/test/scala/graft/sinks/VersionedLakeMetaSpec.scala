@@ -8,11 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 metadata-layer scalability + rewrite-schema hardening
   * ([[VersionedLake]]). Pinned:
-  *  - the `#schema=` manifest header: an upsert against a
-  *    header-bearing lake performs ZERO parquet-footer schema sweeps
-  *    (the O(files)-per-MERGE cost the header removes), evolved reads
-  *    still NULL-fill old files, and a LEGACY lake (headers stripped)
-  *    still works through the counted footer-sweep fallback;
+  *  - the `#schema=` manifest header: every public commit kind stamps
+  *    it (and `#ts=`); an upsert and an evolved read against the lake
+  *    start no schema-inference job and still NULL-fill old files; a
+  *    hand-stripped manifest fails loudly by version; a type-divergent
+  *    append is refused and commits nothing;
   *  - rewrite paths read under the LAKE schema: compact, compactZOrder,
   *    commitDelete and commitDeleteRange on an EVOLVED lake keep
   *    evolution-added columns (a bare first-footer-wins read could
@@ -40,6 +40,8 @@ class VersionedLakeMetaSpec extends AnyFunSuite {
 
   import spark.implicits._
 
+  private def jobs[T](body: => T): (T, Int) = graft.JobsStarted(spark)(body)
+
   private def docs(lo: Long, hi: Long) =
     (lo until hi).map(i => (i, s"text of doc $i")).toDF("doc_id", "text")
       .repartition(1)
@@ -50,8 +52,8 @@ class VersionedLakeMetaSpec extends AnyFunSuite {
   private def idSet(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select("doc_id").collect().map(_.getLong(0)).toSet
 
-  /** Strip `#schema=` headers from every manifest — the shape of a lake
-    * written before the header existed.
+  /** Strip `#schema=` headers from every manifest — a lake this writer
+    * never produces.
     */
   private def stripSchemaHeaders(dir: String): Unit = {
     val vd = java.nio.file.Paths.get(dir, "_versions")
@@ -78,44 +80,106 @@ class VersionedLakeMetaSpec extends AnyFunSuite {
   test("#schema= header: upsert against a header-bearing lake does " +
       "ZERO footer schema sweeps; evolved read NULL-fills old files") {
     val dir = evolvedLake("vmeta_hdr_")
-    assert(VersionedLake.schemaOf(spark, dir, 2L).exists(
-      _.fieldNames.toSeq === Seq("doc_id", "text", "lang")))
-    val before = VersionedLake.footerSchemaSweeps.get()
+    assert(VersionedLake.schemaOf(spark, dir, 2L).fieldNames.toSeq ===
+      Seq("doc_id", "text", "lang"))
     val upd = Seq((5L, "updated 5", "l9"), (100L, "fresh 100", "l9"))
       .toDF("doc_id", "text", "lang")
-    val (v3, nFiles, nUpd) =
-      VersionedLake.commitUpsert(spark, dir, "doc_id", upd)
-    assert(VersionedLake.footerSchemaSweeps.get() === before,
-      "a MERGE against a header-bearing lake must not sweep footers")
+    // id collect, hit scan, write: a footer sweep would be a 4th job
+    val ((v3, nFiles, nUpd), upsertJobs) =
+      jobs(VersionedLake.commitUpsert(spark, dir, "doc_id", upd))
+    assert(upsertJobs === 3, "a MERGE must not sweep footers")
     assert(v3 === 3L && nFiles === 1L && nUpd === 1L)
-    val read = VersionedLake.readAsOf(spark, dir, v3, mergeSchema = true)
-    assert(VersionedLake.footerSchemaSweeps.get() === before,
-      "an evolved READ of a header-bearing lake must not sweep footers")
-    assert(read.columns.toSeq === Seq("doc_id", "text", "lang"))
-    val rows = read.collect().map(r =>
-      r.getLong(0) -> Option(r.getString(2))).toMap
+    val (rowsRead, readJobs) = jobs(VersionedLake.readAsOf(spark, dir, v3)
+      .collect())
+    assert(readJobs === 1, "an evolved READ must start no inference job")
+    assert(VersionedLake.readAsOf(spark, dir, v3).columns.toSeq ===
+      Seq("doc_id", "text", "lang"))
+    val rows = rowsRead.map(r => r.getLong(0) -> Option(r.getString(2))).toMap
     assert(rows(0L).isEmpty, "v1 files predate lang: NULL-filled")
     assert(rows(11L) === Some("l2"))
     assert(rows(5L) === Some("l9") && rows(100L) === Some("l9"))
   }
 
-  test("LEGACY lake (no #schema= headers): upsert still correct, " +
-      "through the counted footer-sweep fallback") {
-    val dir = evolvedLake("vmeta_legacy_")
+  test("every public commit kind publishes #schema= and #ts=; a " +
+      "vacuum shadow keeps both") {
+    val dir = fresh("vmeta_inv_")
+    val vd = java.nio.file.Paths.get(dir, "_versions")
+    def headers(name: String): Seq[String] =
+      Files.readAllLines(vd.resolve(name)).toArray.toSeq.map(_.toString)
+        .filter(_.startsWith("#"))
+    def withN(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("n", col("doc_id") % 7)
+    def row(id: Long) =
+      Seq((id, s"updated $id", id % 7)).toDF("doc_id", "text", "n")
+    val kinds = Seq[(String, () => Long)](
+      "append" -> (() => VersionedLake.commitAppend(spark, dir,
+        withN(docs(0, 10)), statsCol = Some("doc_id"))),
+      "commitAppendForBatch" -> (() => VersionedLake.commitAppendForBatch(
+        spark, dir, withN(docs(10, 20)), 0L)),
+      "upsert" -> (() =>
+        VersionedLake.commitUpsert(spark, dir, "doc_id", row(1L))._1),
+      "commitUpsertForBatch" -> (() => VersionedLake.commitUpsertForBatch(
+        spark, dir, "doc_id", row(2L), 1L)),
+      "delete" -> (() => VersionedLake.commitDelete(spark, dir, "doc_id",
+        Seq(3L).toDF("doc_id"))._1),
+      "delete_range" -> (() =>
+        VersionedLake.commitDeleteRange(spark, dir, 15L, 16L)._1),
+      "compact" -> (() => VersionedLake.compact(spark, dir, nFiles = 2)),
+      "compactZOrder" -> (() => VersionedLake.compactZOrder(spark, dir,
+        "doc_id", "n", nFiles = 2)),
+      "restore" -> (() => VersionedLake.restore(spark, dir, 7L)),
+      "anchor append" -> (() =>
+        VersionedLake.commitAppend(spark, dir, withN(docs(20, 25)))))
+    kinds.zipWithIndex.foreach { case ((kind, commit), i) =>
+      assert(commit() === i + 1L, s"$kind commits the next version")
+      val hs = headers(f"v${i + 1}%06d.txt")
+      assert(hs.exists(_.startsWith("#schema=")) &&
+        hs.exists(_.startsWith("#ts=")), s"$kind: $hs")
+    }
+    VersionedLake.commitAppend(spark, dir, withN(docs(25, 30))): Unit
+    // v3 is a delta: dropping v1..v2 materializes its .full shadow
+    VersionedLake.vacuum(spark, dir, keepFrom = 3L, force = true): Unit
+    val shadow = headers("v000003.full")
+    assert(shadow.exists(_.startsWith("#schema=")) &&
+      shadow.exists(_.startsWith("#ts=")), s"shadow: $shadow")
+    assert(VersionedLake.schemaOf(spark, dir, 3L).fieldNames.toSeq ===
+      Seq("doc_id", "text", "n"))
+    assert(idSet(VersionedLake.read(spark, dir)) ===
+      ((0L until 30L).toSet -- Set(3L, 15L, 16L)))
+  }
+
+  test("a manifest without #schema= fails loudly, naming the version") {
+    val dir = evolvedLake("vmeta_stripped_")
     stripSchemaHeaders(dir)
-    assert(VersionedLake.schemaOf(spark, dir, 2L).isEmpty)
-    val before = VersionedLake.footerSchemaSweeps.get()
-    val upd = Seq((5L, "updated 5", "l9")).toDF("doc_id", "text", "lang")
-    VersionedLake.commitUpsert(spark, dir, "doc_id", upd): Unit
-    assert(VersionedLake.footerSchemaSweeps.get() > before,
-      "the legacy path derives the schema by footer sweep — counted")
-    val read = VersionedLake.read(spark, dir)
-    assert(read.where(col("doc_id") === 5L).select("lang")
-      .collect()(0).getString(0) === "l9")
-    // the upsert re-stamped the header: the lake self-heals to the
-    // header discipline on its first mutation
-    assert(VersionedLake.schemaOf(spark, dir,
-      VersionedLake.currentVersion(spark, dir)).nonEmpty)
+    val ex = intercept[IllegalStateException](
+      VersionedLake.read(spark, dir))
+    assert(ex.getMessage.contains("version 2") &&
+      ex.getMessage.contains("#schema="), ex.getMessage)
+    val exU = intercept[IllegalStateException](
+      VersionedLake.commitUpsert(spark, dir, "doc_id",
+        Seq((5L, "u", "l9")).toDF("doc_id", "text", "lang")))
+    assert(exU.getMessage.contains("version 2"), exU.getMessage)
+    assert(VersionedLake.currentVersion(spark, dir) === 2L)
+  }
+
+  test("a type-divergent append is refused and commits nothing") {
+    val dir = fresh("vmeta_drift_")
+    VersionedLake.commitAppend(spark, dir, docs(0, 5)): Unit
+    val dataDirs = Files.list(java.nio.file.Paths.get(dir, "data")).count()
+    val ex = intercept[IllegalArgumentException](
+      VersionedLake.commitAppend(spark, dir,
+        Seq(("7", "doc 7")).toDF("doc_id", "text")))
+    assert(ex.getMessage.contains("'doc_id' is string") &&
+      ex.getMessage.contains("bigint") &&
+      ex.getMessage.contains("cast explicitly"), ex.getMessage)
+    assert(intercept[IllegalArgumentException](
+      VersionedLake.commitAppendForBatch(spark, dir,
+        Seq(("7", "doc 7")).toDF("doc_id", "text"), 0L))
+      .getMessage.contains("cast explicitly"))
+    assert(VersionedLake.currentVersion(spark, dir) === 1L)
+    assert(Files.list(java.nio.file.Paths.get(dir, "data")).count() ===
+      dataDirs, "the refusal writes no data file")
+    assert(idSet(VersionedLake.read(spark, dir)) === (0L until 5L).toSet)
   }
 
   test("rewrites on an EVOLVED lake keep evolution-added columns: " +
@@ -123,7 +187,7 @@ class VersionedLakeMetaSpec extends AnyFunSuite {
     // compact
     val d1 = evolvedLake("vmeta_evc_")
     val vc = VersionedLake.compact(spark, d1, nFiles = 2)
-    val c1 = VersionedLake.readAsOf(spark, d1, vc, mergeSchema = true)
+    val c1 = VersionedLake.readAsOf(spark, d1, vc)
     assert(c1.columns.contains("lang"))
     assert(c1.where(col("lang").isNotNull).count() === 10L,
       "compacting an evolved lake must not drop the evolved column")
@@ -137,7 +201,7 @@ class VersionedLakeMetaSpec extends AnyFunSuite {
         .withColumn("lang", lit("x"))): Unit
     val vz = VersionedLake.compactZOrder(spark, d2, "doc_id", "n",
       nFiles = 2)
-    val c2 = VersionedLake.readAsOf(spark, d2, vz, mergeSchema = true)
+    val c2 = VersionedLake.readAsOf(spark, d2, vz)
     assert(c2.where(col("lang").isNotNull).count() === 10L)
     // commitDelete rewriting a PRE-evolution file (ids 0..9 live in the
     // v1 file, which predates lang) — survivors of that file must still
@@ -146,7 +210,7 @@ class VersionedLakeMetaSpec extends AnyFunSuite {
     val (vd, _, nRem) = VersionedLake.commitDelete(spark, d3, "doc_id",
       Seq(3L, 12L).toDF("doc_id"))
     assert(nRem === 2L)
-    val c3 = VersionedLake.readAsOf(spark, d3, vd, mergeSchema = true)
+    val c3 = VersionedLake.readAsOf(spark, d3, vd)
     assert(c3.count() === 18L)
     assert(c3.where(col("lang").isNotNull).count() === 9L,
       "a delete rewrite must keep the evolved column on surviving rows")
@@ -159,7 +223,7 @@ class VersionedLakeMetaSpec extends AnyFunSuite {
     val (vr, _, nRw, _) =
       VersionedLake.commitDeleteRange(spark, d4, 15L, 30L)
     assert(nRw === 1L, "the evolved file straddles the range: rewritten")
-    val c4 = VersionedLake.readAsOf(spark, d4, vr, mergeSchema = true)
+    val c4 = VersionedLake.readAsOf(spark, d4, vr)
     assert(c4.where(col("lang") === "y").count() === 5L,
       "survivors of the straddler keep their evolved column")
   }

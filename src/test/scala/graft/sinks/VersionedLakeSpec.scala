@@ -254,20 +254,31 @@ class VersionedLakeSpec extends AnyFunSuite {
     assert(h.last._2 === 1L, "compacted version must list 1 file")
   }
 
-  test("mergeSchema AS-OF read: later-commit columns NULL in older rows") {
+  test("AS-OF read under the #schema= header: later-commit columns NULL " +
+      "in older rows") {
     val dir = fresh("vlake_schema_")
     VersionedLake.commitAppend(spark, dir, docs(0, 3)): Unit
     VersionedLake.commitAppend(spark, dir,
       docs(3, 5).withColumn("lang", lit("en"))): Unit
-    val merged = VersionedLake.read(spark, dir) // first-file schema risk
-    val full = VersionedLake.readAsOf(spark, dir, 2, mergeSchema = true)
-    assert(full.columns.toSet === Set("doc_id", "text", "lang"))
+    val full = VersionedLake.readAsOf(spark, dir, 2)
+    assert(full.columns.toSeq === Seq("doc_id", "text", "lang"))
     assert(full.filter(col("lang").isNull).count() === 3L)
     assert(full.filter(col("lang") === "en").count() === 2L)
     // v1 AS-OF keeps its own narrower schema
-    assert(VersionedLake.readAsOf(spark, dir, 1, mergeSchema = true)
-      .columns.toSet === Set("doc_id", "text"))
-    merged.count(): Unit // non-merged read stays usable on the row level
+    assert(VersionedLake.readAsOf(spark, dir, 1).columns.toSeq ===
+      Seq("doc_id", "text"))
+  }
+
+  test("read().collect() on a 4-file lake starts exactly one job") {
+    val dir = fresh("vlake_onejob_")
+    (0 until 4).foreach { i =>
+      VersionedLake.commitAppend(spark, dir, docs(i * 5L, i * 5L + 5L)): Unit
+    }
+    assert(VersionedLake.filesOf(spark, dir, 4L).size === 4)
+    val (rows, jobs) =
+      graft.JobsStarted(spark)(VersionedLake.read(spark, dir).collect())
+    assert(rows.map(_.getLong(0)).toSet === (0L until 20L).toSet)
+    assert(jobs === 1, "the #schema= header replaces schema inference")
   }
 
   test("manifest stats: file skipping from the manifest alone, " +

@@ -394,4 +394,14 @@ class EsExportV2Spec extends AnyFunSuite {
     val d3 = pushedAggOf(readV2().groupBy("meta").agg(count(lit(1))))
     assert(!d3.contains("PushedAggregation"), d3) // struct group key
   }
+
+  test("es-export stream offsets: the JSON form round-trips, a bare " +
+      "integer is refused as malformed") {
+    val o = EsFileIndexOffset(7, "/x/page-\"q\"\\0007.json")
+    assert(EsFileIndexOffset.parse(o.json()) === o)
+    assert(EsFileIndexOffset.parse("  " + EsFileIndexOffset(0, "").json()) ===
+      EsFileIndexOffset(0, ""))
+    val ex = intercept[IllegalArgumentException](EsFileIndexOffset.parse("7"))
+    assert(ex.getMessage.contains("malformed es-export offset"))
+  }
 }
