@@ -2,9 +2,18 @@ package graft.api
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructType,
+  TimestampType}
 
 import graft.flatten.Flattener
 import graft.sources.EsJson
@@ -43,13 +52,64 @@ object EtlJob {
   private def auditFrame(spark: SparkSession, rec: AuditRecord): DataFrame =
     spark.createDataFrame(java.util.List.of(Row.fromTuple(rec)), AuditSchema)
 
+  /** [[AuditSchema]] as a parquet message: strings, longs and
+    * microsecond UTC timestamps, required where the field is not nullable
+    * — the layout Spark writes for it with `TIMESTAMP_MICROS` output.
+    */
+  private val AuditParquet = MessageTypeParser.parseMessageType(
+    AuditSchema.fields.map { f =>
+      val rep = if (f.nullable) "optional" else "required"
+      val tpe = f.dataType match {
+        case StringType => "binary %s (STRING)"
+        case LongType => "int64 %s"
+        case TimestampType => "int64 %s (TIMESTAMP(MICROS,true))"
+        case other => sys.error(s"no audit column type for $other")
+      }
+      s"$rep ${tpe.format(f.name)};"
+    }.mkString("message spark_schema { ", " ", " }"))
+
   /** Append one audit row. The reference targets a SQL DB; offline we
     * append to a parquet audit table (`df.write.jdbc` is the one-line swap
-    * for a live database).
+    * for a live database). The row is written on the driver, no Spark job:
+    * one parquet file carrying Spark's row metadata (so a read of the
+    * table gives [[AuditSchema]]), written under a hidden name and
+    * published as `part-<job_id>.parquet` with one rename. Each run has
+    * its own `job_id`, so concurrent runs append side by side and readers
+    * see whole files only; a second row under one `job_id` is refused.
     */
   def logAudit(spark: SparkSession, auditPath: String,
-      rec: AuditRecord): Unit =
-    auditFrame(spark, rec).write.mode(SaveMode.Append).parquet(auditPath)
+      rec: AuditRecord): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(auditPath)
+    val fs = dir.getFileSystem(conf)
+    val dst = new Path(dir, s"part-${rec.job_id}.parquet")
+    val tmp = new Path(dir, s".${dst.getName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf).withType(AuditParquet)
+        .withExtraMetaData(Map(
+          ParquetReadSupport.SPARK_METADATA_KEY -> AuditSchema.json,
+          // Spark's SPARK_VERSION_METADATA_KEY, which it keeps private
+          "org.apache.spark.version" -> org.apache.spark.SPARK_VERSION_SHORT)
+          .asJava)
+        .build()
+      try {
+        val g = new SimpleGroup(AuditParquet)
+        AuditSchema.fields.zip(rec.productIterator).foreach {
+          case (_, null) =>
+          case (f, v: String) => g.add(f.name, v)
+          case (f, v: Long) => g.add(f.name, v)
+          case (f, v: Timestamp) =>
+            g.add(f.name, org.apache.spark.sql.catalyst.util.DateTimeUtils
+              .fromJavaTimestamp(v))
+          case (f, v) => sys.error(s"audit column ${f.name}: unexpected $v")
+        }
+        w.write(g)
+      } finally w.close()
+      require(!fs.exists(dst), s"logAudit: $dst already holds job ${rec.job_id}")
+      require(fs.rename(tmp, dst), s"logAudit: publish $tmp -> $dst failed")
+    } finally fs.delete(tmp, false): Unit
+  }
 
   /** JDBC form of the audit append — the reference's actual sink
     * (`utils.log_to_sql_db`, [`ElasticSearch ETL.py:271-299`]). Identical
@@ -69,8 +129,9 @@ object EtlJob {
     * stats come from its sidecar, or, when it carries none, from one
     * Spark job folding its files ([[EsJson.sidecar]]; nothing is written
     * into the input). A directory of ES responses then flattens as a
-    * vintage ([[EsJson.vintage]]): the render and the audit row are the
-    * job's only other Spark jobs, and nothing is cached.
+    * vintage ([[EsJson.vintage]]): the render, which writes the TSV, is
+    * the job's only other Spark job, the audit row is written on the
+    * driver, and nothing is cached.
     */
   def run(spark: SparkSession, inputPath: String, outputDir: String,
       auditPath: String, jobName: String = "Initial_load_from_export",
@@ -112,11 +173,11 @@ object EtlJob {
     * `fetch_and_export_documents`, `ElasticSearch ETL.py:201-267`) pulls
     * pages into `pageDir`, then the standard distributed
     * flatten→TSV→audit job runs over them, as a vintage with the schema
-    * and stats the export folded: two Spark jobs, the render and the
-    * audit row. A fetch failure (bad endpoint, wedged cursor) is audited
-    * on the FAILED path exactly like a flatten failure — the reference's
-    * except-branch contract. Integration-tested against an embedded HTTP
-    * stub (`EtlJobSpec`).
+    * and stats the export folded: one Spark job, the render, which writes
+    * the TSV; the audit row is written on the driver. A fetch failure
+    * (bad endpoint, wedged cursor) is audited on the FAILED path exactly
+    * like a flatten failure — the reference's except-branch contract.
+    * Integration-tested against an embedded HTTP stub (`EtlJobSpec`).
     */
   def runHttp(spark: SparkSession, cfg: graft.sources.EsHttp.Config,
       pageDir: String, outputDir: String, auditPath: String,
@@ -137,12 +198,16 @@ object EtlJob {
     audited(spark, outputDir, auditPath, jobName, tableName)(
       Flattener.flattenToTsv(docs, outputDir, maxDepth))
 
+  private val runIds = new java.security.SecureRandom
+
   /** Runs `flatten` under the audit contract: one SUCCESS row carrying
-    * the record count, or one FAILED row and the failure rethrown.
+    * the record count, or one FAILED row and the failure rethrown. The
+    * row's `job_id` is a random 63-bit id of this run.
     */
   private def audited(spark: SparkSession, outputDir: String,
       auditPath: String, jobName: String, tableName: String)(
       flatten: => Flattener.Written): Result = {
+    val runId = runIds.nextLong() & Long.MaxValue
     val start = new Timestamp(System.currentTimeMillis())
     val batchId = new java.text.SimpleDateFormat("yyyyMMddHHmmss")
       .format(start)
@@ -151,13 +216,13 @@ object EtlJob {
       // from the flatten itself, not an extra read of the input
       val out = flatten
       logAudit(spark, auditPath, AuditRecord(
-        jobName, 8L, start, new Timestamp(System.currentTimeMillis()),
+        jobName, runId, start, new Timestamp(System.currentTimeMillis()),
         "SUCCESS", "spark_etl_export", null, batchId, tableName, out.rows))
       Result(out.rows, out.columns.length, outputDir)
     } catch {
       case e: Throwable =>
         logAudit(spark, auditPath, AuditRecord(
-          jobName, 8L, start, new Timestamp(System.currentTimeMillis()),
+          jobName, runId, start, new Timestamp(System.currentTimeMillis()),
           "FAILED", "spark_etl_export", String.valueOf(e.getMessage),
           batchId, tableName, 0L))
         throw e

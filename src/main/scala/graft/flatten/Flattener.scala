@@ -3,7 +3,8 @@ package graft.flatten
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+import org.apache.spark.sql.catalyst.json.JSONOptions
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Complete JSON flattening — the reference's core capability
@@ -25,8 +26,9 @@ import org.apache.spark.storage.StorageLevel
   * A [[Vintage]] (an export of ES responses) needs no stats pass: the
   * schema fold absorbed the stats too — on the driver as a fresh `EsHttp`
   * export fetched the pages, or in one Spark job over a directory without
-  * a sidecar — so its flatten is ONE Spark job, the render, walking the
-  * documents inside their response rows, with nothing cached.
+  * a sidecar — so its flatten is ONE Spark job, the render and TSV write,
+  * walking the documents as tokens inside the page bytes, with nothing
+  * cached. Both paths write through [[writeTsv]].
   *
   * Semantics (SURVEY.md §2.3 quirk decisions):
   *   - Q1  digit map keys: FIXED — `ValueCodes_45` extracts its real value
@@ -75,9 +77,10 @@ object Flattener {
   final case class Written(columns: Seq[String], rows: Long)
 
   /** An exported vintage ready to flatten without a stats pass: its
-    * response pages read as `envelope` in the [[Vintage.envelopeSchema]]
-    * layout of the documents' schema `source`, and the batch `stats` of
-    * those documents, folded when the pages were fetched.
+    * response `pages`, one row a page file holding the file's text (the
+    * `wholetext` text source), the JSON reader `options` its schema was
+    * folded under, the documents' schema `source`, and the batch `stats`
+    * of those documents, folded when the pages were fetched.
     *
     * The pages are treated as immutable: the stats are trusted as they
     * were folded. Only a changed document count is detected (the
@@ -85,20 +88,10 @@ object Flattener {
     * the folded columns, so an array grown past its folded length is cut
     * to it.
     */
-  final case class Vintage(envelope: DataFrame, source: StructType,
-      stats: StatsPass.Batch) {
-    require(envelope.schema == Vintage.envelopeSchema(source),
-      "Vintage: the envelope must be read with Vintage.envelopeSchema(source)")
-  }
-
-  object Vintage {
-    /** The part of an ES search response the flatten reads: each hit's
-      * `_source`, typed `source`. Reading the pages with this schema
-      * parses nothing else of the response.
-      */
-    def envelopeSchema(source: StructType): StructType =
-      StructType(Seq(StructField("hits", StructType(Seq(StructField("hits",
-        ArrayType(StructType(Seq(StructField("_source", source))))))))))
+  final case class Vintage(pages: DataFrame, options: JSONOptions,
+      source: StructType, stats: StatsPass.Batch) {
+    require(pages.schema.map(_.dataType) == Seq(StringType),
+      "Vintage: the pages must be one string column")
   }
 
   /** End-to-end TSV export: stats pass + direct row-walk rendering of
@@ -130,18 +123,19 @@ object Flattener {
   }
 
   /** [[flattenToTsv]] of a vintage: the plan comes from its folded stats,
-    * so the render is the only Spark job and nothing is cached. The rows
-    * are counted as they render, and the TSV is published into `dir` only
-    * when that count is the folded one. Any other count means the pages
-    * changed after their stats were folded: the call fails and `dir`
-    * keeps what it held, rather than publish columns that no longer
-    * describe their rows.
+    * so the render and TSV write is the only Spark job and nothing is
+    * cached. The rows are counted as they render, and the TSV is
+    * published into `dir` only when that count is the folded one. Any
+    * other count means the pages changed after their stats were folded:
+    * the call fails and `dir` keeps what it held, rather than publish
+    * columns that no longer describe their rows.
     */
   def flattenToTsv(v: Vintage, dir: String, maxDepth: Int): Written = {
     val plan = RenderPass.compile(v.source, v.stats, maxDepth)
-    val spark = v.envelope.sparkSession
+    val spark = v.pages.sparkSession
     val rows = spark.sparkContext.longAccumulator
-    writeTsv(spark, plan, RenderPass.renderHitTsvLines(v.envelope, plan, rows),
+    writeTsv(spark, plan,
+      RenderPass.renderPageTsvLines(v.pages, v.options, plan, rows),
       dir, singleFile = false) {
       if (rows.value != v.stats.rows)
         throw new IllegalStateException(
@@ -151,10 +145,15 @@ object Flattener {
     Written(plan.columns.toSeq, rows.value)
   }
 
-  /** The TSV write: `lines` under a header per part-file, rendered into a
-    * hidden sibling of `dir` and renamed into place once the write job and
-    * then `check` have passed. If either fails, `dir` keeps what it held
-    * and the staged copy is removed.
+  /** The local property holding a job's short call site. */
+  private val CallSiteShort = "callSite.short"
+
+  /** The TSV write of both flatten paths: `lines` under a header per
+    * part-file, saved through Hadoop's `TextOutputFormat` (one Spark job;
+    * its output metrics count the bytes the filesystem wrote, checksum
+    * files included) into a hidden sibling of `dir`, and renamed into
+    * place once the write job and then `check` have passed. If either
+    * fails, `dir` keeps what it held and the staged copy is removed.
     */
   private def writeTsv(spark: SparkSession, plan: RenderPass.Plan,
       lines0: RDD[String], dir: String, singleFile: Boolean)(
@@ -162,13 +161,20 @@ object Flattener {
     val header = RenderPass.tsvLine(plan.columns)
     val lines = if (singleFile) lines0.coalesce(1) else lines0
     val withHeader = lines.mapPartitions(it => Iterator(header) ++ it)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sc = spark.sparkContext
+    val fs = new Path(dir).getFileSystem(sc.hadoopConfiguration)
     val out = fs.makeQualified(new Path(dir))
     val staged = new Path(out.getParent,
       s".${out.getName}.rendering-${java.util.UUID.randomUUID()}")
-    import spark.implicits._
+    val callSite = sc.getLocalProperty(CallSiteShort)
     try {
-      spark.createDataset(withHeader).write.text(staged.toString)
+      // Spark names a job after its first frame outside Spark's core
+      // packages: for this save, Spark's own writer. Name the job after
+      // this call instead, so it reads as the render's.
+      val here = new Throwable().getStackTrace()(0)
+      sc.setCallSite(s"saveAsTextFile at ${here.getFileName}:${here.getLineNumber}")
+      try withHeader.saveAsTextFile(staged.toString)
+      finally sc.setLocalProperty(CallSiteShort, callSite)
       check
       fs.delete(out, true)
       require(fs.rename(staged, out),

@@ -1,27 +1,37 @@
 package graft.flatten
 
-import java.io.StringWriter
+import java.io.{CharConversionException, StringWriter}
+import java.nio.charset.MalformedInputException
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.core.JsonFactory
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonProcessingException,
+  JsonToken}
+import com.fasterxml.jackson.core.JsonToken._
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecializedGetters}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.json.{JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.LongAccumulator
 
 /** The flatten renderer behind [[Flattener.flatten]] and
   * [[Flattener.flattenToTsv]]: one walk over the batch schema compiles a
-  * render plan AND the output column list, then each document's Tungsten
-  * row is walked ONCE (`queryExecution.toRdd`; external-Row conversion
-  * alone costs seconds per pass at 5k columns), depth-first, filling the
-  * output slots directly — O(nodes) per row with no code generation, so a
-  * wide dynamic schema pays no Janino compilation of a giant projection.
-  * A vintage's documents are walked where they lie inside the ES response
-  * rows ([[renderHitTsvLines]]), so no projection unwraps them first.
+  * render plan AND the output column list, then each document is walked
+  * ONCE, depth-first, filling the output slots directly — O(nodes) per
+  * document with no code generation, so a wide dynamic schema pays no
+  * Janino compilation of a giant projection.
+  *
+  * A document frame's rows are walked as Tungsten rows
+  * (`queryExecution.toRdd`; external-Row conversion alone costs seconds
+  * per pass at 5k columns). A vintage's documents are walked as Jackson
+  * tokens inside the response pages' bytes ([[renderPageTsvLines]]): no
+  * row is built for a document, and each token converts as Spark's JSON
+  * reader converts it under the plan's type.
   *
   * Cell semantics: '' for missing/null, Python `str()` scalars
   * (`True`/`False`, [[PyFormat.pyRepr]] doubles), json.dumps arrays
@@ -35,9 +45,23 @@ object RenderPass {
   // ---- render plan ----------------------------------------------------------
 
   private sealed trait Node extends Serializable
-  /** Walk a struct value with `numFields` fields: (field ordinal, child). */
-  private final case class StructWalk(numFields: Int,
-      fields: Array[(Int, Node)]) extends Node
+  /** Walk a struct value with `numFields` fields: (field ordinal, child),
+    * and the JSON key of each child (`names`, with a lookup from key to
+    * child for the byte walk). `base` is where its children's entries
+    * start in a byte walk's repeated-key stamps ([[PageRenderer]]).
+    */
+  private final class StructWalk(val numFields: Int,
+      val fields: Array[(Int, Node)], names: Array[String], val base: Int)
+      extends Node {
+    private val index = new java.util.HashMap[String, Integer]
+    names.indices.foreach(i => index.put(names(i), i))
+
+    /** The position in `fields` of the child keyed `name`, or -1. */
+    def indexOf(name: String): Int = {
+      val i = index.get(name)
+      if (i == null) -1 else i
+    }
+  }
   /** Positionally-expanded array of structs; `whole` is the unindexed
     * JSON cell of the full array (quirk Q4) or [[Skip]].
     */
@@ -53,10 +77,13 @@ object RenderPass {
   }
   private case object Skip extends Node
 
-  /** A compiled render plan and its output columns (reference order). */
+  /** A compiled render plan and its output columns (reference order).
+    * `keys` counts the children of all its struct walks.
+    */
   final class Plan private[RenderPass] (
       private[RenderPass] val root: StructWalk,
-      val columns: Array[String]) extends Serializable
+      val columns: Array[String],
+      private[RenderPass] val keys: Int) extends Serializable
 
   /** The first type inside `dt` whose internal value does not print the
     * way `cast(string)` does. JSON sources never infer these.
@@ -88,6 +115,7 @@ object RenderPass {
   def compile(schema: StructType, batch: StatsPass.Batch,
       maxDepth: Int): Plan = {
     val owners = mutable.HashMap.empty[String, Cell]
+    var keys = 0
 
     def cell(pPath: String, rPath: String, dt: DataType,
         json: Boolean): Node = {
@@ -137,10 +165,12 @@ object RenderPass {
           else s"$rawParent.${winner.name}"
         emit(winner.dataType, pPath, rPath, depth) match {
           case Skip => None
-          case n => Some((ord, n))
+          case n => Some((winner.name, (ord, n)))
         }
       }
-      StructWalk(st.length, children.toArray)
+      keys += children.length
+      new StructWalk(st.length, children.map(_._2).toArray,
+        children.map(_._1).toArray, keys - children.length)
     }
 
     def emit(dt: DataType, pPath: String, rPath: String,
@@ -164,7 +194,7 @@ object RenderPass {
     val root = struct(schema, "", "", 0)
     val columns = owners.keys.toArray.sorted
     columns.iterator.zipWithIndex.foreach { case (c, i) => owners(c).slot = i }
-    new Plan(root, columns)
+    new Plan(root, columns, keys)
   }
 
   // ---- row evaluation ---------------------------------------------------------
@@ -176,11 +206,11 @@ object RenderPass {
       out: Array[String]): Unit = {
     if (node == Skip || c.isNullAt(ord)) return
     node match {
-      case StructWalk(numFields, fields) =>
-        val r = c.getStruct(ord, numFields)
+      case sw: StructWalk =>
+        val r = c.getStruct(ord, sw.numFields)
         var i = 0
-        while (i < fields.length) {
-          evalField(fields(i)._2, r, fields(i)._1, out)
+        while (i < sw.fields.length) {
+          evalField(sw.fields(i)._2, r, sw.fields(i)._1, out)
           i += 1
         }
       case ArrayWalk(whole, elems) =>
@@ -199,10 +229,13 @@ object RenderPass {
     }
   }
 
+  /** Python `str(b)`. */
+  private def pyBool(b: Boolean): String = if (b) "True" else "False"
+
   /** Python `str(v)` of a scalar. */
   private def pyScalar(c: SpecializedGetters, ord: Int, dt: DataType): String =
     dt match {
-      case BooleanType => if (c.getBoolean(ord)) "True" else "False"
+      case BooleanType => pyBool(c.getBoolean(ord))
       case DoubleType => PyFormat.pyRepr(c.getDouble(ord))
       case FloatType => PyFormat.pyRepr(c.getFloat(ord).toDouble)
       case LongType => java.lang.Long.toString(c.getLong(ord))
@@ -290,10 +323,14 @@ object RenderPass {
 
   // ---- public entry -------------------------------------------------------------
 
+  /** Sets every cell of `out` to `''`. */
+  private def clear(out: Array[String]): Unit =
+    java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], "")
+
   /** A blank output row: every cell `''`. */
   private def blank(n: Int): Array[String] = {
     val out = new Array[String](n)
-    java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], "")
+    clear(out)
     out
   }
 
@@ -327,35 +364,229 @@ object RenderPass {
   def renderTsvLines(df: DataFrame, plan: Plan): RDD[String] =
     renderedRows(df, plan).map(tsvLine)
 
-  /** [[renderTsvLines]] of the documents inside ES response rows in the
-    * layout `hits: {hits: [{_source: doc}]}` and nothing else (what
-    * [[Flattener.Vintage.envelopeSchema]] reads): each hit's `_source` is
-    * walked where it lies, with no `explode` and no projection of the
-    * documents out of the envelope. One line per hit, in page and hit
-    * order, exactly the rows `explode(hits.hits)` + `hit._source.*`
-    * gives: a null hit or a missing `_source` renders an all-`''` line, a
-    * page without hits none. `rows` counts the lines rendered.
+  /** [[renderTsvLines]] of the documents inside ES response `pages` (a
+    * one-string-column frame, a whole page file a row: the `wholetext`
+    * text source), walked as Jackson tokens by a parser from `options`:
+    * one line per hit, in page and hit order, exactly the rows Spark's
+    * JSON reader (multiLine, PERMISSIVE, `options`) and `explode(hits.hits)`
+    * + `hit._source.*` give, byte for byte. A null hit or a missing or null
+    * `_source` renders an all-`''` line; a page without hits, or one that
+    * does not parse, none. A page whose tokens do not fit the plan's types
+    * (its pages changed after the plan's schema was folded) also renders
+    * none. `rows` counts the lines rendered.
     */
-  def renderHitTsvLines(envelope: DataFrame, plan: Plan,
-      rows: LongAccumulator): RDD[String] = {
-    val root = plan.root
-    val n = plan.columns.length
-    envelope.queryExecution.toRdd.mapPartitions { it =>
+  def renderPageTsvLines(pages: DataFrame, options: JSONOptions, plan: Plan,
+      rows: LongAccumulator): RDD[String] =
+    pages.queryExecution.toRdd.mapPartitions { it =>
+      val r = new PageRenderer(plan, options)
       it.flatMap { page =>
-        val hits = if (page.isNullAt(0)) null else {
-          val outer = page.getStruct(0, 1)
-          if (outer.isNullAt(0)) null else outer.getArray(0)
-        }
-        Iterator.tabulate(if (hits == null) 0 else hits.numElements()) { i =>
-          val out = blank(n)
-          if (!hits.isNullAt(i)) {
-            val hit = hits.getStruct(i, 1)
-            if (!hit.isNullAt(0)) fill(root, hit.getStruct(0, root.numFields), out)
-          }
-          rows.add(1L)
-          tsvLine(out)
-        }
+        val lines = r.render(page.getUTF8String(0))
+        rows.add(lines.length.toLong)
+        lines
       }
+    }
+
+  /** A page's tokens do not fit the render plan: the page renders nothing. */
+  private object Unparsable extends Exception(null, null, false, false)
+
+  /** The byte walk of one task: response pages in, TSV lines out. Each
+    * document fills one reused cell array. Its values convert as Spark's
+    * `JacksonParser` converts them under the plan's types: a token of the
+    * plan's own type directly (a string's text, a long, a double through
+    * `pyRepr`, a boolean), any other (a number, boolean, object or array
+    * under a string type; a decimal; a JSON cell's array or struct)
+    * through the converter Spark's reader uses for that type, whose value
+    * the frame path's formatters render. The parser reads the page's own
+    * byte array, as the multiLine reader's does, so a non-string token
+    * under a string type becomes its exact source text (`1.50`, `1e2`,
+    * `[1, 2]` with its spacing) there and here alike.
+    *
+    * A key repeated in one object is read as Spark reads it: the last
+    * occurrence wins, so the cells an earlier one filled are blanked
+    * first. `stamps` holds, per struct-walk child, the object it was last
+    * seen in.
+    */
+  private final class PageRenderer(plan: Plan, options: JSONOptions) {
+    private val factory = options.buildJsonFactory()
+    private lazy val sparkParser = new JacksonParser(StructType(Nil), options,
+      allowArrayAsStructs = true)
+    private val converters = new Array[JsonParser => AnyRef](plan.columns.length)
+    private val one = new GenericInternalRow(1)
+    private val out = new Array[String](plan.columns.length)
+    private val stamps = new Array[Long](plan.keys)
+    private var stamp = 0L
+
+    /** The lines of one page (all of them, or none). */
+    def render(page: UTF8String): mutable.ArrayBuffer[String] = {
+      val lines = mutable.ArrayBuffer.empty[String]
+      val p = factory.createParser(page.getBytes)
+      try {
+        p.nextToken() match {
+          case null => // a blank page
+          case START_OBJECT => envelope(p, lines)
+          case START_ARRAY => // one response per element
+            var t = p.nextToken()
+            while (t != END_ARRAY) {
+              if (t != START_OBJECT) throw Unparsable
+              envelope(p, lines)
+              t = p.nextToken()
+            }
+          case _ => throw Unparsable
+        }
+        lines
+      } catch {
+        case Unparsable | _: JsonProcessingException |
+            _: CharConversionException | _: MalformedInputException =>
+          mutable.ArrayBuffer.empty
+      } finally p.close()
+    }
+
+    /** Calls `f` with each key of the object the parser is at, the parser
+      * at the key's value.
+      */
+    private def fields(p: JsonParser)(f: String => Unit): Unit = {
+      var t = p.nextToken()
+      while (t == FIELD_NAME) {
+        val name = p.currentName
+        p.nextToken()
+        f(name)
+        t = p.nextToken()
+      }
+    }
+
+    /** A response: the lines of its last `hits` replace any earlier. */
+    private def envelope(p: JsonParser,
+        lines: mutable.ArrayBuffer[String]): Unit = {
+      val start = lines.length
+      fields(p) {
+        case "hits" =>
+          lines.dropRightInPlace(lines.length - start)
+          p.currentToken match {
+            case START_OBJECT => fields(p) {
+              case "hits" =>
+                lines.dropRightInPlace(lines.length - start)
+                p.currentToken match {
+                  case START_ARRAY =>
+                    var t = p.nextToken()
+                    while (t != END_ARRAY) { lines += hit(p, t); t = p.nextToken() }
+                  case VALUE_NULL =>
+                  case _ => throw Unparsable
+                }
+              case _ => p.skipChildren(): Unit
+            }
+            case VALUE_NULL =>
+            case _ => throw Unparsable
+          }
+        case _ => p.skipChildren(): Unit
+      }
+    }
+
+    /** The line of the hit at token `t`. */
+    private def hit(p: JsonParser, t: JsonToken)
+        : String = {
+      clear(out)
+      t match {
+        case VALUE_NULL =>
+        case START_OBJECT =>
+          var seen = false
+          fields(p) {
+            case "_source" =>
+              if (seen) clear(out)
+              seen = true
+              value(plan.root, p, p.currentToken)
+            case _ => p.skipChildren(): Unit
+          }
+        case _ => throw Unparsable
+      }
+      tsvLine(out)
+    }
+
+    /** Walks the object the parser is at against `sw`. */
+    private def struct(sw: StructWalk, p: JsonParser): Unit = {
+      stamp += 1
+      val here = stamp
+      var t = p.nextToken()
+      while (t == FIELD_NAME) {
+        val i = sw.indexOf(p.currentName)
+        t = p.nextToken()
+        if (i < 0) p.skipChildren()
+        else {
+          val node = sw.fields(i)._2
+          if (stamps(sw.base + i) == here) blankUnder(node)
+          stamps(sw.base + i) = here
+          value(node, p, t)
+        }
+        t = p.nextToken()
+      }
+    }
+
+    /** Renders the value at token `t` into `node`'s cells. */
+    private def value(node: Node, p: JsonParser,
+        t: JsonToken): Unit =
+      if (t == VALUE_NULL) ()
+      else node match {
+        case sw: StructWalk =>
+          if (t == START_OBJECT) struct(sw, p) else throw Unparsable
+        case ArrayWalk(whole, elems) =>
+          if (t != START_ARRAY) throw Unparsable
+          whole match {
+            case c: Cell => // the whole array is needed: convert it once
+              val xs = convert(c, p).asInstanceOf[ArrayData]
+              one.update(0, xs)
+              out(c.slot) = pyJson(one, 0, c.dt)
+              var i = 0
+              val n = math.min(xs.numElements(), elems.length)
+              while (i < n) {
+                evalField(elems(i), xs, i, out)
+                i += 1
+              }
+            case _ =>
+              var i = 0
+              var e = p.nextToken()
+              while (e != END_ARRAY) {
+                if (i < elems.length) value(elems(i), p, e) else p.skipChildren()
+                i += 1
+                e = p.nextToken()
+              }
+          }
+        case c: Cell => out(c.slot) = cell(c, p, t)
+        case Skip => p.skipChildren(): Unit
+      }
+
+    /** The text of the cell `c` at token `t` (not null). */
+    private def cell(c: Cell, p: JsonParser,
+        t: JsonToken): String = c.dt match {
+      case StringType if t == VALUE_STRING => p.getText
+      case LongType if t == VALUE_NUMBER_INT =>
+        java.lang.Long.toString(p.getLongValue)
+      case DoubleType if t == VALUE_NUMBER_INT || t == VALUE_NUMBER_FLOAT =>
+        PyFormat.pyRepr(p.getDoubleValue)
+      case BooleanType if t == VALUE_TRUE || t == VALUE_FALSE =>
+        pyBool(t == VALUE_TRUE)
+      case dt =>
+        val v = convert(c, p)
+        if (v == null) ""
+        else {
+          one.update(0, v)
+          if (c.json) pyJson(one, 0, dt) else pyScalar(one, 0, dt)
+        }
+    }
+
+    /** The value at the parser's token as Spark's reader converts it
+      * under `c`'s type.
+      */
+    private def convert(c: Cell, p: JsonParser): AnyRef = {
+      if (converters(c.slot) == null) converters(c.slot) = sparkParser.makeConverter(c.dt)
+      try converters(c.slot)(p)
+      catch { case _: RuntimeException => throw Unparsable }
+    }
+
+    /** Blanks every cell under `node`. */
+    private def blankUnder(node: Node): Unit = node match {
+      case sw: StructWalk => sw.fields.foreach(f => blankUnder(f._2))
+      case ArrayWalk(whole, elems) => blankUnder(whole); elems.foreach(blankUnder)
+      case c: Cell => out(c.slot) = ""
+      case Skip =>
     }
   }
 

@@ -50,6 +50,25 @@ object EsJson {
       : DataFrameReader =
     spark.read.options(readerOptions(multiLine))
 
+  /** [[readerOptions]] as the JSON reader parses with them: under the
+    * session time zone and corrupt-record column name.
+    */
+  private def jsonOptions(spark: SparkSession, multiLine: Boolean)
+      : JSONOptionsInRead = {
+    val conf = spark.sessionState.conf
+    SQLConf.withExistingConf(conf) {
+      new JSONOptionsInRead(readerOptions(multiLine),
+        conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    }
+  }
+
+  /** The files under `paths` one row each, holding the file's text: the
+    * `wholetext` text source, which lists, decompresses and packs files
+    * into partitions exactly as the multiLine JSON source does.
+    */
+  private def wholeFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.option("wholetext", "true").text(paths: _*)
+
   /** True if the inferred schema carries the ES response envelope. */
   def isEnvelope(schema: StructType): Boolean =
     schema.fields.find(_.name == "hits").map(_.dataType).exists {
@@ -125,10 +144,13 @@ object EsJson {
     }
   }
 
-  /** Persist `side` as the vintage sidecar of `dir` (side name + atomic
-    * rename, the manifest-commit discipline): schema and stats publish
-    * together. An exported vintage is immutable once written, so its
-    * grafted schema and its stats are discovered ONCE, at export time —
+  /** Persist `side` as the vintage sidecar of `dir`: written under a
+    * unique hidden name, then published with one rename over the previous
+    * sidecar, so schema and stats publish together and a reader sees the
+    * old sidecar or the new one, never none. A store whose rename refuses
+    * an existing destination takes the delete first. An exported vintage
+    * is immutable once written, so its grafted schema and its stats are
+    * discovered ONCE, at export time —
     * by [[EsHttp.read]], as its fetch loop receives the pages
     * ([[ParseSchemaFold]]); every later read of the vintage then skips
     * the fold, and its flatten skips the stats pass: zero Spark jobs
@@ -138,13 +160,17 @@ object EsJson {
     import org.apache.hadoop.fs.Path
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(base, SchemaSidecar + ".writing")
-    val out = fs.create(tmp, true)
+    val tmp = new Path(base,
+      s"$SchemaSidecar.${java.util.UUID.randomUUID()}.writing")
+    val out = fs.create(tmp, false)
     try out.write(sidecarJson(side).getBytes("UTF-8")) finally out.close()
     val dst = new Path(base, SchemaSidecar)
-    fs.delete(dst, false)
-    require(fs.rename(tmp, dst),
-      s"writeSidecar: commit $tmp -> $dst failed")
+    try {
+      if (!fs.rename(tmp, dst)) {
+        fs.delete(dst, false): Unit
+        require(fs.rename(tmp, dst), s"writeSidecar: commit $tmp -> $dst failed")
+      }
+    } finally fs.delete(tmp, false): Unit
   }
 
   /** The vintage's sidecar, when `path` is a directory carrying one. A
@@ -216,8 +242,11 @@ object EsJson {
       }
 
   /** The vintage under `dir` as [[Flattener.flattenToTsv]] takes it, when
-    * `side` carries stats: its pages read with only the hits' `_source`
-    * in the schema (the empty schema for a vintage of zero documents).
+    * `side` carries stats: its page files' text, the reader options its
+    * schema was folded under and the hits' `_source` schema (the empty
+    * schema for a vintage of zero documents). Nothing is parsed here and
+    * the source schema is never analyzed, so keys that differ only in
+    * case need no case-sensitive session.
     * None when there are no stats, or when the pages hold no envelope to
     * walk. The pages are taken to be the ones the stats were folded from;
     * a changed document count fails the flatten, other changes that keep
@@ -230,10 +259,41 @@ object EsJson {
       source <-
         if (side.schema.isEmpty && stats.rows == 0) Some(side.schema)
         else sourceSchema(side.schema)
-    } yield Flattener.Vintage(
-      reader(spark, multiLine = true)
-        .schema(Flattener.Vintage.envelopeSchema(source)).json(dir),
-      source, stats)
+    } yield Flattener.Vintage(wholeFiles(spark, Seq(dir)),
+      jsonOptions(spark, multiLine = true), source, stats)
+
+  /** Spark's inference of one record keeps a key repeated in one object
+    * as two fields of one name, a schema no reader can analyze
+    * (COLUMN_ALREADY_EXISTS). This is `tpe` with those fields merged into
+    * one of their compatible type, which a reader fills from the key's
+    * last occurrence, as it reads any repeated key; `tpe` itself when no
+    * key repeats.
+    */
+  private def mergeRepeatedKeys(tpe: DataType): DataType = {
+    def repeats(t: DataType): Boolean = t match {
+      case st: StructType =>
+        // inferField sorts a struct's fields by name: repeats are adjacent
+        (1 until st.length).exists(i => st(i).name == st(i - 1).name) ||
+          st.fields.exists(f => repeats(f.dataType))
+      case ArrayType(et, _) => repeats(et)
+      case _ => false
+    }
+    def merge(t: DataType): DataType = t match {
+      case st: StructType =>
+        StructType(st.fields.foldLeft(List.empty[StructField]) { (acc, f0) =>
+          val f = f0.copy(dataType = merge(f0.dataType))
+          acc match {
+            case prev :: rest if prev.name == f.name =>
+              prev.copy(dataType = InferSchemaAccess.compatibleType(
+                prev.dataType, f.dataType)) :: rest
+            case _ => f :: acc
+          }
+        }.reverse)
+      case ArrayType(et, n) => ArrayType(merge(et), n)
+      case other => other
+    }
+    if (repeats(tpe)) merge(tpe) else tpe
+  }
 
   /** The rows [[read]] gives of the records folded so far, absorbed for
     * their batch stats. A record is one row when it is an object, one per
@@ -284,7 +344,8 @@ object EsJson {
   /** The parse schema of JSON records and the batch stats of the rows
     * they parse to, folded one record at a time: Spark's own per-record
     * inference (`JsonInferSchema.inferField` over a parser from
-    * `JSONOptions.buildJsonFactory()`) merged with `compatibleRootType`,
+    * `JSONOptions.buildJsonFactory()`, a key repeated in one object merged
+    * into one field: [[mergeRepeatedKeys]]) merged with `compatibleRootType`,
     * finished with Spark's `canonicalizeType` and the EmptyShapes graft
     * (an [[EmptyShapes.Fold]] absorbs each record's shape in place), and
     * each record's rows absorbed into [[StatsPass.Tree]]s read against
@@ -307,10 +368,7 @@ object EsJson {
     def this(spark: SparkSession) = this(spark, multiLine = true)
 
     private val conf = spark.sessionState.conf
-    private val options = SQLConf.withExistingConf(conf) {
-      new JSONOptionsInRead(readerOptions(multiLine),
-        conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
-    }
+    private val options = jsonOptions(spark, multiLine)
     private val inference =
       SQLConf.withExistingConf(conf)(new JsonInferSchema(options))
     private val factory = options.buildJsonFactory()
@@ -327,8 +385,10 @@ object EsJson {
       SQLConf.withExistingConf(conf) {
         val parser = factory.createParser(bytes)
         val tpe =
-          try { parser.nextToken(); inference.inferField(parser) }
-          finally parser.close()
+          try {
+            parser.nextToken()
+            mergeRepeatedKeys(inference.inferField(parser))
+          } finally parser.close()
         root = mergeRoot(root, tpe)
         shapes.add(new String(bytes, StandardCharsets.ISO_8859_1), tree)
         rows.add(tree)
@@ -377,8 +437,8 @@ object EsJson {
     def files(spark: SparkSession, paths: Seq[String],
         multiLine: Boolean): Sidecar = {
       val text =
-        if (multiLine) spark.read.option("wholetext", "true") else spark.read
-      new ParseSchemaFold(spark, multiLine).foldAll(text.text(paths: _*))
+        if (multiLine) wholeFiles(spark, paths) else spark.read.text(paths: _*)
+      new ParseSchemaFold(spark, multiLine).foldAll(text)
     }
 
     /** The fold of JSONL `lines`: one Spark job. */
@@ -415,8 +475,10 @@ object EsJson {
         val tpe =
           try {
             val p = parser()
-            try { p.nextToken(); Some(inference.inferField(p)) }
-            finally p.close()
+            try {
+              p.nextToken()
+              Some(mergeRepeatedKeys(inference.inferField(p)))
+            } finally p.close()
           } catch {
             case _: RuntimeException if !wholeFile => None
             case _: JsonProcessingException | _: MalformedInputException |

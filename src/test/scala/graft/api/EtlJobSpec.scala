@@ -179,18 +179,20 @@ class EtlJobSpec extends AnyFunSuite {
       .map(n => new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(dir, n)), "UTF-8"))
 
-  test("runHttp, and run over its vintage: two Spark jobs each, nothing cached") {
+  test("runHttp, and run over its vintage: one Spark job each, nothing cached") {
     withClaims(claims, pageSize = 3) { cfg =>
       val out = tmp()
       val sc = spark.sparkContext
       val cached = sc.getPersistentRDDs.keySet
-      val (live, liveJobs) = graft.JobsStarted(spark)(
+      val (live, liveJobs) = graft.JobsStarted.callSites(spark)(
         EtlJob.runHttp(spark, cfg, s"$out/pages", s"$out/tsv", s"$out/audit"))
-      assert(liveJobs === 2) // the render and the audit row
+      // the render, which writes the TSV; the audit row is the driver's
+      assert(liveJobs.size === 1 && liveJobs.head.contains("Flattener.scala"),
+        liveJobs)
       assert(sc.getPersistentRDDs.keySet === cached)
       val (again, againJobs) = graft.JobsStarted(spark)(
         EtlJob.run(spark, s"$out/pages", s"$out/tsv2", s"$out/audit"))
-      assert(againJobs === 2)
+      assert(againJobs === 1)
       assert(sc.getPersistentRDDs.keySet === cached)
       assert(live.records === 7L && again === live.copy(outputDir = s"$out/tsv2"))
       assert(tsvParts(s"$out/tsv2") === tsvParts(s"$out/tsv"))
@@ -203,7 +205,7 @@ class EtlJobSpec extends AnyFunSuite {
     }
   }
 
-  test("run over ES responses without a sidecar: three Spark jobs, nothing cached") {
+  test("run over ES responses without a sidecar: two Spark jobs, nothing cached") {
     withClaims(claims, pageSize = 3) { cfg =>
       val out = tmp()
       EtlJob.runHttp(spark, cfg, s"$out/pages", s"$out/tsv", s"$out/audit"): Unit
@@ -214,7 +216,7 @@ class EtlJobSpec extends AnyFunSuite {
       val cached = sc.getPersistentRDDs.keySet
       val (res, jobs) = graft.JobsStarted(spark)(
         EtlJob.run(spark, s"$out/pages", s"$out/tsv2", s"$out/audit"))
-      assert(jobs === 3) // the fold, the render and the audit row
+      assert(jobs === 2) // the fold and the render
       assert(sc.getPersistentRDDs.keySet === cached)
       assert(res.records === 7L)
       assert(tsvParts(s"$out/tsv2") === tsvParts(s"$out/tsv"))
@@ -244,6 +246,45 @@ class EtlJobSpec extends AnyFunSuite {
         Seq("FAILED", "SUCCESS"))
       assert(audit(0).getAs[String]("error_desc") === e.getMessage)
       assert(audit(0).getAs[Long]("record_count_loaded") === 0L)
+    }
+  }
+
+  test("two runs append to one audit path: both rows read back, distinct run ids") {
+    withClaims(claims, pageSize = 3) { cfg =>
+      val out = tmp()
+      val audit = s"$out/audit"
+      EtlJob.runHttp(spark, cfg, s"$out/pages", s"$out/tsv", audit): Unit
+      EtlJob.run(spark, s"$out/pages", s"$out/tsv2", audit): Unit
+      val back = spark.read.parquet(audit)
+      // a file read makes every column nullable: the table reads as one
+      // Spark's own writer wrote, and its footer carries the record's
+      // schema, nullability included
+      val t = new java.sql.Timestamp(0L)
+      spark.createDataFrame(Seq(EtlJob.AuditRecord("j", 1L, t, t, "SUCCESS",
+        "c", null, "b", "t", 0L))).write.parquet(s"$out/spark_written")
+      assert(back.schema === spark.read.parquet(s"$out/spark_written").schema)
+      val part = new java.io.File(audit).listFiles()
+        .find(_.getName.startsWith("part-")).get
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(part.toURI),
+          spark.sparkContext.hadoopConfiguration))
+      val meta = try footer.getFooter.getFileMetaData.getKeyValueMetaData
+        finally footer.close()
+      assert(org.apache.spark.sql.types.DataType.fromJson(
+        meta.get("org.apache.spark.sql.parquet.row.metadata")) ===
+        org.apache.spark.sql.Encoders.product[EtlJob.AuditRecord].schema)
+      val rows = back.collect()
+      assert(rows.map(_.getAs[String]("job_status")).toSeq === Seq("SUCCESS", "SUCCESS"))
+      assert(rows.map(_.getAs[Long]("record_count_loaded")).toSeq === Seq(7L, 7L))
+      assert(rows.forall(r => r.getAs[java.sql.Timestamp]("start_ts") != null &&
+        !r.getAs[java.sql.Timestamp]("end_ts").before(r.getAs[java.sql.Timestamp]("start_ts"))))
+      assert(rows.forall(_.isNullAt(rows(0).fieldIndex("error_desc"))))
+      val ids = rows.map(_.getAs[Long]("job_id")).toSet
+      assert(ids.size === 2 && ids.forall(_ >= 0L))
+      // each row is its own file, named by its run id
+      assert(new java.io.File(audit).list().filter(_.startsWith("part-")).toSet ===
+        ids.map(id => s"part-$id.parquet"))
     }
   }
 

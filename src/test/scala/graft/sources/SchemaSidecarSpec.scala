@@ -47,6 +47,24 @@ class SchemaSidecarSpec extends AnyFunSuite {
       inferredRead.exceptAll(sidecarRead).count() === 0L)
   }
 
+  test("a sidecar whose publish fails leaves the previous one readable") {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.sidecarrename.impl", classOf[SidecarRenameFs].getName)
+    val local = vintage()
+    val dir = s"sidecarrename://$local"
+    val before = EsJson.Sidecar(StructType(Seq(StructField("a", LongType))), None)
+    EsJson.writeSidecar(spark, dir, before)
+    SidecarRenameFs.armed = true
+    try intercept[java.io.IOException](EsJson.writeSidecar(spark, dir,
+      EsJson.Sidecar(StructType(Seq(StructField("b", LongType))), None)))
+    finally SidecarRenameFs.armed = false
+    assert(EsJson.readSidecar(spark, dir) === Some(before))
+    // the new sidecar's temp file is gone too
+    assert(Files.list(Paths.get(local)).toArray.toSeq.map(_.toString)
+      .count(_.contains(EsJson.SchemaSidecar)) === 1)
+  }
+
   test("sidecar is authoritative: the data is never consulted for schema") {
     val dir = vintage()
     // a deliberately NARROWER schema than the data: if inference (or
