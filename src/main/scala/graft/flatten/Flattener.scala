@@ -1,11 +1,18 @@
 package graft.flatten
 
-import org.apache.hadoop.fs.Path
+import java.io.{BufferedOutputStream, IOException}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.{OutputMetricsAccess, TaskContext, TaskKilledException}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.json.JSONOptions
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.SerializableConfiguration
 
 /** Complete JSON flattening — the reference's core capability
   * ([`ElasticSearch ETL.py:37-195`], `README.md:24-70`), rebuilt Spark-first.
@@ -28,7 +35,9 @@ import org.apache.spark.storage.StorageLevel
   * export fetched the pages, or in one Spark job over a directory without
   * a sidecar — so its flatten is ONE Spark job, the render and TSV write,
   * walking the documents as tokens inside the page bytes, with nothing
-  * cached. Both paths write through [[writeTsv]].
+  * cached. Both paths write through [[writeTsv]]: each render task
+  * streams its part file itself, with no Hadoop `OutputFormat` or
+  * committer, and the directory is published by renames alone.
   *
   * Semantics (SURVEY.md §2.3 quirk decisions):
   *   - Q1  digit map keys: FIXED — `ValueCodes_45` extracts its real value
@@ -117,68 +126,129 @@ object Flattener {
       val batch = StatsPass.collect(input)
       val plan = RenderPass.compile(input.schema, batch, maxDepth)
       writeTsv(input.sparkSession, plan, RenderPass.renderTsvLines(input, plan),
-        dir, singleFile)(())
+        dir, singleFile)(_ => ())
       Written(plan.columns.toSeq, batch.rows)
     } finally if (weOwn) input.unpersist(blocking = false): Unit
   }
 
   /** [[flattenToTsv]] of a vintage: the plan comes from its folded stats,
     * so the render and TSV write is the only Spark job and nothing is
-    * cached. The rows are counted as they render, and the TSV is
-    * published into `dir` only when that count is the folded one. Any
+    * cached. Each task returns the rows it wrote, and the TSV is
+    * published into `dir` only when their sum is the folded count. Any
     * other count means the pages changed after their stats were folded:
     * the call fails and `dir` keeps what it held, rather than publish
     * columns that no longer describe their rows.
     */
   def flattenToTsv(v: Vintage, dir: String, maxDepth: Int): Written = {
     val plan = RenderPass.compile(v.source, v.stats, maxDepth)
-    val spark = v.pages.sparkSession
-    val rows = spark.sparkContext.longAccumulator
-    writeTsv(spark, plan,
-      RenderPass.renderPageTsvLines(v.pages, v.options, plan, rows),
-      dir, singleFile = false) {
-      if (rows.value != v.stats.rows)
+    val rows = writeTsv(v.pages.sparkSession, plan,
+      RenderPass.renderPageTsvLines(v.pages, v.options, plan), dir,
+      singleFile = false) { rows =>
+      if (rows != v.stats.rows)
         throw new IllegalStateException(
           s"vintage changed under its sidecar: its stats count ${v.stats.rows} " +
-            s"documents, its pages now hold ${rows.value}")
+            s"documents, its pages now hold $rows")
     }
-    Written(plan.columns.toSeq, rows.value)
+    Written(plan.columns.toSeq, rows)
   }
 
-  /** The local property holding a job's short call site. */
-  private val CallSiteShort = "callSite.short"
-
-  /** The TSV write of both flatten paths: `lines` under a header per
-    * part-file, saved through Hadoop's `TextOutputFormat` (one Spark job;
-    * its output metrics count the bytes the filesystem wrote, checksum
-    * files included) into a hidden sibling of `dir`, and renamed into
-    * place once the write job and then `check` have passed. If either
-    * fails, `dir` keeps what it held and the staged copy is removed.
+  /** The TSV write of both flatten paths, ONE Spark job (`runJob`, so it
+    * is named after this file). Each task writes its partition of `lines`
+    * under a header, as UTF-8 through one buffered stream, into a
+    * `part-NNNNN` file of its own attempt's directory, renames the
+    * finished file into a hidden staged sibling of `dir`, reports its
+    * byte length and row count as its task output metrics, and returns
+    * the rows. A failed attempt therefore never leaves a partial part in
+    * the staged directory, and a repeated one replaces a part with the
+    * same bytes. The Hadoop configuration reaches the tasks as one
+    * broadcast. Once the job and then `check` (given the rows written)
+    * have passed, the staged directory is published as `dir`
+    * ([[publish]]). If anything fails, `dir` keeps what it held and the
+    * staged and attempt directories are removed. Returns the rows written.
     */
   private def writeTsv(spark: SparkSession, plan: RenderPass.Plan,
       lines0: RDD[String], dir: String, singleFile: Boolean)(
-      check: => Unit): Unit = {
+      check: Long => Unit): Long = {
     val header = RenderPass.tsvLine(plan.columns)
     val lines = if (singleFile) lines0.coalesce(1) else lines0
-    val withHeader = lines.mapPartitions(it => Iterator(header) ++ it)
     val sc = spark.sparkContext
     val fs = new Path(dir).getFileSystem(sc.hadoopConfiguration)
     val out = fs.makeQualified(new Path(dir))
     val staged = new Path(out.getParent,
-      s".${out.getName}.rendering-${java.util.UUID.randomUUID()}")
-    val callSite = sc.getLocalProperty(CallSiteShort)
+      s".${out.getName}.rendering-${UUID.randomUUID()}")
+    val attempts = staged.suffix(".attempts")
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
     try {
-      // Spark names a job after its first frame outside Spark's core
-      // packages: for this save, Spark's own writer. Name the job after
-      // this call instead, so it reads as the render's.
-      val here = new Throwable().getStackTrace()(0)
-      sc.setCallSite(s"saveAsTextFile at ${here.getFileName}:${here.getLineNumber}")
-      try withHeader.saveAsTextFile(staged.toString)
-      finally sc.setLocalProperty(CallSiteShort, callSite)
-      check
-      fs.delete(out, true)
-      require(fs.rename(staged, out),
-        s"flattenToTsv: publish $staged -> $out failed")
-    } finally fs.delete(staged, true): Unit
+      fs.mkdirs(staged)
+      val rows = sc.runJob(lines, (ctx: TaskContext, it: Iterator[String]) =>
+        writePart(conf.value.value, staged, attempts, header, ctx, it)).sum
+      check(rows)
+      publish(fs, staged, out)
+      rows
+    } finally {
+      fs.delete(attempts, true)
+      fs.delete(staged, true)
+      conf.destroy()
+    }
+  }
+
+  /** One task of [[writeTsv]]: `header` and then `lines`, as UTF-8 lines,
+    * into `part-NNNNN` (the partition's number) under this attempt's own
+    * directory in `attempts`, then renamed into `staged`. Returns the
+    * rows written.
+    */
+  private def writePart(conf: Configuration, staged: Path,
+      attempts: Path, header: String, ctx: TaskContext,
+      lines: Iterator[String]): Long = {
+    val name = f"part-${ctx.partitionId()}%05d"
+    val own = new Path(attempts, ctx.taskAttemptId().toString)
+    val part = new Path(own, name)
+    val fs = part.getFileSystem(conf)
+    try {
+      var rows = 0L
+      var bytes = 0L
+      val os = new BufferedOutputStream(fs.create(part, false), 1 << 16)
+      try {
+        def put(line: String): Unit = {
+          val b = line.getBytes(UTF_8)
+          os.write(b)
+          os.write('\n')
+          bytes += b.length + 1
+        }
+        put(header)
+        while (lines.hasNext) { put(lines.next()); rows += 1 }
+      } finally os.close()
+      if (ctx.isInterrupted()) throw new TaskKilledException
+      val dst = new Path(staged, name)
+      // a store that will not rename onto an existing file keeps the
+      // earlier attempt's part: the same lines
+      if (!fs.rename(part, dst) && !fs.exists(dst))
+        throw new IOException(s"flattenToTsv: publish $part -> $dst failed")
+      OutputMetricsAccess.set(ctx, bytes, rows)
+      rows
+    } finally fs.delete(own, true): Unit
+  }
+
+  /** Publishes the `staged` directory as `out` by renames only: a
+    * previous `out` is renamed aside to a hidden sibling, `staged` is
+    * renamed in, and then the aside copy is deleted, so a crash at any
+    * point leaves the previous TSV either in place or under the aside
+    * name. If renaming `staged` in fails, the aside copy is renamed back
+    * and the call fails, so `out` keeps what it held.
+    */
+  private def publish(fs: FileSystem, staged: Path, out: Path): Unit = {
+    val aside = new Path(out.getParent,
+      s".${out.getName}.replaced-${UUID.randomUUID()}")
+    val replacing = fs.exists(out)
+    if (replacing && !fs.rename(out, aside))
+      throw new IOException(s"flattenToTsv: moving $out aside to $aside failed")
+    try {
+      if (!fs.rename(staged, out))
+        throw new IOException(s"flattenToTsv: publish $staged -> $out failed")
+    } catch { case e: IOException =>
+      if (replacing) fs.rename(aside, out)
+      throw e
+    }
+    if (replacing) fs.delete(aside, true): Unit
   }
 }

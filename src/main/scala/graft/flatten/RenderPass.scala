@@ -17,7 +17,6 @@ import org.apache.spark.sql.catalyst.json.{JacksonParser, JSONOptions}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.LongAccumulator
 
 /** The flatten renderer behind [[Flattener.flatten]] and
   * [[Flattener.flattenToTsv]]: one walk over the batch schema compiles a
@@ -373,17 +372,14 @@ object RenderPass {
     * `_source` renders an all-`''` line; a page without hits, or one that
     * does not parse, none. A page whose tokens do not fit the plan's types
     * (its pages changed after the plan's schema was folded) also renders
-    * none. `rows` counts the lines rendered.
+    * none. No count is kept here: the TSV writer's tasks count the lines
+    * they write, and the vintage's row-count check reads that sum.
     */
-  def renderPageTsvLines(pages: DataFrame, options: JSONOptions, plan: Plan,
-      rows: LongAccumulator): RDD[String] =
+  def renderPageTsvLines(pages: DataFrame, options: JSONOptions,
+      plan: Plan): RDD[String] =
     pages.queryExecution.toRdd.mapPartitions { it =>
       val r = new PageRenderer(plan, options)
-      it.flatMap { page =>
-        val lines = r.render(page.getUTF8String(0))
-        rows.add(lines.length.toLong)
-        lines
-      }
+      it.flatMap(page => r.render(page.getUTF8String(0)))
     }
 
   /** A page's tokens do not fit the render plan: the page renders nothing. */
@@ -598,14 +594,36 @@ object RenderPass {
     var i = 0
     while (i < vals.length) {
       if (i > 0) sb.append('\t')
-      val v = vals(i)
-      if (v.indexOf('\t') >= 0 || v.indexOf('"') >= 0 ||
-          v.indexOf('\n') >= 0 || v.indexOf('\r') >= 0) {
-        sb.append('"').append(v.replace("\"", "\"\"")).append('"')
-      } else sb.append(v)
+      appendCell(sb, vals(i))
       i += 1
     }
     sb.toString
+  }
+
+  private def needsQuote(c: Char): Boolean =
+    c == '\t' || c == '"' || c == '\n' || c == '\r'
+
+  /** Appends one cell in a single scan: up to its first tab, quote, CR
+    * or LF it is copied as is; from there on it is quoted, each `"`
+    * closing a segment that is appended with the quote doubled.
+    */
+  private def appendCell(sb: java.lang.StringBuilder, v: String): Unit = {
+    val n = v.length
+    var j = 0
+    while (j < n && !needsQuote(v.charAt(j))) j += 1
+    if (j == n) sb.append(v)
+    else {
+      sb.append('"')
+      var from = 0
+      while (j < n) {
+        if (v.charAt(j) == '"') {
+          sb.append(v, from, j + 1).append('"')
+          from = j + 1
+        }
+        j += 1
+      }
+      sb.append(v, from, n).append('"')
+    }
   }
 
   /** Render `df` as the flattened all-string frame of `plan`. */

@@ -2113,7 +2113,9 @@ object VersionedLake {
     * SCHEMA EVOLUTION: the change schema is the UNION of the two
     * versions' `#schema=` headers (no footer opened) — a column added
     * between the versions reads as NULL in the old side's preimages,
-    * exactly how [[readAsOf]] reads the old files themselves.
+    * exactly how [[readAsOf]] reads the old files themselves. Two
+    * versions sharing every file give an empty frame of the same union
+    * (of `schemaHint`, when one is given).
     *
     * Returns the union columns plus `change_type`:
     * `insert` / `delete`, and for ids present on BOTH sides (an upsert
@@ -2139,17 +2141,16 @@ object VersionedLake {
     val fromSet = from.toSet
     val removed = from.filterNot(toSet.contains)
     val added = to.filterNot(fromSet.contains)
-    val changed = removed ++ added
-    val schema: org.apache.spark.sql.types.StructType =
-      if (changed.nonEmpty) {
-        // evolution-added columns appear; a file that predates one
-        // reads it NULL
-        val (a, b) = (schemaOf(fs, base, vFrom), schemaOf(fs, base, vTo))
-        org.apache.spark.sql.types.StructType(
-          a.fields ++ b.fields.filterNot(f => a.fieldNames.contains(f.name)))
-      } else schemaHint.getOrElse(throw new IllegalArgumentException(
-        s"versions $vFrom and $vTo of $dir share every file (no " +
-          "changes) and no schemaHint was given for the empty result"))
+    // evolution-added columns appear; a file that predates one reads
+    // it NULL
+    def union: org.apache.spark.sql.types.StructType = {
+      val (a, b) = (schemaOf(fs, base, vFrom), schemaOf(fs, base, vTo))
+      org.apache.spark.sql.types.StructType(
+        a.fields ++ b.fields.filterNot(f => a.fieldNames.contains(f.name)))
+    }
+    val schema =
+      if (removed.nonEmpty || added.nonEmpty) union
+      else schemaHint.getOrElse(union)
     def side(rels: Seq[String]): DataFrame =
       if (rels.nonEmpty) readUnder(spark, fs, base, schema, rels)
       else spark.createDataFrame(
@@ -2317,7 +2318,7 @@ object VersionedLake {
     * version's `#schema=` header: every column the version carries
     * (one a file predates reads NULL there), and no schema-inference
     * job. A version with an empty manifest reads as an empty frame of
-    * `schemaHint`, and throws without one.
+    * `schemaHint`, else of its header.
     */
   def readAsOf(spark: SparkSession, dir: String, v: Long,
       schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
@@ -2326,12 +2327,9 @@ object VersionedLake {
     val files = fileEntries(fs, base, v).map(entryPath)
     if (files.nonEmpty)
       readUnder(spark, fs, base, schemaOf(fs, base, v), files)
-    else schemaHint match {
-      case Some(sc) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-      case None => throw new IllegalArgumentException(
-        s"version $v of $dir is empty and no schemaHint was given")
-    }
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      schemaHint.getOrElse(schemaOf(fs, base, v)))
   }
 
   /** The data files that ARE version `v`, manifest-relative. */
@@ -2443,22 +2441,17 @@ object VersionedLake {
     * under `schemaHint` when given, else under the version's `#schema=`
     * header — no schema-inference job either way; evolution columns
     * NULL-fill in files that predate them. No admitted file: an empty
-    * frame of `schemaHint`, and an error without one.
+    * frame of the same schema.
     */
   private def rangeFrame(spark: SparkSession, dir: String, v: Long,
       kept: Seq[String],
-      schemaHint: Option[org.apache.spark.sql.types.StructType],
-      bounds: String): DataFrame = {
+      schemaHint: Option[org.apache.spark.sql.types.StructType])
+      : DataFrame = {
     val (fs, base) = fsOf(spark, dir)
-    if (kept.isEmpty) schemaHint match {
-      case Some(sc) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-      case None => throw new IllegalArgumentException(
-        s"range $bounds admits no file of version $v and no " +
-          "schemaHint was given")
-    } else
-      readUnder(spark, fs, base, schemaHint.getOrElse(schemaOf(fs, base, v)),
-        kept)
+    val schema = schemaHint.getOrElse(schemaOf(fs, base, v))
+    if (kept.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else readUnder(spark, fs, base, schema, kept)
   }
 
   /** [[readAsOfRange]] on the FIRST stats column. */
@@ -2485,7 +2478,7 @@ object VersionedLake {
     * `#schema=` header ([[rangeFrame]]): the header's columns, with an
     * evolution column NULL in files that predate it, and no
     * schema-inference job. A range that admits no file reads as an
-    * empty frame of the hint, and throws without one.
+    * empty frame of the same schema.
     */
   def readAsOfRange(spark: SparkSession, dir: String, v: Long,
       colName: String, lower: Long, upper: Long,
@@ -2495,7 +2488,7 @@ object VersionedLake {
       s"version $v of $dir carries no manifest statistics on " +
         s"'$colName' — commitAppend(statsCol=...) enables them")
     val (kept, _) = rangeFiles(spark, dir, v, colName, lower, upper)
-    val frame = rangeFrame(spark, dir, v, kept, schemaHint, s"[$lower,$upper]")
+    val frame = rangeFrame(spark, dir, v, kept, schemaHint)
     frame.filter(col(colName).cast("long").between(lower, upper))
   }
 
@@ -2514,7 +2507,7 @@ object VersionedLake {
       s"version $v of $dir carries no manifest statistics on " +
         s"'$colName' — commitAppend(statsCol=...) enables them")
     val (kept, _) = rangeFilesOn(spark, dir, v, colName, lower, upper)
-    val frame = rangeFrame(spark, dir, v, kept, schemaHint, s"[$lower,$upper]")
+    val frame = rangeFrame(spark, dir, v, kept, schemaHint)
     frame.filter(col(colName) >= lit(lower) && col(colName) <= lit(upper))
   }
 

@@ -182,6 +182,45 @@ class VersionedLakeMetaSpec extends AnyFunSuite {
     assert(idSet(VersionedLake.read(spark, dir)) === (0L until 5L).toSet)
   }
 
+  private def emptyUnderHeader(df: org.apache.spark.sql.DataFrame,
+      dir: String, v: Long): Unit = {
+    assert(df.schema === VersionedLake.schemaOf(spark, dir, v))
+    assert(df.count() === 0L)
+  }
+
+  test("an empty version reads as an empty frame of its #schema= header") {
+    val dir = fresh("vmeta_emptyver_")
+    VersionedLake.commitAppend(spark, dir, docs(0, 4),
+      statsCol = Some("doc_id")): Unit
+    // a range covering every file drops them all by name
+    val (v, _, _, _) = VersionedLake.commitDeleteRange(spark, dir, 0L, 100L)
+    assert(VersionedLake.filesOf(spark, dir, v).isEmpty)
+    emptyUnderHeader(VersionedLake.readAsOf(spark, dir, v), dir, v)
+  }
+
+  test("a range read admitting no file is an empty frame of the header") {
+    val dir = fresh("vmeta_emptyrange_")
+    val v = VersionedLake.commitAppend(spark, dir, docs(0, 4),
+      statsCol = Some("doc_id"))
+    val (kept, _) = VersionedLake.rangeFiles(spark, dir, v, 100L, 200L)
+    assert(kept.isEmpty)
+    emptyUnderHeader(
+      VersionedLake.readAsOfRange(spark, dir, v, 100L, 200L), dir, v)
+  }
+
+  test("changesBetween two versions sharing every file: empty, header union") {
+    val dir = fresh("vmeta_emptycdf_")
+    VersionedLake.commitAppend(spark, dir, docs(0, 4)): Unit
+    val v = VersionedLake.commitAppend(spark, dir,
+      Seq((9L, "t", "en")).toDF("doc_id", "text", "lang"))
+    val same = VersionedLake.changesBetween(spark, dir, v, v, "doc_id")
+    assert(same.columns.toSeq === Seq("doc_id", "text", "lang", "change_type"))
+    assert(same.count() === 0L)
+    // the non-empty branch reads under the same union
+    assert(VersionedLake.changesBetween(spark, dir, v - 1, v, "doc_id")
+      .columns.toSeq === same.columns.toSeq)
+  }
+
   test("rewrites on an EVOLVED lake keep evolution-added columns: " +
       "compact, compactZOrder, commitDelete, commitDeleteRange") {
     // compact
